@@ -248,7 +248,7 @@ def main() -> None:
     # fills — a 1-partition warmup spawns a single worker and every
     # later Arrow stage still pays 31 process spawns + numpy imports
     # inside its measurement.
-    n_workers = 2 * int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_workers = 2 * spark.sparkContext.defaultParallelism
     spark.range(10_000, numPartitions=n_workers).toDF("x").mapInPandas(
         lambda it: it, schema="x long"
     ).write.format("noop").mode("overwrite").save()

@@ -12,7 +12,7 @@ from __future__ import annotations
 import argparse
 
 from pcap_to_parquet_spark.session import get_spark
-from pcap_to_parquet_spark.sources.pcap import convert_pcap
+from pcap_to_parquet_spark.sources.pcap import _AUTO_CHUNK_THRESHOLD, convert_pcap
 
 
 def main() -> None:
@@ -33,7 +33,8 @@ def main() -> None:
         type=int,
         default=None,
         help="split large captures into N-MiB chunks decoded in parallel "
-        "(default: auto — chunked for files over 64 MiB; 0 forces per-file)",
+        f"(default: auto — chunked for files over {_AUTO_CHUNK_THRESHOLD >> 20} MiB; "
+        "0 forces per-file)",
     )
     ap.add_argument(
         "--ts-tol-hours",

@@ -40,12 +40,17 @@ RUNTIME_CONF: dict[str, str] = {
 }
 
 # Build-time confs (only honored when *we* construct the session).
+# get_spark adds the core-count-derived ones.
 BUILD_CONF: dict[str, str] = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.driver.memory": "24g",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.ui.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Skips pyspark's per-task re-parse of pyspark.zip (worker_daemon.py).
+    "spark.python.daemon.module": "pcap_to_parquet_spark.worker_daemon",
+    # Workers import this package (and the daemon module above) from
+    # here, whatever the driver's working directory.
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 }
 
 
@@ -103,6 +108,7 @@ def get_spark(app_name: str = "pcap-to-parquet-spark", cpus: int | None = None) 
     """Local session for tests and bench; cluster deploys pass their own."""
     n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
     b = SparkSession.builder.appName(app_name).master(f"local[{n}]")
-    for k, v in {**BUILD_CONF, **RUNTIME_CONF}.items():
+    conf = {**BUILD_CONF, "spark.sql.shuffle.partitions": str(n), **RUNTIME_CONF}
+    for k, v in conf.items():
         b = b.config(k, v)
     return tune(b.getOrCreate())

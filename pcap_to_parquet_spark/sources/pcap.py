@@ -431,10 +431,11 @@ def convert_pcap(
 
     ``chunk_bytes``: ``None`` (default) auto-selects — per-file decode
     normally, the chunked reader (intra-file parallelism, deterministic
-    boundary resync) when any input file exceeds 64 MiB. An explicit
-    int forces chunked at that size; ``0`` forces per-file (e.g. for
-    captures spanning more than the chunked reader's ±48 h timestamp
-    anchor, which fail loud rather than resync wrong).
+    boundary resync) when any input file exceeds
+    ``_AUTO_CHUNK_THRESHOLD``. An explicit int forces chunked at that
+    size; ``0`` forces per-file (e.g. for captures spanning more than
+    the chunked reader's ±48 h timestamp anchor, which fail loud rather
+    than resync wrong).
 
     ``ts_tol`` (seconds) widens that resync anchor for long captures —
     the remedy the chunked reader's error message names, reachable

@@ -8,7 +8,7 @@ idiomatic connector form (reference CLI: /root/reference/src/main.rs:59-61):
   large file parallelizes across the cluster exactly like the chunked
   reader; small files get one partition each. Partitions decode with
   the same vectorized numpy kernels as ``read_pcap`` and yield Arrow
-  record batches (zero row-at-a-time Python).
+  record batches.
 - **streaming**: ``spark.readStream.format("pcap").load(dir)`` — a
   landing-directory tail: each micro-batch decodes the files that
   arrived since the last committed offset (offset = sorted seen-file
@@ -16,7 +16,8 @@ idiomatic connector form (reference CLI: /root/reference/src/main.rs:59-61):
   Structured Streaming front end.
 
 Options: ``chunk_mb`` (0 = one partition per file; default auto:
-chunked over 64 MiB), ``ts_tol_hours`` (resync anchor, chunked mode).
+chunks of ``pcap._AUTO_CHUNK_THRESHOLD``), ``ts_tol_hours`` (resync
+anchor, chunked mode).
 
 ``read_pcap`` / ``read_pcap_chunked`` remain the plain-API fast path;
 the connector is the same decode behind the standard source interface.

@@ -131,9 +131,12 @@ def test_convert_auto_chunk_policy(spark, tmp_path, monkeypatch):
     assert pcap_mod._auto_chunk_bytes(spark, str(p)) is None  # small file
 
     monkeypatch.setattr(pcap_mod, "_AUTO_CHUNK_THRESHOLD", 1024)
-    monkeypatch.setattr(pcap_mod, "_MIN_CHUNK", 2048)
-    cb = pcap_mod._auto_chunk_bytes(spark, str(p))
-    assert cb == 2048  # floor wins over size/parallelism
+    par = spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(pcap_mod, "_MIN_CHUNK", len(buf))
+    assert pcap_mod._auto_chunk_bytes(spark, str(p)) == len(buf)  # floor wins
+    monkeypatch.setattr(pcap_mod, "_MIN_CHUNK", 64)
+    assert len(buf) // par > 64
+    assert pcap_mod._auto_chunk_bytes(spark, str(p)) == len(buf) // par  # size/parallelism wins
 
     out_a = str(tmp_path / "auto")
     out_b = str(tmp_path / "perfile")

@@ -29,7 +29,7 @@ def _warmup(spark) -> None:
     QUERIES["q_flagship_revenue"](spark, SF_DIR).write.format("noop").mode(
         "overwrite"
     ).save()
-    n_workers = 2 * int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_workers = 2 * spark.sparkContext.defaultParallelism
     spark.range(10_000, numPartitions=n_workers).toDF("x").mapInPandas(
         lambda it: it, schema="x long"
     ).write.format("noop").mode("overwrite").save()

@@ -9,7 +9,6 @@ Usage: python tools/profile_substages.py [sf_dir]
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 
@@ -47,7 +46,7 @@ def main() -> None:
     d = load_table(spark, SF_DIR, "documents")
     # warmup
     noop(d)
-    n_workers = 2 * int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_workers = 2 * spark.sparkContext.defaultParallelism
     spark.range(10_000, numPartitions=n_workers).toDF("x").mapInPandas(
         lambda it: it, schema="x long"
     ).write.format("noop").mode("overwrite").save()
