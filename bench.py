@@ -1,5 +1,6 @@
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1)
-on local[$SPARK_GRAFT_CPUS].
+on the session ``get_spark`` builds (local[$SPARK_GRAFT_CPUS], default
+every core).
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -173,6 +174,8 @@ def final_line(timings: dict, total: float, sf: float, detail_name: str) -> str:
     the r06 overflow was the three-dict full line) PLUS the legacy
     "total" entry. Additions only: never remove or rename an existing
     queries entry."""
+    if "total" in timings:
+        raise ValueError('a query named "total" would collide with the legacy total entry')
     return json.dumps(
         {
             "metric": "headline_queries_total",
@@ -186,15 +189,16 @@ def final_line(timings: dict, total: float, sf: float, detail_name: str) -> str:
     )
 
 
-def detail_filename(repo: str, n_round: int, cpus: str) -> str:
-    """Round-stamped detail-file name. Non-default core counts get
-    their own _c{cpus} family: the driver's 8-core scaling run happens
-    AFTER its gate has written BENCH_r{N}.json, so the max+1 round
-    inference would stamp it N+1 and round N+1's genuine detail would
-    collide (this bit round 15: the 8-core detail landed as
-    BENCH_DETAIL_r16.json). Existing files are never overwritten —
-    letter-suffixed siblings keep every run's provenance."""
-    ctag = "" if cpus == "32" else f"_c{cpus}"
+def detail_filename(repo: str, n_round: int, cpus: int, box_cpus: int) -> str:
+    """Round-stamped detail-file name. A session on other than all of
+    the box's ``box_cpus`` cores gets its own _c{cpus} family: a
+    scaling run on fewer cores happens AFTER the round's gate has
+    written BENCH_r{N}.json, so the max+1 round inference would stamp
+    it N+1 and round N+1's genuine detail would collide (this bit round
+    15: the 8-core detail landed as BENCH_DETAIL_r16.json). Existing
+    files are never overwritten — letter-suffixed siblings keep every
+    run's provenance."""
+    ctag = "" if cpus == box_cpus else f"_c{cpus}"
     name = f"BENCH_DETAIL_r{n_round:02d}{ctag}.json"
     suffix = "b"
     while os.path.exists(os.path.join(repo, name)):
@@ -342,7 +346,9 @@ def main() -> None:
     # letter-suffixed sibling instead (r11b, r11c, ...): provenance of
     # every run survives, and the round's committed quiet number is
     # whichever the builder chose to commit.
-    detail_name = detail_filename(repo, n_round, os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    detail_name = detail_filename(
+        repo, n_round, spark.sparkContext.defaultParallelism, len(os.sched_getaffinity(0))
+    )
     with open(os.path.join(repo, detail_name), "w") as f:
         json.dump(full, f, indent=1)
     print(json.dumps(full))

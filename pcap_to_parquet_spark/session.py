@@ -16,6 +16,7 @@ reference's output codec (/root/reference/src/main.rs:72-75).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -70,18 +71,17 @@ _BYTE_SUFFIX = {
 
 
 def parse_byte_conf(raw: str) -> int:
-    """A Spark byte-conf value in bytes, accepting the same unit
-    suffixes the JVM does ('10MB', '64m', '10485760b', bare digits).
-    Unparseable or disabled (negative) values return 0, which callers
-    read as "never broadcast" — the always-correct shuffled fallback."""
-    try:
-        s = str(raw).strip().lower()
-        for suf in sorted(_BYTE_SUFFIX, key=len, reverse=True):
-            if s.endswith(suf):
-                return max(int(float(s[: -len(suf)])) * _BYTE_SUFFIX[suf], 0)
-        return max(int(s), 0)
-    except Exception:  # noqa: BLE001 - any exotic value means "don't broadcast"
+    """A Spark byte-conf value in bytes, parsed as the JVM does: an
+    integer with an optional leading '-' and an optional unit suffix
+    ('10MB', '64m', '10485760b', bare digits). Unparseable (fractional,
+    exponent, unknown unit) or disabled (negative) values return 0,
+    which callers read as "never broadcast" — the always-correct
+    shuffled fallback."""
+    m = re.fullmatch(r"(-?[0-9]+)([a-z]*)", str(raw).strip().lower())
+    unit = _BYTE_SUFFIX.get(m.group(2) or "b") if m else None
+    if unit is None:
         return 0
+    return max(int(m.group(1)) * unit, 0)
 
 
 def broadcast_threshold_bytes(spark: SparkSession) -> int:

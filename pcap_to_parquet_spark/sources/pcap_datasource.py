@@ -21,6 +21,13 @@ anchor, chunked mode).
 
 ``read_pcap`` / ``read_pcap_chunked`` remain the plain-API fast path;
 the connector is the same decode behind the standard source interface.
+
+Importing this module installs ``worker_daemon``'s zipimport fix. Spark
+plans a Python data source in worker processes of its own (one runs
+``.load()``, one plans each query and lists its partitions), and those
+ignore ``spark.python.daemon.module``; but every one of them imports
+this module to unpickle ``PcapDataSource``. Without the fix each
+planning call re-parses pyspark.zip once per zip importer.
 """
 
 from __future__ import annotations
@@ -28,6 +35,7 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator, Sequence
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -37,12 +45,20 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from pcap_to_parquet_spark import worker_daemon
+from pcap_to_parquet_spark.sources.pcap import _PROTOCOL_NAMES
+
+worker_daemon.install()  # for the planner workers: see the module docstring
+
 PACKET_DDL = (
     "src_ip string, dst_ip string, len bigint, protocol string, "
     "src_port int, dst_port int, mm_ts bigint, mm_id int, mm_port smallint"
 )
 
-_PROTOCOL_NAMES = {1: "ICMP", 2: "IGMP", 6: "TCP", 17: "UDP"}
+# lookup tables for _decode_to_arrow: byte value → its decimal text,
+# IPv4 protocol number → its name (NULL when unnamed)
+_OCTETS = pa.array([str(i) for i in range(256)], type=pa.string())
+_PROTO_BY_NUM = pa.array([_PROTOCOL_NAMES.get(i) for i in range(256)], type=pa.string())
 
 
 class PcapPartition(InputPartition):
@@ -139,13 +155,15 @@ def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-unt
 
     The numeric decode is the shared vectorized kernel; only the
     dotted-quad/protocol-name formatting happens here (the connector
-    yields final strings; read_pcap defers that to JVM codegen).
+    yields final strings; read_pcap defers that to JVM codegen), as
+    Arrow compute over whole columns: octet and protocol-name lookups
+    joined element-wise, nullable ints masked by their validity.
     Pushed filters apply as a numpy mask BETWEEN decode and string
-    formatting — pruned packets never materialize Python strings and
-    never cross the Arrow boundary. ``ipv6`` merges the v6 text
-    columns into the same output fields (same opt-in as read_pcap)."""
+    formatting — pruned packets never cross the Arrow boundary.
+    ``ipv6`` merges the v6 text columns into the same output fields
+    (same opt-in as read_pcap)."""
     import numpy as np
-    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
 
@@ -153,52 +171,35 @@ def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-unt
     if filters:
         keep = _filter_mask(a, filters, ipv6)
         a = {k: v[keep] for k, v in a.items()}
-    n = len(a["len"])
 
-    def dotted(u32: np.ndarray, valid: np.ndarray) -> list:
-        out: list = [None] * n
-        for i in np.flatnonzero(valid):
-            v = int(u32[i])
-            out[i] = f"{(v >> 24) & 255}.{(v >> 16) & 255}.{(v >> 8) & 255}.{v & 255}"
-        return out
+    def nullable(values: np.ndarray, valid: np.ndarray, type_: pa.DataType) -> pa.Array:
+        return pa.array(values.astype(type_.to_pandas_dtype()), mask=~valid, type=type_)
 
-    proto: list = [None] * n
-    for i in np.flatnonzero(a["proto_valid"]):
-        proto[i] = _PROTOCOL_NAMES.get(int(a["proto"][i]))
-    src, dst = dotted(a["src_u32"], a["ip_valid"]), dotted(a["dst_u32"], a["ip_valid"])
+    def dotted(u32: np.ndarray) -> pa.Array:
+        octets = [
+            _OCTETS.take(nullable((u32 >> s) & 255, a["ip_valid"], pa.uint8()))
+            for s in (24, 16, 8, 0)
+        ]
+        return pc.binary_join_element_wise(*octets, ".")
+
+    src, dst = dotted(a["src_u32"]), dotted(a["dst_u32"])
+    proto = _PROTO_BY_NUM.take(nullable(a["proto"], a["proto_valid"], pa.uint8()))
     if ipv6:
-        for i in range(n):
-            if a["src6"][i] is not None:
-                src[i], dst[i] = a["src6"][i], a["dst6"][i]
-            if a["proto6"][i] is not None:
-                proto[i] = a["proto6"][i]
+        src = pc.coalesce(pa.array(a["src6"], type=pa.string()), src)
+        dst = pc.coalesce(pa.array(a["dst6"], type=pa.string()), dst)
+        proto = pc.coalesce(pa.array(a["proto6"], type=pa.string()), proto)
 
     return pa.record_batch(
         [
-            pa.array(src, type=pa.string()),
-            pa.array(dst, type=pa.string()),
+            src,
+            dst,
             pa.array(a["len"].astype("int64")),
-            pa.array(proto, type=pa.string()),
-            pa.array(
-                [int(a["src_port"][i]) if a["ports_valid"][i] else None for i in range(n)],
-                type=pa.int32(),
-            ),
-            pa.array(
-                [int(a["dst_port"][i]) if a["ports_valid"][i] else None for i in range(n)],
-                type=pa.int32(),
-            ),
-            pa.array(
-                [int(a["mm_ts"][i]) if a["mm_valid"][i] else None for i in range(n)],
-                type=pa.int64(),
-            ),
-            pa.array(
-                [int(a["mm_id"][i]) if a["mm_valid"][i] else None for i in range(n)],
-                type=pa.int32(),
-            ),
-            pa.array(
-                [int(a["mm_port"][i]) if a["mm_valid"][i] else None for i in range(n)],
-                type=pa.int16(),
-            ),
+            proto,
+            nullable(a["src_port"], a["ports_valid"], pa.int32()),
+            nullable(a["dst_port"], a["ports_valid"], pa.int32()),
+            nullable(a["mm_ts"], a["mm_valid"], pa.int64()),
+            nullable(a["mm_id"], a["mm_valid"], pa.int32()),
+            nullable(a["mm_port"], a["mm_valid"], pa.int16()),
         ],
         names=[
             "src_ip",

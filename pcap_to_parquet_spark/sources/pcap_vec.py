@@ -9,11 +9,11 @@ tests/test_pcap_vec.py); only the execution strategy differs:
 - every fixed-offset field (ethertype, VLAN, IPs, protocol, ports,
   outer Metamako trailer attempt at ``len`` and ``len-4``) is a numpy
   fancy-indexed gather over all packets at once;
-- only packets whose OUTER trailer attempt accepts fall back to the
-  per-row stacked-trailer chain walk (main.rs:128-148 is a sequential
-  state machine per packet: i += 16 on parse success else 1 — data-
-  dependent, so not batchable across rows). Untagged traffic never
-  leaves numpy.
+- only packets whose OUTER trailer attempt accepts get the stacked-
+  trailer chain walk (main.rs:128-148 is a sequential state machine
+  per packet: i += 16 on parse success else 1). Every parse attempt of
+  the walk is tested in one vectorized pass; the walk itself then hops
+  over the accepted attempts only. Untagged traffic never leaves numpy.
 
 Measured ~10× over the scalar path per core; Spark parallelizes
 across files/chunks on top.
@@ -28,7 +28,6 @@ from pcap_to_parquet_spark.sources.pcap import (
     _MAGICS,
     _RECORD_HEADER_LEN,
     PcapFormatError,
-    _parse_metamako_trailer,
 )
 
 
@@ -251,7 +250,7 @@ def decode_pcap_arrays(buf: bytes, ipv6: bool = False) -> dict[str, np.ndarray]:
     # offset reads, so we pre-test every candidate position of every
     # accepted row in one flat vectorized pass. Rows with zero acceptable
     # inner candidates (the overwhelming majority: random payload bytes
-    # almost never pass the |Δts|<300s ∧ ns<1e9 heuristic) skip the walk.
+    # almost never pass the |Δts|<300s ∧ ns<1e9 heuristic) have no walk.
     acc_rows = np.flatnonzero(mm_valid)
     if acc_rows.size:
         fcs_all = np.where(acc_fcs[acc_rows], 4, 0).astype(np.int64)
@@ -285,20 +284,27 @@ def decode_pcap_arrays(buf: bytes, ipv6: bool = False) -> dict[str, np.ndarray]:
                 cs = np.where(cs >= 1 << 31, cs - (1 << 32), cs)
                 cns = np.where(cns >= 1 << 31, cns - (1 << 32), cns)
                 acc_c[idx] = (np.abs(ts_c[idx] - cs) < 300) & (cns < 1_000_000_000)
-            for h in np.flatnonzero(np.logical_or.reduceat(acc_c, starts)):
-                gi = int(r[h])
-                length = int(orig[gi])
-                data = bytes(B[off[gi] : off[gi] + incl[gi]])
-                fields: dict = {}
-                pcap_ts = int(ts[gi])
-                fh = int(f[h])
-                j = 16
-                while j <= length - 16 - fh:
-                    j += _parse_metamako_trailer(data, fields, pcap_ts, length - j - fh) or 1
-                if fields:  # an inner (earlier-device) trailer wins
-                    mm_ts_a[gi] = fields["mm_ts"]
-                    mm_id_a[gi] = fields["mm_id"]
-                    mm_port_a[gi] = fields["mm_port"]
+            # The walk visits candidate i, then i+16 after an accepting
+            # parse, else i+1: from any j it next lands on the first
+            # accepted candidate at or after j. Visiting only those, the
+            # last one visited per row wins.
+            hit = np.flatnonzero(acc_c)
+            last: dict[int, int] = {}  # row -> its last visited candidate
+            nxt: dict[int, int] = {}
+            for k, h, i in zip(hit.tolist(), row_i[hit].tolist(), i_val[hit].tolist()):
+                if i >= nxt.get(h, 16):
+                    last[h], nxt[h] = k, i + 16
+            if last:
+                k = np.fromiter(last.values(), dtype=np.int64, count=len(last))
+                gi = r[row_i[k]]
+                end = base[k] + e[k]
+                mm_s = W4[end - 12] @ wbe
+                mm_ns = W4[end - 8] @ wbe
+                mm_s = np.where(mm_s >= 1 << 31, mm_s - (1 << 32), mm_s)
+                mm_ns = np.where(mm_ns >= 1 << 31, mm_ns - (1 << 32), mm_ns)
+                mm_ts_a[gi] = mm_s * 10**9 + mm_ns
+                mm_id_a[gi] = B[end - 3].astype(np.int64) << 8 | B[end - 2]
+                mm_port_a[gi] = B[end - 1]
 
     return {
         "src_u32": src_u32,

@@ -12,7 +12,11 @@ so there :func:`install` changes nothing.
 
 Run as the daemon module (``spark.python.daemon.module``): it patches
 ``zipimport`` once, then hands off to pyspark's own daemon, whose
-forked workers inherit the patched class.
+forked workers inherit the patched class. Workers that Spark starts
+without that setting (the Python data source planners) get the patch
+from ``sources/pcap_datasource.py``, which calls :func:`install` when
+it is imported; :func:`install` is idempotent, so the executor workers
+that import that module too keep a single wrapper.
 """
 
 from __future__ import annotations
@@ -26,10 +30,13 @@ import zipimport
 def install() -> bool:
     """Make ``zipimporter.invalidate_caches`` re-read an archive only
     when its ``(st_mtime_ns, st_size)`` changed since the last read.
-    Returns whether it patched (False on CPython >= 3.13)."""
+    Returns whether the patch is in effect (False on CPython >= 3.13).
+    A repeated call changes nothing."""
     if sys.version_info >= (3, 13):
         return False
     reload = zipimport.zipimporter.invalidate_caches
+    if getattr(reload, "_reads_only_changed", False):
+        return True
     cache = zipimport._zip_directory_cache
     # archive -> stat key taken just before the read now in ``cache``
     read_at: dict[str, tuple[int, int]] = {}
@@ -49,6 +56,7 @@ def install() -> bool:
         if self.archive in cache:  # the read succeeded
             read_at[self.archive] = key
 
+    invalidate_caches._reads_only_changed = True  # type: ignore[attr-defined]
     zipimport.zipimporter.invalidate_caches = invalidate_caches
     # One read per archive here, before the daemon forks, so no worker
     # pays it on its first task.

@@ -12,6 +12,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
@@ -42,14 +44,22 @@ def test_final_line_is_one_line_and_tail_sized():
     assert json.loads(line)["queries"]["total"] == 99.9
 
 
+def test_final_line_rejects_a_query_named_total():
+    with pytest.raises(ValueError, match="total"):
+        bench.final_line({"q_a": 1.0, "total": 2.0}, 3.0, 0.1, "BENCH_DETAIL_r16.json")
+
+
 def test_detail_filename_stamps_core_count_family(tmp_path):
-    repo = str(tmp_path)
-    # default cores: plain round stamp, then letter suffixes
-    assert bench.detail_filename(repo, 16, "32") == "BENCH_DETAIL_r16.json"
-    open(os.path.join(repo, "BENCH_DETAIL_r16.json"), "w").write("{}")
-    assert bench.detail_filename(repo, 16, "32") == "BENCH_DETAIL_r16b.json"
-    # non-default cores go to their own family and never collide with
-    # the main lineage (the r15 8-core run stole BENCH_DETAIL_r16.json)
-    assert bench.detail_filename(repo, 16, "8") == "BENCH_DETAIL_r16_c8.json"
-    open(os.path.join(repo, "BENCH_DETAIL_r16_c8.json"), "w").write("{}")
-    assert bench.detail_filename(repo, 16, "8") == "BENCH_DETAIL_r16b_c8.json"
+    for box in sorted({4, 32, len(os.sched_getaffinity(0))}):
+        repo = str(tmp_path / str(box))
+        os.mkdir(repo)
+        # all of the box's cores: plain round stamp, then letter suffixes
+        assert bench.detail_filename(repo, 16, box, box) == "BENCH_DETAIL_r16.json"
+        open(os.path.join(repo, "BENCH_DETAIL_r16.json"), "w").write("{}")
+        assert bench.detail_filename(repo, 16, box, box) == "BENCH_DETAIL_r16b.json"
+        # any other core count goes to its own family and never collides
+        # with the main lineage (the r15 8-core run stole BENCH_DETAIL_r16.json)
+        other = box // 2 or box + 1
+        assert bench.detail_filename(repo, 16, other, box) == f"BENCH_DETAIL_r16_c{other}.json"
+        open(os.path.join(repo, f"BENCH_DETAIL_r16_c{other}.json"), "w").write("{}")
+        assert bench.detail_filename(repo, 16, other, box) == f"BENCH_DETAIL_r16b_c{other}.json"

@@ -70,6 +70,33 @@ def test_stacked_and_fcs_trailers_equivalence():
     assert rows_from_arrays(buf) == decode_pcap_bytes(buf)
 
 
+def test_stacked_walk_skips_candidate_inside_previous_hit():
+    """After an inner trailer parses at offset i the walk resumes at
+    i + 16, so an acceptable candidate 8 bytes further in is never
+    tried; one exactly 16 bytes further in still wins."""
+    import struct
+
+    base = eth(ipv4(17, "10.0.0.1", "10.0.0.2", udp(1, 2)))
+    t = BASE_TS
+    be32 = lambda v: struct.pack(">i", v)  # noqa: E731
+    # inner trailer ending 16 bytes before the frame end, whose first
+    # word is a valid ns: with the 4 bytes before it as a valid sec, a
+    # trailer ending 24 bytes before the frame end also parses
+    inner = be32(5) + be32(t - 1) + be32(7) + struct.pack(">BHB", 0, 11, 1)
+    outer = mm_trailer(t, 9, 99, 9)
+    # a trailer ending 32 bytes before the end whose last word is that sec
+    innermost = be32(0) + be32(t - 3) + be32(3) + be32(t - 2)
+    frames = [
+        base + be32(t - 2) + inner + outer,
+        base + innermost + inner + outer,
+    ]
+    buf = pcap_file([(t, len(f), f) for f in frames])
+    rows = rows_from_arrays(buf)
+    assert rows == decode_pcap_bytes(buf)
+    assert (rows[0]["mm_ts"], rows[0]["mm_id"], rows[0]["mm_port"]) == ((t - 1) * 10**9 + 7, 11, 1)
+    assert rows[1]["mm_ts"] == (t - 3) * 10**9 + 3
+
+
 @settings(max_examples=150, deadline=None)
 @given(
     st.lists(

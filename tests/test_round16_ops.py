@@ -37,6 +37,12 @@ KEY = "spark.sql.autoBroadcastJoinThreshold"
         ("-1", 0),  # disabled -> never broadcast
         ("garbage", 0),  # unparseable -> never broadcast
         ("", 0),
+        # the JVM accepts integers only: no fraction, no exponent
+        ("10.5m", 0),
+        ("1e6", 0),
+        ("1.0", 0),
+        ("-1m", 0),
+        ("10xb", 0),
     ],
 )
 def test_parse_byte_conf_jvm_unit_suffixes(raw, expect):

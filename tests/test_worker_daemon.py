@@ -84,6 +84,95 @@ def test_zip_reread_only_when_changed(tmp_path):
     assert r["b"] == 2
 
 
+_INSTALL_TWICE = """
+import importlib, json, sys, zipfile, zipimport
+from pcap_to_parquet_spark import worker_daemon
+
+zpath = {zpath!r}
+with zipfile.ZipFile(zpath, "w") as z:
+    z.writestr("zpkg/__init__.py", "")
+sys.path.insert(0, zpath)
+import zpkg
+
+reads = []
+read_directory = zipimport._read_directory
+zipimport._read_directory = lambda p: reads.append(p) or read_directory(p)
+
+first = worker_daemon.install()
+wrapper = zipimport.zipimporter.invalidate_caches
+primed = len(reads)
+second = worker_daemon.install()
+del reads[:]
+importlib.invalidate_caches()
+print(json.dumps({{"first": first, "second": second, "primed": primed,
+                  "same": zipimport.zipimporter.invalidate_caches is wrapper,
+                  "unchanged": len(reads)}}))
+"""
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="3.13+ re-reads lazily; nothing to patch")
+def test_install_twice_keeps_one_wrapper(tmp_path):
+    r = _run(_INSTALL_TWICE.format(zpath=str(tmp_path / "mods.zip")))
+    # the second call neither wraps the wrapper nor primes again, and an
+    # unchanged archive is still not re-read
+    assert r == {"first": True, "second": True, "primed": 1, "same": True, "unchanged": 0}
+
+
+_IMPORT_SOURCE = """
+import json, sys, zipimport
+stock = zipimport.zipimporter.invalidate_caches
+if {fake_313}:
+    import pyspark.sql.datasource  # noqa: F401 - imported at the real version
+    import pcap_to_parquet_spark.sources.pcap  # noqa: F401
+    sys.version_info = (3, 13, 0, "final", 0)
+import pcap_to_parquet_spark.sources.pcap_datasource
+patch = zipimport.zipimporter.invalidate_caches
+print(json.dumps({{"patched": patch is not stock, "qualname": patch.__qualname__}}))
+"""
+
+
+@pytest.mark.parametrize("fake_313", [False, True])
+def test_importing_the_pcap_source_installs_the_patch(fake_313):
+    """Spark's data source planner workers ignore the daemon module but
+    import the pcap source to unpickle it; that import installs the
+    patch below 3.13 (faked here for the >= 3.13 case)."""
+    r = _run(_IMPORT_SOURCE.format(fake_313=fake_313))
+    if fake_313 or sys.version_info >= (3, 13):
+        assert r == {"patched": False, "qualname": "zipimporter.invalidate_caches"}
+    else:
+        assert r == {"patched": True, "qualname": "install.<locals>.invalidate_caches"}
+
+
+def test_pcap_source_reads_repeatedly(spark):
+    """Repeated ``format("pcap")`` reads, planned by reused planner
+    workers, return the golden rows every time, with or without pushed
+    filters."""
+    from pyspark.sql import functions as F
+
+    from pcap_to_parquet_spark.operators.pcap_query import _fixture_path
+    from pcap_to_parquet_spark.sources.pcap import decode_pcap_bytes
+    from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
+
+    register_pcap_source(spark)
+    with open(_fixture_path(), "rb") as fh:
+        expect = decode_pcap_bytes(fh.read())
+    assert len(expect) == 13
+
+    def key(r: dict) -> tuple:
+        return tuple((v is None, v) for v in r.values())
+
+    def rows(df) -> list[dict]:  # noqa: ANN001
+        return sorted((r.asDict() for r in df.collect()), key=key)
+
+    full = sorted(expect, key=key)
+    kept = [r for r in full if r["protocol"] == "UDP" and r["len"] >= 60]
+    assert 0 < len(kept) < 13
+    for _ in range(2):
+        assert rows(spark.read.format("pcap").load(_fixture_path())) == full
+    df = spark.read.format("pcap").load(_fixture_path())
+    assert rows(df.where((F.col("protocol") == "UDP") & (F.col("len") >= 60))) == kept
+
+
 _LEAVE_ALONE = """
 import json, sys, zipimport
 stock = zipimport.zipimporter.invalidate_caches
