@@ -90,8 +90,8 @@ def _nn_resize(arr, out_w: int, out_h: int):  # type: ignore[no-untyped-def]
 
 def media_table(documents: DataFrame) -> DataFrame:
     """documents → media table: the text bytes stand in for an opaque
-    payload; metadata is typed. Real pipelines load payloads via
-    ``binaryFile`` scans exactly like sources/pcap.py does."""
+    payload; metadata is typed. Real pipelines load payloads with a
+    ``binaryFile`` scan."""
     return documents.select(
         F.col("doc_id").alias("media_id"),
         F.encode("text", "UTF-8").alias("payload"),

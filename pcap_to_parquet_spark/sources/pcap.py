@@ -17,16 +17,19 @@ Deliberate divergence (SURVEY §2.2): malformed/truncated packets never
 raise — fields stay NULL (the reference panics on slice overruns,
 main.rs:190-191,237).
 
-Execution model: ``binaryFile`` scan → vectorized numpy decode
-(sources/pcap_vec.py) → JVM-side finishing. Parallelism is per-file
-here; single large captures get intra-file chunked parallelism via
-``sources.pcap_chunked.read_pcap_chunked``. The decoded table is then
-plain column algebra — Catalyst sees through everything downstream.
+Execution model: every entry point (``read_pcap``, ``read_pcap_chunked``,
+``read_pcapng``) is one spec-driven scan, ``_read_specs``: the
+``(path, start, end)`` units of ``pcap_chunked.chunk_specs`` → one
+``mapInPandas`` decoding each unit with the vectorized numpy kernel
+(sources/pcap_vec.py) → JVM-side finishing. A unit is a whole file or,
+for large captures, a byte-range chunk with boundary resync. The
+decoded table is then plain column algebra — Catalyst sees through
+everything downstream.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -348,13 +351,49 @@ def _finish_packets(raw: DataFrame, ipv6: bool = False) -> DataFrame:
     )
 
 
-def read_pcap(spark: SparkSession, path: str, ipv6: bool = False) -> DataFrame:
-    """pcap file(s)/glob → packets DataFrame (PACKET_SCHEMA).
+_WHOLE_FILE = 1 << 62  # a chunk size no file reaches: one unit per file
 
-    binaryFile scan (one task per file) → vectorized numpy decode
-    (sources/pcap_vec.py) emitting numeric columns via Arrow →
-    JVM-side finishing. For single large captures use
-    ``sources.pcap_chunked.read_pcap_chunked`` (intra-file
+
+def _read_specs(
+    spark: SparkSession,
+    specs: list[tuple[str, int, int]],
+    ipv6: bool = False,
+    ts_tol: int | None = None,
+    reframe: Callable[[bytes], bytes] | None = None,
+) -> DataFrame:
+    """The one pcap scan: ``(path, start, end)`` specs → packets
+    DataFrame (PACKET_SCHEMA). The specs slice into
+    ``min(len(specs), defaultParallelism)`` partitions, none empty (an
+    empty one still costs a Python task); each spec decodes through
+    ``pcap_chunked.read_unit`` (``reframe`` first turns a unit into
+    legacy pcap, e.g. pcapng) and the vectorized kernel, then the
+    numeric columns are finished JVM-side."""
+    from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL, read_unit
+
+    tune(spark)
+    tol = _TS_TOL if ts_tol is None else ts_tol
+    sc = spark.sparkContext
+    units = sc.parallelize(specs, min(len(specs), sc.defaultParallelism))
+    sdf = spark.createDataFrame(units, "path string, start long, end long")
+
+    def decode_units(batches):  # type: ignore[no-untyped-def]
+        from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
+
+        for pdf in batches:
+            for path, start, end in zip(pdf["path"], pdf["start"], pdf["end"]):
+                buf = read_unit(path, int(start), int(end), tol)
+                if reframe is not None:
+                    buf = reframe(buf)
+                yield _arrays_to_pandas(decode_pcap_arrays(buf, ipv6))
+
+    schema = _RAW_DECODE_SCHEMA_V6 if ipv6 else _RAW_DECODE_SCHEMA
+    return _finish_packets(sdf.mapInPandas(decode_units, schema=schema), ipv6)
+
+
+def read_pcap(spark: SparkSession, path: str, ipv6: bool = False) -> DataFrame:
+    """pcap file(s)/dir/glob → packets DataFrame (PACKET_SCHEMA), one
+    whole-file unit per capture (see ``_read_specs``). For single large
+    captures use ``sources.pcap_chunked.read_pcap_chunked`` (intra-file
     parallelism, O(chunk) task memory).
 
     ``ipv6=True`` additionally decodes ethertype 0x86DD (plain and
@@ -365,19 +404,9 @@ def read_pcap(spark: SparkSession, path: str, ipv6: bool = False) -> DataFrame:
     PACKET_SCHEMA either way. Default False = byte-identical
     reference parity (the reference NULLs IPv6, main.rs:239-251).
     """
-    tune(spark)
-    files = spark.read.format("binaryFile").load(path).select("content")
+    from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs
 
-    def decode_files(batches):  # type: ignore[no-untyped-def]
-        from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                yield _arrays_to_pandas(decode_pcap_arrays(bytes(content), ipv6))
-
-    schema = _RAW_DECODE_SCHEMA_V6 if ipv6 else _RAW_DECODE_SCHEMA
-    raw = files.mapInPandas(decode_files, schema=schema)
-    return _finish_packets(raw, ipv6)
+    return _read_specs(spark, chunk_specs(path, _WHOLE_FILE), ipv6)
 
 
 # auto-chunk policy: captures above this size decode via the chunked
@@ -401,7 +430,7 @@ def _auto_chunk_bytes(spark: SparkSession, in_path: str) -> int | None:
     try:
         import os
 
-        sizes = {os.path.getsize(f) for f, _s, _e in chunk_specs(in_path, 1 << 62)}
+        sizes = {os.path.getsize(f) for f, _s, _e in chunk_specs(in_path, _WHOLE_FILE)}
     except Exception:  # noqa: BLE001 - unreadable paths fall to per-file reader
         return None
     biggest = max(sizes, default=0)

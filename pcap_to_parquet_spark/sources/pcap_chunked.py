@@ -1,9 +1,10 @@
-"""Intra-file pcap parallelism: chunked reads with boundary resync.
+"""pcap read units: file listing, byte-range chunks, boundary resync.
 
-``binaryFile`` gives one task per file, which is the right shape for
-many small captures but serializes a single 10 GB capture onto one
-core (and materializes the whole file in one task). This reader
-splits each file into byte-range chunks decoded in parallel:
+Every pcap reader scans ``(path, start, end)`` units from
+``chunk_specs`` and reads each through ``read_unit``: a unit covering
+its whole file is the raw file; a smaller one is a byte-range chunk, so
+a single 10 GB capture decodes in parallel in O(chunk) task memory
+instead of on one core:
 
 - chunk boundaries are arbitrary byte offsets; each task *resyncs* to
   the first real record header at-or-after its start offset by
@@ -30,10 +31,12 @@ from glob import glob
 from pyspark.sql import DataFrame, SparkSession
 
 from pcap_to_parquet_spark.sources.pcap import (
+    _AUTO_CHUNK_THRESHOLD,
     _GLOBAL_HEADER_LEN,
     _MAGICS,
     _RECORD_HEADER_LEN,
     PcapFormatError,
+    _read_specs,
 )
 
 # ±48 h around the file's first-record ts: must exceed the capture's
@@ -149,28 +152,37 @@ def sync_offset(
 def chunk_specs(path: str, chunk_bytes: int) -> list[tuple[str, int, int]]:
     """(path, start, end) byte ranges per file; start=24 for the first.
 
-    Directories are listed non-recursively with subdirectories and
-    other non-files skipped (parity with the binaryFile scan). A valid
-    header-only capture contributes zero specs (→ empty DataFrame);
-    only a path that matches no files at all is an error."""
+    Directories and globs list non-recursively, skipping subdirectories,
+    other non-files and ``_``/``.``-prefixed names (parity with Spark's
+    file sources). Every file gets at least one unit, so a header-only
+    capture reads as zero rows and a short or non-pcap file fails loud
+    in ``read_unit``; only a path that matches no files is an error here."""
+    hidden = ("_", ".")
     if any(c in path for c in "*?["):
-        candidates = sorted(glob(path))
+        candidates = [f for f in glob(path) if not os.path.basename(f).startswith(hidden)]
     elif os.path.isdir(path):
-        candidates = sorted(os.path.join(path, f) for f in os.listdir(path))
+        candidates = [os.path.join(path, f) for f in os.listdir(path) if not f.startswith(hidden)]
     else:
         candidates = [path]
-    files = [f for f in candidates if os.path.isfile(f)]
+    files = sorted(f for f in candidates if os.path.isfile(f))
     if not files:
         raise PcapFormatError(f"no pcap files under {path!r}")
     specs: list[tuple[str, int, int]] = []
     for f in files:
-        size = os.path.getsize(f)
-        start = _GLOBAL_HEADER_LEN
-        while start < size:
-            end = min(start + chunk_bytes, size)
-            specs.append((f, start, end))
-            start = end
+        size = max(os.path.getsize(f), _GLOBAL_HEADER_LEN)
+        starts = range(_GLOBAL_HEADER_LEN, size, chunk_bytes) or [_GLOBAL_HEADER_LEN]
+        specs.extend((f, s, min(s + chunk_bytes, size)) for s in starts)
     return specs
+
+
+def read_unit(path: str, start: int, end: int, ts_tol: int = _TS_TOL) -> bytes:
+    """One ``chunk_specs`` unit as a standalone pcap buffer: the raw
+    file when the unit covers it whole (the decoder then rejects short
+    or non-pcap files), else ``decode_chunk``."""
+    with open(path, "rb") as fh:
+        if start == _GLOBAL_HEADER_LEN and end >= os.fstat(fh.fileno()).st_size:
+            return fh.read()
+    return decode_chunk(path, start, end, ts_tol)
 
 
 def decode_chunk(path: str, start: int, end: int, ts_tol: int = _TS_TOL) -> bytes:
@@ -258,12 +270,12 @@ def decode_chunk(path: str, start: int, end: int, ts_tol: int = _TS_TOL) -> byte
 def read_pcap_chunked(
     spark: SparkSession,
     path: str,
-    chunk_bytes: int = 64 * 1024 * 1024,
+    chunk_bytes: int = _AUTO_CHUNK_THRESHOLD,
     ts_tol: int = _TS_TOL,
     ipv6: bool = False,
 ) -> DataFrame:
     """pcap file(s) → packets DataFrame with intra-file parallelism:
-    one task per ``chunk_bytes`` byte range. Same output as
+    one unit per ``chunk_bytes`` byte range. Same output as
     ``read_pcap`` (tests assert row-set equality), different physical
     shape: a single large capture fans out across the cluster.
 
@@ -271,28 +283,4 @@ def read_pcap_chunked(
     inside the same chunked kernel — resync is L2-agnostic (it anchors
     on record headers, not packet contents), so the boundary contract
     is unchanged. Default False = reference parity (main.rs:239-251)."""
-    from pcap_to_parquet_spark.sources.pcap import (
-        _finish_packets,
-        _RAW_DECODE_SCHEMA,
-        _RAW_DECODE_SCHEMA_V6,
-    )
-    from pcap_to_parquet_spark.session import tune
-
-    tune(spark)
-    specs = chunk_specs(path, chunk_bytes)
-    sdf = spark.createDataFrame(specs, "path string, start long, end long").repartition(
-        max(len(specs), 1)
-    )
-
-    def decode_specs(batches):  # type: ignore[no-untyped-def]
-        from pcap_to_parquet_spark.sources.pcap import _arrays_to_pandas
-        from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
-
-        for pdf in batches:
-            for path_, start_, end_ in zip(pdf["path"], pdf["start"], pdf["end"]):
-                buf = decode_chunk(path_, int(start_), int(end_), ts_tol)
-                yield _arrays_to_pandas(decode_pcap_arrays(buf, ipv6))
-
-    schema = _RAW_DECODE_SCHEMA_V6 if ipv6 else _RAW_DECODE_SCHEMA
-    raw = sdf.mapInPandas(decode_specs, schema=schema)
-    return _finish_packets(raw, ipv6)
+    return _read_specs(spark, chunk_specs(path, chunk_bytes), ipv6, ts_tol)

@@ -19,8 +19,9 @@ Options: ``chunk_mb`` (0 = one partition per file; default auto:
 chunks of ``pcap._AUTO_CHUNK_THRESHOLD``), ``ts_tol_hours`` (resync
 anchor, chunked mode).
 
-``read_pcap`` / ``read_pcap_chunked`` remain the plain-API fast path;
-the connector is the same decode behind the standard source interface.
+``read_pcap`` / ``read_pcap_chunked`` scan the same ``chunk_specs`` units
+through the same ``read_unit``; the connector differs only in where the
+strings are finished (``pyarrow.compute`` here, JVM codegen there).
 
 Importing this module installs ``worker_daemon``'s zipimport fix. Spark
 plans a Python data source in worker processes of its own (one runs
@@ -44,16 +45,19 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+from pyspark.sql.types import StructType
 
 from pcap_to_parquet_spark import worker_daemon
-from pcap_to_parquet_spark.sources.pcap import _PROTOCOL_NAMES
+from pcap_to_parquet_spark.schema import PACKET_SCHEMA
+from pcap_to_parquet_spark.sources.pcap import (
+    _AUTO_CHUNK_THRESHOLD,
+    _GLOBAL_HEADER_LEN,
+    _PROTOCOL_NAMES,
+    _WHOLE_FILE,
+)
+from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL, chunk_specs, read_unit
 
 worker_daemon.install()  # for the planner workers: see the module docstring
-
-PACKET_DDL = (
-    "src_ip string, dst_ip string, len bigint, protocol string, "
-    "src_port int, dst_port int, mm_ts bigint, mm_id int, mm_port smallint"
-)
 
 # lookup tables for _decode_to_arrow: byte value → its decimal text,
 # IPv4 protocol number → its name (NULL when unnamed)
@@ -151,7 +155,7 @@ def _filter_mask(a, filters, ipv6=False):  # type: ignore[no-untyped-def]
 
 
 def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-untyped-def]
-    """One in-memory capture → one Arrow RecordBatch (PACKET_DDL).
+    """One in-memory capture → one Arrow RecordBatch (PACKET_SCHEMA).
 
     The numeric decode is the shared vectorized kernel; only the
     dotted-quad/protocol-name formatting happens here (the connector
@@ -201,17 +205,7 @@ def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-unt
             nullable(a["mm_id"], a["mm_valid"], pa.int32()),
             nullable(a["mm_port"], a["mm_valid"], pa.int16()),
         ],
-        names=[
-            "src_ip",
-            "dst_ip",
-            "len",
-            "protocol",
-            "src_port",
-            "dst_port",
-            "mm_ts",
-            "mm_id",
-            "mm_port",
-        ],
+        names=PACKET_SCHEMA.names,
     )
 
 
@@ -223,8 +217,6 @@ class PcapBatchReader(DataSourceReader):
         chunk_mb = options.get("chunk_mb")
         self.chunk_mb = int(chunk_mb) if chunk_mb is not None else None
         tol_h = options.get("ts_tol_hours")
-        from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL
-
         self.ts_tol = int(float(tol_h) * 3600) if tol_h is not None else _TS_TOL
         self.ipv6 = str(options.get("ipv6", "false")).lower() == "true"
         self.pushed: list = []
@@ -262,11 +254,8 @@ class PcapBatchReader(DataSourceReader):
                 yield f
 
     def partitions(self) -> Sequence[PcapPartition]:
-        from pcap_to_parquet_spark.sources.pcap import _AUTO_CHUNK_THRESHOLD
-        from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs
-
         if self.chunk_mb == 0:
-            chunk_bytes = 1 << 62  # one partition per file
+            chunk_bytes = _WHOLE_FILE  # one partition per file
         elif self.chunk_mb is None:
             chunk_bytes = _AUTO_CHUNK_THRESHOLD  # auto: big files split
         else:
@@ -277,16 +266,7 @@ class PcapBatchReader(DataSourceReader):
         ]
 
     def read(self, partition: PcapPartition) -> Iterator:  # type: ignore[override]
-        from pcap_to_parquet_spark.sources.pcap_chunked import decode_chunk
-
-        size = os.path.getsize(partition.path)
-        if partition.start == 0 and partition.end >= size:
-            with open(partition.path, "rb") as f:
-                buf = f.read()
-        else:
-            buf = decode_chunk(
-                partition.path, partition.start, partition.end, partition.ts_tol
-            )
+        buf = read_unit(partition.path, partition.start, partition.end, partition.ts_tol)
         yield _decode_to_arrow(buf, self.pushed, self.ipv6)
 
 
@@ -313,8 +293,6 @@ class PcapStreamReader(DataSourceStreamReader):
         return {"files": self._list()}
 
     def partitions(self, start: dict, end: dict) -> Sequence[PcapPartition]:
-        from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL
-
         new = [f for f in end["files"] if f not in set(start["files"])]
         if not new:
             # NO-DATA batch (same offset both ends): the engine plans
@@ -323,23 +301,24 @@ class PcapStreamReader(DataSourceStreamReader):
             # list aborts the batch before the stateful operators run,
             # so yield one sentinel partition that decodes to 0 rows.
             return [PcapPartition("", 0, 0, _TS_TOL)]
-        return [PcapPartition(f, 0, 1 << 62, _TS_TOL) for f in new]
+        return [PcapPartition(f, _GLOBAL_HEADER_LEN, _WHOLE_FILE, _TS_TOL) for f in new]
 
     def read(self, partition: PcapPartition) -> Iterator:  # type: ignore[override]
-        if not partition.path:  # no-data sentinel: header-only capture
-            from pcap_to_parquet_spark.sources.pcap_fixtures import pcap_file
+        from pcap_to_parquet_spark.sources.pcap_fixtures import pcap_file
 
-            yield _decode_to_arrow(pcap_file([]), ipv6=self.ipv6)
-            return
-        with open(partition.path, "rb") as f:
-            yield _decode_to_arrow(f.read(), ipv6=self.ipv6)
+        buf = (
+            read_unit(partition.path, partition.start, partition.end, partition.ts_tol)
+            if partition.path
+            else pcap_file([])  # no-data sentinel: header-only capture
+        )
+        yield _decode_to_arrow(buf, ipv6=self.ipv6)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are checkpointed by the engine; nothing to clean
 
 
 def render_packet_record(r):  # type: ignore[no-untyped-def]
-    """One PACKET_DDL row → a (ts_sec, origlen, frame_bytes) pcap
+    """One PACKET_SCHEMA row → a (ts_sec, origlen, frame_bytes) pcap
     record whose re-decode returns exactly the row.
 
     The decoder anchors trailers at ORIGLEN (main.rs:92,138): render
@@ -423,8 +402,8 @@ class PcapDataSource(DataSource):
     def name(cls) -> str:
         return "pcap"
 
-    def schema(self) -> str:
-        return PACKET_DDL
+    def schema(self) -> StructType:
+        return PACKET_SCHEMA
 
     def reader(self, schema) -> PcapBatchReader:  # type: ignore[no-untyped-def]
         return PcapBatchReader(self.options)

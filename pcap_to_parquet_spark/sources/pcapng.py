@@ -20,7 +20,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pcap_to_parquet_spark.sources.pcap import PcapFormatError
+from pcap_to_parquet_spark.sources.pcap import _WHOLE_FILE, PcapFormatError, _read_specs
+from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs
 
 PCAPNG_MAGIC = b"\x0a\x0d\x0d\x0a"
 
@@ -152,32 +153,10 @@ def reframe_legacy(raw: bytes) -> bytes:
 
 
 def read_pcapng(spark: SparkSession, path: str, ipv6: bool = False) -> DataFrame:
-    """pcapng file(s)/glob → packets DataFrame (PACKET_SCHEMA), through
-    the vectorized decoder: the block walk re-frames each file into the
-    legacy record layout in-memory (``reframe_legacy``), then
-    ``decode_pcap_arrays`` runs unchanged (one synthetic buffer per
-    file; columnar from there). ``ipv6=True`` enables the opt-in v6
-    decode exactly as in ``read_pcap`` (default = reference parity)."""
-    from pcap_to_parquet_spark.session import tune
-    from pcap_to_parquet_spark.sources.pcap import (
-        _RAW_DECODE_SCHEMA,
-        _RAW_DECODE_SCHEMA_V6,
-        _arrays_to_pandas,
-        _finish_packets,
-    )
-
-    tune(spark)
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def decode_files(batches):  # type: ignore[no-untyped-def]
-        from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                yield _arrays_to_pandas(
-                    decode_pcap_arrays(reframe_legacy(bytes(content)), ipv6)
-                )
-
-    schema = _RAW_DECODE_SCHEMA_V6 if ipv6 else _RAW_DECODE_SCHEMA
-    raw = files.mapInPandas(decode_files, schema=schema)
-    return _finish_packets(raw, ipv6)
+    """pcapng file(s)/dir/glob → packets DataFrame (PACKET_SCHEMA): the
+    shared scan (``pcap._read_specs``) over one whole-file unit per
+    capture, each re-framed into the legacy record layout in-memory
+    (``reframe_legacy``) before ``decode_pcap_arrays`` runs unchanged.
+    ``ipv6=True`` enables the opt-in v6 decode exactly as in
+    ``read_pcap`` (default = reference parity)."""
+    return _read_specs(spark, chunk_specs(path, _WHOLE_FILE), ipv6, reframe=reframe_legacy)

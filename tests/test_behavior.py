@@ -16,7 +16,7 @@ from tests.conftest import SF0001
 import pytest
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_funnel_counts_are_monotone_nonincreasing(spark):
     """Each stage is anchored strictly after the previous stage's first
     event, so stage populations can only shrink."""

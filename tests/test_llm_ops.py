@@ -27,7 +27,7 @@ def test_dedup_exact_planted(spark, tiny_docs_dir):
     assert len(rows) == 4  # 5 docs → 4 distinct texts
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_minhash_identical_docs_full_signature_match(spark, tiny_docs_dir):
     d = load_table(spark, tiny_docs_dir, "documents")
     sigs = {r.doc_id: r.sig for r in minhash_signatures(d).collect()}
@@ -71,7 +71,7 @@ def test_fingerprint_bag_invariance(spark, tiny_docs_dir):
     assert rows[0].content_md5 != rows[2].content_md5
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_whitespace_hostile_oracle_parity(spark, tmp_path):
     """Tabs, newlines, and runs of spaces must tokenize identically in
     the engine (split \\s+) and every DuckDB oracle
@@ -146,7 +146,7 @@ def test_ivf_recall_probe_tradeoff(spark):
     assert r10 == 1.0  # probing every list IS brute force
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_kmeans_properties(spark):
     """k-means invariants: determinism, <= k clusters, and every
     cluster's members list it as their nearest final centroid is NOT
@@ -222,7 +222,7 @@ def test_bloom_prefilter_contract(spark):
     assert fps <= bound, (fps, len(new_docs), p**k)
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_round3_text_ops_hostile_parity(spark, tmp_path):
     """Round-3 text operators on a hostile corpus: regex specials in
     text, tabs/newlines tokenization, unicode, an email-lookalike

@@ -59,7 +59,7 @@ def test_nn_resize_kernel_golden():
     assert (out == arr[[1, 3]][:, [1, 3]]).all()
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_raw_image_resize_real(spark):
     """x-raw-rgb payloads are REALLY resized: output bytes equal the
     numpy kernel applied driver-side to the same payload."""

@@ -37,7 +37,7 @@ def _mixed_pcap(n: int) -> bytes:
     return pcap_file([(BASE_TS, len(mix[i % 3]), mix[i % 3]) for i in range(n)])
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_datasource_matches_read_pcap_on_golden(spark, tmp_path):
     register_pcap_source(spark)
     p = tmp_path / "golden.pcap"
@@ -61,7 +61,7 @@ def test_datasource_chunked_partitions_equal_whole(spark, tmp_path):
     assert whole.count() == 2000
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_datasource_streaming_tails_directory(spark, tmp_path):
     """Each availableNow pass picks up exactly the files that arrived
     since the last committed offset."""
@@ -93,7 +93,7 @@ def test_datasource_streaming_tails_directory(spark, tmp_path):
     assert len(out_rows) == 43  # only the NEW file decoded
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_datasource_filter_pushdown_parity_and_residual(spark, tmp_path):
     """Pushed filters (ports/len/protocol) return exactly what the
     plain reader + Spark-side filter returns — incl. SQL null
@@ -142,7 +142,7 @@ def test_datasource_filter_pushdown_parity_and_residual(spark, tmp_path):
     assert [type(f).__name__ for f in r.pushed] == ["EqualTo"]
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_writer_roundtrip_and_filtered_export(spark, tmp_path):
     """df.write.format('pcap') renders frames that re-decode to exactly
     the written rows (trailers, undecodable rows, reported lengths) —

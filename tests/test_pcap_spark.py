@@ -12,7 +12,15 @@ import pytest
 from pcap_to_parquet_spark.operators.pcap_query import _fixture_path
 from pcap_to_parquet_spark.schema import PACKET_SCHEMA
 from pcap_to_parquet_spark.sources.pcap import convert_pcap, read_pcap
-from pcap_to_parquet_spark.sources.pcap_fixtures import BASE_TS, fixture_packets
+from pcap_to_parquet_spark.sources.pcap_chunked import read_pcap_chunked
+from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
+from pcap_to_parquet_spark.sources.pcap_fixtures import (
+    BASE_TS,
+    fixture_packets,
+    golden_pcap_bytes,
+    pcap_file,
+)
+from pcap_to_parquet_spark.sources.pcapng import PCAPNG_MAGIC, read_pcapng
 
 
 def test_read_pcap_schema_and_rowcount(spark):
@@ -61,8 +69,47 @@ def test_convert_pcap_partitioned_pruning(spark, tmp_path):
     assert ("10.0.0.1", 1234) in back
 
 
-def test_read_pcap_rejects_non_pcap(spark, tmp_path):
-    bad = tmp_path / "bad.pcap"
-    bad.write_bytes(b"\x0a\x0d\x0d\x0a" + b"\x00" * 100)  # pcapng
-    with pytest.raises(Exception, match="(?i)pcap"):
-        read_pcap(spark, str(bad)).collect()
+def _format_pcap(spark, path):
+    register_pcap_source(spark)
+    return spark.read.format("pcap").load(path)
+
+
+ENTRY_POINTS = {
+    "read_pcap": read_pcap,
+    "read_pcap_chunked": read_pcap_chunked,
+    "format_pcap": _format_pcap,
+}
+
+BAD_INPUTS = {
+    "short": b"\x00" * 10,
+    "pcapng_header": PCAPNG_MAGIC + b"\x00" * 20,  # exactly 24 bytes
+    "pcapng": PCAPNG_MAGIC + b"\x00" * 100,
+}
+
+
+@pytest.mark.parametrize("entry", list(ENTRY_POINTS))
+def test_read_pcap_rejects_non_pcap(spark, tmp_path, entry):
+    """Every pcap entry point gives the same outcome on the same input:
+    short or non-pcap files fail loud, a header-only capture is zero
+    rows, and ``_``/``.``-prefixed files in a directory are skipped."""
+    read = ENTRY_POINTS[entry]
+    for name, content in BAD_INPUTS.items():
+        bad = tmp_path / f"{name}.pcap"
+        bad.write_bytes(content)
+        with pytest.raises(Exception, match="PcapFormatError"):
+            read(spark, str(bad)).collect()
+
+    header_only = tmp_path / "header_only.pcap"
+    header_only.write_bytes(pcap_file([]))
+    assert read(spark, str(header_only)).count() == 0
+
+    captures = tmp_path / "captures"
+    captures.mkdir()
+    for name in ("a.pcap", "_hidden.pcap", ".dot.pcap"):
+        (captures / name).write_bytes(golden_pcap_bytes())
+    assert read(spark, str(captures)).count() == len(fixture_packets())
+
+
+def test_read_pcapng_rejects_legacy_pcap(spark):
+    with pytest.raises(Exception, match="PcapFormatError"):
+        read_pcapng(spark, _fixture_path()).collect()

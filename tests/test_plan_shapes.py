@@ -486,7 +486,7 @@ def test_round4_op_shapes(spark):
     assert p.get("single_partition", 0) <= 2
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_round4b_op_shapes(spark):
     # RAG chunking must be map-only fan-out: no aggregation, no join,
     # no python eval — the only permitted exchange is fan_out's
@@ -660,7 +660,7 @@ def test_round9_op_shapes(spark):
     assert "CartesianProduct" not in p
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_round11_census_shapes(spark):
     """Pin the scale claims of the round-11 decision-table ops: the
     map-only censuses must stay one partial-agg exchange with no join

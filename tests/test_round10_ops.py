@@ -93,7 +93,7 @@ def test_pack_planner_testdata_invariants(spark):
 # q_lsh_precision
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_lsh_precision_consistent_with_recall(spark):
     """The two audits share one truth/candidate definition: verified
     candidates == caught true pairs, and the true-pair / candidate

@@ -75,7 +75,7 @@ def test_token_fertility_unmerged_words_pay_per_char(spark, tmp_path):
     assert out["fr"].chars_per_token <= out["en"].chars_per_token
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_token_fertility_agrees_with_bpe_encode(spark, tmp_path):
     """The census is q_bpe_encode aggregated by language: per-lang
     n_words / n_tokens must equal the per-doc encode counts summed
@@ -106,7 +106,7 @@ def test_token_fertility_agrees_with_bpe_encode(spark, tmp_path):
 # q_dedup_threshold_curve
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_threshold_curve_monotone_and_consistent_with_recall(spark):
     """On real testdata: 9 grid rows; pair and removal counts are
     non-increasing in tau; removal_frac is the documented ratio; and
@@ -285,7 +285,7 @@ def test_dedup_bias_planted_duplicate_language(spark, tmp_path):
     assert out["fr"].rel_risk == 0.0
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_dedup_bias_consistent_with_minhash_exact(spark):
     """The census is q_minhash_exact's pair table re-aggregated: total
     removals must equal the distinct larger-member count of that op's
@@ -351,7 +351,7 @@ def test_lsh_planner_scurve_and_literals(spark):
 # q_filter_dedup_overlap
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_filter_dedup_overlap_planted_interaction(spark, tmp_path):
     """Six docs: a GOOD duplicate pair (both pass quality), a BAD
     duplicate pair (both fail the length gate), one good and one bad
@@ -379,7 +379,7 @@ def test_filter_dedup_overlap_planted_interaction(spark, tmp_path):
     assert r.pair_reduction == 0.5
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_filter_dedup_overlap_consistent_with_siblings(spark):
     """The census re-aggregates frames its sibling ops already verify:
     n_dup_removed must equal q_dedup_bias's removal total, n_pairs the
@@ -505,7 +505,7 @@ def test_dedup_source_census_planted_mirror_vs_repost(spark, tmp_path):
     assert a.removal_frac == round(1 / 3, 6)
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_dedup_source_census_pair_accounting(spark):
     """On real testdata: every verified pair is counted exactly once —
     within pairs once in their source, cross pairs once on each side —

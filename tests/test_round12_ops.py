@@ -58,7 +58,7 @@ def _events_lake(spark, path, rows, single_file=False):
 # q_session_quality
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_session_quality_hand_traced(spark, tmp_path):
     """3 planted sessions: user 1 has a 3-event 'view' session (20 s
     dwell) and, 2 h later, a 1-event 'error' bounce; user 2 has a
@@ -89,7 +89,7 @@ def test_session_quality_hand_traced(spark, tmp_path):
     assert (e.mean_dwell_s, e.p50_dwell_s, e.p90_dwell_s) == (0.0, 0, 0)
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_session_quality_entry_tiebreak_on_event_id(spark, tmp_path):
     """Two events share the session's first timestamp: the entry type
     must come from the LOWER event_id (the shared q_sessionize
@@ -107,7 +107,7 @@ def test_session_quality_entry_tiebreak_on_event_id(spark, tmp_path):
     assert out[0].n_sessions == 1 and out[0].max_depth == 3
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_session_quality_gap_boundary(spark, tmp_path):
     """Exactly 30 min between events continues the session (<= gap);
     one microsecond more starts a new one — the same boundary rule as
@@ -199,7 +199,7 @@ def test_pcap_flow_stats_consistent_with_pcap_flows(spark):
 # q_session_transitions
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_session_transitions_hand_traced(spark, tmp_path):
     """One session view->click->click: transitions view->click,
     click->click, click->END, each count 1; from 'click' the next step
@@ -223,7 +223,7 @@ def test_session_transitions_hand_traced(spark, tmp_path):
     assert out[("click", "END")].next_entropy_bits == 1.0  # fair coin
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_session_transitions_sessions_do_not_leak(spark, tmp_path):
     """The last event of session 1 must transition to END, never to
     the first event of session 2 (2 h later) — the gap rule and the
@@ -260,7 +260,7 @@ def test_session_transitions_resum_to_sessionize(spark):
 # q_stream_session_quality
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_stream_session_quality_emits_only_closed_sessions(spark, tmp_path):
     """Two early sessions close well before the watermark horizon and
     are censused; the horizon-holder session (whose end = last + gap
@@ -286,7 +286,7 @@ def test_stream_session_quality_emits_only_closed_sessions(spark, tmp_path):
     assert (e.n_sessions, e.n_bounce, e.bounce_rate) == (1, 1, 1.0)
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_stream_session_quality_matches_batch_when_all_closed(spark, tmp_path):
     """With every session closed before the horizon and no event pair
     at the exact 30-min boundary (where the batch <= and native <
@@ -474,7 +474,7 @@ def test_repeat_cadence_conservation(spark):
 # q_skew_planner
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_skew_planner_hand_traced(spark, tmp_path):
     """Planted events: user 1 has 89 rows, users 2..12 one each (100
     rows, 12 keys, mean 8.33): user 1 is hot (89*12 = 1068 > 10*100),

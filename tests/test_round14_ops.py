@@ -347,7 +347,7 @@ def test_method_agreement_planted(spark, tmp_path):
     assert r.pair_jaccard == 0.5
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_band_survivors_keep_longest(spark, tmp_path):
     """Survivor selection under band clusters: the longest member wins
     (doc_id tie-break), absorbed near-dups are counted, singletons are

@@ -74,7 +74,7 @@ def _batch_closed_flows(spark):
     return agg.join(F.broadcast(wm)).where(F.col("flow_end") <= F.col("wm"))
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_stream_talkers_equals_batch_census_on_closed(spark):
     """The live talkers census must equal the shared census kernel run
     over the INDEPENDENT batch statement of the closed set — the
@@ -153,7 +153,7 @@ def _components(nodes, edges):
     return lab
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_simhash_clusters_match_bruteforce(spark, tmp_path):
     """Cross-op consistency: the rep-collapsed star-contraction labels
     must equal brute-force connected components over ALL O(n²)
@@ -209,7 +209,7 @@ def test_simhash_clusters_match_bruteforce(spark, tmp_path):
         assert got[r.survivor_doc] == c
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_method_agreement3_planted_and_consistent(spark, tmp_path):
     """The 2×2×2 census must be the exact brute-force roll of its own
     three input labelings — and its jaccard×winnowing margin must
@@ -310,7 +310,7 @@ def test_method_agreement3_planted_and_consistent(spark, tmp_path):
     )
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_band_filter_attribution_planted(spark, tmp_path):
     """Hand-planted removed set with known gate flags: the band dedup
     removes docs 0 and 1 (doc 2 is the keep-longest survivor); doc 0

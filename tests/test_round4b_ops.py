@@ -27,7 +27,7 @@ def test_kmv_estimates_within_sketch_error(spark):
     assert "__merged__" in keys
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_minhash_exact_recalls_true_near_dups(spark, tiny_docs_dir):
     """On the planted-duplicate corpus the exact-twin MinHash must
     surface the identical pair (0,1) with estimate 1.0 and the
@@ -45,7 +45,7 @@ def test_minhash_exact_recalls_true_near_dups(spark, tiny_docs_dir):
     assert not any(3 in p or 4 in p for p in got)
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_minhash_exact_agrees_with_numpy_path_on_candidates(spark):
     """The md5 twin and the xxhash production path disagree on hash
     values but must largely agree on WHO is a near-duplicate: at
@@ -114,7 +114,7 @@ def test_doc_chunks_reconstruct_documents(spark):
         assert rebuilt == text, doc_id
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_minhash_paths_reject_unrelated_pairs(spark):
     """Regression for the correlated-permutation bug (p=2^61-1 over
     31-bit hashes): with a sound permutation field, a pair with true
@@ -233,7 +233,7 @@ def test_star_rounds_match_label_propagation(spark):
     assert star == prop
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_star_contract_fuzz_against_union_find(spark):
     """Randomized graphs: star contraction must label every node with
     its component minimum — verified against a pure-Python union-find
@@ -274,7 +274,7 @@ def test_star_contract_fuzz_against_union_find(spark):
         assert got == expected, (trial, n, len(edges))
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_pagerank_kernel_fuzz_against_python(spark):
     """Randomized directed graphs: the fixed-point kernel must equal a
     pure-Python integer reference BIT-FOR-BIT (that's the whole point
@@ -308,7 +308,7 @@ def test_pagerank_kernel_fuzz_against_python(spark):
         assert got == pr, (trial, n, len(edges))
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_doc_chunks_boundary_lengths(spark, tmp_path):
     """Chunk-count boundaries: empty text (one empty chunk), exactly
     window-size (one chunk), one char over (two chunks), exactly
@@ -350,7 +350,7 @@ def test_doc_chunks_boundary_lengths(spark, tmp_path):
     assert mine == oracle
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_kmv_matches_python_reference(spark, tmp_path):
     """Randomized events: the KMV per-group sketch rows must equal a
     pure-Python KMV built from the same md5 hashes (k-th minimum,

@@ -114,7 +114,7 @@ def test_pca_embed_sketch_matches_projection(spark):
     assert cums == sorted(cums) and cums[-1] <= 1.0
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_quality_classifier_learns_planted_signal(spark, tmp_path):
     """On a corpus where the label IS expressible in the features
     (English docs stuffed with stopwords, German docs with none) the
@@ -142,7 +142,7 @@ def test_quality_classifier_learns_planted_signal(spark, tmp_path):
     assert out["stopword_ratio"].coef > 0
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_quality_classifier_mechanics_on_fixture(spark):
     """On the real (near-unseparable) fixture the trainer still must
     monotonically improve on the w=0 loss (ln 2) and never fall below
@@ -220,7 +220,7 @@ def _bpe_reference(word_counts, rounds):
     return merges
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_bpe_merges_match_pure_python_reference(spark, tmp_path):
     """The distributed trainer must reproduce a plain-Python BPE's
     merge table exactly — pair choice, tie-break, greedy left-to-right
@@ -293,7 +293,7 @@ def test_ivf_pq_stays_in_probed_lists_and_recovers_them(spark):
     assert len(best_in_lists & got) / 10 >= 0.7
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_bpe_encode_matches_reference_encoder(spark, tmp_path):
     """Per-doc symbol counts after applying the trained merges must
     equal a plain-Python encoder running the same merge table."""
@@ -406,7 +406,7 @@ def test_stream_holt_equals_batch_holt(spark):
     assert stream == batch
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_opq_error_monotonically_beats_plain_pq(spark):
     """Iteration 0 is plain PQ (R = I); each Procrustes update must not
     increase quantization error, and the learned rotation must end
@@ -426,7 +426,7 @@ def test_opq_error_monotonically_beats_plain_pq(spark):
     assert errs[-1] < errs[0] * 0.95
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_residual_quant_beats_both_halves(spark):
     """Coarse+residual-PQ must reconstruct better than plain PQ and
     much better than the coarse codebook alone (measured 0.503 vs

@@ -137,7 +137,7 @@ def test_audio_neardup_identical_clips_pair(spark, tmp_path):
     assert pairs.get((1, 2)) == 0
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_video_neardup_perturbed_clip_pairs(spark, tmp_path):
     """A lightly-perturbed copy (one character changed — the
     re-encode/watermark grade of noise the round-7 radius targets)
@@ -435,7 +435,7 @@ def test_unigram_lm_em_concentrates_on_repeated_piece(spark, tmp_path):
     assert sum(math.exp(v) for v in vals) <= 1.0 + 1e-6
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_srp_lsh_sign_invariance_and_buckets(spark, tmp_path):
     """SRP property: a vector and its positive scaling share a sketch
     (cosine-invariant); a vector and its negation differ in EVERY bit

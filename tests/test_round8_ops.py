@@ -258,7 +258,7 @@ def test_referential_integrity_clean_on_testdata(spark):
         assert r.n_child > 0, r.fk
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_referential_integrity_counts_planted_orphans(spark, tmp_path):
     _write(spark, tmp_path, [(1, 1, 1, 1.0), (1, 999, 1, 1.0), (1, 999, 1, 1.0)],
            "l_orderkey long, l_partkey long, l_suppkey long, l_quantity double",
@@ -283,7 +283,7 @@ def test_referential_integrity_counts_planted_orphans(spark, tmp_path):
     assert rows["orders.o_custkey->customer"].n_orphan == 0
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_referential_integrity_dup_parent_pk_no_fanout(spark, tmp_path):
     """A duplicated parent primary key must NOT fan the join out and
     inflate n_child/n_orphan (the parent side is deduped before the

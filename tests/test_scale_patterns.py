@@ -137,7 +137,7 @@ def test_bucketed_join_no_join_shuffle(spark):
     assert df.count() > 0
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_aqe_skew_split_fires_on_planted_skew(spark):
     """Close the skew loop (round 13): q_skew_planner MEASURES skew;
     this pins the REMEDIATION it recommends — on a planted hot key

@@ -50,7 +50,7 @@ def test_hll_rollup_accuracy(spark, sf):
 
 
 @pytest.mark.parametrize("sf", SFS)
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_kll_quantiles_accuracy(spark, sf):
     SF = sf
     got = {r.key: r for r in QUERIES["q_kll_quantiles"](spark, SF).collect()}

@@ -21,7 +21,7 @@ from tests.conftest import SF0001
 import pytest
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_tumbling_agg_microbatch_invariance(spark, tmp_path):
     # stage events as 4 parquet files (4 triggers at maxFilesPerTrigger=1)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -104,7 +104,7 @@ def test_stream_dedup_microbatch_invariance(spark, tmp_path):
     assert got == exp
 
 
-@pytest.mark.slow  # >=5s: deselected from the default driver-verify run
+@pytest.mark.slow  # >=5s
 def test_stream_ewma_ordered_multibatch_matches_single(spark, tmp_path):
     """Chronologically chopped ingestion (the event-log layout the
     operator documents) must leave the per-key EWMA recursion
