@@ -362,18 +362,19 @@ def _read_specs(
     reframe: Callable[[bytes], bytes] | None = None,
 ) -> DataFrame:
     """The one pcap scan: ``(path, start, end)`` specs → packets
-    DataFrame (PACKET_SCHEMA). The specs slice into
-    ``min(len(specs), defaultParallelism)`` partitions, none empty (an
-    empty one still costs a Python task); each spec decodes through
-    ``pcap_chunked.read_unit`` (``reframe`` first turns a unit into
-    legacy pcap, e.g. pcapng) and the vectorized kernel, then the
-    numeric columns are finished JVM-side."""
-    from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL, read_unit
+    DataFrame (PACKET_SCHEMA). ``pcap_chunked.pack_units`` packs the
+    specs into at most ``defaultParallelism`` size-balanced partitions,
+    none empty (an empty one still costs a Python task); each spec
+    decodes through ``pcap_chunked.read_unit`` (``reframe`` first turns
+    a unit into legacy pcap, e.g. pcapng) and the vectorized kernel,
+    then the numeric columns are finished JVM-side."""
+    from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL, pack_units, read_unit
 
     tune(spark)
     tol = _TS_TOL if ts_tol is None else ts_tol
     sc = spark.sparkContext
-    units = sc.parallelize(specs, min(len(specs), sc.defaultParallelism))
+    bins = pack_units(specs, sc.defaultParallelism)
+    units = sc.parallelize(bins, len(bins)).flatMap(lambda b: b)  # one bin per slice
     sdf = spark.createDataFrame(units, "path string, start long, end long")
 
     def decode_units(batches):  # type: ignore[no-untyped-def]
@@ -420,24 +421,27 @@ _MIN_CHUNK = 8 << 20
 
 
 def _auto_chunk_bytes(spark: SparkSession, in_path: str) -> int | None:
+    """``_auto_chunk_size`` of the files under ``in_path`` at the
+    session's parallelism; None (per-file) for unreadable paths."""
+    from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs
+
+    try:
+        specs = chunk_specs(in_path, _WHOLE_FILE)
+    except (OSError, PcapFormatError):
+        return None
+    return _auto_chunk_size([e for _f, _s, e in specs], spark.sparkContext.defaultParallelism)
+
+
+def _auto_chunk_size(sizes: list[int], parallelism: int) -> int | None:
     """Chunk size for big single-file captures, else None (per-file).
 
     Chunks sized ``max(largest_file / parallelism, 8 MiB)``: smaller
     chunks stop helping once every core has work, and each chunk pays
     a fixed resync-slack read (~2 MB) that small chunks drown in."""
-    from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs
-
-    try:
-        import os
-
-        sizes = {os.path.getsize(f) for f, _s, _e in chunk_specs(in_path, _WHOLE_FILE)}
-    except Exception:  # noqa: BLE001 - unreadable paths fall to per-file reader
-        return None
     biggest = max(sizes, default=0)
     if biggest <= _AUTO_CHUNK_THRESHOLD:
         return None
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    return max(biggest // par, _MIN_CHUNK)
+    return max(biggest // max(parallelism, 1), _MIN_CHUNK)
 
 
 def convert_pcap(

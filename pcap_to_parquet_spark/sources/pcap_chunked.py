@@ -175,6 +175,20 @@ def chunk_specs(path: str, chunk_bytes: int) -> list[tuple[str, int, int]]:
     return specs
 
 
+def pack_units(specs: list[tuple[str, int, int]], n: int) -> list[list[tuple[str, int, int]]]:
+    """``specs`` in at most ``n`` non-empty bins: largest unit first, each
+    onto the lightest bin (then the one with fewest units, so zero-byte
+    units spread too). The heaviest bin outweighs the lightest by at most
+    the largest unit; bins keep spec order and sort by their first spec."""
+    bins: list[list[int]] = [[] for _ in range(min(max(n, 1), len(specs)))]
+    load = [0] * len(bins)
+    for i in sorted(range(len(specs)), key=lambda i: specs[i][1] - specs[i][2]):
+        b = min(range(len(bins)), key=lambda b: (load[b], len(bins[b])))
+        bins[b].append(i)
+        load[b] += specs[i][2] - specs[i][1]
+    return [[specs[i] for i in b] for b in sorted(sorted(b) for b in bins)]
+
+
 def read_unit(path: str, start: int, end: int, ts_tol: int = _TS_TOL) -> bytes:
     """One ``chunk_specs`` unit as a standalone pcap buffer: the raw
     file when the unit covers it whole (the decoder then rejects short

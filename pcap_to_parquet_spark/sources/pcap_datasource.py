@@ -3,21 +3,21 @@
 The Spark 4 Python Data Source API gives the reference capability its
 idiomatic connector form (reference CLI: /root/reference/src/main.rs:59-61):
 
-- **batch**: ``spark.read.format("pcap").load(path)`` — one input
-  partition per chunk of each capture (``chunk_specs``), so a single
-  large file parallelizes across the cluster exactly like the chunked
-  reader; small files get one partition each. Partitions decode with
-  the same vectorized numpy kernels as ``read_pcap`` and yield Arrow
-  record batches.
+- **batch**: ``spark.read.format("pcap").load(path)`` — the
+  ``chunk_specs`` units of the captures (whole small files, byte-range
+  chunks of big ones), packed by ``pack_units`` into at most
+  ``defaultParallelism`` size-balanced partitions, as ``read_pcap``
+  does. Each unit decodes with the same vectorized numpy kernels as
+  ``read_pcap`` and yields one Arrow record batch.
 - **streaming**: ``spark.readStream.format("pcap").load(dir)`` — a
   landing-directory tail: each micro-batch decodes the files that
   arrived since the last committed offset (offset = sorted seen-file
   list), giving the capture-directory → packets table pipeline a
   Structured Streaming front end.
 
-Options: ``chunk_mb`` (0 = one partition per file; default auto:
-chunks of ``pcap._AUTO_CHUNK_THRESHOLD``), ``ts_tol_hours`` (resync
-anchor, chunked mode).
+Options: ``chunk_mb`` (0 = one unit per file; default auto, sized by
+``pcap._auto_chunk_size`` as in ``convert_pcap``), ``ts_tol_hours``
+(resync anchor, chunked mode).
 
 ``read_pcap`` / ``read_pcap_chunked`` scan the same ``chunk_specs`` units
 through the same ``read_unit``; the connector differs only in where the
@@ -33,16 +33,25 @@ planning call re-parses pyspark.zip once per zip importer.
 
 from __future__ import annotations
 
+import operator
 import os
 from collections.abc import Iterator, Sequence
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     DataSourceWriter,
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
     InputPartition,
+    IsNotNull,
+    LessThan,
+    LessThanOrEqual,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -54,8 +63,9 @@ from pcap_to_parquet_spark.sources.pcap import (
     _GLOBAL_HEADER_LEN,
     _PROTOCOL_NAMES,
     _WHOLE_FILE,
+    _auto_chunk_size,
 )
-from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL, chunk_specs, read_unit
+from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL, chunk_specs, pack_units, read_unit
 
 worker_daemon.install()  # for the planner workers: see the module docstring
 
@@ -66,11 +76,15 @@ _PROTO_BY_NUM = pa.array([_PROTOCOL_NAMES.get(i) for i in range(256)], type=pa.s
 
 
 class PcapPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int, ts_tol: int) -> None:
-        self.path = path
-        self.start = start
-        self.end = end
+    """A list of ``chunk_specs`` units, decoded one Arrow batch each."""
+
+    def __init__(self, units: list[tuple[str, int, int]], ts_tol: int) -> None:
+        self.units = units
         self.ts_tol = ts_tol
+
+    def decode(self, filters: Sequence = (), ipv6: bool = False) -> Iterator[pa.RecordBatch]:
+        for path, start, end in self.units:
+            yield _decode_to_arrow(read_unit(path, start, end, self.ts_tol), filters, ipv6)
 
 
 _PROTOCOL_NUMS = {v: k for k, v in _PROTOCOL_NAMES.items()}
@@ -83,6 +97,15 @@ _PUSH_COLS = {
     "dst_port": ("dst_port", "ports_valid"),
     "protocol": ("proto", "proto_valid"),
 }
+# pushed comparison → its numpy form (IsNotNull is the validity mask)
+_PUSH_OPS = {
+    EqualTo: operator.eq,
+    In: np.isin,
+    GreaterThan: operator.gt,
+    GreaterThanOrEqual: operator.ge,
+    LessThan: operator.lt,
+    LessThanOrEqual: operator.le,
+}
 
 
 def _filter_mask(a, filters, ipv6=False):  # type: ignore[no-untyped-def]
@@ -92,66 +115,37 @@ def _filter_mask(a, filters, ipv6=False):  # type: ignore[no-untyped-def]
     names live in the proto6 string array, not the v4 number space);
     the shared port arrays already carry v6 ports, so port/len filters
     work unchanged."""
-    import numpy as np
-
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        IsNotNull,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    proto_names = None
-    if ipv6:
-        proto_names = np.array(
-            [
-                a["proto6"][i]
-                if a["proto6"][i] is not None
-                else (_PROTOCOL_NAMES.get(int(a["proto"][i])) if a["proto_valid"][i] else None)
-                for i in range(len(a["len"]))
-            ],
-            dtype=object,
-        )
-        proto_valid6 = np.array([x is not None for x in proto_names], dtype=bool)
-        proto_names = np.where(proto_valid6, proto_names, "")
-
     mask = np.ones(len(a["len"]), dtype=bool)
     for f in filters:
         (col,) = f.attribute
         arr_name, valid_name = _PUSH_COLS[col]
         arr = a[arr_name]
         valid = a[valid_name] if valid_name else np.ones(len(arr), dtype=bool)
+        conv = int
         if col == "protocol" and ipv6:
-            arr, valid = proto_names, proto_valid6
+            names = _protocol_names(a, ipv6)
+            arr = names.fill_null("").to_numpy(zero_copy_only=False)
+            valid, conv = names.is_valid().to_numpy(zero_copy_only=False), str
+        elif col == "protocol":
+            # filter values arrive as names; compare on the raw number
+            conv = lambda v: _PROTOCOL_NUMS.get(v, -1)  # noqa: E731
         if isinstance(f, IsNotNull):
             mask &= valid
             continue
-        if col == "protocol":
-            if ipv6:
-                conv = str
-            else:
-                # filter values arrive as names; compare on the raw number
-                conv = lambda v: _PROTOCOL_NUMS.get(v, -1)  # noqa: E731
-        else:
-            conv = int
-        if isinstance(f, EqualTo):
-            mask &= valid & (arr == conv(f.value))
-        elif isinstance(f, In):
-            mask &= valid & np.isin(arr, [conv(v) for v in f.value])
-        elif isinstance(f, GreaterThan):
-            mask &= valid & (arr > conv(f.value))
-        elif isinstance(f, GreaterThanOrEqual):
-            mask &= valid & (arr >= conv(f.value))
-        elif isinstance(f, LessThan):
-            mask &= valid & (arr < conv(f.value))
-        elif isinstance(f, LessThanOrEqual):
-            mask &= valid & (arr <= conv(f.value))
-        else:  # pragma: no cover - pushFilters admitted it, must handle
-            raise AssertionError(f"unhandled pushed filter {f!r}")
+        value = [conv(v) for v in f.value] if isinstance(f, In) else conv(f.value)
+        mask &= valid & _PUSH_OPS[type(f)](arr, value)
     return mask
+
+
+def _protocol_names(a, ipv6):  # type: ignore[no-untyped-def]
+    """The protocol column: IPv4 number → name (NULL when invalid or
+    unnamed); in ``ipv6`` mode a v6 next-header name wins."""
+    import pyarrow.compute as pc
+
+    names = _PROTO_BY_NUM.take(pa.array(a["proto"].astype("uint8"), mask=~a["proto_valid"]))
+    if ipv6:
+        names = pc.coalesce(pa.array(a["proto6"], type=pa.string()), names)
+    return names
 
 
 def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-untyped-def]
@@ -166,7 +160,6 @@ def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-unt
     formatting — pruned packets never cross the Arrow boundary.
     ``ipv6`` merges the v6 text columns into the same output fields
     (same opt-in as read_pcap)."""
-    import numpy as np
     import pyarrow.compute as pc
 
     from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
@@ -187,18 +180,16 @@ def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-unt
         return pc.binary_join_element_wise(*octets, ".")
 
     src, dst = dotted(a["src_u32"]), dotted(a["dst_u32"])
-    proto = _PROTO_BY_NUM.take(nullable(a["proto"], a["proto_valid"], pa.uint8()))
     if ipv6:
         src = pc.coalesce(pa.array(a["src6"], type=pa.string()), src)
         dst = pc.coalesce(pa.array(a["dst6"], type=pa.string()), dst)
-        proto = pc.coalesce(pa.array(a["proto6"], type=pa.string()), proto)
 
     return pa.record_batch(
         [
             src,
             dst,
             pa.array(a["len"].astype("int64")),
-            proto,
+            _protocol_names(a, ipv6),
             nullable(a["src_port"], a["ports_valid"], pa.int32()),
             nullable(a["dst_port"], a["ports_valid"], pa.int32()),
             nullable(a["mm_ts"], a["mm_valid"], pa.int64()),
@@ -210,7 +201,11 @@ def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-unt
 
 
 class PcapBatchReader(DataSourceReader):
-    def __init__(self, options) -> None:  # type: ignore[no-untyped-def]
+    """``parallelism`` (bound by ``register_pcap_source``) caps the
+    partitions; None plans one per unit, chunked at the threshold."""
+
+    def __init__(self, options: dict, parallelism: int | None = None) -> None:
+        self.parallelism = parallelism
         self.path = options.get("path")
         if not self.path:
             raise ValueError("pcap source requires a path: .load('<file-or-glob>')")
@@ -229,23 +224,9 @@ class PcapBatchReader(DataSourceReader):
         else stays with Spark. Each accepted filter is implemented
         EXACTLY (SQL null semantics included), so nothing accepted is
         re-yielded for re-evaluation."""
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            IsNotNull,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        supported = (
-            EqualTo, In, IsNotNull,
-            GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual,
-        )
         for f in filters:
             if (
-                isinstance(f, supported)
+                isinstance(f, (IsNotNull, *_PUSH_OPS))
                 and len(f.attribute) == 1
                 and f.attribute[0] in _PUSH_COLS
             ):
@@ -254,20 +235,19 @@ class PcapBatchReader(DataSourceReader):
                 yield f
 
     def partitions(self) -> Sequence[PcapPartition]:
-        if self.chunk_mb == 0:
-            chunk_bytes = _WHOLE_FILE  # one partition per file
-        elif self.chunk_mb is None:
-            chunk_bytes = _AUTO_CHUNK_THRESHOLD  # auto: big files split
+        if self.chunk_mb is not None:
+            chunk_bytes = (self.chunk_mb << 20) or _WHOLE_FILE
+        elif self.parallelism:
+            sizes = [e for _p, _s, e in chunk_specs(self.path, _WHOLE_FILE)]
+            chunk_bytes = _auto_chunk_size(sizes, self.parallelism) or _WHOLE_FILE
         else:
-            chunk_bytes = self.chunk_mb << 20
-        return [
-            PcapPartition(p, s, e, self.ts_tol)
-            for p, s, e in chunk_specs(self.path, chunk_bytes)
-        ]
+            chunk_bytes = _AUTO_CHUNK_THRESHOLD
+        units = chunk_specs(self.path, chunk_bytes)
+        bins = pack_units(units, self.parallelism or len(units))
+        return [PcapPartition(b, self.ts_tol) for b in bins]
 
     def read(self, partition: PcapPartition) -> Iterator:  # type: ignore[override]
-        buf = read_unit(partition.path, partition.start, partition.end, partition.ts_tol)
-        yield _decode_to_arrow(buf, self.pushed, self.ipv6)
+        yield from partition.decode(self.pushed, self.ipv6)
 
 
 class PcapStreamReader(DataSourceStreamReader):
@@ -300,18 +280,11 @@ class PcapStreamReader(DataSourceStreamReader):
             # state (e.g. session-window flows). An empty partition
             # list aborts the batch before the stateful operators run,
             # so yield one sentinel partition that decodes to 0 rows.
-            return [PcapPartition("", 0, 0, _TS_TOL)]
-        return [PcapPartition(f, _GLOBAL_HEADER_LEN, _WHOLE_FILE, _TS_TOL) for f in new]
+            return [PcapPartition([], _TS_TOL)]
+        return [PcapPartition([(f, _GLOBAL_HEADER_LEN, _WHOLE_FILE)], _TS_TOL) for f in new]
 
     def read(self, partition: PcapPartition) -> Iterator:  # type: ignore[override]
-        from pcap_to_parquet_spark.sources.pcap_fixtures import pcap_file
-
-        buf = (
-            read_unit(partition.path, partition.start, partition.end, partition.ts_tol)
-            if partition.path
-            else pcap_file([])  # no-data sentinel: header-only capture
-        )
-        yield _decode_to_arrow(buf, ipv6=self.ipv6)
+        yield from partition.decode(ipv6=self.ipv6)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are checkpointed by the engine; nothing to clean
@@ -398,6 +371,8 @@ class PcapWriter(DataSourceWriter):
 
 
 class PcapDataSource(DataSource):
+    parallelism: int | None = None  # bound by register_pcap_source
+
     @classmethod
     def name(cls) -> str:
         return "pcap"
@@ -406,7 +381,7 @@ class PcapDataSource(DataSource):
         return PACKET_SCHEMA
 
     def reader(self, schema) -> PcapBatchReader:  # type: ignore[no-untyped-def]
-        return PcapBatchReader(self.options)
+        return PcapBatchReader(self.options, self.parallelism)
 
     def streamReader(self, schema) -> PcapStreamReader:  # type: ignore[no-untyped-def]
         return PcapStreamReader(self.options)
@@ -418,10 +393,16 @@ class PcapDataSource(DataSource):
 def register_pcap_source(spark) -> None:  # type: ignore[no-untyped-def]
     """Idempotent ``spark.dataSource.register`` of the pcap format.
 
+    It registers a local subclass carrying the session's parallelism,
+    which cloudpickle ships by value to the context-less planner workers.
+
     Also applies the runtime confs: the reader implements pushFilters,
     and Spark refuses to initialize such readers unless
     spark.sql.python.filterPushdown.enabled is on (set by tune())."""
     from pcap_to_parquet_spark.session import tune
 
+    class BoundPcapDataSource(PcapDataSource):
+        parallelism = spark.sparkContext.defaultParallelism
+
     tune(spark)
-    spark.dataSource.register(PcapDataSource)
+    spark.dataSource.register(BoundPcapDataSource)

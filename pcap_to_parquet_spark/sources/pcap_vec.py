@@ -26,6 +26,7 @@ import numpy as np
 from pcap_to_parquet_spark.sources.pcap import (
     _GLOBAL_HEADER_LEN,
     _MAGICS,
+    _PROTOCOL_NAMES_V6,
     _RECORD_HEADER_LEN,
     PcapFormatError,
 )
@@ -193,7 +194,6 @@ def decode_pcap_arrays(buf: bytes, ipv6: bool = False) -> dict[str, np.ndarray]:
         src_port = np.where(ports6_ok, be(l4_off6, 2, ports6_ok), src_port)
         dst_port = np.where(ports6_ok, be(l4_off6 + 2, 2, ports6_ok), dst_port)
         ports_ok = ports_ok | ports6_ok
-        names6 = {6: "TCP", 17: "UDP", 58: "ICMPv6"}
         src6 = np.full(n, None, dtype=object)
         dst6 = np.full(n, None, dtype=object)
         proto6 = np.full(n, None, dtype=object)
@@ -218,7 +218,7 @@ def decode_pcap_arrays(buf: bytes, ipv6: bool = False) -> dict[str, np.ndarray]:
                 a = int(ip_off[i])
                 src6[i] = fmt(buf[a + 8 : a + 24])
                 dst6[i] = fmt(buf[a + 24 : a + 40])
-            for code, name in names6.items():
+            for code, name in _PROTOCOL_NAMES_V6.items():
                 proto6[rows6[nh[rows6] == code]] = name
         v6_extra = {"src6": src6, "dst6": dst6, "proto6": proto6}
 

@@ -137,6 +137,11 @@ def test_convert_auto_chunk_policy(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(pcap_mod, "_MIN_CHUNK", 64)
     assert len(buf) // par > 64
     assert pcap_mod._auto_chunk_bytes(spark, str(p)) == len(buf) // par  # size/parallelism wins
+    # format("pcap") bound to the session's parallelism chunks by the same rule
+    from pcap_to_parquet_spark.sources.pcap_datasource import PcapBatchReader
+
+    bound = PcapBatchReader({"path": str(p)}, par).partitions()
+    assert sorted(u for b in bound for u in b.units) == chunk_specs(str(p), len(buf) // par)
 
     out_a = str(tmp_path / "auto")
     out_b = str(tmp_path / "perfile")

@@ -48,17 +48,74 @@ def test_datasource_matches_read_pcap_on_golden(spark, tmp_path):
 
 
 def test_datasource_chunked_partitions_equal_whole(spark, tmp_path):
-    """chunk_mb splits one capture into many input partitions; the
-    union of partition outputs equals the unchunked read."""
+    """chunk_mb splits one capture into many units; the union of their
+    outputs equals the unchunked read."""
+    from pcap_to_parquet_spark.sources.pcap_datasource import PcapBatchReader
+
     register_pcap_source(spark)
     p = tmp_path / "mix.pcap"
-    p.write_bytes(_mixed_pcap(2000))
+    p.write_bytes(_mixed_pcap(60_000))
+    assert p.stat().st_size > 3 << 20
+    units = PcapBatchReader({"path": str(p), "chunk_mb": "1"}).partitions()
+    assert len(units) >= 3
     whole = spark.read.format("pcap").option("chunk_mb", "0").load(str(p))
     chunked = spark.read.format("pcap").option("chunk_mb", "1").load(str(p))
-    # below the 1 MiB chunk floor this still may be 1 partition; force
-    # the partition count check only if the file crosses the size
+    par = spark.sparkContext.defaultParallelism
+    assert chunked.rdd.getNumPartitions() == min(len(units), par)
     assert _rows(chunked) == _rows(whole)
-    assert whole.count() == 2000
+    assert whole.count() == 60_000
+
+
+def test_pack_units_bins():
+    """pack_units: at most n bins, none empty (zero-byte units spread
+    too), every spec exactly once, spec order kept inside a bin."""
+    from pcap_to_parquet_spark.sources.pcap_chunked import pack_units
+
+    empty = [(f"f{i}", 24, 24) for i in range(3)]
+    assert pack_units(empty, 4) == [[u] for u in empty]
+    assert pack_units(empty, 0) == [empty]
+    assert pack_units([], 4) == []
+    sized = [("a", 24, 124), ("b", 24, 1024), ("c", 24, 74), ("d", 24, 524), ("e", 24, 324)]
+    a, b, c, d, e = sized
+    assert pack_units(sized, 2) == [[a, c, d, e], [b]]  # loads 950 / 1000
+
+
+def test_datasource_packs_units_like_read_pcap(spark, tmp_path):
+    """A bound reader packs a 16-capture directory into at most
+    defaultParallelism size-balanced partitions holding every unit once;
+    a reader built from options alone, and a stream, plan one partition
+    per unit."""
+    from pcap_to_parquet_spark.sources.pcap import _AUTO_CHUNK_THRESHOLD, _WHOLE_FILE
+    from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs
+    from pcap_to_parquet_spark.sources.pcap_datasource import (
+        PcapBatchReader,
+        PcapStreamReader,
+    )
+
+    d = tmp_path / "caps"
+    d.mkdir()
+    for i in range(16):
+        (d / f"c{i:02d}.pcap").write_bytes(_mixed_pcap(40 + 29 * i))
+    par = spark.sparkContext.defaultParallelism
+    parts = PcapBatchReader({"path": str(d)}, par).partitions()
+    assert 0 < len(parts) <= par and all(p.units for p in parts)
+    units = chunk_specs(str(d), _WHOLE_FILE)
+    assert sorted(u for p in parts for u in p.units) == units
+    loads = [sum(e - s for _, s, e in p.units) for p in parts]
+    assert max(loads) - min(loads) <= max(e - s for _, s, e in units)
+
+    register_pcap_source(spark)
+    df = spark.read.format("pcap").load(str(d))
+    assert df.rdd.getNumPartitions() == min(16, par)
+    assert _rows(df) == _rows(read_pcap(spark, str(d)))
+
+    unbound = PcapBatchReader({"path": str(d)}).partitions()
+    assert [p.units for p in unbound] == [[u] for u in chunk_specs(str(d), _AUTO_CHUNK_THRESHOLD)]
+
+    stream = PcapStreamReader({"path": str(d)})
+    files = stream.latestOffset()["files"]
+    planned = stream.partitions({"files": files[:10]}, {"files": files})
+    assert [[f for f, _s, _e in p.units] for p in planned] == [[f] for f in files[10:]]
 
 
 @pytest.mark.slow  # >=5s
@@ -140,6 +197,34 @@ def test_datasource_filter_pushdown_parity_and_residual(spark, tmp_path):
     )
     assert [type(f).__name__ for f in residual] == ["IsNotNull", "StringStartsWith"]
     assert [type(f).__name__ for f in r.pushed] == ["EqualTo"]
+
+
+def test_ipv6_pushdown_matches_unfiltered_decode():
+    """In ipv6 mode each pushed filter keeps exactly the rows of the
+    unfiltered decode that satisfy it, NULL never matching; protocol
+    compares in name space, where ICMPv6 lives."""
+    from pyspark.sql.datasource import EqualTo, GreaterThan, In, IsNotNull, LessThanOrEqual
+
+    from pcap_to_parquet_spark.sources.pcap_datasource import _decode_to_arrow
+    from pcap_to_parquet_spark.sources.pcap_fixtures import v6_golden_pcap_bytes
+
+    buf = v6_golden_pcap_bytes()
+    rows = _decode_to_arrow(buf, ipv6=True).to_pylist()
+    cases = [
+        ([EqualTo(("protocol",), "ICMPv6")], lambda r: r["protocol"] == "ICMPv6"),
+        ([In(("protocol",), ("TCP", "UDP"))], lambda r: r["protocol"] in ("TCP", "UDP")),
+        ([IsNotNull(("protocol",))], lambda r: r["protocol"] is not None),
+        ([GreaterThan(("protocol",), "TCP")], lambda r: (r["protocol"] or "") > "TCP"),
+        (
+            [IsNotNull(("protocol",)), LessThanOrEqual(("src_port",), 1234)],
+            lambda r: r["protocol"] is not None and (r["src_port"] or 1 << 20) <= 1234,
+        ),
+        ([LessThanOrEqual(("len",), 80)], lambda r: r["len"] <= 80),
+    ]
+    for filters, keep in cases:
+        want = [r for r in rows if keep(r)]
+        assert 0 < len(want) < len(rows), filters
+        assert _decode_to_arrow(buf, filters, ipv6=True).to_pylist() == want, filters
 
 
 @pytest.mark.slow  # >=5s
