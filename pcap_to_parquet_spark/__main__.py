@@ -60,7 +60,7 @@ def main() -> None:
         args.output,
         partition_cols=args.partition_by,
         chunk_bytes=args.chunk_mb * 1024 * 1024 if args.chunk_mb is not None else None,
-        ts_tol=int(args.ts_tol_hours * 3600) if args.ts_tol_hours is not None else None,
+        ts_tol=round(args.ts_tol_hours * 3600) if args.ts_tol_hours is not None else None,
         ipv6=args.ipv6,
     )
     print(f"wrote {args.output}")

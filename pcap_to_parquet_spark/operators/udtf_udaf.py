@@ -9,8 +9,9 @@
   form; DuckDB's ``median``/``mad`` are the oracle.
 
 Scalar-UDF surface note: the engine's scalar Python UDFs are the pcap
-decoders running vectorized inside ``mapInPandas`` (sources/pcap.py) —
-hot paths never use row-at-a-time ``@udf``.
+decoders running vectorized inside the pcap data source's partition
+reads (sources/pcap_datasource.py) — hot paths never use row-at-a-time
+``@udf``.
 """
 
 from __future__ import annotations
@@ -21,36 +22,9 @@ from pyspark.sql.functions import udtf
 from pcap_to_parquet_spark.operators.pcap_query import _fixture_path
 from pcap_to_parquet_spark.registry import query
 from pcap_to_parquet_spark.sources import load_table
-from pcap_to_parquet_spark.sources.pcap import _parse_metamako_trailer
-
-
-def enumerate_trailers(data: bytes, pcap_ts: int, length: int) -> list[dict]:
-    """All stacked Metamako trailers, outermost first.
-
-    Same scan as the reference (end-anchored, then slide inward with
-    the 1-byte-on-failure step, FCS fallback; main.rs:128-148) but
-    *collecting* every successful parse instead of overwriting."""
-    found: list[dict] = []
-
-    def attempt(end: int) -> int | None:
-        fields: dict = {}
-        got = _parse_metamako_trailer(data, fields, pcap_ts, end)
-        if got is not None:
-            found.append(fields)
-        return got
-
-    tr = attempt(length)
-    if tr is not None:
-        i = tr
-        while i <= length - tr:
-            i += attempt(length - i) or 1
-    else:
-        tr = attempt(length - 4)
-        if tr is not None:
-            i = tr
-            while i <= length - tr - 4:
-                i += attempt(length - i - 4) or 1
-    return found
+from pcap_to_parquet_spark.sources.pcap import _WHOLE_FILE, enumerate_trailers
+from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs, pack_units, read_unit
+from pcap_to_parquet_spark.sources.pcap_vec import scan_record_offsets
 
 
 @udtf(returnType="trailer_idx int, mm_ts bigint, mm_id int, mm_port smallint")
@@ -66,27 +40,33 @@ class ExplodeTrailers:
 
 def pcap_records(spark: SparkSession, path: str) -> DataFrame:
     """Raw (ts_sec, origlen, data) records of pcap file(s) — the
-    pre-decode stream, for operators that want packet bytes."""
-    from pcap_to_parquet_spark.sources.pcap import split_pcap_records
+    pre-decode stream, for operators that want packet bytes. Lists and
+    reads whole-file units like every pcap entry, so hidden files are
+    skipped and non-pcap input fails with ``PcapFormatError``; the units
+    are packed by the same ``pack_units`` rule, one bin per slice."""
+    sc = spark.sparkContext
+    bins = pack_units(chunk_specs(path, _WHOLE_FILE), sc.defaultParallelism)
+    units = spark.createDataFrame(
+        sc.parallelize(bins, len(bins)).flatMap(lambda b: b),
+        "path string, start long, end long",
+    )
 
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def split_files(batches):  # type: ignore[no-untyped-def]
+    def split_units(batches):  # type: ignore[no-untyped-def]
         import pandas as pd
 
         for pdf in batches:
-            for content in pdf["content"]:
-                recs = list(split_pcap_records(bytes(content)))
+            for path, start, end in zip(pdf["path"], pdf["start"], pdf["end"]):
+                buf = read_unit(path, int(start), int(end))
+                off, ts_sec, incl, origlen = scan_record_offsets(buf)
                 yield pd.DataFrame(
                     {
-                        "ts_sec": pd.array([r[0] for r in recs], dtype="Int64"),
-                        "origlen": pd.array([r[2] for r in recs], dtype="Int64"),
-                        "data": pd.Series([r[3] for r in recs], dtype="object"),
+                        "ts_sec": ts_sec,
+                        "origlen": origlen,
+                        "data": [buf[o : o + n] for o, n in zip(off.tolist(), incl.tolist())],
                     }
                 )
 
-    return files.mapInPandas(split_files, schema="ts_sec long, origlen long, data binary")
-
+    return units.mapInPandas(split_units, schema="ts_sec long, origlen long, data binary")
 
 
 # per-trailer goldens: the 4 (packet, trailer) rows of the static

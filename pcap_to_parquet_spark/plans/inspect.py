@@ -27,6 +27,7 @@ NOTABLE_OPS = (
     "SortAggregate",
     "Window",
     "Generate",
+    "BatchScan",
     "MapInPandas",
     "FlatMapGroupsInPandas",
     "FlatMapCoGroupsInPandas",

@@ -18,10 +18,12 @@ raise — fields stay NULL (the reference panics on slice overruns,
 main.rs:190-191,237).
 
 Execution model: every entry point (``read_pcap``, ``read_pcap_chunked``,
-``read_pcapng``) is one spec-driven scan, ``_read_specs``: the
-``(path, start, end)`` units of ``pcap_chunked.chunk_specs`` → one
-``mapInPandas`` decoding each unit with the vectorized numpy kernel
-(sources/pcap_vec.py) → JVM-side finishing. A unit is a whole file or,
+``read_pcapng``, ``convert_pcap``) is a ``spark.read.format("pcap")``
+(or ``"pcapng"``) scan of the Python data source in
+sources/pcap_datasource.py: the ``(path, start, end)`` units of
+``pcap_chunked.chunk_specs``, packed into at most ``defaultParallelism``
+partitions, each unit decoded by the vectorized numpy kernel
+(sources/pcap_vec.py) into one Arrow batch. A unit is a whole file or,
 for large captures, a byte-range chunk with boundary resync. The
 decoded table is then plain column algebra — Catalyst sees through
 everything downstream.
@@ -29,13 +31,10 @@ everything downstream.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from pcap_to_parquet_spark.session import tune
 
 # legacy pcap magic numbers: (byte order, timestamp unit). pcapng
 # (0x0a0d0d0a) is NOT here — unsupported, as in the reference (main.rs:108).
@@ -109,27 +108,43 @@ def _parse_metamako_trailer(
     return None
 
 
+def enumerate_trailers(data: bytes, pcap_ts: int, length: int) -> list[dict[str, Any]]:
+    """Stacked-trailer scan with FCS fallback (main.rs:128-148): every
+    trailer that parses, outermost first.
+
+    End-anchored attempt, then slide inward; a failed inner parse
+    slides 1 byte (``unwrap_or(1)``, main.rs:138). Only when the
+    end-anchored attempt fails does the scan retry 4 bytes in, past
+    an FCS."""
+    found: list[dict[str, Any]] = []
+
+    def attempt(end: int) -> int | None:
+        fields: dict[str, Any] = {}
+        got = _parse_metamako_trailer(data, fields, pcap_ts, end)
+        if got is not None:
+            found.append(fields)
+        return got
+
+    for fcs in (0, 4):
+        tr = attempt(length - fcs)
+        if tr is not None:
+            i = tr
+            while i <= length - tr - fcs:
+                i += attempt(length - i - fcs) or 1
+            break
+    return found
+
+
 def _extract_all_metamako_trailers(
     data: bytes, fields: dict[str, Any], pcap_ts: int, length: int
 ) -> None:
-    """Stacked-trailer scan with FCS fallback (main.rs:128-148).
-
-    Outermost trailer first, then slide inward; every successful parse
-    OVERWRITES mm_* so the innermost (earliest-appended) trailer wins
-    (main.rs:124-127 doc comment + overwrite at main.rs:175-177). A
-    failed inner parse slides 1 byte (``unwrap_or(1)``, main.rs:138).
-    """
-    tr = _parse_metamako_trailer(data, fields, pcap_ts, length)
-    if tr is not None:
-        i = tr
-        while i <= length - tr:
-            i += _parse_metamako_trailer(data, fields, pcap_ts, length - i) or 1
-    else:
-        tr = _parse_metamako_trailer(data, fields, pcap_ts, length - 4)
-        if tr is not None:
-            i = tr
-            while i <= length - tr - 4:
-                i += _parse_metamako_trailer(data, fields, pcap_ts, length - i - 4) or 1
+    """The reference's trailer fields: every successful parse
+    OVERWRITES mm_*, so the innermost (earliest-appended) trailer of
+    ``enumerate_trailers`` wins (main.rs:124-127 doc comment + overwrite
+    at main.rs:175-177)."""
+    hits = enumerate_trailers(data, pcap_ts, length)
+    if hits:
+        fields.update(hits[-1])
 
 
 def _parse_ports(l4: bytes, fields: dict[str, Any]) -> None:
@@ -274,16 +289,8 @@ def decode_pcap_bytes(buf: bytes, ipv6: bool = False) -> list[dict[str, Any]]:
 # Spark pipeline
 
 
-_RAW_DECODE_SCHEMA = (
-    "src_u32 long, dst_u32 long, len long, proto long, "
-    "src_port int, dst_port int, mm_ts long, mm_id int, mm_port short"
-)
-# opt-in IPv6 mode adds the pre-formatted v6 text columns (canonical
-# RFC 5952 addresses + next-header name); v4 rows leave them NULL and
-# the finisher coalesces the two stacks into PACKET_SCHEMA
-_RAW_DECODE_SCHEMA_V6 = _RAW_DECODE_SCHEMA + ", src6 string, dst6 string, proto6 string"
-
-
+# on no read path: kept because perfbench's kernel probe times it as
+# pcap.arrow_handoff_us_per_pkt
 def _arrays_to_pandas(a: dict):  # type: ignore[no-untyped-def]
     """Columnar decode arrays → one Arrow-ready pandas batch. Nullable
     ints ride pandas extension arrays end-to-end: a plain int-with-None
@@ -308,94 +315,18 @@ def _arrays_to_pandas(a: dict):  # type: ignore[no-untyped-def]
         "mm_id": masked(a["mm_id"], a["mm_valid"], np.int32),
         "mm_port": masked(a["mm_port"].astype(np.int16), a["mm_valid"], np.int16),
     }
-    if "src6" in a:
-        cols["src6"] = pd.array(a["src6"], dtype="string")
-        cols["dst6"] = pd.array(a["dst6"], dtype="string")
-        cols["proto6"] = pd.array(a["proto6"], dtype="string")
     return pd.DataFrame(cols)
-
-
-def _finish_packets(raw: DataFrame, ipv6: bool = False) -> DataFrame:
-    """Numeric decode columns → PACKET_SCHEMA, JVM-side (dotted-quad
-    formatting and protocol naming stay in whole-stage codegen). In
-    ``ipv6`` mode the pre-formatted v6 text columns coalesce in — a
-    row is v4 or v6, never both, so the coalesce is exact."""
-
-    def dotted(col: str):  # u32 → "a.b.c.d", codegen'd JVM string build
-        c = F.col(col)
-        octets = [
-            F.shiftrightunsigned(c, s).bitwiseAND(F.lit(255)).cast("string")
-            for s in (24, 16, 8, 0)
-        ]
-        return F.when(c.isNotNull(), F.concat_ws(".", *octets))
-
-    proto_name = F.element_at(
-        F.create_map(*[F.lit(x) for kv in _PROTOCOL_NAMES.items() for x in kv]),
-        F.col("proto").cast("int"),
-    )
-    src_ip, dst_ip = dotted("src_u32"), dotted("dst_u32")
-    if ipv6:
-        src_ip = F.coalesce(src_ip, F.col("src6"))
-        dst_ip = F.coalesce(dst_ip, F.col("dst6"))
-        proto_name = F.coalesce(proto_name, F.col("proto6"))
-    return raw.select(
-        src_ip.alias("src_ip"),
-        dst_ip.alias("dst_ip"),
-        F.col("len"),
-        proto_name.alias("protocol"),
-        F.col("src_port"),
-        F.col("dst_port"),
-        F.col("mm_ts"),
-        F.col("mm_id"),
-        F.col("mm_port"),
-    )
 
 
 _WHOLE_FILE = 1 << 62  # a chunk size no file reaches: one unit per file
 
 
-def _read_specs(
-    spark: SparkSession,
-    specs: list[tuple[str, int, int]],
-    ipv6: bool = False,
-    ts_tol: int | None = None,
-    reframe: Callable[[bytes], bytes] | None = None,
-) -> DataFrame:
-    """The one pcap scan: ``(path, start, end)`` specs → packets
-    DataFrame (PACKET_SCHEMA). ``pcap_chunked.pack_units`` packs the
-    specs into at most ``defaultParallelism`` size-balanced partitions,
-    none empty (an empty one still costs a Python task); each spec
-    decodes through ``pcap_chunked.read_unit`` (``reframe`` first turns
-    a unit into legacy pcap, e.g. pcapng) and the vectorized kernel,
-    then the numeric columns are finished JVM-side."""
-    from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL, pack_units, read_unit
-
-    tune(spark)
-    tol = _TS_TOL if ts_tol is None else ts_tol
-    sc = spark.sparkContext
-    bins = pack_units(specs, sc.defaultParallelism)
-    units = sc.parallelize(bins, len(bins)).flatMap(lambda b: b)  # one bin per slice
-    sdf = spark.createDataFrame(units, "path string, start long, end long")
-
-    def decode_units(batches):  # type: ignore[no-untyped-def]
-        from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
-
-        for pdf in batches:
-            for path, start, end in zip(pdf["path"], pdf["start"], pdf["end"]):
-                buf = read_unit(path, int(start), int(end), tol)
-                if reframe is not None:
-                    buf = reframe(buf)
-                yield _arrays_to_pandas(decode_pcap_arrays(buf, ipv6))
-
-    schema = _RAW_DECODE_SCHEMA_V6 if ipv6 else _RAW_DECODE_SCHEMA
-    return _finish_packets(sdf.mapInPandas(decode_units, schema=schema), ipv6)
-
-
 def read_pcap(spark: SparkSession, path: str, ipv6: bool = False) -> DataFrame:
-    """pcap file(s)/dir/glob → packets DataFrame (PACKET_SCHEMA), one
-    whole-file unit per capture (see ``_read_specs``). For single large
-    captures use ``sources.pcap_chunked.read_pcap_chunked`` (intra-file
-    parallelism, O(chunk) task memory).
+    """pcap file(s)/dir/glob → packets DataFrame (PACKET_SCHEMA):
+    ``format("pcap")`` with ``chunk_mb=0``, one whole-file unit per
+    capture. For single large captures use
+    ``sources.pcap_chunked.read_pcap_chunked`` (intra-file parallelism,
+    O(chunk) task memory).
 
     ``ipv6=True`` additionally decodes ethertype 0x86DD (plain and
     VLAN-tagged): canonical RFC 5952 addresses into src_ip/dst_ip,
@@ -405,9 +336,10 @@ def read_pcap(spark: SparkSession, path: str, ipv6: bool = False) -> DataFrame:
     PACKET_SCHEMA either way. Default False = byte-identical
     reference parity (the reference NULLs IPv6, main.rs:239-251).
     """
-    from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs
+    from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
 
-    return _read_specs(spark, chunk_specs(path, _WHOLE_FILE), ipv6)
+    register_pcap_source(spark)
+    return spark.read.format("pcap").option("chunk_mb", 0).option("ipv6", ipv6).load(path)
 
 
 # auto-chunk policy: captures above this size decode via the chunked

@@ -36,7 +36,6 @@ from pcap_to_parquet_spark.sources.pcap import (
     _MAGICS,
     _RECORD_HEADER_LEN,
     PcapFormatError,
-    _read_specs,
 )
 
 # ±48 h around the file's first-record ts: must exceed the capture's
@@ -149,19 +148,21 @@ def sync_offset(
     return None
 
 
+HIDDEN = ("_", ".")  # name prefixes every pcap listing skips, as Spark's file sources do
+
+
 def chunk_specs(path: str, chunk_bytes: int) -> list[tuple[str, int, int]]:
     """(path, start, end) byte ranges per file; start=24 for the first.
 
     Directories and globs list non-recursively, skipping subdirectories,
-    other non-files and ``_``/``.``-prefixed names (parity with Spark's
-    file sources). Every file gets at least one unit, so a header-only
-    capture reads as zero rows and a short or non-pcap file fails loud
-    in ``read_unit``; only a path that matches no files is an error here."""
-    hidden = ("_", ".")
+    other non-files and ``HIDDEN`` names. Every file gets at least one
+    unit, so a header-only capture reads as zero rows and a short or
+    non-pcap file fails loud in ``read_unit``; only a path that matches
+    no files is an error here."""
     if any(c in path for c in "*?["):
-        candidates = [f for f in glob(path) if not os.path.basename(f).startswith(hidden)]
+        candidates = [f for f in glob(path) if not os.path.basename(f).startswith(HIDDEN)]
     elif os.path.isdir(path):
-        candidates = [os.path.join(path, f) for f in os.listdir(path) if not f.startswith(hidden)]
+        candidates = [os.path.join(path, f) for f in os.listdir(path) if not f.startswith(HIDDEN)]
     else:
         candidates = [path]
     files = sorted(f for f in candidates if os.path.isfile(f))
@@ -289,12 +290,26 @@ def read_pcap_chunked(
     ipv6: bool = False,
 ) -> DataFrame:
     """pcap file(s) → packets DataFrame with intra-file parallelism:
-    one unit per ``chunk_bytes`` byte range. Same output as
-    ``read_pcap`` (tests assert row-set equality), different physical
-    shape: a single large capture fans out across the cluster.
+    ``format("pcap")`` with one unit per ``chunk_bytes`` byte range,
+    passed as the ``chunk_mb`` and ``ts_tol_hours`` options (both
+    round-trip exactly). Same output as ``read_pcap`` (tests assert
+    row-set equality), different physical shape: a single large
+    capture fans out across the cluster.
 
     ``ipv6=True`` enables the opt-in 0x86DD decode (see ``read_pcap``)
     inside the same chunked kernel — resync is L2-agnostic (it anchors
     on record headers, not packet contents), so the boundary contract
-    is unchanged. Default False = reference parity (main.rs:239-251)."""
-    return _read_specs(spark, chunk_specs(path, chunk_bytes), ipv6, ts_tol)
+    is unchanged. Default False = reference parity (main.rs:239-251).
+    ``chunk_bytes`` must be positive: whole-file units are ``read_pcap``."""
+    from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
+
+    if chunk_bytes <= 0:
+        raise ValueError(f"chunk_bytes must be positive, got {chunk_bytes}")
+    register_pcap_source(spark)
+    return (
+        spark.read.format("pcap")
+        .option("chunk_mb", chunk_bytes / 2**20)
+        .option("ts_tol_hours", ts_tol / 3600)
+        .option("ipv6", ipv6)
+        .load(path)
+    )

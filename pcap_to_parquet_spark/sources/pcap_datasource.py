@@ -1,14 +1,20 @@
 """pcap as a first-class Spark data source: ``spark.read.format("pcap")``.
 
 The Spark 4 Python Data Source API gives the reference capability its
-idiomatic connector form (reference CLI: /root/reference/src/main.rs:59-61):
+idiomatic connector form (reference CLI: /root/reference/src/main.rs:59-61),
+and it is the engine's only pcap scan: ``read_pcap``,
+``read_pcap_chunked``, ``read_pcapng`` and ``convert_pcap`` are thin
+``spark.read.format(...)`` calls over it.
 
 - **batch**: ``spark.read.format("pcap").load(path)`` — the
   ``chunk_specs`` units of the captures (whole small files, byte-range
   chunks of big ones), packed by ``pack_units`` into at most
-  ``defaultParallelism`` size-balanced partitions, as ``read_pcap``
-  does. Each unit decodes with the same vectorized numpy kernels as
-  ``read_pcap`` and yields one Arrow record batch.
+  ``defaultParallelism`` size-balanced partitions. Each unit decodes
+  with the vectorized numpy kernels (sources/pcap_vec.py) into one
+  Arrow record batch, strings built by ``pyarrow.compute``.
+- **pcapng**: ``spark.read.format("pcapng").load(path)`` — batch only,
+  one whole-file unit per capture, re-framed into legacy pcap
+  (``pcapng.reframe_legacy``) before the same decode.
 - **streaming**: ``spark.readStream.format("pcap").load(dir)`` — a
   landing-directory tail: each micro-batch decodes the files that
   arrived since the last committed offset (offset = sorted seen-file
@@ -16,12 +22,9 @@ idiomatic connector form (reference CLI: /root/reference/src/main.rs:59-61):
   Structured Streaming front end.
 
 Options: ``chunk_mb`` (0 = one unit per file; default auto, sized by
-``pcap._auto_chunk_size`` as in ``convert_pcap``), ``ts_tol_hours``
-(resync anchor, chunked mode).
-
-``read_pcap`` / ``read_pcap_chunked`` scan the same ``chunk_specs`` units
-through the same ``read_unit``; the connector differs only in where the
-strings are finished (``pyarrow.compute`` here, JVM codegen there).
+``pcap._auto_chunk_size`` as in ``convert_pcap``; fractional MiB
+allowed), ``ts_tol_hours`` (resync anchor, chunked mode), ``ipv6``
+(opt-in 0x86DD decode).
 
 Importing this module installs ``worker_daemon``'s zipimport fix. Spark
 plans a Python data source in worker processes of its own (one runs
@@ -65,7 +68,14 @@ from pcap_to_parquet_spark.sources.pcap import (
     _WHOLE_FILE,
     _auto_chunk_size,
 )
-from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL, chunk_specs, pack_units, read_unit
+from pcap_to_parquet_spark.sources.pcap_chunked import (
+    _TS_TOL,
+    HIDDEN,
+    chunk_specs,
+    pack_units,
+    read_unit,
+)
+from pcap_to_parquet_spark.sources.pcapng import reframe_legacy
 
 worker_daemon.install()  # for the planner workers: see the module docstring
 
@@ -82,20 +92,29 @@ class PcapPartition(InputPartition):
         self.units = units
         self.ts_tol = ts_tol
 
+    def unit_buffer(self, path: str, start: int, end: int) -> bytes:
+        return read_unit(path, start, end, self.ts_tol)
+
     def decode(self, filters: Sequence = (), ipv6: bool = False) -> Iterator[pa.RecordBatch]:
-        for path, start, end in self.units:
-            yield _decode_to_arrow(read_unit(path, start, end, self.ts_tol), filters, ipv6)
+        for unit in self.units:
+            yield _decode_to_arrow(self.unit_buffer(*unit), filters, ipv6)
 
 
-_PROTOCOL_NUMS = {v: k for k, v in _PROTOCOL_NAMES.items()}
+class PcapngPartition(PcapPartition):
+    """Whole pcapng captures, each re-framed into legacy pcap."""
+
+    def unit_buffer(self, path: str, start: int, end: int) -> bytes:
+        return reframe_legacy(super().unit_buffer(path, start, end))
+
 
 # pushdown-eligible columns → the decoded array carrying them and its
-# validity array (None = always valid)
+# validity array (None = always valid); protocol is compared by name,
+# see _filter_mask
 _PUSH_COLS = {
     "len": ("len", None),
     "src_port": ("src_port", "ports_valid"),
     "dst_port": ("dst_port", "ports_valid"),
-    "protocol": ("proto", "proto_valid"),
+    "protocol": None,
 }
 # pushed comparison → its numpy form (IsNotNull is the validity mask)
 _PUSH_OPS = {
@@ -111,29 +130,38 @@ _PUSH_OPS = {
 def _filter_mask(a, filters, ipv6=False):  # type: ignore[no-untyped-def]
     """AND of pushed filters as one numpy mask over the decoded arrays
     (SQL semantics: a NULL column value never satisfies a comparison).
-    In ipv6 mode protocol filters compare NAMES (the v6 next-header
-    names live in the proto6 string array, not the v4 number space);
-    the shared port arrays already carry v6 ports, so port/len filters
+    Protocol filters compare NAMES in both modes, as SQL compares the
+    string column: an ordering or a literal naming no protocol ('T',
+    'TCPX') has no protocol-number equivalent, and in ipv6 mode the
+    next-header names live in the proto6 string array. Each filter runs
+    once per distinct name of the dictionary-encoded column, then
+    gathers by row; index ``len(words)`` is the NULL row, never a hit.
+    The shared port arrays already carry v6 ports, so port/len filters
     work unchanged."""
     mask = np.ones(len(a["len"]), dtype=bool)
+    words = rows = None
     for f in filters:
         (col,) = f.attribute
-        arr_name, valid_name = _PUSH_COLS[col]
-        arr = a[arr_name]
-        valid = a[valid_name] if valid_name else np.ones(len(arr), dtype=bool)
-        conv = int
-        if col == "protocol" and ipv6:
-            names = _protocol_names(a, ipv6)
-            arr = names.fill_null("").to_numpy(zero_copy_only=False)
-            valid, conv = names.is_valid().to_numpy(zero_copy_only=False), str
-        elif col == "protocol":
-            # filter values arrive as names; compare on the raw number
-            conv = lambda v: _PROTOCOL_NUMS.get(v, -1)  # noqa: E731
+        if col == "protocol":
+            if words is None:
+                names = _protocol_names(a, ipv6).dictionary_encode()
+                words = names.dictionary.to_numpy(zero_copy_only=False)
+                rows = names.indices.fill_null(len(words)).to_numpy()
+            arr, valid = words, np.ones(len(words), dtype=bool)
+            conv = str
+        else:
+            arr_name, valid_name = _PUSH_COLS[col]
+            arr = a[arr_name]
+            valid = a[valid_name] if valid_name else np.ones(len(arr), dtype=bool)
+            conv = int
         if isinstance(f, IsNotNull):
-            mask &= valid
-            continue
-        value = [conv(v) for v in f.value] if isinstance(f, In) else conv(f.value)
-        mask &= valid & _PUSH_OPS[type(f)](arr, value)
+            hit = valid
+        else:
+            value = [conv(v) for v in f.value] if isinstance(f, In) else conv(f.value)
+            hit = valid & _PUSH_OPS[type(f)](arr, value)
+        if col == "protocol":
+            hit = np.append(hit, False)[rows]
+        mask &= hit
     return mask
 
 
@@ -151,15 +179,13 @@ def _protocol_names(a, ipv6):  # type: ignore[no-untyped-def]
 def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-untyped-def]
     """One in-memory capture → one Arrow RecordBatch (PACKET_SCHEMA).
 
-    The numeric decode is the shared vectorized kernel; only the
-    dotted-quad/protocol-name formatting happens here (the connector
-    yields final strings; read_pcap defers that to JVM codegen), as
-    Arrow compute over whole columns: octet and protocol-name lookups
+    The numeric decode is the shared vectorized kernel; the
+    dotted-quad/protocol-name formatting happens here, as Arrow
+    compute over whole columns: octet and protocol-name lookups
     joined element-wise, nullable ints masked by their validity.
     Pushed filters apply as a numpy mask BETWEEN decode and string
     formatting — pruned packets never cross the Arrow boundary.
-    ``ipv6`` merges the v6 text columns into the same output fields
-    (same opt-in as read_pcap)."""
+    ``ipv6`` merges the v6 text columns into the same output fields."""
     import pyarrow.compute as pc
 
     from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
@@ -202,7 +228,12 @@ def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-unt
 
 class PcapBatchReader(DataSourceReader):
     """``parallelism`` (bound by ``register_pcap_source``) caps the
-    partitions; None plans one per unit, chunked at the threshold."""
+    partitions; None plans one per unit, chunked at the threshold.
+    ``chunk_mb`` and ``ts_tol_hours`` parse back exactly what
+    ``read_pcap_chunked`` passes: bytes / 2**20 is an exact float, and
+    the seconds need ``round`` (``int`` would truncate 115 s to 114 s)."""
+
+    partition = PcapPartition
 
     def __init__(self, options: dict, parallelism: int | None = None) -> None:
         self.parallelism = parallelism
@@ -210,9 +241,11 @@ class PcapBatchReader(DataSourceReader):
         if not self.path:
             raise ValueError("pcap source requires a path: .load('<file-or-glob>')")
         chunk_mb = options.get("chunk_mb")
-        self.chunk_mb = int(chunk_mb) if chunk_mb is not None else None
+        self.chunk_bytes = int(float(chunk_mb) * 2**20) if chunk_mb is not None else None
+        if self.chunk_bytes is not None and self.chunk_bytes < 0:
+            raise ValueError(f"chunk_mb must be >= 0 (0 = one unit per file), got {chunk_mb}")
         tol_h = options.get("ts_tol_hours")
-        self.ts_tol = int(float(tol_h) * 3600) if tol_h is not None else _TS_TOL
+        self.ts_tol = round(float(tol_h) * 3600) if tol_h is not None else _TS_TOL
         self.ipv6 = str(options.get("ipv6", "false")).lower() == "true"
         self.pushed: list = []
 
@@ -234,17 +267,18 @@ class PcapBatchReader(DataSourceReader):
             else:
                 yield f
 
-    def partitions(self) -> Sequence[PcapPartition]:
-        if self.chunk_mb is not None:
-            chunk_bytes = (self.chunk_mb << 20) or _WHOLE_FILE
-        elif self.parallelism:
+    def unit_bytes(self) -> int:
+        if self.chunk_bytes is not None:
+            return self.chunk_bytes or _WHOLE_FILE
+        if self.parallelism:
             sizes = [e for _p, _s, e in chunk_specs(self.path, _WHOLE_FILE)]
-            chunk_bytes = _auto_chunk_size(sizes, self.parallelism) or _WHOLE_FILE
-        else:
-            chunk_bytes = _AUTO_CHUNK_THRESHOLD
-        units = chunk_specs(self.path, chunk_bytes)
+            return _auto_chunk_size(sizes, self.parallelism) or _WHOLE_FILE
+        return _AUTO_CHUNK_THRESHOLD
+
+    def partitions(self) -> Sequence[PcapPartition]:
+        units = chunk_specs(self.path, self.unit_bytes())
         bins = pack_units(units, self.parallelism or len(units))
-        return [PcapPartition(b, self.ts_tol) for b in bins]
+        return [self.partition(b, self.ts_tol) for b in bins]
 
     def read(self, partition: PcapPartition) -> Iterator:  # type: ignore[override]
         yield from partition.decode(self.pushed, self.ipv6)
@@ -262,9 +296,12 @@ class PcapStreamReader(DataSourceStreamReader):
         self.ipv6 = str(options.get("ipv6", "false")).lower() == "true"
 
     def _list(self) -> list[str]:
+        """Landed captures; ``_``/``.``-prefixed names (files still being
+        written) are skipped, as ``chunk_specs`` skips them for batch."""
         import glob
 
-        return sorted(glob.glob(os.path.join(self.dir, "*.pcap")))
+        files = glob.glob(os.path.join(self.dir, "*.pcap"))
+        return sorted(f for f in files if not os.path.basename(f).startswith(HIDDEN))
 
     def initialOffset(self) -> dict:
         return {"files": []}
@@ -390,10 +427,35 @@ class PcapDataSource(DataSource):
         return PcapWriter(self.options, overwrite)
 
 
-def register_pcap_source(spark) -> None:  # type: ignore[no-untyped-def]
-    """Idempotent ``spark.dataSource.register`` of the pcap format.
+class PcapngBatchReader(PcapBatchReader):
+    """pcapng has no record resync: one whole-file unit per capture."""
 
-    It registers a local subclass carrying the session's parallelism,
+    partition = PcapngPartition
+
+    def unit_bytes(self) -> int:
+        return _WHOLE_FILE
+
+
+class PcapngDataSource(PcapDataSource):
+    """``format("pcapng")``: batch reads only."""
+
+    streamReader = DataSource.streamReader
+    writer = DataSource.writer
+
+    @classmethod
+    def name(cls) -> str:
+        return "pcapng"
+
+    def reader(self, schema) -> PcapngBatchReader:  # type: ignore[no-untyped-def]
+        return PcapngBatchReader(self.options, self.parallelism)
+
+
+def register_pcap_source(spark) -> None:  # type: ignore[no-untyped-def]
+    """``spark.dataSource.register`` of the pcap and pcapng formats,
+    once per session: every pcap entry calls this, and re-registering
+    costs the next query a planner round trip (~40 ms at local[4]).
+
+    It registers local subclasses carrying the session's parallelism,
     which cloudpickle ships by value to the context-less planner workers.
 
     Also applies the runtime confs: the reader implements pushFilters,
@@ -401,8 +463,15 @@ def register_pcap_source(spark) -> None:  # type: ignore[no-untyped-def]
     spark.sql.python.filterPushdown.enabled is on (set by tune())."""
     from pcap_to_parquet_spark.session import tune
 
+    if spark._jsparkSession.sessionState().dataSourceManager().dataSourceExists("pcapng"):
+        return
+
     class BoundPcapDataSource(PcapDataSource):
         parallelism = spark.sparkContext.defaultParallelism
 
+    class BoundPcapngDataSource(PcapngDataSource):
+        parallelism = BoundPcapDataSource.parallelism
+
     tune(spark)
     spark.dataSource.register(BoundPcapDataSource)
+    spark.dataSource.register(BoundPcapngDataSource)

@@ -100,8 +100,8 @@ def _row_chunks(width: np.ndarray, budget: int = 8_000_000):
 
 def decode_pcap_arrays(buf: bytes, ipv6: bool = False) -> dict[str, np.ndarray]:
     """Decode a whole pcap to columnar arrays (PACKET_SCHEMA fields,
-    IPs as u32 + validity mask so string formatting can happen
-    JVM-side). Returns dict of numpy arrays + boolean ``*_valid``
+    IPs as u32 + validity mask so string formatting can happen over
+    whole columns, in ``pcap_datasource._decode_to_arrow``). Returns dict of numpy arrays + boolean ``*_valid``
     masks for nullable fields.
 
     ``ipv6=True`` (opt-in engine extension; default = reference
@@ -113,7 +113,7 @@ def decode_pcap_arrays(buf: bytes, ipv6: bool = False) -> dict[str, np.ndarray]:
     (lockstep masked hops); only the per-row
     address TEXT formatting is Python, and only over v6 rows — the
     zero-run compression of RFC 5952 is data-dependent string work
-    the JVM side can't codegen from a pair of int64 halves."""
+    no column-wide lookup can do from a pair of int64 halves."""
     off, ts, incl, orig = scan_record_offsets(buf)
     n = len(off)
     B = np.frombuffer(buf, dtype=np.uint8)

@@ -20,8 +20,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pcap_to_parquet_spark.sources.pcap import _WHOLE_FILE, PcapFormatError, _read_specs
-from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs
+from pcap_to_parquet_spark.sources.pcap import PcapFormatError
 
 PCAPNG_MAGIC = b"\x0a\x0d\x0d\x0a"
 
@@ -153,10 +152,13 @@ def reframe_legacy(raw: bytes) -> bytes:
 
 
 def read_pcapng(spark: SparkSession, path: str, ipv6: bool = False) -> DataFrame:
-    """pcapng file(s)/dir/glob → packets DataFrame (PACKET_SCHEMA): the
-    shared scan (``pcap._read_specs``) over one whole-file unit per
-    capture, each re-framed into the legacy record layout in-memory
+    """pcapng file(s)/dir/glob → packets DataFrame (PACKET_SCHEMA):
+    ``format("pcapng")``, the pcap data source over one whole-file unit
+    per capture, each re-framed into the legacy record layout in-memory
     (``reframe_legacy``) before ``decode_pcap_arrays`` runs unchanged.
     ``ipv6=True`` enables the opt-in v6 decode exactly as in
     ``read_pcap`` (default = reference parity)."""
-    return _read_specs(spark, chunk_specs(path, _WHOLE_FILE), ipv6, reframe=reframe_legacy)
+    from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
+
+    register_pcap_source(spark)
+    return spark.read.format("pcapng").option("ipv6", ipv6).load(path)

@@ -66,6 +66,64 @@ def test_datasource_chunked_partitions_equal_whole(spark, tmp_path):
     assert whole.count() == 60_000
 
 
+def test_reader_options_round_trip_exactly(tmp_path):
+    """``read_pcap_chunked`` passes its byte and second counts as the
+    ``chunk_mb`` and ``ts_tol_hours`` option strings; the reader gets
+    both back exactly (``int`` would turn 115 s into 114 s)."""
+    from pcap_to_parquet_spark.sources.pcap_datasource import PcapBatchReader
+
+    p = tmp_path / "mix.pcap"
+    p.write_bytes(_mixed_pcap(1000))
+    assert p.stat().st_size > 50_000
+
+    def plan(chunk_mb, tol_h):  # -> (widths of all units but the last, ts_tol)
+        options = {"path": str(p), "chunk_mb": chunk_mb, "ts_tol_hours": tol_h}
+        parts = PcapBatchReader(options).partitions()
+        units = sorted(u for part in parts for u in part.units)
+        return {e - s for _, s, e in units[:-1]}, parts[0].ts_tol
+
+    for chunk_bytes in (128, 50_000):
+        assert plan(str(chunk_bytes / 2**20), str(115 / 3600)) == ({chunk_bytes}, 115)
+    assert plan("1", "1") == (set(), 3600)  # one unit: the file is under 1 MiB
+    assert plan("0", "0.5") == (set(), 1800)
+
+
+def test_chunk_size_must_be_positive(spark, tmp_path):
+    """``read_pcap_chunked`` rejects a chunk of 0 or fewer bytes rather
+    than quietly reading whole files (``chunk_mb=0``, the per-file
+    mode of ``read_pcap``); the reader rejects a negative ``chunk_mb``."""
+    from pcap_to_parquet_spark.sources.pcap_chunked import read_pcap_chunked
+    from pcap_to_parquet_spark.sources.pcap_datasource import PcapBatchReader
+
+    p = tmp_path / "golden.pcap"
+    p.write_bytes(golden_pcap_bytes())
+    for chunk_bytes in (0, -128):
+        with pytest.raises(ValueError, match="chunk_bytes must be positive"):
+            read_pcap_chunked(spark, str(p), chunk_bytes)
+    with pytest.raises(ValueError, match="chunk_mb must be >= 0"):
+        PcapBatchReader({"path": str(p), "chunk_mb": "-1"})
+
+
+def test_every_entry_is_one_python_scan(spark):
+    """Every pcap entry executes as the Python data source scan; none
+    runs a mapInPandas decode."""
+    from pcap_to_parquet_spark.operators.pcap_query import _fixture_path, _pcapng_fixture_path
+    from pcap_to_parquet_spark.sources.pcap_chunked import read_pcap_chunked
+    from pcap_to_parquet_spark.sources.pcapng import read_pcapng
+
+    register_pcap_source(spark)
+    entries = [
+        ("pcap", read_pcap(spark, _fixture_path())),
+        ("pcap", read_pcap_chunked(spark, _fixture_path(), 128)),
+        ("pcapng", read_pcapng(spark, _pcapng_fixture_path())),
+        ("pcap", spark.read.format("pcap").load(_fixture_path())),
+    ]
+    for fmt, df in entries:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert f"BatchScan {fmt}[" in plan and "(Python)" in plan, plan
+        assert "MapInPandas" not in plan, plan
+
+
 def test_pack_units_bins():
     """pack_units: at most n bins, none empty (zero-byte units spread
     too), every spec exactly once, spec order kept inside a bin."""
@@ -148,14 +206,20 @@ def test_datasource_streaming_tails_directory(spark, tmp_path):
     (land / "b.pcap").write_bytes(_mixed_pcap(30))
     drain()
     assert len(out_rows) == 43  # only the NEW file decoded
+    (land / "_tmp.pcap").write_bytes(_mixed_pcap(30))  # still being written
+    drain()
+    assert len(out_rows) == 43  # hidden names skipped, as in batch
 
 
 @pytest.mark.slow  # >=5s
 def test_datasource_filter_pushdown_parity_and_residual(spark, tmp_path):
-    """Pushed filters (ports/len/protocol) return exactly what the
-    plain reader + Spark-side filter returns — incl. SQL null
-    semantics (a NULL port never matches a comparison) — and
-    unsupported filters are yielded back as residuals."""
+    """Pushed filters (ports/len/protocol) return exactly what a
+    Spark-side filter over the same rows returns — incl. SQL null
+    semantics (a NULL port never matches a comparison) and string
+    ordering on protocol — and unsupported filters are yielded back as
+    residuals. The reference is a local relation of the collected
+    rows: every pcap entry is this scan, so none of them is a
+    reference that does not push."""
     from pyspark.sql import functions as F
     from pyspark.sql.datasource import EqualTo, IsNotNull, StringStartsWith
 
@@ -163,7 +227,7 @@ def test_datasource_filter_pushdown_parity_and_residual(spark, tmp_path):
     p = tmp_path / "golden.pcap"
     p.write_bytes(golden_pcap_bytes())
     ds = spark.read.format("pcap").load(str(p))
-    plain = read_pcap(spark, str(p))
+    plain = spark.createDataFrame(ds.collect(), ds.schema)
 
     cases = [
         F.col("protocol") == "TCP",
@@ -171,6 +235,9 @@ def test_datasource_filter_pushdown_parity_and_residual(spark, tmp_path):
         (F.col("src_port") > 1000) & (F.col("len") <= 100),
         F.col("dst_port").isNotNull(),
         F.col("protocol").isNotNull(),  # GRE packet: proto number, no name
+        F.col("protocol") >= "T",
+        F.col("protocol") < "Z",
+        F.col("protocol") < "TCPX",
     ]
     for cond in cases:
         got = _rows(ds.filter(cond))
@@ -199,22 +266,39 @@ def test_datasource_filter_pushdown_parity_and_residual(spark, tmp_path):
     assert [type(f).__name__ for f in r.pushed] == ["EqualTo"]
 
 
-def test_ipv6_pushdown_matches_unfiltered_decode():
-    """In ipv6 mode each pushed filter keeps exactly the rows of the
-    unfiltered decode that satisfy it, NULL never matching; protocol
-    compares in name space, where ICMPv6 lives."""
-    from pyspark.sql.datasource import EqualTo, GreaterThan, In, IsNotNull, LessThanOrEqual
+def _check_pushdown_matches_unfiltered_decode(buf, ipv6):
+    """Each pushed filter keeps exactly the rows of the unfiltered
+    decode that satisfy it as SQL does, NULL never matching. Protocol
+    compares in name space in both modes, so orderings and literals
+    that name no protocol ('T', 'Z', 'TCPX') keep the SQL result."""
+    from pyspark.sql.datasource import (
+        EqualTo,
+        GreaterThan,
+        GreaterThanOrEqual,
+        In,
+        IsNotNull,
+        LessThan,
+        LessThanOrEqual,
+    )
 
     from pcap_to_parquet_spark.sources.pcap_datasource import _decode_to_arrow
-    from pcap_to_parquet_spark.sources.pcap_fixtures import v6_golden_pcap_bytes
 
-    buf = v6_golden_pcap_bytes()
-    rows = _decode_to_arrow(buf, ipv6=True).to_pylist()
+    rows = _decode_to_arrow(buf, ipv6=ipv6).to_pylist()
+
+    def proto(op, lit):  # type: ignore[no-untyped-def]
+        return lambda r: r["protocol"] is not None and op(r["protocol"], lit)
+
+    icmp = "ICMPv6" if ipv6 else "ICMP"
     cases = [
-        ([EqualTo(("protocol",), "ICMPv6")], lambda r: r["protocol"] == "ICMPv6"),
+        ([EqualTo(("protocol",), icmp)], proto(str.__eq__, icmp)),
         ([In(("protocol",), ("TCP", "UDP"))], lambda r: r["protocol"] in ("TCP", "UDP")),
+        ([In(("protocol",), ("TCPX", "UDP"))], lambda r: r["protocol"] == "UDP"),
         ([IsNotNull(("protocol",))], lambda r: r["protocol"] is not None),
-        ([GreaterThan(("protocol",), "TCP")], lambda r: (r["protocol"] or "") > "TCP"),
+        ([GreaterThan(("protocol",), "TCP")], proto(str.__gt__, "TCP")),
+        ([GreaterThanOrEqual(("protocol",), "T")], proto(str.__ge__, "T")),
+        ([LessThan(("protocol",), "Z")], proto(str.__lt__, "Z")),
+        ([LessThan(("protocol",), "TCPX")], proto(str.__lt__, "TCPX")),
+        ([LessThanOrEqual(("protocol",), "IGMP")], proto(str.__le__, "IGMP")),
         (
             [IsNotNull(("protocol",)), LessThanOrEqual(("src_port",), 1234)],
             lambda r: r["protocol"] is not None and (r["src_port"] or 1 << 20) <= 1234,
@@ -224,7 +308,19 @@ def test_ipv6_pushdown_matches_unfiltered_decode():
     for filters, keep in cases:
         want = [r for r in rows if keep(r)]
         assert 0 < len(want) < len(rows), filters
-        assert _decode_to_arrow(buf, filters, ipv6=True).to_pylist() == want, filters
+        assert _decode_to_arrow(buf, filters, ipv6=ipv6).to_pylist() == want, filters
+
+
+def test_ipv4_pushdown_matches_unfiltered_decode():
+    _check_pushdown_matches_unfiltered_decode(golden_pcap_bytes(), ipv6=False)
+
+
+def test_ipv6_pushdown_matches_unfiltered_decode():
+    """ICMPv6 is a name with no IPv4 protocol number: it lives in the
+    proto6 string array."""
+    from pcap_to_parquet_spark.sources.pcap_fixtures import v6_golden_pcap_bytes
+
+    _check_pushdown_matches_unfiltered_decode(v6_golden_pcap_bytes(), ipv6=True)
 
 
 @pytest.mark.slow  # >=5s

@@ -10,8 +10,9 @@ import duckdb
 import pytest
 
 from pcap_to_parquet_spark.operators.pcap_query import _fixture_path
+from pcap_to_parquet_spark.operators.udtf_udaf import pcap_records
 from pcap_to_parquet_spark.schema import PACKET_SCHEMA
-from pcap_to_parquet_spark.sources.pcap import convert_pcap, read_pcap
+from pcap_to_parquet_spark.sources.pcap import PcapFormatError, convert_pcap, read_pcap
 from pcap_to_parquet_spark.sources.pcap_chunked import read_pcap_chunked
 from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
 from pcap_to_parquet_spark.sources.pcap_fixtures import (
@@ -78,6 +79,7 @@ ENTRY_POINTS = {
     "read_pcap": read_pcap,
     "read_pcap_chunked": read_pcap_chunked,
     "format_pcap": _format_pcap,
+    "pcap_records": pcap_records,
 }
 
 BAD_INPUTS = {
@@ -87,12 +89,24 @@ BAD_INPUTS = {
 }
 
 
+def _fails_as_pcap_format_error(read) -> None:  # noqa: ANN001
+    """``read()`` raises ``PcapFormatError``: on the driver, or wrapped
+    by Spark from a planner or executor worker."""
+    with pytest.raises(Exception) as err:
+        read()
+    assert isinstance(err.value, PcapFormatError) or "PcapFormatError" in str(err.value)
+
+
 @pytest.mark.parametrize("entry", list(ENTRY_POINTS))
 def test_read_pcap_rejects_non_pcap(spark, tmp_path, entry):
     """Every pcap entry point gives the same outcome on the same input:
-    short or non-pcap files fail loud, a header-only capture is zero
-    rows, and ``_``/``.``-prefixed files in a directory are skipped."""
+    short or non-pcap files and an empty directory fail loud, a
+    header-only capture is zero rows, and ``_``/``.``-prefixed files in
+    a directory are skipped."""
     read = ENTRY_POINTS[entry]
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    _fails_as_pcap_format_error(lambda: read(spark, str(empty)).collect())
     for name, content in BAD_INPUTS.items():
         bad = tmp_path / f"{name}.pcap"
         bad.write_bytes(content)
@@ -110,6 +124,28 @@ def test_read_pcap_rejects_non_pcap(spark, tmp_path, entry):
     assert read(spark, str(captures)).count() == len(fixture_packets())
 
 
-def test_read_pcapng_rejects_legacy_pcap(spark):
+def test_pcap_records_packs_units_like_the_scan(spark, tmp_path):
+    """``pcap_records`` packs its whole-file units with ``pack_units``,
+    as the pcap scan does: one partition per bin, each holding the
+    records of that bin's files."""
+    from pcap_to_parquet_spark.sources.pcap import _WHOLE_FILE
+    from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs, pack_units
+
+    n = spark.sparkContext.defaultParallelism + 2
+    records = {}
+    for k in range(n):  # one big capture, the rest of growing size
+        count = 8 * n if k == 0 else k
+        records[str(tmp_path / f"f{k:02d}.pcap")] = count
+        frame = bytes(60)
+        (tmp_path / f"f{k:02d}.pcap").write_bytes(
+            pcap_file([(i, len(frame), frame) for i in range(count)])
+        )
+    bins = pack_units(chunk_specs(str(tmp_path), _WHOLE_FILE), n - 2)
+    got = pcap_records(spark, str(tmp_path)).rdd.glom().map(len).collect()
+    assert got == [sum(records[f] for f, _s, _e in b) for b in bins]
+
+
+def test_read_pcapng_rejects_legacy_pcap(spark, tmp_path):
     with pytest.raises(Exception, match="PcapFormatError"):
         read_pcapng(spark, _fixture_path()).collect()
+    _fails_as_pcap_format_error(lambda: read_pcapng(spark, str(tmp_path)).collect())  # empty dir

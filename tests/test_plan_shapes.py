@@ -137,7 +137,8 @@ def test_minhash_signatures_shuffle_free(spark):
 
 def test_pcap_decode_is_arrow_not_row_python(spark):
     p = prof(spark, "q_pcap_pipeline")
-    assert p.get("MapInPandas", 0) == 1  # Arrow-batched, never row-at-a-time
+    assert p.get("BatchScan", 0) == 1  # the Python data source: Arrow-batched
+    assert "MapInPandas" not in p
     assert "BatchEvalPython" not in p
 
 
@@ -719,8 +720,8 @@ def test_round12_shapes(spark):
     assert p.get("BroadcastHashJoin", 0) >= 2
     assert p.get("Window", 0) >= 3  # sessionize + 2 histogram cum/tot pairs
 
-    # pcap flow features: ONE Arrow-batched decode (MapInPandas is the
-    # decode kernel, not a per-row UDF), ONE shuffle total — the lag
+    # pcap flow features: ONE Arrow-batched decode (the pcap data
+    # source scan, not a per-row UDF), ONE shuffle total — the lag
     # window's 5-tuple exchange, which the flow aggregate reuses via
     # the subset rule (a second decode or a join-back would double the
     # scan at 100 TB)
@@ -728,7 +729,8 @@ def test_round12_shapes(spark):
     assert p["single_partition"] == 0
     assert "CartesianProduct" not in p
     assert p.get("BatchEvalPython", 0) == 0
-    assert p.get("MapInPandas", 0) == 1  # decode runs once
+    assert p.get("BatchScan", 0) == 1  # decode runs once
+    assert "MapInPandas" not in p
     assert p.get("Window", 0) == 1
     assert p["exchanges"] == 1
     assert p.get("HashAggregate", 0) == 2  # partial+final on the window's keys
@@ -778,7 +780,8 @@ def test_pcap_talkers_shapes(spark):
     branch (PLANS.md showed MapInPandas×2). Pin: ONE decode, one
     Generate, one aggregate exchange, no row-Python."""
     p = prof(spark, "q_pcap_talkers")
-    assert p.get("MapInPandas", 0) == 1
+    assert p.get("BatchScan", 0) == 1
+    assert "MapInPandas" not in p
     assert p.get("Generate", 0) == 1
     assert p.get("BatchEvalPython", 0) == 0
     assert "CartesianProduct" not in p

@@ -96,7 +96,7 @@ V6_GOLDEN_ROWS = [
 
 
 def _rows_from_arrays(buf: bytes, v6: bool) -> list[dict]:
-    """Arrays+masks → the scalar row shape (mirrors _finish_packets)."""
+    """Arrays+masks → the scalar row shape (mirrors _decode_to_arrow)."""
     a = decode_pcap_arrays(buf, v6)
 
     def quad(u32: int) -> str:
