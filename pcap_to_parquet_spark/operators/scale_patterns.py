@@ -347,13 +347,12 @@ def lake_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
     frag, compacted = keyed_tmp_dirs("compact", src, "v1-64-files", "frag", "out")
+    ev = load_table(spark, sf_dir, "events")
     if not os.path.exists(os.path.join(compacted, "_SUCCESS")):
-        load_table(spark, sf_dir, "events").repartition(64).write.mode(
-            "overwrite"
-        ).parquet(frag)
+        ev.repartition(64).write.mode("overwrite").parquet(frag)
         compact_parquet(spark, frag, compacted)
     return (
-        spark.read.parquet(compacted)
+        spark.read.schema(ev.schema).parquet(compacted)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -714,7 +713,7 @@ def cow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, p in enumerate(keep_as_is):
             shutil.copy(p, os.path.join(dlake, f"keep-{i}.parquet"))
         if rewrite:
-            survivors = spark.read.parquet(*rewrite).filter(
+            survivors = spark.read.schema(ev_schema).parquet(*rewrite).filter(
                 (F.col("user_id") < 4) | (F.col("user_id") > 7)
             )
             survivors.write.mode("append").parquet(dlake)

@@ -18,6 +18,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
 )
 
@@ -42,8 +43,12 @@ PACKET_SCHEMA = StructType(
     ]
 )
 
-# Driver testdata schemas (FIXTURES.md §1) — declared for validation and
-# for readers that want compile-time schemas instead of parquet footers.
+# Driver testdata schemas (FIXTURES.md §1). This is the READ schema:
+# sources.tables.load_table scans every table but events through it, so
+# no load pays a schema-inference job, and it must match the files'
+# footers (tests/test_tables.py checks it does). events is read through
+# events_raw_schema (its ts encoding varies); the entry here is its
+# normalized shape, ts as TIMESTAMP.
 TESTDATA_SCHEMAS: dict[str, StructType] = {
     "region": StructType([_f("r_regionkey", IntegerType()), _f("r_name", StringType())]),
     "nation": StructType(
@@ -86,7 +91,7 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
             _f("o_custkey", LongType()),
             _f("o_orderstatus", StringType()),
             _f("o_totalprice", DoubleType()),
-            _f("o_orderdate", TimestampType()),
+            _f("o_orderdate", TimestampNTZType()),
             _f("o_orderpriority", StringType()),
         ]
     ),
@@ -102,7 +107,7 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
             _f("l_tax", DoubleType()),
             _f("l_returnflag", StringType()),
             _f("l_linestatus", StringType()),
-            _f("l_shipdate", TimestampType()),
+            _f("l_shipdate", TimestampNTZType()),
         ]
     ),
     "events": StructType(

@@ -40,10 +40,21 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.python.filterPushdown.enabled": "true",
 }
 
+
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` sized to the box: half of physical
+    memory in whole GiB (the rest is left to the Python workers and
+    the OS), at least 1g and at most 24g. A local session's driver JVM
+    also runs every executor, so a fixed 24g overcommits a smaller box."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(max(phys_bytes // 2 // 2**30, 1), 24)}g"
+
+
 # Build-time confs (only honored when *we* construct the session).
 # get_spark adds the core-count-derived ones.
 BUILD_CONF: dict[str, str] = {
-    "spark.driver.memory": "24g",
+    "spark.driver.memory": driver_memory(),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.ui.enabled": "false",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),

@@ -39,6 +39,7 @@ def compact_parquet(
     estimate uses the source's on-disk size — close enough for a
     maintenance job, and AQE coalescing smooths the remainder."""
     tune(spark)
+    # src is any caller's directory, so its schema is inferred (one job per pass)
     df = spark.read.parquet(src)
     n_files = max(1, round(_dir_bytes(src) / (target_mb * 1024 * 1024)))
     df.repartition(n_files).write.mode("overwrite").option(

@@ -1,8 +1,13 @@
 """Parquet table loaders for the driver testdata layout.
 
-Kept deliberately thin: ``spark.read.parquet`` gives the vectorized
-reader, predicate pushdown, and column pruning for free — the engine's
-job is to NOT get in Catalyst's way (SURVEY §4.2).
+Every table is read through its declared schema
+(``spark.read.schema(...).parquet``): ``schema.TESTDATA_SCHEMAS`` for
+the nine fixed tables, :func:`events_raw_schema` (a pyarrow footer read)
+for ``events``. Given a schema, Spark skips schema inference, so a
+table load launches no Spark job; a bare ``spark.read.parquet`` runs a
+``parquet at …`` job per call. The scan itself is still the vectorized
+reader with predicate pushdown and column pruning — the engine's job is
+to NOT get in Catalyst's way (SURVEY §4.2).
 """
 
 from __future__ import annotations
@@ -12,9 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampNTZType,
@@ -34,9 +37,12 @@ def _events_ts_arrow_type(sf_dir: str):
     in one round and TIMESTAMP(MICROS) in another; a loader hardcoded
     to either breaks every events consumer when the testdata is
     regenerated. Footer read only — no Spark job, no data scan.
+    Spark's default INT96 timestamp is a UTC instant, though arrow
+    shows it as naive nanoseconds.
     """
     import glob
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     p = os.path.join(sf_dir, "events.parquet")
@@ -47,7 +53,10 @@ def _events_ts_arrow_type(sf_dir: str):
         if not parts:
             return None
         p = parts[0]
-    return pq.read_schema(p).field("ts").type
+    schema = pq.read_metadata(p).schema
+    if schema.column(schema.names.index("ts")).physical_type == "INT96":
+        return pa.timestamp("us", tz="UTC")
+    return schema.to_arrow_schema().field("ts").type
 
 
 def events_raw_schema(sf_dir: str) -> StructType:
@@ -74,12 +83,8 @@ def events_raw_schema(sf_dir: str) -> StructType:
         ts_type = LongType()
     return StructType(
         [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_type),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
+            StructField("ts", ts_type) if f.name == "ts" else f
+            for f in TESTDATA_SCHEMAS["events"].fields
         ]
     )
 
@@ -98,7 +103,10 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table. Plain parquet scan → pushdown-friendly.
+    """Load one testdata table: a parquet scan through the declared
+    schema, so the load itself launches no Spark job (no schema
+    inference). A file whose column types contradict the declared
+    schema fails when the scan runs, never as silent NULLs.
 
     ``events.ts`` arrives as whatever the generator wrote (ns or µs —
     see :func:`events_raw_schema`); both engines are normalized to the
@@ -107,11 +115,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TESTDATA_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
     tune(spark)
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        return normalize_event_ts(df)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return normalize_event_ts(spark.read.schema(events_raw_schema(sf_dir)).parquet(path))
+    return spark.read.schema(TESTDATA_SCHEMAS[name]).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

@@ -21,7 +21,7 @@ import bench
 
 def test_final_line_carries_per_query_mins_and_total():
     timings = {"q_a": 1.5, "q_b": 0.25}
-    line = bench.final_line(timings, 1.75, 0.1, "BENCH_DETAIL_r16.json")
+    line = bench.final_line(timings, {"q_a": 1.7, "q_b": 0.3}, 1.75, 0.1, "BENCH_DETAIL_r16.json")
     parsed = json.loads(line)
     # additions only: every per-query key present, legacy total kept
     assert parsed["queries"]["q_a"] == 1.5
@@ -33,20 +33,32 @@ def test_final_line_carries_per_query_mins_and_total():
     assert parsed["detail"] == "BENCH_DETAIL_r16.json"
 
 
+def test_final_line_carries_per_query_medians():
+    # the median of the 3 runs rides next to the min, one entry per query
+    # and no legacy total (the detail file's value_median carries that)
+    line = bench.final_line(
+        {"q_a": 1.5, "q_b": 0.25}, {"q_a": 1.7, "q_b": 0.3}, 1.75, 0.1, "BENCH_DETAIL_r16.json"
+    )
+    assert json.loads(line)["queries_median"] == {"q_a": 1.7, "q_b": 0.3}
+
+
 def test_final_line_is_one_line_and_tail_sized():
     # 104 entries must survive the driver's tail capture: one line,
     # well under the ~8 KB the capture demonstrably keeps (BENCH_r15's
     # tail held >4 KB of an earlier line plus the full final line)
     timings = {f"q_{i:03d}_some_longer_name": round(i * 0.123, 3) for i in range(110)}
-    line = bench.final_line(timings, 99.9, 0.1, "BENCH_DETAIL_r99.json")
+    medians = {q: round(t * 1.37, 3) for q, t in timings.items()}
+    line = bench.final_line(timings, medians, 99.9, 0.1, "BENCH_DETAIL_r99.json")
     assert "\n" not in line
     assert len(line) < 8000
-    assert json.loads(line)["queries"]["total"] == 99.9
+    parsed = json.loads(line)
+    assert parsed["queries"]["total"] == 99.9
+    assert parsed["queries_median"] == medians
 
 
 def test_final_line_rejects_a_query_named_total():
     with pytest.raises(ValueError, match="total"):
-        bench.final_line({"q_a": 1.0, "total": 2.0}, 3.0, 0.1, "BENCH_DETAIL_r16.json")
+        bench.final_line({"q_a": 1.0, "total": 2.0}, {"q_a": 1.0}, 3.0, 0.1, "BENCH_DETAIL_r16.json")
 
 
 def test_detail_filename_stamps_core_count_family(tmp_path):

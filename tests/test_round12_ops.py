@@ -397,12 +397,12 @@ def _cadence_lake(spark, path, orders, customers):
     ).write.mode("overwrite").parquet(str(path / "orders.parquet"))
     spark.createDataFrame(
         customers,
-        "c_custkey long, c_name string, c_nationkey long, c_acctbal double, "
+        "c_custkey long, c_name string, c_nationkey int, c_acctbal double, "
         "c_mktsegment string",
     ).write.mode("overwrite").parquet(str(path / "customer.parquet"))
     spark.createDataFrame(
         [(0, "ALPHA", 0), (1, "BETA", 0)],
-        "n_nationkey long, n_name string, n_regionkey long",
+        "n_nationkey int, n_name string, n_regionkey int",
     ).write.mode("overwrite").parquet(str(path / "nation.parquet"))
     return str(path)
 

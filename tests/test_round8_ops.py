@@ -268,13 +268,13 @@ def test_referential_integrity_counts_planted_orphans(spark, tmp_path):
            "o_orderkey long, o_custkey long, o_totalprice double, "
            "o_orderdate timestamp", "orders")
     _write(spark, tmp_path, [(1,)], "p_partkey long", "part")
-    _write(spark, tmp_path, [(1, 1)], "s_suppkey long, s_nationkey long",
+    _write(spark, tmp_path, [(1, 1)], "s_suppkey long, s_nationkey int",
            "supplier")
-    _write(spark, tmp_path, [(1, 1)], "c_custkey long, c_nationkey long",
+    _write(spark, tmp_path, [(1, 1)], "c_custkey long, c_nationkey int",
            "customer")
-    _write(spark, tmp_path, [(1, 1)], "n_nationkey long, n_regionkey long",
+    _write(spark, tmp_path, [(1, 1)], "n_nationkey int, n_regionkey int",
            "nation")
-    _write(spark, tmp_path, [(1,)], "r_regionkey long", "region")
+    _write(spark, tmp_path, [(1,)], "r_regionkey int", "region")
     rows = {r.fk: r for r in
             QUERIES["q_referential_integrity"](spark, str(tmp_path)).collect()}
     e = rows["lineitem.l_partkey->part"]
@@ -296,13 +296,13 @@ def test_referential_integrity_dup_parent_pk_no_fanout(spark, tmp_path):
     _write(spark, tmp_path, [(1, 1, 100.0, _T0), (2, 1, 100.0, _T0)],
            "o_orderkey long, o_custkey long, o_totalprice double, "
            "o_orderdate timestamp", "orders")
-    _write(spark, tmp_path, [(1, 1)], "s_suppkey long, s_nationkey long",
+    _write(spark, tmp_path, [(1, 1)], "s_suppkey long, s_nationkey int",
            "supplier")
-    _write(spark, tmp_path, [(1, 1)], "c_custkey long, c_nationkey long",
+    _write(spark, tmp_path, [(1, 1)], "c_custkey long, c_nationkey int",
            "customer")
-    _write(spark, tmp_path, [(1, 1)], "n_nationkey long, n_regionkey long",
+    _write(spark, tmp_path, [(1, 1)], "n_nationkey int, n_regionkey int",
            "nation")
-    _write(spark, tmp_path, [(1,)], "r_regionkey long", "region")
+    _write(spark, tmp_path, [(1,)], "r_regionkey int", "region")
     rows = {r.fk: r for r in
             QUERIES["q_referential_integrity"](spark, str(tmp_path)).collect()}
     e = rows["lineitem.l_partkey->part"]
