@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from pcap_to_parquet_spark.functions.text import whitespace_tokens
 from pcap_to_parquet_spark.registry import query
+from pcap_to_parquet_spark.session import broadcast_threshold_bytes, observed_checkpoint
 from pcap_to_parquet_spark.sources import fan_out, load_table
 
 # ---------------------------------------------------------------------------
@@ -697,8 +698,6 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so worst case is ~2x the threshold; the threshold is parsed
     # unit-aware (external sessions carry '10MB'-style values) and an
     # unparseable/disabled value falls back to the shuffled plan.
-    from pcap_to_parquet_spark.session import broadcast_threshold_bytes
-
     bcast_ok = n_edges * 48 < broadcast_threshold_bytes(spark)
     # fan_out the PROBE side when broadcasting: the checkpoint froze the
     # AQE-coalesced partitioning (3-10 partitions at sf0.1), and without
@@ -921,8 +920,6 @@ def pagerank_iterations(edges: DataFrame, iters: int) -> DataFrame:
     rank scaled by 1e9 in BIGINT, `base + (85 * sum(pr div deg)) div
     100` per round. Factored out of q_pagerank so random graphs can
     fuzz it against a pure-Python integer reference."""
-    from pcap_to_parquet_spark.session import broadcast_threshold_bytes
-
     deg = (
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("deg"))
@@ -2339,7 +2336,7 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: each round is ONE degree aggregate plus two
     semi-joins, all keyed on node ids — the same partitioning every
     round, no corpus-sized state beyond the shrinking edge list, which
-    is localCheckpointed per round so the 8-round lineage never
+    is localCheckpointed per round so the {rounds}-round lineage never
     re-runs the co-purchase self-join. Rounds are FIXED at {rounds}
     (not run-to-convergence) so Spark and the oracle compute the same
     function; the `converged` flag reports whether the peel reached
@@ -2368,39 +2365,25 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .count()
     )
-    from pyspark.sql import Observation
-
     alive_counts: list[int] = []
     for _ in range(_KCORE_ROUNDS):
-        # |alive| rides the checkpoint materialization as an observe()
-        # metric (driver-side scalar only — bounded metadata, never
-        # rows): one job per round instead of a checkpoint job plus a
-        # separate count job (the star_contract r15 discipline).
-        # COUPLING (r15 advisor): obs.get blocks until an action fires
-        # the QueryExecutionListener; localCheckpoint(eager=True) is
-        # that action on classic Spark sessions (verified 4.1.2). On a
-        # session type where checkpoint actions stop reporting observed
-        # metrics (e.g. Spark Connect, which doesn't support
-        # localCheckpoint at all — the checkpoint call itself would
-        # raise first), this pattern must be replaced with an explicit
-        # count job.
-        obs = Observation()
-        alive = (
+        # the survivor set feeds both semi-joins; |alive| rides its
+        # checkpoint job instead of costing a count job
+        alive, m = observed_checkpoint(
             edges.select(F.col("u").alias("node"))
             .unionAll(edges.select(F.col("v").alias("node")))
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("d"))
             .where(F.col("d") >= _KCORE_K)
-            .select("node")
-            .observe(obs, F.count(F.lit(1)).alias("n_alive"))
-            .localCheckpoint(eager=True)  # survivor set, feeds both semi-joins
+            .select("node"),
+            n_alive=F.count(F.lit(1)),
         )
-        alive_counts.append(obs.get["n_alive"])
+        alive_counts.append(m["n_alive"])
         edges = (
             edges.join(alive.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(alive.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=True)  # shrinking edge list, 8-round lineage cut
+            .localCheckpoint(eager=True)  # shrinking edge list, lineage cut
         )
     return spark.range(1).select(
         F.lit(n_nodes).cast("long").alias("n_nodes"),

@@ -19,12 +19,13 @@ import random
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pcap_to_parquet_spark.functions.text import shingles, whitespace_tokens
 from pcap_to_parquet_spark.functions.vectors import cosine_similarity
 from pcap_to_parquet_spark.registry import query
+from pcap_to_parquet_spark.session import observed_checkpoint
 from pcap_to_parquet_spark.sources import fan_out, load_table
 
 # ---------------------------------------------------------------------------
@@ -440,10 +441,7 @@ def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = rep_of.join(rlabels, "rep_id", "left").select(
         "doc_id", F.coalesce("cluster_id", F.col("rep_id")).alias("cluster_id")
     )
-    singletons = d.select("doc_id").join(lab.select("doc_id"), "doc_id", "left_anti")
-    return lab.unionByName(
-        singletons.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    )
+    return _with_singletons(lab, d)
 
 
 # round 15: SimHash-axis survivors — with this every axis of the dedup
@@ -862,24 +860,20 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     # localCheckpoint (not cache): edges embed the whole ngram_jaccard
-    # plan, and every round's join would re-embed it — r1's materialized
-    # plan grew to 218 exchanges. Checkpointing cuts each round's plan
-    # to just the round itself.
+    # plan, and every round's join would re-embed it (the plan once grew
+    # to 218 exchanges). Checkpointing cuts each round's plan to just
+    # the round itself.
     edges = (
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
         .toDF("a", "b")
         .localCheckpoint(eager=True)
     )
-    # no cache() anywhere in the loop: every round ends in ONE eager
-    # localCheckpoint job whose observe() metric carries the
-    # changed-label count (the star_contract discipline) — lineage is
-    # truncated every round (r1's un-truncated plan grew to 218
-    # exchanges), nothing registers in the session CacheManager (a
-    # cached round frame would also serve later semantically-equal
-    # invocations — cross-run reuse the bench must not price), and the
-    # checkpointed blocks are reclaimed by the ContextCleaner as each
-    # round's reference drops. obs.get relies on the eager checkpoint
-    # firing the observation — see observed_checkpoint's coupling note.
+    # no cache() anywhere in the loop: every round ends in ONE
+    # observed_checkpoint job that also counts the changed labels. A
+    # cached round frame would register in the session CacheManager and
+    # serve later semantically-equal invocations (cross-run reuse the
+    # bench must not price); checkpointed blocks are reclaimed by the
+    # ContextCleaner as each round's reference drops.
     labels = d.select("doc_id", F.col("doc_id").alias("cluster_id"))
     converged = False
     for _round_no in range(50):
@@ -888,14 +882,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("b").alias("doc_id"))
             .agg(F.min("cluster_id").alias("neigh_min"))
         )
-        # carry the old label through the ONE join so the convergence
-        # count below rides this same frame — a second labels-join per
-        # round (the r1-r3a shape) doubled the round's shuffle count
-        # for no information gain
-        obs = Observation()
-        merged = (
-            labels.join(neigh, "doc_id", "left")
-            .select(
+        # carry the old label through the ONE join so the changed count
+        # rides this same frame; a second labels-join per round doubles
+        # the round's shuffle count for no information gain
+        merged, m = observed_checkpoint(
+            labels.join(neigh, "doc_id", "left").select(
                 "doc_id",
                 F.least(
                     "cluster_id", F.coalesce("neigh_min", "cluster_id")
@@ -903,11 +894,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("cluster_id")
                  != F.least("cluster_id", F.coalesce("neigh_min", "cluster_id"))
                  ).alias("chg"),
-            )
-            .observe(obs, F.sum(F.col("chg").cast("long")).alias("n_changed"))
-            .localCheckpoint(eager=True)
+            ),
+            n_changed=F.sum(F.col("chg").cast("long")),
         )
-        changed = obs.get["n_changed"] or 0
+        changed = m["n_changed"] or 0
         labels = merged.select("doc_id", "cluster_id")
         if changed == 0:
             converged = True
@@ -1185,10 +1175,21 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table, fanned out and materialized once for the
+    kernels that re-read it across several driver actions.
+    localCheckpoint, NOT cache(): cache() would also register the
+    subplan in the session CacheManager and serve later
+    semantically-equal invocations (other embedding queries, repeated
+    bench runs) from memory."""
+    return fan_out(load_table(spark, sf_dir, "embeddings")).localCheckpoint(eager=True)
+
+
 def _ivf_centroids(em: DataFrame) -> DataFrame:
     """(c_label, centroid): elementwise-mean embedding per label — the
-    deterministic IVF coarse quantizer shared by q_similarity_ivf and
-    q_ivf_probe_curve (explode (pos, val), avg, re-assemble)."""
+    deterministic IVF coarse quantizer shared by q_similarity_ivf,
+    q_ivf_pq and q_ivf_probe_curve (explode (pos, val), avg,
+    re-assemble)."""
     comp = em.select(
         "label",
         F.posexplode(F.transform("embedding", lambda x: x.cast("double"))).alias(
@@ -1204,6 +1205,20 @@ def _ivf_centroids(em: DataFrame) -> DataFrame:
             F.col("label").alias("c_label"),
             F.transform("pv", lambda s: s.getField("cval")).alias("centroid"),
         )
+    )
+
+
+def _ivf_probe(em: DataFrame, qvec: DataFrame, n_probes: int) -> DataFrame:
+    """c_label of the ``n_probes`` IVF lists whose centroids are
+    cosine-nearest the one-row ``qvec`` (column q_embedding), ties by
+    label. The 10 centroid rows are driver-sized but ranked in-plan."""
+    return (
+        _ivf_centroids(em)
+        .join(F.broadcast(qvec))
+        .select("c_label", cosine_similarity("q_embedding", "centroid").alias("c_cos"))
+        .orderBy(F.col("c_cos").desc(), F.col("c_label"))
+        .limit(n_probes)
+        .select("c_label")
     )
 
 
@@ -1252,16 +1267,8 @@ def similarity_ivf(
     margin is ~0.028 cosine, 13 orders above cross-engine float
     noise."""
     em = load_table(spark, sf_dir, "embeddings")
-    centroids = _ivf_centroids(em)
     qvec = em.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_embedding"))
-    # pick the 2 centroids closest to the query (10 rows — driver-size, still done in-plan)
-    probe = (
-        centroids.join(F.broadcast(qvec))
-        .select("c_label", cosine_similarity("q_embedding", "centroid").alias("c_cos"))
-        .orderBy(F.col("c_cos").desc(), F.col("c_label"))
-        .limit(n_probes)
-        .select("c_label")
-    )
+    probe = _ivf_probe(em, qvec, n_probes)
     cos = cosine_similarity("q_embedding", "embedding")
     return (
         em.filter(F.col("vec_id") != 0)
@@ -1617,17 +1624,12 @@ def kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     big-data k-means loop shape. Output is integer-only (cluster
     sizes + min member id).
 
-    EXACT oracle (upgraded from rows-only in round 6): centroids are
-    6dp-rounded after every update in both engines and the whole loop
-    is unrolled as a materialized-CTE chain in SQL — see
+    EXACT oracle: centroids are 6dp-rounded after every update in both
+    engines and the whole loop is unrolled as a materialized-CTE chain
+    in SQL — see
     _kmeans_oracle's docstring for the measured margins that make the
     replay bit-exact."""
-    # localCheckpoint, NOT cache(): the iterative loop re-reads em
-    # across its driver actions (invocation-local reuse), while
-    # cache() would also register the subplan in the session
-    # CacheManager and serve later semantically-equal invocations
-    # (other embedding queries, repeated bench runs) from memory
-    em = fan_out(load_table(spark, sf_dir, "embeddings")).localCheckpoint(eager=True)
+    em = _embeddings(spark, sf_dir)
     init = em.orderBy("vec_id").limit(KMEANS_K).collect()
     centroids = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in init])
     for _ in range(KMEANS_ITERS):
@@ -3200,11 +3202,14 @@ def components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)  # cut the jaccard lineage once
     )
-    labeled = star_contract(edges)
-    singletons = d.select("doc_id").join(labeled.select("doc_id"), "doc_id", "left_anti")
-    return labeled.unionByName(
-        singletons.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    )
+    return _with_singletons(star_contract(edges), d)
+
+
+def _with_singletons(labels: DataFrame, nodes: DataFrame, key: str = "doc_id") -> DataFrame:
+    """(key, cluster_id) ``labels`` plus every ``nodes`` key they lack,
+    labelled with itself: a node in no edge is its own component."""
+    singles = nodes.select(key).join(labels.select(key), key, "left_anti")
+    return labels.unionByName(singles.select(key, F.col(key).alias("cluster_id")))
 
 
 def star_contract(edges: DataFrame) -> DataFrame:
@@ -3227,7 +3232,7 @@ def star_contract(edges: DataFrame) -> DataFrame:
         alternative (shuffle |V| partial mins, AQE-broadcast them back)
         was measured SLOWER on the census-scale graphs every caller has
         — two broadcast builds per round added more stage latency than
-        the 2|E| window sort costs (r15 A/B: winnow clusters 8.0→10.1 s
+        the 2|E| window sort costs (measured: winnow clusters 8.0→10.1 s
         with agg+join) — and at graph scale the window's single
         re-partition of the adjacency is the same exchange the join
         would pay anyway."""
@@ -3237,46 +3242,29 @@ def star_contract(edges: DataFrame) -> DataFrame:
             "m", F.least(F.min("v").over(w), F.col("u"))
         )
 
-    def observed_checkpoint(e: DataFrame):
-        """Materialize a canonical edge set through ONE job that also
-        yields its convergence FINGERPRINT as observe() metrics riding
-        the localCheckpoint materialization: row count plus residue
-        sums of the endpoints and of xxhash64(u, v) (mod 2^20 so the
-        sums stay in long range to ~2^43 rows). Each component is a
-        pure function of the SET, so unequal fingerprints PROVE the
-        round changed the edge set — the common case, decided for free
-        — while equal fingerprints trigger the one exact set-equality
-        job below. The old shape paid a second full unionAll +
-        groupBy(u, v) symmetric-difference shuffle job EVERY round.
-
-        COUPLING (r15 advisor): obs.get blocks until an action fires
-        the QueryExecutionListener; the eager localCheckpoint is that
-        action on classic Spark sessions (verified 4.1.2). On Spark
-        Connect localCheckpoint itself raises before obs.get could
-        hang; any other session type that runs checkpoints without
-        reporting observed metrics needs an explicit count instead."""
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        m = F.lit(1 << 20)
-        d = e.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.pmod(F.col("u"), m)).alias("su"),
-            F.sum(F.pmod(F.col("v"), m)).alias("sv"),
-            F.sum(F.pmod(F.xxhash64("u", "v"), m)).alias("sh"),
-        ).localCheckpoint(eager=True)
-        return d, obs.get
-
-    cur, cur_fp = observed_checkpoint(canonical(edges))
+    # each round's checkpoint job also yields the edge set's convergence
+    # FINGERPRINT: row count plus residue sums of the endpoints and of
+    # xxhash64(u, v) (mod 2^20 so the sums stay in long range to ~2^43
+    # rows). Each component is a pure function of the SET, so unequal
+    # fingerprints PROVE the round changed the edge set (the common
+    # case, decided for free), while equal fingerprints trigger the one
+    # exact set-equality job below, instead of a symmetric-difference
+    # shuffle job every round.
+    res = F.lit(1 << 20)
+    fingerprint = dict(
+        n=F.count(F.lit(1)),
+        su=F.sum(F.pmod(F.col("u"), res)),
+        sv=F.sum(F.pmod(F.col("v"), res)),
+        sh=F.sum(F.pmod(F.xxhash64("u", "v"), res)),
+    )
+    cur, cur_fp = observed_checkpoint(canonical(edges), **fingerprint)
     converged = False
     for _ in range(50):
         nb = neighborhoods(cur)
         # large-star: strictly larger neighbors hang under the minimum.
         # NOT checkpointed: the small-star half consumes it through a
         # reused exchange, so fusing both stars into the one round-end
-        # checkpoint job halves the actions per round (2 instead of 4
-        # with the old mid-round checkpoint + two exceptAll counts).
+        # checkpoint job halves the actions per round.
         large = nb.filter(F.col("v") > F.col("u")).select(
             F.col("v").alias("u"), F.col("m").alias("v")
         )
@@ -3296,7 +3284,7 @@ def star_contract(edges: DataFrame) -> DataFrame:
             .union(nb2.select(F.col("u"), F.col("m")).toDF("u", "v"))
         )
         new, new_fp = observed_checkpoint(
-            canonical(small.filter(F.col("u") != F.col("v")))
+            canonical(small.filter(F.col("u") != F.col("v"))), **fingerprint
         )
         if new_fp == cur_fp:
             # convergence = empty symmetric difference. Both frames are
@@ -3426,11 +3414,7 @@ def density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .toDF("u", "v")
         .localCheckpoint(eager=True)  # cut the gram-matrix lineage once
     )
-    labeled = star_contract(edges).toDF("vec_id", "cluster_id")
-    singles = em.select("vec_id").join(labeled.select("vec_id"), "vec_id", "left_anti")
-    return labeled.unionByName(
-        singles.select("vec_id", F.col("vec_id").alias("cluster_id"))
-    )
+    return _with_singletons(star_contract(edges).toDF("vec_id", "cluster_id"), em, "vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -3591,12 +3575,7 @@ def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF list pruning of q_similarity_ivf for IVF-PQ. Recall vs exact
     L2 (0.8@10 on the weakly-clustered synthetic embeddings, vs 0.2
     for raw ADC) is pinned in tests/test_round4c_ops.py."""
-    # localCheckpoint, NOT cache(): the iterative loop re-reads em
-    # across its driver actions (invocation-local reuse), while
-    # cache() would also register the subplan in the session
-    # CacheManager and serve later semantically-equal invocations
-    # (other embedding queries, repeated bench runs) from memory
-    em = fan_out(load_table(spark, sf_dir, "embeddings")).localCheckpoint(eager=True)
+    em = _embeddings(spark, sf_dir)
     books = pq_train(em)
     out = pq_search(em, em, books)
     return out
@@ -3605,22 +3584,23 @@ def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 pq_ann.__doc__ = pq_ann.__doc__.format(m=PQ_M, k=PQ_K, short=PQ_SHORTLIST)
 
 
-def pq_train(em: DataFrame, init_books=None):  # type: ignore[no-untyped-def]
-    """Learn the (PQ_M, PQ_K, d_sub) subspace codebooks over ``em``;
-    deterministic Lloyd rounds seeded from the PQ_K smallest vec_ids,
+def pq_train(em: DataFrame, init_books=None, m: int = PQ_M, k: int = PQ_K):  # type: ignore[no-untyped-def]
+    """Learn the (m, k, 64 // m) subspace codebooks over ``em``;
+    deterministic Lloyd rounds seeded from the k smallest vec_ids,
     or warm-started from ``init_books`` (OPQ's alternating loop passes
     the previous iteration's codebooks so each Lloyd restart begins at
     the prior optimum — the monotone-descent guarantee needs it).
-    Only (sub, code) partial sums leave the executors."""
-    d_sub = 64 // PQ_M
+    Only (sub, code) partial sums leave the executors. ``m=1`` is plain
+    k-means over whole vectors (q_residual_quant's coarse codebook)."""
+    d_sub = 64 // m
     if init_books is not None:
         books = np.array(init_books, dtype=np.float64, copy=True)
     else:
-        init = em.orderBy("vec_id").limit(PQ_K).collect()
-        # codebooks[s] : (PQ_K, d_sub) — subspace s's centroid matrix
+        init = em.orderBy("vec_id").limit(k).collect()
+        # codebooks[s] : (k, d_sub) — subspace s's centroid matrix
         books = np.stack(
             [
-                np.asarray(r.embedding, dtype=np.float64).reshape(PQ_M, d_sub)
+                np.asarray(r.embedding, dtype=np.float64).reshape(m, d_sub)
                 for r in init
             ]
         ).transpose(1, 0, 2)
@@ -3635,9 +3615,9 @@ def pq_train(em: DataFrame, init_books=None):  # type: ignore[no-untyped-def]
             # thing that leaves the executors during training
             for pdf in batches:
                 x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                x = x.reshape(len(x), PQ_M, d_sub)
+                x = x.reshape(len(x), m, d_sub)
                 out = []
-                for s in range(PQ_M):
+                for s in range(m):
                     d2 = ((x[:, s, None, :] - _b[s][None, :, :]) ** 2).sum(axis=2)
                     code = d2.argmin(axis=1)
                     for c in np.unique(code):
@@ -3648,8 +3628,8 @@ def pq_train(em: DataFrame, init_books=None):  # type: ignore[no-untyped-def]
         rows = em.select("embedding").mapInPandas(partials, partial_schema).collect()
         # deterministic driver-side reduce: sort partials by content so
         # float summation order never depends on task scheduling
-        acc = np.zeros((PQ_M, PQ_K, d_sub))
-        cnt = np.zeros((PQ_M, PQ_K))
+        acc = np.zeros((m, k, d_sub))
+        cnt = np.zeros((m, k))
         for r in sorted(rows, key=lambda r: (r.sub, r.code, r.cnt, tuple(r.sums))):
             acc[r.sub, r.code] += np.asarray(r.sums)
             cnt[r.sub, r.code] += r.cnt
@@ -3658,10 +3638,11 @@ def pq_train(em: DataFrame, init_books=None):  # type: ignore[no-untyped-def]
         # 6dp-round every update (cold AND warm paths) so the DuckDB
         # replay oracles see bit-identical codebooks regardless of
         # float-summation order (measured mean-to-boundary distance
-        # 1.6e-10 vs ~1e-12 noise). Round 7: the OPQ warm path now
-        # rounds too — its monotone-descent invariant is pinned at
-        # 1e-5 tolerance (true decreases are ~0.03, four orders above
-        # the rounding perturbation), which buys the exact OPQ oracle.
+        # 1.6e-10 vs ~1e-12 noise; 1.2e-12 vs ~1e-15 for the m=1
+        # coarse book). The OPQ warm path rounds too: its
+        # monotone-descent invariant is pinned at 1e-5 tolerance (true
+        # decreases are ~0.03, four orders above the rounding
+        # perturbation), which buys the exact OPQ oracle.
         books[nz] = np.round(acc[nz] / cnt[nz][:, None], 6)
     return books
 
@@ -3742,7 +3723,7 @@ cand AS (
 )
 
 
-@query("q_ivf_pq", IVF_PQ_ORACLE)  # exact since round 6: probe + Lloyd replay
+@query("q_ivf_pq", IVF_PQ_ORACLE)  # exact: probe + Lloyd replay
 def ivf_pq(spark: SparkSession, sf_dir: str, n_probes: int = 3) -> DataFrame:
     """IVF-PQ, the composition the two index halves exist for (and the
     FAISS default at billion scale): q_similarity_ivf's inverted lists
@@ -3754,41 +3735,14 @@ def ivf_pq(spark: SparkSession, sf_dir: str, n_probes: int = 3) -> DataFrame:
     relative to plain IVF at the same probe count is pinned in
     tests/test_round4c_ops.py — PQ's quantization loss must cost at
     most a small recall delta once the rerank runs."""
-    # localCheckpoint, NOT cache(): the iterative loop re-reads em
-    # across its driver actions (invocation-local reuse), while
-    # cache() would also register the subplan in the session
-    # CacheManager and serve later semantically-equal invocations
-    # (other embedding queries, repeated bench runs) from memory
-    em = fan_out(load_table(spark, sf_dir, "embeddings")).localCheckpoint(eager=True)
+    em = _embeddings(spark, sf_dir)
     books = pq_train(em)
     # probe selection: label-centroid lists, exactly similarity_ivf's
-    comp = em.select(
-        "label",
-        F.posexplode(F.transform("embedding", lambda x: x.cast("double"))).alias("pos", "val"),
-    )
-    centroids = (
-        comp.groupBy("label", "pos")
-        .agg(F.avg("val").alias("cval"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "cval"))).alias("pv"))
-        .select(
-            F.col("label").alias("c_label"),
-            F.transform("pv", lambda s: s.getField("cval")).alias("centroid"),
-        )
-    )
     qvec = em.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_embedding"))
-    probe = (
-        centroids.join(F.broadcast(qvec))
-        .select("c_label", cosine_similarity("q_embedding", "centroid").alias("c_cos"))
-        .orderBy(F.col("c_cos").desc(), F.col("c_label"))
-        .limit(n_probes)
-        .select("c_label")
-    )
     candidates = em.join(
-        F.broadcast(probe), em.label == F.col("c_label"), "left_semi"
+        F.broadcast(_ivf_probe(em, qvec, n_probes)), em.label == F.col("c_label"), "left_semi"
     )
-    out = pq_search(candidates, em, books)
-    return out
+    return pq_search(candidates, em, books)
 
 
 ivf_pq.__doc__ = ivf_pq.__doc__.format(m=PQ_M)
@@ -3817,12 +3771,7 @@ def pca_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual projections — which must reproduce the eigenvalue, the
     end-to-end proof that sketch, eig and projection agree (pinned in
     tests/test_round4c_ops.py)."""
-    # localCheckpoint, NOT cache(): the iterative loop re-reads em
-    # across its driver actions (invocation-local reuse), while
-    # cache() would also register the subplan in the session
-    # CacheManager and serve later semantically-equal invocations
-    # (other embedding queries, repeated bench runs) from memory
-    em = fan_out(load_table(spark, sf_dir, "embeddings")).localCheckpoint(eager=True)
+    em = _embeddings(spark, sf_dir)
     d_dim = 64
 
     def moments(batches):
@@ -4290,7 +4239,7 @@ def _opq_oracle_sql() -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + finals + "\nORDER BY iteration"
 
 
-@query("q_opq_train", _opq_oracle_sql())  # exact since round 7: NS-polar replay
+@query("q_opq_train", _opq_oracle_sql())  # exact: NS-polar replay
 def opq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Optimized Product Quantization (Ge et al. 2013): learn an
     orthogonal rotation R so that PQ's independent-subspace assumption
@@ -4306,18 +4255,13 @@ def opq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as q_pca_embed), and the polar solve is a driver-side
     64×64 Newton–Schulz iteration (see _opq_polar — identical to
     UVᵀ from the SVD, but replayable in SQL, which is what makes
-    this query exact-oracle-checkable since round 7). Every engine
+    this query exact-oracle-checkable). Every engine
     boundary is 6dp-rounded: rotated vectors, Lloyd means (pq_train's
     warm path), the cross-moment, and R itself, so the DuckDB replay
     is bit-identical. Output: per-iteration mean quantization error,
     iteration 0 being PLAIN PQ (R = I) — the monotone decrease that
     is OPQ's whole point is pinned in tests/test_round4c_ops.py."""
-    # localCheckpoint, NOT cache(): the iterative loop re-reads em
-    # across its driver actions (invocation-local reuse), while
-    # cache() would also register the subplan in the session
-    # CacheManager and serve later semantically-equal invocations
-    # (other embedding queries, repeated bench runs) from memory
-    em = fan_out(load_table(spark, sf_dir, "embeddings")).localCheckpoint(eager=True)
+    em = _embeddings(spark, sf_dir)
     d_dim, d_sub = 64, 64 // PQ_M
     r_mat = np.eye(d_dim)
     errors = []
@@ -4509,7 +4453,7 @@ SELECT 'coarse_plus_residual_pq',
 RESID_QUANT_ORACLE = _rq_oracle()
 
 
-@query("q_residual_quant", RESID_QUANT_ORACLE)  # exact since round 6
+@query("q_residual_quant", RESID_QUANT_ORACLE)  # exact: Lloyd replay
 def residual_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Residual quantization, the IVF-PQ encoding trick isolated and
     measured: a coarse {ck}-centroid codebook captures the vector's
@@ -4518,54 +4462,16 @@ def residual_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     residuals re-centers every list at the origin, so the PQ codebook
     spends its codes on local structure instead of absolute position).
 
-    Distributed shape: the coarse book trains with the same
-    partial-sums Lloyd loop as pq_train restricted to one 64-dim
-    "subspace"; residuals are a map-only subtraction under a broadcast
+    Distributed shape: the coarse book is pq_train with one 64-dim
+    subspace (m=1, k={ck}); residuals are a map-only subtraction under a broadcast
     centroid matrix; the PQ stage and the error measurement reuse the
     existing kernels' moment discipline. Output compares mean squared
     reconstruction error of plain PQ vs coarse-only vs
     coarse+residual-PQ — the two-level encoder must beat both of its
     halves (pinned in tests/test_round4c_ops.py)."""
-    # localCheckpoint, NOT cache(): the iterative loop re-reads em
-    # across its driver actions (invocation-local reuse), while
-    # cache() would also register the subplan in the session
-    # CacheManager and serve later semantically-equal invocations
-    # (other embedding queries, repeated bench runs) from memory
-    em = fan_out(load_table(spark, sf_dir, "embeddings")).localCheckpoint(eager=True)
+    em = _embeddings(spark, sf_dir)
     d_dim, d_sub = 64, 64 // PQ_M
-
-    # --- coarse codebook: Lloyd rounds with (code, cnt, sum) partials
-    init = em.orderBy("vec_id").limit(RQ_COARSE_K).collect()
-    coarse = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in init])
-    for _ in range(PQ_ITERS):
-        c_cur = coarse
-
-        def cparts(batches, _c=c_cur):
-            for pdf in batches:
-                x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                code = ((x[:, None, :] - _c[None]) ** 2).sum(axis=2).argmin(axis=1)
-                out = []
-                for c in np.unique(code):
-                    sel = x[code == c]
-                    out.append((int(c), len(sel), sel.sum(axis=0).tolist()))
-                yield pd.DataFrame(out, columns=["code", "cnt", "sums"])
-
-        rows = em.select("embedding").mapInPandas(
-            cparts, "code int, cnt long, sums array<double>"
-        ).collect()
-        acc = np.zeros((RQ_COARSE_K, d_dim))
-        cnt = np.zeros(RQ_COARSE_K)
-        for r in sorted(rows, key=lambda r: (r.code, r.cnt, tuple(r.sums))):
-            acc[r.code] += np.asarray(r.sums)
-            cnt[r.code] += r.cnt
-        nz = cnt > 0
-        coarse = coarse.copy()
-        # 6dp-round like pq_train's cold path: makes the DuckDB Lloyd
-        # replay bit-exact (worst mean sits 1.2e-12 from a rounding
-        # boundary vs ~1e-15 summation noise — measured at sf0.01)
-        coarse[nz] = np.round(acc[nz] / cnt[nz][:, None], 6)
-
-    cfinal = coarse
+    cfinal = pq_train(em, m=1, k=RQ_COARSE_K)[0]  # (RQ_COARSE_K, 64)
 
     # --- residual stream: map-only subtraction under the broadcast book
     @F.pandas_udf("array<double>")
@@ -5906,12 +5812,7 @@ def winnowing_band_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.coalesce("cluster_id", F.col("rep_id")).alias("cluster_id"),
     )
-    singletons = d.select("doc_id").join(
-        lab.select("doc_id"), "doc_id", "left_anti"
-    )
-    return lab.unionByName(
-        singletons.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    )
+    return _with_singletons(lab, d)
 
 
 winnowing_band_clusters.__doc__ = winnowing_band_clusters.__doc__.format(

@@ -4,13 +4,28 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.append(os.path.join(REPO, "perfbench"))
+from observe import read_status_store, window_counters  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs submitted while ``fn`` runs, from the status store."""
+    sc = spark.sparkContext
+    start = time.time()
+    fn()
+    end = time.time()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    job_times, stages = read_status_store(spark)
+    return int(window_counters(job_times, stages, start, end, sc.defaultParallelism)["jobs"])
 
 
 @pytest.fixture(scope="session")

@@ -11,8 +11,6 @@ hiding in wall-time noise.
 from __future__ import annotations
 
 import os
-import sys
-import time
 from datetime import datetime
 
 import pyarrow as pa
@@ -25,15 +23,11 @@ import pcap_to_parquet_spark.operators  # noqa: F401
 from pcap_to_parquet_spark.registry import QUERIES
 from pcap_to_parquet_spark.schema import TESTDATA_SCHEMAS
 from pcap_to_parquet_spark.sources.tables import TABLE_NAMES, events_raw_schema, load_table
-from tests.conftest import SF001, SF0001
+from tests.conftest import REPO, SF001, SF0001, count_jobs
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # the copy of the sf0.01 tables the benchmark's query_mix runs on
 BENCH_SF = os.path.join(REPO, "perfbench", "data", "sf0.01")
 SF_DIRS = [SF0001, SF001, os.path.join(os.path.dirname(SF001), "sf0.1"), BENCH_SF]
-
-sys.path.insert(0, os.path.join(REPO, "perfbench"))
-from observe import read_status_store, window_counters  # noqa: E402
 
 
 def _footer_schema(path: str):
@@ -89,19 +83,8 @@ def test_events_written_by_spark_read_back_as_instants(spark, tmp_path):
     assert load_table(spark, str(tmp_path), "events").collect()[0].ts == t
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs submitted while ``fn`` runs, from the status store."""
-    sc = spark.sparkContext
-    start = time.time()
-    fn()
-    end = time.time()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    job_times, stages = read_status_store(spark)
-    return int(window_counters(job_times, stages, start, end, sc.defaultParallelism)["jobs"])
-
-
 def test_loading_every_table_launches_no_job(spark):
-    assert _jobs(spark, lambda: [load_table(spark, BENCH_SF, t) for t in TABLE_NAMES]) == 0
+    assert count_jobs(spark, lambda: [load_table(spark, BENCH_SF, t) for t in TABLE_NAMES]) == 0
 
 
 # query -> most jobs one build + noop write may launch, on whatever
@@ -119,4 +102,4 @@ def test_query_job_budget(spark, name):
     def run():
         QUERIES[name](spark, BENCH_SF).write.format("noop").mode("overwrite").save()
 
-    assert _jobs(spark, run) <= JOB_BUDGET[name]
+    assert count_jobs(spark, run) <= JOB_BUDGET[name]
