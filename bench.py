@@ -38,6 +38,11 @@ single-shot unlucky. Cross-round per-query comparisons should use
 ``queries_median`` from r13 on; r12-and-earlier details carry only
 the min, so vs-r12 tables compare r13 medians against r12 mins and
 say so.
+
+``queries_codegen_compiles`` (detail file only) counts the
+generated-code compiles (``CodeGenerator.cache`` misses) across each
+entry's 3 runs. The cache holds a whole gate pass, so an entry that
+compiles on every run generates different code each time.
 """
 
 from __future__ import annotations
@@ -51,7 +56,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import pcap_to_parquet_spark.operators  # noqa: F401
 from pcap_to_parquet_spark.registry import QUERIES
-from pcap_to_parquet_spark.session import get_spark
+from pcap_to_parquet_spark.session import codegen_compiles, get_spark
 
 HEADLINE = [
     "q_flagship_revenue",   # 4-table join + agg + top-n
@@ -87,7 +92,7 @@ HEADLINE = [
     "q_semdedup",           # blocked-gram semantic dedup decision (round 5)
     "q_adamic_adar",        # degree-capped wedge link prediction (round 5)
     "q_rake_keywords",      # stopword-run keyphrase extraction (round 5)
-    "q_kcore",              # 12-round peel, per-round checkpoint (round 5)
+    "q_kcore",              # peel to its fixed point, per-round checkpoint (round 5)
     "q_unigram_lm",         # EM tokenizer over the weighted vocab (round 5)
     "q_image_neardup",      # multi-index Hamming near-dup, image hashes (r6 add)
     "q_audio_neardup",      # multi-index Hamming near-dup, audio hashes (r6 add)
@@ -266,8 +271,11 @@ def main() -> None:
     cold: dict[str, float] = {}
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for name in HEADLINE:
+        c0 = codegen_compiles(spark)
         runs = [run_once(name) for _ in range(3)]
+        compiles[name] = codegen_compiles(spark) - c0
         cold[name] = round(runs[0], 3)
         ordered = sorted(runs)
         timings[name] = round(ordered[0], 3)
@@ -279,11 +287,13 @@ def main() -> None:
     from pcap_to_parquet_spark.sources.pcap import convert_pcap
 
     def convert_timed(name: str, path: str, out: str) -> None:
+        c0 = codegen_compiles(spark)
         times = []
         for _ in range(3):
             t0 = time.time()
             convert_pcap(spark, path, out)
             times.append(time.time() - t0)
+        compiles[name] = codegen_compiles(spark) - c0
         cold[name] = round(times[0], 3)
         ordered = sorted(times)
         timings[name] = round(ordered[0], 3)
@@ -313,6 +323,7 @@ def main() -> None:
         "queries_median": medians,
         "queries_cold": cold,
         "sf": sf,
+        "queries_codegen_compiles": compiles,
     }
     # Full per-query detail goes to a file: the single-line dict outgrew
     # the driver's stdout tail capture once HEADLINE passed ~40 entries

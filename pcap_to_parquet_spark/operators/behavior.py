@@ -2337,11 +2337,12 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-joins, all keyed on node ids — the same partitioning every
     round, no corpus-sized state beyond the shrinking edge list, which
     is localCheckpointed per round so the {rounds}-round lineage never
-    re-runs the co-purchase self-join. Rounds are FIXED at {rounds}
-    (not run-to-convergence) so Spark and the oracle compute the same
-    function; the `converged` flag reports whether the peel reached
-    its fixed point (survivor sets shrink monotonically, so equal
-    consecutive COUNTS imply equal sets)."""
+    re-runs the co-purchase self-join. The peel stops at its fixed
+    point, after at most {rounds} rounds: from round 2 on survivor sets
+    only shrink, so equal consecutive COUNTS imply equal sets and an
+    unchanged edge list, and every later round of the oracle's
+    {rounds}-round unrolling is the identity. The `converged` flag
+    reports whether the last two rounds kept the same survivors."""
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
     a, b = op.alias("a"), op.alias("b")
@@ -2379,6 +2380,8 @@ def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_alive=F.count(F.lit(1)),
         )
         alive_counts.append(m["n_alive"])
+        if len(alive_counts) > 1 and alive_counts[-1] == alive_counts[-2]:
+            break  # same survivors, so the edge list is unchanged too
         edges = (
             edges.join(alive.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(alive.withColumnRenamed("node", "v"), "v", "left_semi")

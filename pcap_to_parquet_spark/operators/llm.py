@@ -3454,9 +3454,9 @@ _PQ_ASSIGN_SQL = """{out} AS MATERIALIZED (
 )"""
 
 
-def _pq_train_sql(el: str = "el", pre: str = "") -> list[str]:
+def _pq_train_sql(el: str = "el", pre: str = "", k: int = PQ_K) -> list[str]:
     """Materialized-CTE replay of pq_train's cold path: deterministic
-    init from the PQ_K smallest vec_ids, PQ_ITERS Lloyd rounds with
+    init from the ``k`` smallest vec_ids, PQ_ITERS Lloyd rounds with
     per-(sub, code) argmin-L2 assignment (code-index tiebreak, exactly
     numpy argmin), 6dp-rounded mean updates matching the np.round the
     Spark trainer applies, and COALESCE keep-previous for empty codes.
@@ -3468,7 +3468,7 @@ def _pq_train_sql(el: str = "el", pre: str = "") -> list[str]:
     FROM (SELECT vec_id,
                  CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER)
                      AS code
-          FROM embeddings ORDER BY vec_id LIMIT {PQ_K}) s
+          FROM embeddings ORDER BY vec_id LIMIT {k}) s
     JOIN {el} el ON el.vec_id = s.vec_id
 )""",
     ]
@@ -4335,52 +4335,21 @@ RQ_COARSE_K = 16
 
 
 def _rq_coarse_sql() -> list[str]:
-    """Full-64-dim Lloyd replay for the coarse codebook: same template
-    as _pq_train_sql but the assignment distance sums over ALL
-    elements of the vector (one code per vec, not per sub)."""
-    steps = [
-        f"""cb0 AS MATERIALIZED (
-    SELECT s.code, el.sub, el.spos, el.val AS cval
-    FROM (SELECT vec_id,
-                 CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER)
-                     AS code
-          FROM embeddings ORDER BY vec_id LIMIT {RQ_COARSE_K}) s
-    JOIN el ON el.vec_id = s.vec_id
+    """The coarse codebook is pq_train with one 64-dim subspace, so its
+    replay is _pq_train_sql over ``cel``, the element table seen as
+    one subspace (sub 0, spos 0..63): cb0..cb{PQ_ITERS} are the books
+    and ca{PQ_ITERS + 1} the final one-code-per-vector assignment."""
+    return [
+        f"""cel AS MATERIALIZED (
+    SELECT vec_id, CAST(0 AS INTEGER) AS sub,
+           sub * {64 // PQ_M} + spos AS spos, val
+    FROM el
 )""",
+        *_pq_train_sql(el="cel", pre="c", k=RQ_COARSE_K),
+        _PQ_ASSIGN_SQL.format(
+            out=f"ca{PQ_ITERS + 1}", books=f"cb{PQ_ITERS}", where="", el="cel"
+        ),
     ]
-    assign = """ca{r} AS MATERIALIZED (
-    SELECT vec_id, code FROM (
-        SELECT d.vec_id, d.code,
-               ROW_NUMBER() OVER (PARTITION BY d.vec_id
-                                  ORDER BY d.d2, d.code) AS rk
-        FROM (
-            SELECT el.vec_id, b.code,
-                   SUM((el.val - b.cval) * (el.val - b.cval)) AS d2
-            FROM el JOIN cb{p} b ON b.sub = el.sub AND b.spos = el.spos
-            GROUP BY el.vec_id, b.code
-        ) d
-    ) WHERE rk = 1
-)"""
-    for r in range(1, PQ_ITERS + 1):
-        p = r - 1
-        steps.append(assign.format(r=r, p=p))
-        steps.append(
-            f"""cm{r} AS MATERIALIZED (
-    SELECT a.code, el.sub, el.spos, ROUND(AVG(el.val), 6) AS cval
-    FROM ca{r} a JOIN el ON el.vec_id = a.vec_id
-    GROUP BY a.code, el.sub, el.spos
-)""",
-        )
-        steps.append(
-            f"""cb{r} AS MATERIALIZED (
-    SELECT p.code, p.sub, p.spos, COALESCE(m.cval, p.cval) AS cval
-    FROM cb{p} p
-    LEFT JOIN cm{r} m
-      ON m.code = p.code AND m.sub = p.sub AND m.spos = p.spos
-)""",
-        )
-    steps.append(assign.format(r=PQ_ITERS + 1, p=PQ_ITERS))
-    return steps
 
 
 def _rq_oracle() -> str:
@@ -4398,7 +4367,7 @@ def _rq_oracle() -> str:
     SELECT el.vec_id, el.sub, el.spos, el.val - b.cval AS val
     FROM el
     JOIN ca{f + 1} a ON a.vec_id = el.vec_id
-    JOIN cb{f} b ON b.code = a.code AND b.sub = el.sub AND b.spos = el.spos
+    JOIN cb{f} b ON b.code = a.code AND b.spos = el.sub * {64 // PQ_M} + el.spos
 )"""
     )
     steps += _pq_train_sql(el="rel", pre="r")
@@ -4414,7 +4383,7 @@ def _rq_oracle() -> str:
     SELECT SUM((el.val - b.cval) * (el.val - b.cval)) AS s
     FROM el
     JOIN ca{f + 1} a ON a.vec_id = el.vec_id
-    JOIN cb{f} b ON b.code = a.code AND b.sub = el.sub AND b.spos = el.spos
+    JOIN cb{f} b ON b.code = a.code AND b.spos = el.sub * {64 // PQ_M} + el.spos
 )"""
     )
     steps.append(

@@ -7,6 +7,10 @@ Two paths:
   ``queries()``), so correctness-critical settings (UTC timezone,
   AQE) hold regardless of who built the session.
 
+Static confs (``BUILD_CONF``: driver memory, the codegen class cache
+size, the worker daemon) hold only on a session :func:`get_spark`
+builds; ``tune()`` cannot set them on a session that already exists.
+
 :func:`observed_checkpoint` is the checkpoint-with-metrics step the
 iterative kernels share.
 
@@ -67,6 +71,13 @@ BUILD_CONF: dict[str, str] = {
     # Workers import this package (and the daemon module above) from
     # here, whatever the driver's working directory.
     "spark.executorEnv.PYTHONPATH": os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    # CodeGenerator.cache keeps one entry per compile of generated code
+    # (~2.3 classes of ~2.6 KB bytecode each). The default 100 entries
+    # is below one pass of the 10 query_mix queries (167 compiles), so
+    # every pass evicted and recompiled the same code. 4096 is the first
+    # power of two above the largest working set measured in one
+    # session: one pass of the 102 bench.py entries at sf0.01 (2407).
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 
@@ -107,6 +118,13 @@ def broadcast_threshold_bytes(spark: SparkSession) -> int:
     return parse_byte_conf(
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "67108864")
     )
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated-code compiles (``CodeGenerator.cache`` misses) this
+    session's JVM has paid so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def tune(spark: SparkSession) -> SparkSession:

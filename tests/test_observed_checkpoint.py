@@ -57,7 +57,7 @@ def test_a_lapsed_wait_computes_the_metrics_with_one_more_job(spark, monkeypatch
 # query -> most jobs one build + noop write may launch at sf0.001, on
 # whatever cores the session has
 ITERATIVE_JOB_BUDGET = {
-    "q_kcore": 82,
+    "q_kcore": 18,
     "q_dedup_clusters": 23,
     "q_components_star": 30,
 }

@@ -11,10 +11,6 @@ truth/candidate definitions.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.operators.text_pipeline import (  # noqa: E402
     _PACK_BUDGET,

@@ -11,10 +11,6 @@ the shared tau, and exact on planted duplicates.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.operators.llm import _LSHR_TAU  # noqa: E402
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402

@@ -10,10 +10,7 @@ with q_sessionize / q_pcap_flows.
 
 from __future__ import annotations
 
-import sys
 from datetime import datetime, timedelta
-
-sys.path.insert(0, "/root/repo")
 
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402

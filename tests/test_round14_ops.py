@@ -10,10 +10,6 @@ Covers (per the round-13 verdict's next-round items):
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest  # noqa: E402
 
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)

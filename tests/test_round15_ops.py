@@ -12,10 +12,7 @@ from __future__ import annotations
 
 import os
 import shutil
-import sys
 import tempfile
-
-sys.path.insert(0, "/root/repo")
 
 import pytest  # noqa: E402
 

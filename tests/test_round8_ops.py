@@ -13,9 +13,6 @@ counted exactly.
 from __future__ import annotations
 
 import datetime as dt
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402

@@ -12,9 +12,6 @@ ratios, and equalized-odds error rates per protected group.
 from __future__ import annotations
 
 import math
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.operators.llm import (  # noqa: E402

@@ -12,11 +12,13 @@ Usage: python tools/check_dtypes.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pcap_to_parquet_spark.session import get_spark
 from pcap_to_parquet_spark.sources.tables import TABLE_NAMES

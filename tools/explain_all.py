@@ -11,11 +11,13 @@ Usage: python tools/explain_all.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pcap_to_parquet_spark.operators  # noqa: F401
 from pcap_to_parquet_spark.registry import ORACLES, QUERIES
@@ -96,7 +98,7 @@ def main() -> None:
             f"| {n_ex} | {n_wscg} | {pushed_str} |"
         )
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(lines) - 7} queries)")
 

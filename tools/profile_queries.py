@@ -18,7 +18,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pcap_to_parquet_spark.operators  # noqa: F401
 from pcap_to_parquet_spark.registry import QUERIES

@@ -17,16 +17,16 @@ on both legs, ratio unaffected).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pcap_to_parquet_spark.operators  # noqa: F401
 from pcap_to_parquet_spark.registry import QUERIES
 from pcap_to_parquet_spark.session import get_spark
-
-import os
 
 SF01 = "/root/testdata/sf0.1"
 # SPARK_GRAFT_SCALE_DIR points the big leg elsewhere, e.g. the

@@ -16,10 +16,12 @@ Expects /tmp/sf1 (10×) and /tmp/sf4 (40×) to exist:
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import pcap_to_parquet_spark.operators  # noqa: F401
 from pcap_to_parquet_spark.registry import QUERIES
