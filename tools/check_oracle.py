@@ -42,7 +42,7 @@ def normalize(rows, cols):
                 v = v.hex()
             elif isinstance(v, list):
                 v = tuple(v)
-            vals.append((v is None, str(type(v).__name__) if False else v))
+            vals.append((v is None, v))
         out.append(tuple(vals))
     out.sort(key=lambda t: str(t))
     return out
