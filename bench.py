@@ -17,7 +17,10 @@ burst) cannot move; ``queries_cold`` the first run, which includes
 codegen and Python-worker spawn. ``queries_codegen_compiles`` counts
 generated-code compiles across an entry's 3 runs; the class cache holds
 a whole gate pass, so an entry that compiles on every run generates
-different code each time.
+different code each time. ``session`` records the start: the
+``get_spark`` and ``warm`` walls, and the class-data-sharing archive
+the driver JVM maps (null when it started without one; see
+``session.class_archive``).
 
 Only the full run writes a round-stamped ``BENCH_DETAIL_*`` file, since
 those files are the gate's record.
@@ -50,7 +53,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import pcap_to_parquet_spark.operators  # noqa: F401
 from pcap_to_parquet_spark.registry import QUERIES
-from pcap_to_parquet_spark.session import codegen_compiles, get_spark
+from pcap_to_parquet_spark.session import codegen_compiles, get_spark, mapped_archive
 
 HEADLINE = [
     "q_flagship_revenue",   # 4-table join + agg + top-n
@@ -297,10 +300,18 @@ def main(argv: list[str] | None = None) -> None:
     if unknown:
         sys.exit(f"unknown entries: {' '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    t0 = time.time()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    get_spark_s = time.time() - t0
     todo = entries(spark, sf_dir, names or HEADLINE + list(CONVERTS))
+    t0 = time.time()
     warm(spark, sf_dir)
+    session = {
+        "get_spark_s": round(get_spark_s, 3),
+        "warm_s": round(time.time() - t0, 3),
+        "class_archive": mapped_archive(),
+    }
 
     cold: dict[str, float] = {}
     timings: dict[str, float] = {}
@@ -331,6 +342,7 @@ def main(argv: list[str] | None = None) -> None:
         "queries_cold": cold,
         "sf": sf,
         "queries_codegen_compiles": compiles,
+        "session": session,
     }
     # The full record goes to a file as well as stdout: one line of it
     # outgrew the driver's tail capture once the gate passed ~40 entries.

@@ -13,9 +13,10 @@ import argparse
 
 from pcap_to_parquet_spark.session import get_spark
 from pcap_to_parquet_spark.sources.pcap import _AUTO_CHUNK_THRESHOLD, convert_pcap
+from pcap_to_parquet_spark.sources.pcap_datasource import chunk_bytes_of
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(
         prog="pcap_to_parquet_spark", description="pcap -> ZSTD parquet (Spark)"
     )
@@ -30,9 +31,10 @@ def main() -> None:
     )
     ap.add_argument(
         "--chunk-mb",
-        type=int,
+        type=float,
         default=None,
-        help="split large captures into N-MiB chunks decoded in parallel "
+        help="split large captures into N-MiB chunks decoded in parallel, "
+        "fractions allowed "
         f"(default: auto — chunked for files over {_AUTO_CHUNK_THRESHOLD >> 20} MiB; "
         "0 forces per-file)",
     )
@@ -51,7 +53,7 @@ def main() -> None:
         "extension chain walked to the real L4); default off = "
         "reference parity (IPv6 rows NULL, main.rs:239-251)",
     )
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
     spark = get_spark("pcap-to-parquet-cli")
     spark.sparkContext.setLogLevel("ERROR")
     convert_pcap(
@@ -59,7 +61,7 @@ def main() -> None:
         args.input,
         args.output,
         partition_cols=args.partition_by,
-        chunk_bytes=args.chunk_mb * 1024 * 1024 if args.chunk_mb is not None else None,
+        chunk_bytes=chunk_bytes_of(args.chunk_mb) if args.chunk_mb is not None else None,
         ts_tol=round(args.ts_tol_hours * 3600) if args.ts_tol_hours is not None else None,
         ipv6=args.ipv6,
     )

@@ -226,6 +226,11 @@ def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-unt
     )
 
 
+def chunk_bytes_of(chunk_mb: str | float) -> int:
+    """Bytes in ``chunk_mb`` MiB, fractions allowed, rounded down."""
+    return int(float(chunk_mb) * 2**20)
+
+
 class PcapBatchReader(DataSourceReader):
     """``parallelism`` (bound by ``register_pcap_source``) caps the
     partitions; None plans one per unit, chunked at the threshold.
@@ -241,7 +246,7 @@ class PcapBatchReader(DataSourceReader):
         if not self.path:
             raise ValueError("pcap source requires a path: .load('<file-or-glob>')")
         chunk_mb = options.get("chunk_mb")
-        self.chunk_bytes = int(float(chunk_mb) * 2**20) if chunk_mb is not None else None
+        self.chunk_bytes = chunk_bytes_of(chunk_mb) if chunk_mb is not None else None
         if self.chunk_bytes is not None and self.chunk_bytes < 0:
             raise ValueError(f"chunk_mb must be >= 0 (0 = one unit per file), got {chunk_mb}")
         tol_h = options.get("ts_tol_hours")
