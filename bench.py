@@ -218,18 +218,20 @@ def detail_filename(repo: str, n_round: int, cpus: int, box_cpus: int) -> str:
     return name
 
 
-def detail_round(repo: str) -> int:
-    """$SPARK_GRAFT_ROUND, else one past the newest ``BENCH_r{N}.json``
-    and at least 10, the first stamped round. The driver writes round
-    N's ``BENCH_r{N}.json`` when round N ends, so a re-run after that
-    must set the variable."""
+def detail_round(repo: str, cpus: int, box_cpus: int) -> int:
+    """$SPARK_GRAFT_ROUND, else the round the newest ``BENCH_r{N}.json``
+    implies, and at least 10, the first stamped round. The driver
+    writes round N's ``BENCH_r{N}.json`` when round N's gate ends. So
+    a full-box run (``cpus == box_cpus``) is the next round's gate,
+    N + 1, while a run on other than all of the box's cores is a
+    post-gate scaling run of round N itself."""
     env_round = os.environ.get("SPARK_GRAFT_ROUND")
     if env_round:
         return int(env_round)
     rounds = [
         int(m.group(1)) for p in os.listdir(repo) if (m := re.fullmatch(r"BENCH_r(\d+)\.json", p))
     ]
-    return max(max(rounds, default=9) + 1, 10)
+    return max(max(rounds, default=9) + (cpus == box_cpus), 10)
 
 
 def _big_pcap(n_packets: int = 250_000) -> str:
@@ -349,10 +351,8 @@ def main(argv: list[str] | None = None) -> None:
     detail_name = None
     if not names:
         repo = os.path.dirname(os.path.abspath(__file__))
-        detail_name = detail_filename(
-            repo, detail_round(repo), spark.sparkContext.defaultParallelism,
-            len(os.sched_getaffinity(0)),
-        )
+        cpus, box = spark.sparkContext.defaultParallelism, len(os.sched_getaffinity(0))
+        detail_name = detail_filename(repo, detail_round(repo, cpus, box), cpus, box)
         with open(os.path.join(repo, detail_name), "w") as f:
             json.dump(full, f, indent=1)
     print(json.dumps(full))

@@ -531,7 +531,7 @@ def multi_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# shared exact-quantile kernel + fulfillment-latency census (round 12)
+# shared exact-quantile kernel + fulfillment-latency census
 
 
 def exact_grid_quantiles(
@@ -658,7 +658,7 @@ def fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 fulfillment_latency.__doc__ = fulfillment_latency.__doc__.format(sla=_SLA_DAYS)
 
 
-# round 13: supplier-side twin of the fulfillment census
+# supplier-side twin of the fulfillment census
 SUPPLIER_FULFILLMENT_ORACLE = f"""
 WITH j AS (
     SELECT l.l_suppkey,
@@ -774,7 +774,7 @@ def supplier_fulfillment(spark: SparkSession, sf_dir: str) -> DataFrame:
 supplier_fulfillment.__doc__ = supplier_fulfillment.__doc__.format(sla=_SLA_DAYS)
 
 
-# round 13: two-axis fulfillment matrix (supplier nation × priority)
+# two-axis fulfillment matrix (supplier nation × priority)
 FULFILLMENT_MATRIX_ORACLE = f"""
 WITH j AS (
     SELECT o.o_orderpriority AS priority, l.l_suppkey,
@@ -803,7 +803,7 @@ HAVING COUNT(*) > 0
 # ^ the HAVING is a no-op on real data (every materialized grouping
 # carries >= 1 row) but aligns the engines on EMPTY input: DuckDB's
 # CUBE emits the () grand-total row with COUNT 0 there, Spark's Expand
-# emits nothing — found by the empty-inputs gate in round 13.
+# emits nothing — found by the empty-inputs gate.
 
 
 @query("q_fulfillment_matrix", FULFILLMENT_MATRIX_ORACLE)
@@ -868,7 +868,7 @@ def fulfillment_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# customer repeat-order cadence census (round 12)
+# customer repeat-order cadence census
 
 REPEAT_CADENCE_ORACLE = """
 WITH g AS (

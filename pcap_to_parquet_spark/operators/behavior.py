@@ -692,12 +692,12 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_edges = pairs.count()
     # 48 B/row prices the BroadcastHashJoin's built HashedRelation (a
     # 2-long UnsafeRow is 24 B; LongToUnsafeRowMap adds ~2x in page and
-    # slot overhead), not the 16 B of column data — the r15 advisor's
-    # point that the serialized-row estimate understates the in-memory
-    # footprint. Two such relations (oriented + pairs) are live at once,
-    # so worst case is ~2x the threshold; the threshold is parsed
-    # unit-aware (external sessions carry '10MB'-style values) and an
-    # unparseable/disabled value falls back to the shuffled plan.
+    # slot overhead), not the 16 B of column data: the serialized-row
+    # estimate understates the in-memory footprint. Two such relations
+    # (oriented + pairs) are live at once, so worst case is ~2x the
+    # threshold; the threshold is parsed unit-aware (external sessions
+    # carry '10MB'-style values) and an unparseable/disabled value falls
+    # back to the shuffled plan.
     bcast_ok = n_edges * 48 < broadcast_threshold_bytes(spark)
     # fan_out the PROBE side when broadcasting: the checkpoint froze the
     # AQE-coalesced partitioning (3-10 partitions at sf0.1), and without
@@ -933,7 +933,7 @@ def pagerank_iterations(edges: DataFrame, iters: int) -> DataFrame:
     # static |E|-row edge table against a BROADCAST rank map — the edge
     # table is never exchanged or sorted again, and the only shuffle per
     # iteration carries the map-side-partially-aggregated contribution
-    # sums (O(|V|) rows per partition). The r15 plan re-exchanged AND
+    # sums (O(|V|) rows per partition). The plan without it re-exchanged AND
     # re-sorted the checkpointed edge table in all 5 iterations (a
     # localCheckpoint scan reports UnknownPartitioning, so AQE could
     # never reuse its layout). Above the threshold — the 100 TB regime,

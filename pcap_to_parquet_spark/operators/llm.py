@@ -19,7 +19,7 @@ import random
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pcap_to_parquet_spark.functions.text import shingles, whitespace_tokens
@@ -365,7 +365,7 @@ def _simhash_band_pairs(fps: DataFrame) -> DataFrame:
             F.col("y.doc_id").alias("doc_b"),
             F.bit_count(F.col("x.simhash").bitwiseXOR(F.col("y.simhash"))).alias("hamming"),
         )
-        # radius filter BEFORE the distinct (the r15 neardup lesson):
+        # radius filter BEFORE the distinct:
         # hamming is a pure function of the pair, so filtering first is
         # result-identical and the distinct's exchange dedups only
         # within-radius pairs instead of the raw band-candidate volume
@@ -388,8 +388,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simhash_band_pairs(fps).orderBy("doc_a", "doc_b")
 
 
-# round 15: cluster labels for the SimHash axis — the third labeling
-# of the dedup method matrix (jaccard has q_dedup_clusters, winnowing
+# cluster labels for the SimHash axis — the third labeling of the
+# dedup method matrix (jaccard has q_dedup_clusters, winnowing
 # has q_winnowing_band_clusters)
 SIMHASH_CLUSTERS_ORACLE = f"""
 WITH RECURSIVE sp AS ({SIMHASH_ORACLE}),
@@ -420,43 +420,58 @@ def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-bit value, rep = min doc_id — hamming-0 cliques never enter the
     join, the same discipline as the winnowing rep-collapse), the
     shared _simhash_band_pairs kernel pairs only DISTINCT fingerprints,
-    and the component computation runs on the fingerprint-rep graph
-    via the audited star_contract kernel; membership joins labels back
-    at the end. rep = min doc_id of its fingerprint group, so the
-    component-min rep IS the component-min document — no second pass.
-    Oracle: recursive reachability over the verbatim pair oracle,
-    seeded from ALL documents, so the driver check proves the collapse
-    and the plain definition agree."""
+    and _rep_labels contracts the fingerprint-rep graph and joins the
+    labels back. Oracle: recursive reachability over the verbatim pair
+    oracle, seeded from ALL documents, so the driver check proves the
+    collapse and the plain definition agree."""
     d = load_table(spark, sf_dir, "documents")
     fps = simhash(d).localCheckpoint(eager=True)  # feeds groups + membership
     groups = fps.groupBy("simhash").agg(F.min("doc_id").alias("rep_id"))
     reps = groups.select(F.col("rep_id").alias("doc_id"), "simhash")
-    edges = (
-        _simhash_band_pairs(reps)
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .localCheckpoint(eager=True)  # cut the banding lineage
-    )
-    rlabels = star_contract(edges).withColumnRenamed("doc_id", "rep_id")
+    edges = _simhash_band_pairs(reps).select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     rep_of = fps.join(groups, "simhash").select("doc_id", "rep_id")
-    lab = rep_of.join(rlabels, "rep_id", "left").select(
-        "doc_id", F.coalesce("cluster_id", F.col("rep_id")).alias("cluster_id")
-    )
-    return _with_singletons(lab, d)
+    return _rep_labels(rep_of, edges, d)
 
 
-# round 15: SimHash-axis survivors — with this every axis of the dedup
-# matrix carries the same pairs -> clusters -> survivors pipeline
-SIMHASH_SURVIVORS_ORACLE = f"""
-WITH slab AS ({SIMHASH_CLUSTERS_ORACLE})
+def _survivors_oracle(cluster_oracle: str) -> str:
+    """The keep-longest survivors SELECT over a (doc_id, cluster_id)
+    labeling: one row per non-trivial cluster, longest text wins and
+    doc_id breaks ties. ``cluster_oracle`` is any SELECT of the labels
+    (a whole cluster oracle, or a read of a CTE already holding them).
+    The DuckDB twin of _survivors_from_labels."""
+    return f"""
+WITH lab AS ({cluster_oracle})
 SELECT l.cluster_id,
        FIRST(d.doc_id ORDER BY d.n_chars DESC, d.doc_id) AS survivor_doc,
        COUNT(*) AS n_members,
        COUNT(*) - 1 AS n_dropped,
        CAST(MAX(d.n_chars) AS BIGINT) AS survivor_chars
-FROM slab l JOIN documents d ON d.doc_id = l.doc_id
+FROM lab l JOIN documents d ON d.doc_id = l.doc_id
 GROUP BY l.cluster_id
 HAVING COUNT(*) > 1
 """
+
+
+def _survivors_from_labels(labels: DataFrame, d: DataFrame) -> DataFrame:
+    """Keep-longest survivor selection over a (doc_id, cluster_id)
+    labeling: ONE max_by aggregate keyed on the cluster id, shared by
+    every axis' survivors so the keep policy cannot diverge."""
+    return (
+        labels.join(d, "doc_id")
+        .groupBy("cluster_id")
+        .agg(
+            F.min_by(
+                "doc_id", F.struct((-F.col("n_chars")).alias("neg"), F.col("doc_id"))
+            ).alias("survivor_doc"),
+            F.count(F.lit(1)).alias("n_members"),
+            (F.count(F.lit(1)) - 1).alias("n_dropped"),
+            F.max("n_chars").alias("survivor_chars"),
+        )
+        .filter(F.col("n_members") > 1)
+    )
+
+
+SIMHASH_SURVIVORS_ORACLE = _survivors_oracle(SIMHASH_CLUSTERS_ORACLE)
 
 
 @query("q_dedup_simhash_survivors", SIMHASH_SURVIVORS_ORACLE)
@@ -466,18 +481,13 @@ def dedup_simhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs → clusters → survivors pipeline on the third axis of the
     dedup matrix (jaccard: q_dedup_survivors; winnowing:
     q_winnowing_band_survivors): longest text wins, doc_id breaks ties
-    (shared _survivors_from_labels kernel, so the keep policy cannot
-    diverge between any two axes). With q_dedup_method_agreement3 this
+    (the keep rule every axis shares). With q_dedup_method_agreement3 this
     closes the full three-way switch-path: measure agreement, pick an
     axis, take its survivors. [engine — not in reference]
 
-    Composition at scale: q_dedup_simhash_clusters' fingerprint-rep
-    star contraction (via _shared_labels — computed fresh per
-    invocation, checkpointed within the plan) followed by ONE max_by
-    aggregate keyed on the cluster id. Oracle:
-    the cluster oracle nested verbatim + the same FIRST ... ORDER BY
-    n_chars DESC keep rule as both sibling axes."""
-    labels = _shared_labels(spark, sf_dir, "simhash")
+    q_dedup_simhash_clusters' labels through _survivors_from_labels;
+    oracle: _survivors_oracle over the cluster oracle."""
+    labels = dedup_simhash_clusters(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return _survivors_from_labels(labels, d)
 
@@ -2360,22 +2370,7 @@ ngram_containment.__doc__ = ngram_containment.__doc__.format(thresh=_CONTAIN_THR
 # ---------------------------------------------------------------------------
 # dedup survivors: the curation DELIVERABLE — one kept doc per cluster
 
-DEDUP_SURVIVORS_ORACLE = (
-    DEDUP_CLUSTERS_ORACLE.rstrip()
-    .replace(
-        "SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id",
-        """,
-labels AS (SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id)
-SELECT l.cluster_id,
-       FIRST(d.doc_id ORDER BY d.n_chars DESC, d.doc_id) AS survivor_doc,
-       COUNT(*) AS n_members,
-       COUNT(*) - 1 AS n_dropped,
-       CAST(MAX(d.n_chars) AS BIGINT) AS survivor_chars
-FROM labels l JOIN documents d ON d.doc_id = l.doc_id
-GROUP BY l.cluster_id
-HAVING COUNT(*) > 1""",
-    )
-)
+DEDUP_SURVIVORS_ORACLE = _survivors_oracle(DEDUP_CLUSTERS_ORACLE)
 
 
 @query("q_dedup_survivors", DEDUP_SURVIVORS_ORACLE)
@@ -2387,32 +2382,13 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor plus how many near-duplicates it absorbs; singleton
     clusters are the untouched corpus and are excluded.
 
-    Composition at scale: q_dedup_clusters' label propagation (already
-    checkpoint-bounded) followed by ONE max_by aggregate keyed on the
-    cluster id — the survivor choice adds a single shuffle of
-    |clustered docs| rows to the component computation."""
+    q_dedup_clusters' labels (checkpoint-bounded label propagation)
+    through _survivors_from_labels, which adds one shuffle of
+    |clustered docs| rows; oracle: _survivors_oracle over the cluster
+    oracle."""
     labels = dedup_clusters(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return _survivors_from_labels(labels, d)
-
-
-def _survivors_from_labels(labels: DataFrame, d: DataFrame) -> DataFrame:
-    """Keep-longest survivor selection over a (doc_id, cluster_id)
-    labeling — shared by the Jaccard-axis and fingerprint-axis
-    survivor ops so the keep policy cannot diverge."""
-    return (
-        labels.join(d, "doc_id")
-        .groupBy("cluster_id")
-        .agg(
-            F.min_by(
-                "doc_id", F.struct((-F.col("n_chars")).alias("neg"), F.col("doc_id"))
-            ).alias("survivor_doc"),
-            F.count(F.lit(1)).alias("n_members"),
-            (F.count(F.lit(1)) - 1).alias("n_dropped"),
-            F.max("n_chars").alias("survivor_chars"),
-        )
-        .filter(F.col("n_members") > 1)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3194,14 +3170,7 @@ def components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect)."""
     d = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .toDF("u", "v")
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)  # cut the jaccard lineage once
-    )
+    edges = pairs.toDF("u", "v").localCheckpoint(eager=True)  # cut the jaccard lineage once
     return _with_singletons(star_contract(edges), d)
 
 
@@ -3212,12 +3181,32 @@ def _with_singletons(labels: DataFrame, nodes: DataFrame, key: str = "doc_id") -
     return labels.unionByName(singles.select(key, F.col(key).alias("cluster_id")))
 
 
+def _rep_labels(rep_of: DataFrame, rep_edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Component labels of a graph whose identical items were collapsed
+    to representatives first. ``rep_of`` maps every (doc_id) to its
+    rep_id, the minimum doc_id of its group; ``rep_edges`` (u, v) join
+    reps. The edges are checkpointed once (cutting the candidate
+    lineage), contracted by star_contract, and the labels joined back
+    through rep_of; a rep in no edge is its own component, and
+    ``nodes`` outside rep_of are singletons. rep = group minimum, so
+    the component-minimum rep IS the component-minimum document."""
+    rlabels = star_contract(rep_edges.localCheckpoint(eager=True))
+    rlabels = rlabels.withColumnRenamed("doc_id", "rep_id")
+    lab = rep_of.join(rlabels, "rep_id", "left").select(
+        "doc_id", F.coalesce("cluster_id", F.col("rep_id")).alias("cluster_id")
+    )
+    return _with_singletons(lab, nodes)
+
+
 def star_contract(edges: DataFrame) -> DataFrame:
     """Alternating large-star/small-star contraction of an undirected
-    edge set (columns u, v; no self-loops): returns (doc_id,
-    cluster_id) labels for every node appearing in an edge, cluster_id
-    = component minimum. Factored out of q_components_star so random
-    graphs can fuzz it against a union-find reference."""
+    edge set (columns u, v; any orientation, duplicates allowed, no
+    self-loops): returns (doc_id, cluster_id) labels for every node
+    appearing in an edge, cluster_id = component minimum. Callers pass
+    their pairs as they come: the first round's canonical() orders and
+    dedups them. q_components_star and q_density_clusters run it on
+    their pair sets, and _rep_labels on a representative graph. Random
+    graphs fuzz it against a union-find reference."""
 
     def canonical(e: DataFrame) -> DataFrame:
         """Undirected edge set as (min, max) pairs, deduped."""
@@ -3408,12 +3397,7 @@ def density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     both shuffle-bounded, no new primitive needed."""
     em = load_table(spark, sf_dir, "embeddings")
     pairs = embed_neardup(spark, sf_dir).select("vec_a", "vec_b")
-    edges = (
-        pairs.select(F.col("vec_a").alias("u"), F.col("vec_b").alias("v"))
-        .union(pairs.select(F.col("vec_b"), F.col("vec_a")))
-        .toDF("u", "v")
-        .localCheckpoint(eager=True)  # cut the gram-matrix lineage once
-    )
+    edges = pairs.toDF("u", "v").localCheckpoint(eager=True)  # cut the gram-matrix lineage once
     return _with_singletons(star_contract(edges).toDF("vec_id", "cluster_id"), em, "vec_id")
 
 
@@ -5234,8 +5218,8 @@ def _winnow_collapse(d: DataFrame):
     regression contract in tests/test_round5_ops.py can assert the
     O(reps) invariant directly: ``pr`` (the frame the shared-print
     self-join explodes) must carry ONE row per distinct text group,
-    never one per document — the r10 quadratic was exactly this frame
-    being member-level (~2 B join rows under the 100-replica plant).
+    never one per document — a member-level frame here made the join
+    quadratic (~2 B join rows under the 100-replica plant).
 
     Returns ``(members, sizes, pr)``: members = (doc_id, g, rnk, sz),
     sizes = one row per group with its rep, pr = (g, sz, prints[])
@@ -5453,10 +5437,10 @@ def _winnow_expand_classes(classes: DataFrame, members: DataFrame) -> DataFrame:
     return pairs.orderBy(F.desc("n_shared"), "doc_a", "doc_b").limit(20)
 
 
-# round 13: band-limited winnowing — the NEAR-dup-multiplicity scale
+# band-limited winnowing — the NEAR-dup-multiplicity scale
 # path the combined-axis rehearsal proved q_winnowing needs
 _WINNOW_BAND_CAP = 32
-# round 14: band on the B smallest prints per rep, not just the single
+# band on the B smallest prints per rep, not just the single
 # minimum — the curve op priced B=1 at 0.24 recall on weakly-similar
 # docs vs 0.41 at B=4 (1.0 on planted near-dup families either way);
 # candidate volume stays bucket-capped exactly as before.
@@ -5540,7 +5524,7 @@ def winnowing_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     space left on device" (>78 GB shuffle spill) on local[32] at the
     combined plant. This variant is the repo's standard
     candidate-then-verify answer (the LSH discipline): each rep's {B}
-    SMALLEST prints are its band keys (round 14 — the curve op priced
+    SMALLEST prints are its band keys (the curve op priced
     the original single-min banding at 0.24 recall on weakly-similar
     docs vs 0.41 at B={B}, 1.0 on planted near-dup families either
     way); candidate pairs form only within a band bucket, hot buckets
@@ -5661,7 +5645,7 @@ LIMIT 20
 @query("q_winnowing_band_members", WINNOWING_BAND_MEMBERS_ORACLE)
 def winnowing_band_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MEMBER-LEVEL expansion of the banded winnowing pairs — closes
-    the gap the r13 verdict named: q_winnowing_band reports REP pairs
+    a gap: q_winnowing_band reports REP pairs
     by design, but the dedup decision a curation pipeline acts on is
     per-DOCUMENT, and on the near-dup-heavy corpora the band variant
     exists for, a rep stands in for many members. Same banded
@@ -5709,10 +5693,8 @@ def winnowing_band_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _winnow_expand_classes(classes, members)
 
 
-# round 14: cluster labels under band recall — completes the
-# fingerprint axis of the dedup matrix (minhash already has
-# q_dedup_clusters; winnowing pairs now get their canonical-document
-# selection step too)
+# cluster labels under band recall: the canonical-document selection
+# step of the winnowing axis
 _WINNOW_CLUSTER_TAU = 2  # ≥2 shared prints = an edge (the curve op's
 # ground-truth threshold; a single shared print is one 3-gram window)
 
@@ -5752,13 +5734,9 @@ def winnowing_band_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster (same group); docs under the 3-token floor are singletons.
     [engine — not in reference]
 
-    Scale design: the component computation runs on the GROUP graph
-    (reps as nodes, band-verified pairs as edges — never member-level)
-    via the already-audited star_contract kernel (large-star/small-star
-    contraction, O(log²) rounds, bounded intermediates); membership
-    joins labels back at the end. rep = min doc_id of its group, so the
-    component-min rep IS the component-min document — no second pass.
-    Oracle: recursive reachability over the shared band CTE block with
+    Scale design: _rep_labels contracts the GROUP graph (reps as nodes,
+    band-verified pairs as edges — never member-level) and joins the
+    labels back to the members. Oracle: recursive reachability over the shared band CTE block with
     the UNCAPPED membership mapping; the driver check proves the
     contraction and the group-level shortcut agree with the plain
     definition."""
@@ -5769,19 +5747,8 @@ def winnowing_band_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ra = sizes.select(F.col("g").alias("ga"), F.col("rep_id").alias("u"))
     rb = sizes.select(F.col("g").alias("gb"), F.col("rep_id").alias("v"))
-    gedges = (
-        ver.join(ra, "ga").join(rb, "gb").select("u", "v")
-        .localCheckpoint(eager=True)  # cut the collapse/verify lineage
-    )
-    glabels = star_contract(gedges).withColumnRenamed("doc_id", "rep_id")
-    rep_of = members.join(sizes.select("g", "rep_id"), "g").select(
-        "doc_id", "rep_id"
-    )
-    lab = rep_of.join(glabels, "rep_id", "left").select(
-        "doc_id",
-        F.coalesce("cluster_id", F.col("rep_id")).alias("cluster_id"),
-    )
-    return _with_singletons(lab, d)
+    rep_of = members.join(sizes.select("g", "rep_id"), "g").select("doc_id", "rep_id")
+    return _rep_labels(rep_of, ver.join(ra, "ga").join(rb, "gb").select("u", "v"), d)
 
 
 winnowing_band_clusters.__doc__ = winnowing_band_clusters.__doc__.format(
@@ -5789,19 +5756,7 @@ winnowing_band_clusters.__doc__ = winnowing_band_clusters.__doc__.format(
 )
 
 
-# round 14: fingerprint-axis survivors — symmetric deliverable with
-# q_dedup_survivors (Jaccard axis), same keep-longest policy
-WINNOWING_BAND_SURVIVORS_ORACLE = f"""
-WITH wlab AS ({WINNOWING_BAND_CLUSTERS_ORACLE})
-SELECT l.cluster_id,
-       FIRST(d.doc_id ORDER BY d.n_chars DESC, d.doc_id) AS survivor_doc,
-       COUNT(*) AS n_members,
-       COUNT(*) - 1 AS n_dropped,
-       CAST(MAX(d.n_chars) AS BIGINT) AS survivor_chars
-FROM wlab l JOIN documents d ON d.doc_id = l.doc_id
-GROUP BY l.cluster_id
-HAVING COUNT(*) > 1
-"""
+WINNOWING_BAND_SURVIVORS_ORACLE = _survivors_oracle(WINNOWING_BAND_CLUSTERS_ORACLE)
 
 
 @query("q_winnowing_band_survivors", WINNOWING_BAND_SURVIVORS_ORACLE)
@@ -5809,35 +5764,24 @@ def winnowing_band_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fingerprint axis' curation DELIVERABLE — one kept document
     per non-trivial banded-winnowing cluster, completing the symmetric
     surface with the Jaccard axis (q_dedup_survivors): longest text
-    wins, doc_id breaks ties (shared _survivors_from_labels kernel, so
-    the keep policy cannot diverge between axes), plus how many
-    near-duplicates each survivor absorbs. With
-    q_dedup_method_agreement this is the full switch-path: measure the
-    agreement, pick the axis, take its survivors. [engine — not in
-    reference]
+    wins, doc_id breaks ties, plus how many near-duplicates each
+    survivor absorbs. With q_dedup_method_agreement this is the full
+    switch-path: measure the agreement, pick the axis, take its
+    survivors. [engine — not in reference]
 
-    Composition at scale: q_winnowing_band_clusters' group-graph star
-    contraction followed by ONE max_by aggregate keyed on the cluster
-    id. Oracle: the cluster oracle nested verbatim + the same FIRST
-    ... ORDER BY n_chars DESC keep rule as q_dedup_survivors."""
+    q_winnowing_band_clusters' labels through _survivors_from_labels;
+    oracle: _survivors_oracle over the cluster oracle."""
     labels = winnowing_band_clusters(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return _survivors_from_labels(labels, d)
 
 
-# round 15: survivors x filter-attribution composition — how much of
-# the fingerprint-dedup removed mass the cheap quality gates already
-# reject (the r14 verdict's item 4; closes the curation loop:
-# agreement -> axis -> survivors -> is the dedup even needed?)
+# survivors x filter-attribution: how much of the fingerprint-dedup
+# removed mass the cheap quality gates already reject (closes the
+# curation loop: agreement -> axis -> survivors -> is the dedup needed?)
 BAND_FILTER_ATTRIBUTION_ORACLE = rf"""
 WITH wlab AS ({WINNOWING_BAND_CLUSTERS_ORACLE}),
-surv AS (
-    SELECT l.cluster_id,
-           FIRST(d.doc_id ORDER BY d.n_chars DESC, d.doc_id) AS survivor_doc
-    FROM wlab l JOIN documents d ON d.doc_id = l.doc_id
-    GROUP BY l.cluster_id
-    HAVING COUNT(*) > 1
-),
+surv AS ({_survivors_oracle("SELECT * FROM wlab")}),
 removed AS (
     SELECT l.doc_id
     FROM wlab l JOIN surv s ON s.cluster_id = l.cluster_id
@@ -5898,18 +5842,16 @@ def band_filter_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     axis, any-rule flag): this is per-RULE and fingerprint-axis.
     [engine — not in reference]
 
-    Scale design: labels come from _shared_labels (computed fresh per
-    invocation, checkpointed within the plan); survivor
-    selection is the audited _survivors_from_labels kernel
-    (census-sized output); the removed set is one cluster_id-keyed
-    join + doc-keyed semi-join against the map-only gate-flag scan
-    (shared _fa_flag_cols definition, 6dp-rounded thresholds); the
-    census is ONE 1-row aggregate unpivoted to 4 rule rows by an
-    inline of literal structs. Oracle: the cluster oracle nested
-    verbatim + the same FIRST ... ORDER BY keep rule + the shared
-    _FA_FLAGS_SQL block — every shared definition stated once."""
+    Scale design: the labels come from _labels (read twice, so
+    checkpointed) and the survivors from _survivors_from_labels; the
+    removed set is one cluster_id-keyed join + doc-keyed semi-join
+    against the map-only gate-flag scan (shared _fa_flag_cols
+    definition, 6dp-rounded thresholds); the census is ONE 1-row
+    aggregate unpivoted to 4 rule rows by an inline of literal
+    structs. Oracle: _survivors_oracle over the cluster oracle plus
+    the shared _FA_FLAGS_SQL block."""
     d = load_table(spark, sf_dir, "documents")
-    labels = _shared_labels(spark, sf_dir, "winnow")
+    [labels] = _labels(spark, sf_dir, "winnow")
     surv = _survivors_from_labels(labels, d.select("doc_id", "n_chars"))
     removed = (
         labels.join(surv.select("cluster_id", "survivor_doc"), "cluster_id")
@@ -5986,169 +5928,136 @@ def band_filter_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# round 14: cross-method agreement census — the decision table for
-# CHOOSING a dedup method, computed from cluster labels so pair sets
-# are never materialized
-DEDUP_AGREEMENT_ORACLE = f"""
-WITH jlab AS ({DEDUP_CLUSTERS_ORACLE}),
-wlab AS ({WINNOWING_BAND_CLUSTERS_ORACLE}),
-jsz AS (SELECT cluster_id, COUNT(*) AS sz FROM jlab GROUP BY cluster_id),
-wsz AS (SELECT cluster_id, COUNT(*) AS sz FROM wlab GROUP BY cluster_id),
-flags AS (
-    SELECT j.doc_id, jsz.sz >= 2 AS dup_j, wsz.sz >= 2 AS dup_w
-    FROM jlab j
-    JOIN jsz ON jsz.cluster_id = j.cluster_id
-    JOIN wlab w ON w.doc_id = j.doc_id
-    JOIN wsz ON wsz.cluster_id = w.cluster_id
-),
-fc AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COALESCE(SUM(CASE WHEN dup_j AND dup_w THEN 1 END), 0) AS BIGINT) AS dup_both,
-           CAST(COALESCE(SUM(CASE WHEN dup_j AND NOT dup_w THEN 1 END), 0) AS BIGINT) AS dup_jaccard_only,
-           CAST(COALESCE(SUM(CASE WHEN dup_w AND NOT dup_j THEN 1 END), 0) AS BIGINT) AS dup_winnow_only,
-           CAST(COALESCE(SUM(CASE WHEN NOT dup_j AND NOT dup_w THEN 1 END), 0) AS BIGINT) AS dup_neither
-    FROM flags
-),
-pj AS (SELECT CAST(COALESCE(SUM(sz * (sz - 1) // 2), 0) AS BIGINT) AS n_pairs_jaccard FROM jsz),
-pw AS (SELECT CAST(COALESCE(SUM(sz * (sz - 1) // 2), 0) AS BIGINT) AS n_pairs_winnow FROM wsz),
-joint AS (
-    SELECT j.cluster_id AS cj, w.cluster_id AS cw, COUNT(*) AS sz
-    FROM jlab j JOIN wlab w USING (doc_id)
-    GROUP BY j.cluster_id, w.cluster_id
-),
-pb AS (SELECT CAST(COALESCE(SUM(sz * (sz - 1) // 2), 0) AS BIGINT) AS n_pairs_both FROM joint)
-SELECT n_docs, dup_both, dup_jaccard_only, dup_winnow_only, dup_neither,
-       n_pairs_jaccard, n_pairs_winnow, n_pairs_both,
-       CASE WHEN n_pairs_jaccard + n_pairs_winnow - n_pairs_both > 0
-            THEN ROUND(n_pairs_both * 1.0
-                       / (n_pairs_jaccard + n_pairs_winnow - n_pairs_both), 6)
-       END AS pair_jaccard
-FROM fc, pj, pw, pb
-"""
+# ---------------------------------------------------------------------------
+# cross-method agreement censuses: the decision tables for CHOOSING a
+# dedup axis, computed from cluster labels so pair sets are never
+# materialized
+
+# axis letter -> (census column name, cluster oracle)
+_AXES = {
+    "j": ("jaccard", DEDUP_CLUSTERS_ORACLE),
+    "w": ("winnow", WINNOWING_BAND_CLUSTERS_ORACLE),
+    "s": ("simhash", SIMHASH_CLUSTERS_ORACLE),
+}
 
 
-@query("q_dedup_method_agreement", DEDUP_AGREEMENT_ORACLE)
-def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CROSS-METHOD AGREEMENT census — the decision table for choosing
-    a dedup method, which the per-method recall curves can't give: how
-    much do the Jaccard axis (q_dedup_clusters, ≥0.8 3-gram Jaccard
-    components) and the fingerprint axis (q_winnowing_band_clusters,
-    band-verified shared-print components) actually AGREE on this
-    corpus? One row: the per-document 2×2 contingency (dup under both /
-    only Jaccard / only winnowing / neither — "only Jaccard" docs are
-    what switching to the cheaper fingerprint path would UNDER-dedup),
-    each method's same-cluster pair count, the pair count they agree
-    on, and the Jaccard of the two PAIR SETS. [engine — not in
-    reference]
+def _agreement_ctes(axes: str) -> str:
+    """The WITH list an agreement oracle starts from, over the axes
+    named by letter in ``axes`` (j: Jaccard, w: winnowing, s: SimHash).
+    Per axis x: ``{x}lab`` its cluster oracle, ``{x}sz`` the cluster
+    sizes and ``p_{name}`` the one-row Σ C(sz,2) same-cluster pair
+    count ``n_pairs_{name}``. Per pair of axes xy: ``p_{xy}``, the
+    agreed-pair count ``n_pairs_{xy}`` (Σ C(sz,2) over the joint label
+    grouping: two docs pair under both axes iff they share both
+    labels). Then ``flags(doc_id, d{x}...)``: the doc sits in a cluster
+    of ≥2 under axis x. A census reads the CTEs it needs; DuckDB binds
+    no other."""
 
-    Scale design: pair sets are never materialized — same-cluster pair
-    counts are Σ C(sz,2) over cluster sizes, and the agreed-pair count
-    is Σ C(sz,2) over the JOINT label grouping (two docs pair under
-    both methods iff they share both labels), so the whole census is
-    three census-sized groupBys over the two label frames plus one
-    doc-keyed join. Both label frames are localCheckpointed once
-    (label-prop/star-contraction lineage is deep and each is consumed
-    twice). Oracle: both cluster oracles nested verbatim as
-    sub-blocks — the agreement numbers are exactly over the
-    driver-checked labelings."""
-    # shared per-application label frames (r14 verdict item 8): when
-    # both agreement censuses run in one process the labelings are
-    # computed once and priced once
-    jlab, wlab = _shared_labels_many(spark, sf_dir, "jaccard", "winnow")
-    jsz = jlab.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
-    wsz = wlab.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
-    flags = (
-        jlab.join(jsz, "cluster_id")
-        .select("doc_id", (F.col("sz") >= 2).alias("dup_j"))
-        .join(
-            wlab.join(wsz, "cluster_id").select(
-                "doc_id", (F.col("sz") >= 2).alias("dup_w")
-            ),
-            "doc_id",
-        )
-    )
-    fc = flags.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum(F.when(F.col("dup_j") & F.col("dup_w"), 1)), F.lit(0))
-        .cast("long").alias("dup_both"),
-        F.coalesce(F.sum(F.when(F.col("dup_j") & ~F.col("dup_w"), 1)), F.lit(0))
-        .cast("long").alias("dup_jaccard_only"),
-        F.coalesce(F.sum(F.when(F.col("dup_w") & ~F.col("dup_j"), 1)), F.lit(0))
-        .cast("long").alias("dup_winnow_only"),
-        F.coalesce(F.sum(F.when(~F.col("dup_j") & ~F.col("dup_w"), 1)), F.lit(0))
-        .cast("long").alias("dup_neither"),
-    )
-
-    def pair_count(szf: DataFrame, name: str) -> DataFrame:
-        return szf.agg(
-            F.coalesce(
-                F.sum(F.shiftright(F.col("sz") * (F.col("sz") - 1), 1)), F.lit(0)
-            ).cast("long").alias(name)
+    def pairs(cte: str, name: str, sizes: str) -> str:
+        return (
+            f"{cte} AS (SELECT CAST(COALESCE(SUM(sz * (sz - 1) // 2), 0) AS BIGINT)"
+            f" AS n_pairs_{name} FROM {sizes})"
         )
 
-    joint = (
-        jlab.withColumnRenamed("cluster_id", "cj")
-        .join(wlab.withColumnRenamed("cluster_id", "cw"), "doc_id")
-        .groupBy("cj", "cw")
-        .agg(F.count(F.lit(1)).alias("sz"))
-    )
-    out = (
-        fc.crossJoin(pair_count(jsz, "n_pairs_jaccard"))
-        .crossJoin(pair_count(wsz, "n_pairs_winnow"))
-        .crossJoin(pair_count(joint, "n_pairs_both"))
-    )
-    denom = (
-        F.col("n_pairs_jaccard") + F.col("n_pairs_winnow") - F.col("n_pairs_both")
-    )
-    return out.select(
-        "n_docs", "dup_both", "dup_jaccard_only", "dup_winnow_only",
-        "dup_neither", "n_pairs_jaccard", "n_pairs_winnow", "n_pairs_both",
-        F.when(denom > 0, F.round(F.col("n_pairs_both") * 1.0 / denom, 6))
-        .alias("pair_jaccard"),
+    ctes = [f"{x}lab AS ({_AXES[x][1]})" for x in axes]
+    ctes += [
+        f"{x}sz AS (SELECT cluster_id, COUNT(*) AS sz FROM {x}lab GROUP BY cluster_id)"
+        for x in axes
+    ]
+    ctes += [pairs(f"p_{_AXES[x][0]}", _AXES[x][0], f"{x}sz") for x in axes]
+    for i, a in enumerate(axes):
+        for b in axes[i + 1:]:
+            ctes.append(
+                f"{a}{b} AS (SELECT {a}.cluster_id AS ca, {b}.cluster_id AS cb, COUNT(*) AS sz\n"
+                f"    FROM {a}lab {a} JOIN {b}lab {b} USING (doc_id)\n"
+                f"    GROUP BY {a}.cluster_id, {b}.cluster_id)"
+            )
+            ctes.append(pairs(f"p_{a}{b}", a + b, a + b))
+    f = axes[0]
+    joins = [f"JOIN {f}sz ON {f}sz.cluster_id = {f}.cluster_id"]
+    for x in axes[1:]:
+        joins += [
+            f"JOIN {x}lab {x} ON {x}.doc_id = {f}.doc_id",
+            f"JOIN {x}sz ON {x}sz.cluster_id = {x}.cluster_id",
+        ]
+    flags = ", ".join(f"{x}sz.sz >= 2 AS d{x}" for x in axes)
+    body = "\n    ".join([f"SELECT {f}.doc_id, {flags}", f"FROM {f}lab {f}", *joins])
+    ctes.append(f"flags AS (\n    {body}\n)")
+    return "WITH " + ",\n".join(ctes)
+
+
+def _cell_sql(cond: str, name: str) -> str:
+    """Count of the rows meeting ``cond``, 0 when none (BIGINT)."""
+    return f"CAST(COALESCE(SUM(CASE WHEN {cond} THEN 1 END), 0) AS BIGINT) AS {name}"
+
+
+def _ratio_sql(a: str, b: str, both: str, name: str) -> str:
+    """Jaccard of two pair sets from their sizes and overlap, 6dp."""
+    return (
+        f"CASE WHEN {a} + {b} - {both} > 0\n"
+        f"            THEN ROUND({both} * 1.0 / ({a} + {b} - {both}), 6)\n"
+        f"       END AS {name}"
     )
 
 
-# round 15: the agreement census extended to the SimHash axis — one
-# 2x2x2 decision table instead of three pairwise runs. Each census
-# invocation computes its label frames FRESH (no cross-invocation
-# memo: a module-level cache would let a repeated bench run price the
-# census algebra without the clusterings it consumes). Within one
-# invocation the frame is localCheckpointed because the same query
-# plan consumes it 2-4 times — plan sharing inside one timed run.
+def _cell(cond: Column, name: str) -> Column:
+    """Count of the rows meeting ``cond``, 0 when none (long)."""
+    return F.coalesce(F.sum(F.when(cond, 1)), F.lit(0)).cast("long").alias(name)
 
 
-def _shared_labels(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
-    """localCheckpointed (doc_id, cluster_id) frame for one dedup
-    axis, computed fresh on every call: the label frames are each
-    consumed 2-4 times WITHIN a single agreement-census plan (where
-    the checkpoint prevents recomputation), and the clustering inside
-    them is the dominant cost — paid again on every invocation so
-    that repeated runs always price the full computation."""
-    fn = {
+def _ratio(a: str, b: str, both: str, name: str) -> Column:
+    """Jaccard of two pair sets from their sizes and overlap, 6dp."""
+    denom = F.col(a) + F.col(b) - F.col(both)
+    return F.when(denom > 0, F.round(F.col(both) * 1.0 / denom, 6)).alias(name)
+
+
+def _labels(spark: SparkSession, sf_dir: str, *axes: str) -> list[DataFrame]:
+    """localCheckpointed (doc_id, cluster_id) frames, one per dedup
+    axis ("jaccard", "winnow", "simhash"), for a census that consumes
+    each 2-4 times within one plan (the checkpoint stops the
+    clustering from being recomputed per consumer).
+
+    The axes are built CONCURRENTLY from driver threads: each
+    clustering is an independent chain of small blocking jobs
+    (checkpoint barriers, convergence counts) that leaves most executor
+    slots idle between stages, so overlapping the chains cuts a census'
+    wall toward the slowest axis instead of the sum. Spark job
+    submission is thread-safe and scheduling stays fair at the task
+    level. Nothing is memoized across calls: a cache would let a
+    repeated bench run price the census without the clusterings it
+    consumes."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    fns = {
         "jaccard": dedup_clusters,
         "winnow": winnowing_band_clusters,
         "simhash": dedup_simhash_clusters,
-    }[kind]
-    return fn(spark, sf_dir).localCheckpoint(eager=True)
-
-
-def _shared_labels_many(
-    spark: SparkSession, sf_dir: str, *kinds: str
-) -> list[DataFrame]:
-    """The label frames for several dedup axes, built CONCURRENTLY from
-    driver threads. Each axis' clustering is an independent chain of
-    small blocking jobs (checkpoint barriers, convergence counts) that
-    leaves most executor slots idle between stages, so overlapping the
-    chains cuts a census query's wall toward the slowest axis instead
-    of the sum of all three. Spark job submission is thread-safe and
-    scheduling stays fair at the task level; results are the same
-    checkpointed frames _shared_labels returns, still computed fresh on
-    every invocation (nothing memoized across calls)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(kinds)) as ex:
-        futs = [ex.submit(_shared_labels, spark, sf_dir, k) for k in kinds]
+    }
+    with ThreadPoolExecutor(max_workers=len(axes)) as ex:
+        futs = [
+            ex.submit(lambda a: fns[a](spark, sf_dir).localCheckpoint(eager=True), a)
+            for a in axes
+        ]
         return [f.result() for f in futs]
+
+
+def _cluster_sizes(labels: DataFrame) -> DataFrame:
+    """(cluster_id, sz) of a (doc_id, cluster_id) labeling."""
+    return labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
+
+
+def _dup_flags(*axes: tuple[DataFrame, DataFrame, str]) -> DataFrame:
+    """(doc_id, one boolean per axis) from (labels, sizes, flag name)
+    triples: the doc sits in a cluster of ≥2 under that axis. One
+    doc-keyed join per axis after the first."""
+    flags = [
+        lab.join(sz, "cluster_id").select("doc_id", (F.col("sz") >= 2).alias(name))
+        for lab, sz, name in axes
+    ]
+    out = flags[0]
+    for f in flags[1:]:
+        out = out.join(f, "doc_id")
+    return out
 
 
 def _pair_count_from_sizes(szf: DataFrame, name: str) -> DataFrame:
@@ -6175,63 +6084,84 @@ def _joint_pair_count(la: DataFrame, lb: DataFrame, name: str) -> DataFrame:
     return _pair_count_from_sizes(joint, name)
 
 
-DEDUP_AGREEMENT3_ORACLE = f"""
-WITH jlab AS ({DEDUP_CLUSTERS_ORACLE}),
-wlab AS ({WINNOWING_BAND_CLUSTERS_ORACLE}),
-slab AS ({SIMHASH_CLUSTERS_ORACLE}),
-jsz AS (SELECT cluster_id, COUNT(*) AS sz FROM jlab GROUP BY cluster_id),
-wsz AS (SELECT cluster_id, COUNT(*) AS sz FROM wlab GROUP BY cluster_id),
-ssz AS (SELECT cluster_id, COUNT(*) AS sz FROM slab GROUP BY cluster_id),
-flags AS (
-    SELECT j.doc_id, jsz.sz >= 2 AS dj, wsz.sz >= 2 AS dw, ssz.sz >= 2 AS ds
-    FROM jlab j
-    JOIN jsz ON jsz.cluster_id = j.cluster_id
-    JOIN wlab w ON w.doc_id = j.doc_id
-    JOIN wsz ON wsz.cluster_id = w.cluster_id
-    JOIN slab s ON s.doc_id = j.doc_id
-    JOIN ssz ON ssz.cluster_id = s.cluster_id
-),
+DEDUP_AGREEMENT_ORACLE = f"""{_agreement_ctes("jw")},
 fc AS (
     SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(COALESCE(SUM(CASE WHEN dj AND dw AND ds THEN 1 END), 0) AS BIGINT) AS dup_all,
-           CAST(COALESCE(SUM(CASE WHEN dj AND dw AND NOT ds THEN 1 END), 0) AS BIGINT) AS dup_jw_only,
-           CAST(COALESCE(SUM(CASE WHEN dj AND ds AND NOT dw THEN 1 END), 0) AS BIGINT) AS dup_js_only,
-           CAST(COALESCE(SUM(CASE WHEN dw AND ds AND NOT dj THEN 1 END), 0) AS BIGINT) AS dup_ws_only,
-           CAST(COALESCE(SUM(CASE WHEN dj AND NOT dw AND NOT ds THEN 1 END), 0) AS BIGINT) AS dup_jaccard_only,
-           CAST(COALESCE(SUM(CASE WHEN dw AND NOT dj AND NOT ds THEN 1 END), 0) AS BIGINT) AS dup_winnow_only,
-           CAST(COALESCE(SUM(CASE WHEN ds AND NOT dj AND NOT dw THEN 1 END), 0) AS BIGINT) AS dup_simhash_only,
-           CAST(COALESCE(SUM(CASE WHEN NOT dj AND NOT dw AND NOT ds THEN 1 END), 0) AS BIGINT) AS dup_none
+           {_cell_sql("dj AND dw", "dup_both")},
+           {_cell_sql("dj AND NOT dw", "dup_jaccard_only")},
+           {_cell_sql("dw AND NOT dj", "dup_winnow_only")},
+           {_cell_sql("NOT dj AND NOT dw", "dup_neither")}
     FROM flags
-),
-pj AS (SELECT CAST(COALESCE(SUM(sz * (sz - 1) // 2), 0) AS BIGINT) AS n_pairs_jaccard FROM jsz),
-pw AS (SELECT CAST(COALESCE(SUM(sz * (sz - 1) // 2), 0) AS BIGINT) AS n_pairs_winnow FROM wsz),
-ps AS (SELECT CAST(COALESCE(SUM(sz * (sz - 1) // 2), 0) AS BIGINT) AS n_pairs_simhash FROM ssz),
-jw AS (SELECT j.cluster_id AS ca, w.cluster_id AS cb, COUNT(*) AS sz
-       FROM jlab j JOIN wlab w USING (doc_id) GROUP BY j.cluster_id, w.cluster_id),
-js AS (SELECT j.cluster_id AS ca, s.cluster_id AS cb, COUNT(*) AS sz
-       FROM jlab j JOIN slab s USING (doc_id) GROUP BY j.cluster_id, s.cluster_id),
-ws AS (SELECT w.cluster_id AS ca, s.cluster_id AS cb, COUNT(*) AS sz
-       FROM wlab w JOIN slab s USING (doc_id) GROUP BY w.cluster_id, s.cluster_id),
-pjw AS (SELECT CAST(COALESCE(SUM(sz * (sz - 1) // 2), 0) AS BIGINT) AS n_pairs_jw FROM jw),
-pjs AS (SELECT CAST(COALESCE(SUM(sz * (sz - 1) // 2), 0) AS BIGINT) AS n_pairs_js FROM js),
-pws AS (SELECT CAST(COALESCE(SUM(sz * (sz - 1) // 2), 0) AS BIGINT) AS n_pairs_ws FROM ws)
+)
+SELECT n_docs, dup_both, dup_jaccard_only, dup_winnow_only, dup_neither,
+       n_pairs_jaccard, n_pairs_winnow, n_pairs_jw AS n_pairs_both,
+       {_ratio_sql("n_pairs_jaccard", "n_pairs_winnow", "n_pairs_jw", "pair_jaccard")}
+FROM fc, p_jaccard, p_winnow, p_jw
+"""
+
+
+@query("q_dedup_method_agreement", DEDUP_AGREEMENT_ORACLE)
+def dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CROSS-METHOD AGREEMENT census — the decision table for choosing
+    a dedup method, which the per-method recall curves can't give: how
+    much do the Jaccard axis (q_dedup_clusters, ≥0.8 3-gram Jaccard
+    components) and the fingerprint axis (q_winnowing_band_clusters,
+    band-verified shared-print components) actually AGREE on this
+    corpus? One row: the per-document 2×2 contingency (dup under both /
+    only Jaccard / only winnowing / neither — "only Jaccard" docs are
+    what switching to the cheaper fingerprint path would UNDER-dedup),
+    each method's same-cluster pair count, the pair count they agree
+    on, and the Jaccard of the two PAIR SETS. [engine — not in
+    reference]
+
+    Scale design: pair sets are never materialized. Labels from
+    _labels, flags from _dup_flags, pair counts from
+    _pair_count_from_sizes and _joint_pair_count: census-sized
+    groupBys over the two label frames plus doc-keyed joins. Oracle:
+    _agreement_ctes over both cluster oracles."""
+    jlab, wlab = _labels(spark, sf_dir, "jaccard", "winnow")
+    jsz, wsz = _cluster_sizes(jlab), _cluster_sizes(wlab)
+    dj, dw = F.col("dj"), F.col("dw")
+    fc = _dup_flags((jlab, jsz, "dj"), (wlab, wsz, "dw")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        _cell(dj & dw, "dup_both"),
+        _cell(dj & ~dw, "dup_jaccard_only"),
+        _cell(dw & ~dj, "dup_winnow_only"),
+        _cell(~dj & ~dw, "dup_neither"),
+    )
+    out = (
+        fc.crossJoin(_pair_count_from_sizes(jsz, "n_pairs_jaccard"))
+        .crossJoin(_pair_count_from_sizes(wsz, "n_pairs_winnow"))
+        .crossJoin(_joint_pair_count(jlab, wlab, "n_pairs_both"))
+    )
+    return out.select(
+        "n_docs", "dup_both", "dup_jaccard_only", "dup_winnow_only",
+        "dup_neither", "n_pairs_jaccard", "n_pairs_winnow", "n_pairs_both",
+        _ratio("n_pairs_jaccard", "n_pairs_winnow", "n_pairs_both", "pair_jaccard"),
+    )
+
+
+DEDUP_AGREEMENT3_ORACLE = f"""{_agreement_ctes("jws")},
+fc AS (
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+           {_cell_sql("dj AND dw AND ds", "dup_all")},
+           {_cell_sql("dj AND dw AND NOT ds", "dup_jw_only")},
+           {_cell_sql("dj AND ds AND NOT dw", "dup_js_only")},
+           {_cell_sql("dw AND ds AND NOT dj", "dup_ws_only")},
+           {_cell_sql("dj AND NOT dw AND NOT ds", "dup_jaccard_only")},
+           {_cell_sql("dw AND NOT dj AND NOT ds", "dup_winnow_only")},
+           {_cell_sql("ds AND NOT dj AND NOT dw", "dup_simhash_only")},
+           {_cell_sql("NOT dj AND NOT dw AND NOT ds", "dup_none")}
+    FROM flags
+)
 SELECT n_docs, dup_all, dup_jw_only, dup_js_only, dup_ws_only,
        dup_jaccard_only, dup_winnow_only, dup_simhash_only, dup_none,
        n_pairs_jaccard, n_pairs_winnow, n_pairs_simhash,
        n_pairs_jw, n_pairs_js, n_pairs_ws,
-       CASE WHEN n_pairs_jaccard + n_pairs_winnow - n_pairs_jw > 0
-            THEN ROUND(n_pairs_jw * 1.0
-                       / (n_pairs_jaccard + n_pairs_winnow - n_pairs_jw), 6)
-       END AS pair_jaccard_jw,
-       CASE WHEN n_pairs_jaccard + n_pairs_simhash - n_pairs_js > 0
-            THEN ROUND(n_pairs_js * 1.0
-                       / (n_pairs_jaccard + n_pairs_simhash - n_pairs_js), 6)
-       END AS pair_jaccard_js,
-       CASE WHEN n_pairs_winnow + n_pairs_simhash - n_pairs_ws > 0
-            THEN ROUND(n_pairs_ws * 1.0
-                       / (n_pairs_winnow + n_pairs_simhash - n_pairs_ws), 6)
-       END AS pair_jaccard_ws
-FROM fc, pj, pw, ps, pjw, pjs, pws
+       {_ratio_sql("n_pairs_jaccard", "n_pairs_winnow", "n_pairs_jw", "pair_jaccard_jw")},
+       {_ratio_sql("n_pairs_jaccard", "n_pairs_simhash", "n_pairs_js", "pair_jaccard_js")},
+       {_ratio_sql("n_pairs_winnow", "n_pairs_simhash", "n_pairs_ws", "pair_jaccard_ws")}
+FROM fc, p_jaccard, p_winnow, p_simhash, p_jw, p_js, p_ws
 """
 
 
@@ -6248,49 +6178,22 @@ def dedup_method_agreement3(spark: SparkSession, sf_dir: str) -> DataFrame:
     census (q_dedup_method_agreement) prices one switch; this is the
     table that picks among all three. [engine — not in reference]
 
-    Scale design: the Σ C(sz,2) discipline throughout — per-axis pair
-    counts from cluster sizes, agreed-pair counts from the JOINT
-    label groupings, pair sets never materialized; the whole census is
-    census-sized groupBys over three label frames plus doc-keyed
-    joins. The label frames come from _shared_labels (computed fresh
-    per invocation, localCheckpointed — each is consumed 2-4 times
-    within this one plan). Oracle: all three cluster oracles nested
-    verbatim,
-    so the census is exactly over the driver-checked labelings."""
-    jlab, wlab, slab = _shared_labels_many(
-        spark, sf_dir, "jaccard", "winnow", "simhash"
-    )
-    jsz = jlab.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
-    wsz = wlab.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
-    ssz = slab.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
-
-    def flagged(lab: DataFrame, szf: DataFrame, name: str) -> DataFrame:
-        return lab.join(szf, "cluster_id").select(
-            "doc_id", (F.col("sz") >= 2).alias(name)
-        )
-
-    flags = (
-        flagged(jlab, jsz, "dj")
-        .join(flagged(wlab, wsz, "dw"), "doc_id")
-        .join(flagged(slab, ssz, "ds"), "doc_id")
-    )
+    Scale design: as q_dedup_method_agreement's, over three label
+    frames from _labels. Oracle: _agreement_ctes over all three
+    cluster oracles."""
+    jlab, wlab, slab = _labels(spark, sf_dir, "jaccard", "winnow", "simhash")
+    jsz, wsz, ssz = _cluster_sizes(jlab), _cluster_sizes(wlab), _cluster_sizes(slab)
     dj, dw, ds = F.col("dj"), F.col("dw"), F.col("ds")
-
-    def cell(cond, name: str):
-        return (
-            F.coalesce(F.sum(F.when(cond, 1)), F.lit(0)).cast("long").alias(name)
-        )
-
-    fc = flags.agg(
+    fc = _dup_flags((jlab, jsz, "dj"), (wlab, wsz, "dw"), (slab, ssz, "ds")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        cell(dj & dw & ds, "dup_all"),
-        cell(dj & dw & ~ds, "dup_jw_only"),
-        cell(dj & ds & ~dw, "dup_js_only"),
-        cell(dw & ds & ~dj, "dup_ws_only"),
-        cell(dj & ~dw & ~ds, "dup_jaccard_only"),
-        cell(dw & ~dj & ~ds, "dup_winnow_only"),
-        cell(ds & ~dj & ~dw, "dup_simhash_only"),
-        cell(~dj & ~dw & ~ds, "dup_none"),
+        _cell(dj & dw & ds, "dup_all"),
+        _cell(dj & dw & ~ds, "dup_jw_only"),
+        _cell(dj & ds & ~dw, "dup_js_only"),
+        _cell(dw & ds & ~dj, "dup_ws_only"),
+        _cell(dj & ~dw & ~ds, "dup_jaccard_only"),
+        _cell(dw & ~dj & ~ds, "dup_winnow_only"),
+        _cell(ds & ~dj & ~dw, "dup_simhash_only"),
+        _cell(~dj & ~dw & ~ds, "dup_none"),
     )
     out = (
         fc.crossJoin(_pair_count_from_sizes(jsz, "n_pairs_jaccard"))
@@ -6300,50 +6203,30 @@ def dedup_method_agreement3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(_joint_pair_count(jlab, slab, "n_pairs_js"))
         .crossJoin(_joint_pair_count(wlab, slab, "n_pairs_ws"))
     )
-
-    def ratio(a: str, b: str, both: str, name: str):
-        denom = F.col(a) + F.col(b) - F.col(both)
-        return F.when(denom > 0, F.round(F.col(both) * 1.0 / denom, 6)).alias(name)
-
     return out.select(
         "n_docs", "dup_all", "dup_jw_only", "dup_js_only", "dup_ws_only",
         "dup_jaccard_only", "dup_winnow_only", "dup_simhash_only", "dup_none",
         "n_pairs_jaccard", "n_pairs_winnow", "n_pairs_simhash",
         "n_pairs_jw", "n_pairs_js", "n_pairs_ws",
-        ratio("n_pairs_jaccard", "n_pairs_winnow", "n_pairs_jw", "pair_jaccard_jw"),
-        ratio("n_pairs_jaccard", "n_pairs_simhash", "n_pairs_js", "pair_jaccard_js"),
-        ratio("n_pairs_winnow", "n_pairs_simhash", "n_pairs_ws", "pair_jaccard_ws"),
+        _ratio("n_pairs_jaccard", "n_pairs_winnow", "n_pairs_jw", "pair_jaccard_jw"),
+        _ratio("n_pairs_jaccard", "n_pairs_simhash", "n_pairs_js", "pair_jaccard_js"),
+        _ratio("n_pairs_winnow", "n_pairs_simhash", "n_pairs_ws", "pair_jaccard_ws"),
     )
 
 
-# round 15: where the axes disagree — the agreement census localized
-# to the provenance axis (which corpus slice the cheap method would
-# under- or over-dedup)
-AGREEMENT_BY_SOURCE_ORACLE = f"""
-WITH jlab AS ({DEDUP_CLUSTERS_ORACLE}),
-wlab AS ({WINNOWING_BAND_CLUSTERS_ORACLE}),
-slab AS ({SIMHASH_CLUSTERS_ORACLE}),
-jsz AS (SELECT cluster_id, COUNT(*) AS sz FROM jlab GROUP BY cluster_id),
-wsz AS (SELECT cluster_id, COUNT(*) AS sz FROM wlab GROUP BY cluster_id),
-ssz AS (SELECT cluster_id, COUNT(*) AS sz FROM slab GROUP BY cluster_id),
-flags AS (
-    SELECT j.doc_id, jsz.sz >= 2 AS dj, wsz.sz >= 2 AS dw, ssz.sz >= 2 AS ds
-    FROM jlab j
-    JOIN jsz ON jsz.cluster_id = j.cluster_id
-    JOIN wlab w ON w.doc_id = j.doc_id
-    JOIN wsz ON wsz.cluster_id = w.cluster_id
-    JOIN slab s ON s.doc_id = j.doc_id
-    JOIN ssz ON ssz.cluster_id = s.cluster_id
-)
+# where the axes disagree: the agreement census localized to the
+# provenance axis (which corpus slice the cheap method would under- or
+# over-dedup)
+_DISAGREE_SQL = "f.dj <> f.dw OR f.dj <> f.ds OR f.dw <> f.ds"
+
+AGREEMENT_BY_SOURCE_ORACLE = f"""{_agreement_ctes("jws")}
 SELECT d.source,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(COALESCE(SUM(CASE WHEN f.dj THEN 1 END), 0) AS BIGINT) AS dup_jaccard,
-       CAST(COALESCE(SUM(CASE WHEN f.dw THEN 1 END), 0) AS BIGINT) AS dup_winnow,
-       CAST(COALESCE(SUM(CASE WHEN f.ds THEN 1 END), 0) AS BIGINT) AS dup_simhash,
-       CAST(COALESCE(SUM(CASE WHEN f.dj <> f.dw OR f.dj <> f.ds OR f.dw <> f.ds
-                           THEN 1 END), 0) AS BIGINT) AS n_disagree,
-       ROUND(COALESCE(SUM(CASE WHEN f.dj <> f.dw OR f.dj <> f.ds OR f.dw <> f.ds
-                              THEN 1 END), 0) * 1.0
+       {_cell_sql("f.dj", "dup_jaccard")},
+       {_cell_sql("f.dw", "dup_winnow")},
+       {_cell_sql("f.ds", "dup_simhash")},
+       {_cell_sql(_DISAGREE_SQL, "n_disagree")},
+       ROUND(COALESCE(SUM(CASE WHEN {_DISAGREE_SQL} THEN 1 END), 0) * 1.0
              / NULLIF(COUNT(*), 0), 6) AS disagree_share
 FROM flags f JOIN documents d ON d.doc_id = f.doc_id
 GROUP BY d.source
@@ -6363,29 +6246,14 @@ def dedup_agreement_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dedup_bias (per language) on the provenance axis. [engine — not
     in reference]
 
-    Scale design: the three label frames come from _shared_labels
-    (computed fresh per invocation, checkpointed within the plan);
-    the flags frame is three doc-keyed joins; the census
-    is one source-keyed aggregate (source cardinality is census-sized).
-    Oracle: the three cluster oracles nested verbatim + identical flag
-    algebra."""
+    Scale design: labels from _labels, flags from _dup_flags, then one
+    source-keyed aggregate (source cardinality is census-sized).
+    Oracle: _agreement_ctes' flags over the three cluster oracles."""
     d = load_table(spark, sf_dir, "documents")
-    jlab, wlab, slab = _shared_labels_many(
-        spark, sf_dir, "jaccard", "winnow", "simhash"
-    )
-
-    def flagged(lab: DataFrame, name: str) -> DataFrame:
-        sz = lab.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("sz"))
-        return lab.join(sz, "cluster_id").select(
-            "doc_id", (F.col("sz") >= 2).alias(name)
-        )
-
-    flags = (
-        flagged(jlab, "dj")
-        .join(flagged(wlab, "dw"), "doc_id")
-        .join(flagged(slab, "ds"), "doc_id")
-        .join(d.select("doc_id", "source"), "doc_id")
-    )
+    labs = _labels(spark, sf_dir, "jaccard", "winnow", "simhash")
+    flags = _dup_flags(
+        *[(lab, _cluster_sizes(lab), name) for lab, name in zip(labs, ("dj", "dw", "ds"))]
+    ).join(d.select("doc_id", "source"), "doc_id")
     dis = (
         (F.col("dj") != F.col("dw"))
         | (F.col("dj") != F.col("ds"))
@@ -6393,13 +6261,10 @@ def dedup_agreement_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return flags.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.coalesce(F.sum(F.when(F.col("dj"), 1)), F.lit(0))
-        .cast("long").alias("dup_jaccard"),
-        F.coalesce(F.sum(F.when(F.col("dw"), 1)), F.lit(0))
-        .cast("long").alias("dup_winnow"),
-        F.coalesce(F.sum(F.when(F.col("ds"), 1)), F.lit(0))
-        .cast("long").alias("dup_simhash"),
-        F.coalesce(F.sum(F.when(dis, 1)), F.lit(0)).cast("long").alias("n_disagree"),
+        _cell(F.col("dj"), "dup_jaccard"),
+        _cell(F.col("dw"), "dup_winnow"),
+        _cell(F.col("ds"), "dup_simhash"),
+        _cell(dis, "n_disagree"),
         F.round(
             F.coalesce(F.sum(F.when(dis, 1)), F.lit(0)) * 1.0
             / F.nullif(F.count(F.lit(1)), F.lit(0)),
@@ -6408,7 +6273,7 @@ def dedup_agreement_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# round 13: recall-vs-band-count tuning curve for the band variant
+# recall-vs-band-count tuning curve for the band variant
 _CURVE_SLICE = 300  # fixed audit slice (doc_id bound) — flat at any sf
 _CURVE_TAU = 2      # ground-truth pair threshold: n_shared >= tau
 _CURVE_BANDS = (1, 2, 4)

@@ -945,7 +945,7 @@ def video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor({maxh}/16) = 1 errors, which the 1-bit probes cover — the
     bucket join finds every pair the brute-force oracle does.
 
-    Round 7 band sizing (Norouzi–Fleet's b ≈ log2 n rule): the 40×
+    Band sizing (Norouzi–Fleet's b ≈ log2 n rule): the 40×
     scale rehearsal measured the old 8-bit bands (every-2nd-frame,
     126 bits in 16 narrow bands) produce ~B·P·n²/2⁸ candidates —
     6.3 M candidates for 46 true pairs at sf0.1, a quadratic term

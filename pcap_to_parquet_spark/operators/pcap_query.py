@@ -26,7 +26,7 @@ def _cached_fixture_path(stem: str, data: bytes) -> str:
     """Write ``data`` to a tempdir file whose name embeds a content
     hash. Keying the cache on md5(data)[:8] (not byte length) means a
     fixture edit that changes content but keeps the size can never
-    serve a stale pcap across sessions (r14 advisor finding)."""
+    serve a stale pcap across sessions."""
     import hashlib
 
     digest = hashlib.md5(data).hexdigest()[:8]
@@ -184,7 +184,7 @@ def pcap_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# round 12: per-flow feature table extending the NetFlow rollup with
+# per-flow feature table extending the NetFlow rollup with
 # the timing/size statistics an IDS or traffic classifier consumes
 _FLOW_KEYS = ["src_ip", "dst_ip", "protocol", "src_port", "dst_port"]
 _FLOW_KEYS_SQL = ", ".join(_FLOW_KEYS)
@@ -263,7 +263,7 @@ GROUP BY src_ip, dst_ip, protocol, src_port, dst_port
 def pcap_v6_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NetFlow rollup over a DUAL-STACK capture with the opt-in IPv6
     decode (``read_pcap(..., ipv6=True)``) — the highest-value Part-A
-    extension left after round 12: a 2026 capture lake is
+    extension: a 2026 capture lake is
     majority-IPv6 on day one, and the reference silently NULLs
     ethertype 0x86DD (main.rs:239-251 dispatches only 0x0800/0x8100),
     so every v6 packet lands in the catch-all flow. With ipv6=True
@@ -360,7 +360,7 @@ def pcap_flow_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# round 13: biflow pairing over a dedicated BIDIRECTIONAL golden
+# biflow pairing over a dedicated BIDIRECTIONAL golden
 # fixture (the main golden capture is unidirectional per flow). Rows
 # hand-computed from sources/pcap_fixtures.py::biflow_fixture_packets.
 BIFLOW_GOLDEN_PACKETS_ORACLE = f"""
@@ -510,7 +510,7 @@ def pcap_biflow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unanswered-flow flag (a scan/exfil tell). Portless protocols
     (ICMP) pair on addresses alone; the undecodable catch-all flow
     stays its own NULL-keyed row with answered=false — nothing
-    silently vanishes. DUAL-STACK (round 14): decodes with ipv6=True,
+    silently vanishes. DUAL-STACK: decodes with ipv6=True,
     so v6 conversations pair on RFC 5952 colon-hex text through the
     same canonical struct compare, and a v6 flow whose PORTS mirror a
     v4 conversation stays its own (unanswered) row — address text
@@ -1070,7 +1070,7 @@ def pcap_talkers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (an exfil tell when it spikes on a workstation). The undecodable
     catch-all keeps a NULL endpoint row; NULL peers don't count toward
     n_peers (COUNT DISTINCT semantics, identical both engines).
-    Dual-stack (round 14): v6 endpoints census alongside v4 ones —
+    Dual-stack: v6 endpoints census alongside v4 ones —
     one address space, two text shapes. [engine — not in reference]
 
     Scale design: ONE decoded scan → the two roles EXPLODE map-side
@@ -1115,9 +1115,8 @@ def pcap_talkers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# round 15: the talkers census live twin — per-endpoint aggregation
-# over WATERMARK-EVICTED closed flows (the substrate
-# q_pcap_stream_closed_flows built in round 14)
+# the talkers census live twin — per-endpoint aggregation over the
+# WATERMARK-EVICTED closed flows of q_pcap_stream_closed_flows
 PCAP_STREAM_TALKERS_ORACLE = f"""
 WITH closed AS ({PCAP_CLOSED_FLOWS_ORACLE}),
 roles AS (
@@ -1215,7 +1214,7 @@ def pcap_stream_talkers(spark: SparkSession, sf_dir: str) -> DataFrame:
     [engine — not in reference]
 
     Scale design: the stream half is unchanged (one shuffle into
-    session-window state, eviction pinned in round 14); the census
+    session-window state, eviction pinned by its tests); the census
     half explodes two roles map-side per CLOSED FLOW (flow-record
     cardinality, already far below packet cardinality) and runs one
     partial+final aggregate keyed by endpoint. Oracle: the closed-flow

@@ -771,7 +771,7 @@ def dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# join-key skew planner (round 12)
+# join-key skew planner
 
 # the join/aggregation keys this engine's own operators shuffle on —
 # the keys whose skew decides whether q_salted_join's technique (or

@@ -142,7 +142,7 @@ def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# session-quality census per entry event-type (round 12)
+# session-quality census per entry event-type
 
 # CTEs ending in sess_flat(entry_type, depth, dwell_s) — the batch
 # census input; the streaming twin swaps in the native session_window
@@ -298,7 +298,7 @@ def quality_census(per: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# within-session behavior graph: first-order transition census (round 12)
+# within-session behavior graph: first-order transition census
 
 SESSION_TRANSITIONS_ORACLE = f"""
 WITH {_SESSIONS_CTES},

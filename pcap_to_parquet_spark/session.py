@@ -19,9 +19,9 @@ driver JVM starts it from a dynamic class-data-sharing archive (JEP
 (:func:`archive_key`):
 
 - the first session for a key runs with ``-XX:ArchiveClassesAtExit``;
-  at interpreter exit it stops, waits (at most ``ARCHIVE_EXIT_WAIT_S``)
-  for the JVM to write the dump, and promotes it to ``<key>.jsa`` only
-  after a clean exit, so no partial archive is ever offered;
+  the JVM writes the dump as it exits, and the exit hook below
+  promotes it to ``<key>.jsa`` only after a clean exit, so no partial
+  archive is ever offered;
 - later sessions map ``<key>.jsa`` with ``-Xshare:auto``, under which
   a bad archive only means a plain start.
 
@@ -31,6 +31,11 @@ So the archive is used only when Spark reads nothing from the conf
 dir (it holds only ``*.template`` files; the launch then gets an empty
 one from the cache) and the cache is writable; otherwise the JVM
 starts exactly as without it (:func:`class_archive`).
+
+Every session that :func:`get_spark` launches registers one exit hook
+(:func:`_stop_jvm`): at interpreter exit it stops the session and waits
+at most ``JVM_EXIT_WAIT_S`` for the driver JVM, killing it after that,
+so no JVM outlives the Python process that started it.
 
 :func:`observed_checkpoint` is the checkpoint-with-metrics step the
 iterative kernels share.
@@ -167,9 +172,10 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Longest wait at interpreter exit for the driver JVM that writes the
-# class archive; the dump took ~12 s on a 4-core VM.
-ARCHIVE_EXIT_WAIT_S = 120.0
+# Longest wait at interpreter exit for the driver JVM to end. Sized for
+# the JVM that writes the class archive: the dump took ~12 s on a
+# 4-core VM; any other JVM ends within about a second.
+JVM_EXIT_WAIT_S = 120.0
 
 # Java's unified logging prints warnings to stdout by default, and the
 # harnesses parse their last stdout line. The dump warns once per class
@@ -280,11 +286,14 @@ def _env(name: str, value: str | None):
             os.environ[name] = old
 
 
-def _keep_archive(tmp: str, archive: str, pid: int, wait_s: float = ARCHIVE_EXIT_WAIT_S) -> None:
+def _stop_jvm(
+    pid: int, tmp: str | None = None, archive: str | None = None, wait_s: float = JVM_EXIT_WAIT_S
+) -> None:
     """At interpreter exit: stop the session, end the driver JVM and
-    wait up to ``wait_s`` while it writes its class dump to ``tmp``.
-    A clean exit promotes the dump to ``archive`` and removes the
-    cache's other archives; anything else removes the dump."""
+    wait up to ``wait_s`` for it, then kill it. When the JVM was asked
+    for a class dump (``tmp``), a clean exit promotes the dump to
+    ``archive`` and removes the cache's other archives; anything else
+    removes the dump."""
     if os.getpid() != pid:
         return
     from pyspark import SparkContext
@@ -306,6 +315,8 @@ def _keep_archive(tmp: str, archive: str, pid: int, wait_s: float = ARCHIVE_EXIT
         except subprocess.TimeoutExpired:
             proc.kill()
             proc.wait()
+    if tmp is None:
+        return
     if code == 0 and os.path.isfile(tmp):
         os.replace(tmp, archive)
         cache = os.path.dirname(archive)
@@ -338,7 +349,8 @@ def get_spark(app_name: str = "pcap-to-parquet-spark", cpus: int | None = None) 
 
     A session that launches the driver JVM starts it from the class
     archive (:func:`class_archive`) when the box allows one; the first
-    such session writes the archive when its JVM exits."""
+    such session writes the archive when its JVM exits. Either way the
+    JVM is stopped at interpreter exit (:func:`_stop_jvm`)."""
     from pyspark import SparkContext
 
     n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 4
@@ -359,8 +371,8 @@ def get_spark(app_name: str = "pcap-to-parquet-spark", cpus: int | None = None) 
     # an empty conf dir in place of the template-only one, for the launch
     with _env("SPARK_CONF_DIR", archive and os.path.join(os.path.dirname(archive), "conf")):
         spark = b.getOrCreate()
-    if dump is not None:
-        atexit.register(_keep_archive, dump, archive, os.getpid())
+    if launches:
+        atexit.register(_stop_jvm, os.getpid(), dump, archive)
     return tune(spark)
 
 

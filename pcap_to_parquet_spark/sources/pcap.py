@@ -344,7 +344,7 @@ def read_pcap(spark: SparkSession, path: str, ipv6: bool = False) -> DataFrame:
 
 # auto-chunk policy: captures above this size decode via the chunked
 # reader (measured local[32], 73 MB/1M packets: 5.6 s per-file vs 1.5 s
-# chunked; r16: 17 MB/250k packets 1.57 s per-file vs 1.06 s at 8 MiB
+# chunked; 17 MB/250k packets 1.57 s per-file vs 1.06 s at 8 MiB
 # chunks, and the parquet write parallelizes with the decode tasks).
 # Below ~2 chunks' worth of the 8 MiB floor there is nothing to split:
 # per-chunk resync slack IO eats the gain.

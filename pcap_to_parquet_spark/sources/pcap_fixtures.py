@@ -229,7 +229,7 @@ def v6_golden_pcap_bytes() -> bytes:
 def biflow_fixture_packets() -> dict[str, tuple[int, int, bytes]]:
     """name → (ts_sec, origlen, data): two answered v4 flow pairs (one
     where each side speaks first, by Metamako stamp), an unanswered
-    flow, a portless ICMP pair, an undecodable runt — plus (round 14)
+    flow, a portless ICMP pair, an undecodable runt — plus
     a DUAL-STACK extension: an answered IPv6 conversation and a v6
     packet whose ports MIRROR the v4 udp conversation (1000→2000) but
     must NOT pair with it (the canonical key compares address text,
@@ -291,7 +291,7 @@ def flow_timeline_fixture_packets() -> dict[str, tuple[int, int, bytes]]:
       the 19 s silence exceeds the idle timeout, two islands, one
       record each;
     - flow S: a single packet at t-5 — one one-packet record;
-    - flow R ("rule-divergent", round 14): packets at t-28, t-19,
+    - flow R ("rule-divergent"): packets at t-28, t-19,
       t-10, t-1 — 9 s apart, so the idle timeout never fires, and the
       two active rules genuinely DIVERGE: the island-aligned grid cuts
       at offsets 10/20 → 3 records ([t-28,t-19], [t-10], [t-1]) while

@@ -115,7 +115,7 @@ def run_to_memory_flushed(sdf: DataFrame, mode: str = "append", timeout_s: int =
     committed before it: if the landing dir delivers files across
     several micro-batches (multi-file dirs, slow copies), an
     interleaved no-data batch must not end the loop early and return
-    a silently-incomplete table (r14 advisor finding)."""
+    a silently-incomplete table."""
     import time
 
     name = f"stream_result_{next(_sink_seq)}"
@@ -125,7 +125,7 @@ def run_to_memory_flushed(sdf: DataFrame, mode: str = "append", timeout_s: int =
         .outputMode(mode)
         # 100 ms cadence: the flush batch is the TRIGGER AFTER the last
         # data batch, so the trigger interval is pure dead time between
-        # them (r15: 500 ms cost ~0.5-1 s of idle wall per stream query;
+        # them (500 ms cost ~0.5-1 s of idle wall per stream query;
         # the interval paces the demo harness only — watermark semantics
         # and results are identical at any cadence)
         .trigger(processingTime="100 milliseconds")
@@ -1377,7 +1377,7 @@ def stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # streaming session-quality census: the live twin of q_session_quality
-# over CLOSED sessions only (round 12)
+# over CLOSED sessions only
 
 def _stream_session_quality_oracle() -> str:
     from pcap_to_parquet_spark.operators.sessionize import quality_census_sql

@@ -81,6 +81,28 @@ def test_detail_filename_stamps_core_count_family(tmp_path):
         assert bench.detail_filename(repo, 16, other, box) == f"BENCH_DETAIL_r16b_c{other}.json"
 
 
+def test_detail_round_stamps_a_scaling_run_with_the_current_round(tmp_path, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
+    repo = str(tmp_path)
+    for n in (14, 16):
+        open(os.path.join(repo, f"BENCH_r{n}.json"), "w").write("{}")
+    open(os.path.join(repo, "BENCH_r16_c8.json"), "w").write("{}")
+    # round 16's gate is recorded: a full-box run is round 17's gate,
+    # a run at another core count scales round 16
+    assert bench.detail_round(repo, 4, 4) == 17
+    assert bench.detail_round(repo, 8, 4) == 16
+    assert bench.detail_round(repo, 2, 4) == 16
+    monkeypatch.setenv("SPARK_GRAFT_ROUND", "21")
+    assert bench.detail_round(repo, 4, 4) == 21
+    assert bench.detail_round(repo, 8, 4) == 21
+    # no recorded round yet: round 10, the first stamped one, either way
+    empty = str(tmp_path / "empty")
+    os.mkdir(empty)
+    monkeypatch.delenv("SPARK_GRAFT_ROUND")
+    assert bench.detail_round(empty, 4, 4) == 10
+    assert bench.detail_round(empty, 8, 4) == 10
+
+
 def test_headline_names_are_registered_once():
     # a typo would otherwise surface as a KeyError deep into a gate run
     assert [n for n in bench.HEADLINE if n not in QUERIES] == []

@@ -55,11 +55,20 @@ def test_a_lapsed_wait_computes_the_metrics_with_one_more_job(spark, monkeypatch
 
 
 # query -> most jobs one build + noop write may launch at sf0.001, on
-# whatever cores the session has
+# whatever cores the session has. The near-duplicate budgets are the
+# most jobs seen over repeated runs on 4 cores. Their actions are fixed
+# (the three-way census: 17 localCheckpoints and the write), but AQE
+# submits a query stage job more or fewer from run to run: the census
+# read 130-135 jobs, the SimHash clustering 31-32, the winnowing one
+# 39-41.
 ITERATIVE_JOB_BUDGET = {
     "q_kcore": 18,
     "q_dedup_clusters": 23,
-    "q_components_star": 30,
+    "q_components_star": 29,
+    "q_dedup_simhash_clusters": 32,
+    "q_winnowing_band_clusters": 41,
+    "q_density_clusters": 11,
+    "q_dedup_method_agreement3": 135,
 }
 
 

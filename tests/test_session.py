@@ -201,6 +201,7 @@ def test_first_session_writes_the_archive_and_the_next_maps_it(tmp_path):
     assert second["sum"] == 499500
     assert second["mapped"] == str(cache / jsa[0])
     assert second["launch_conf_dir"] == str(cache / "conf")
+    assert _processes_naming(str(tmp_path)) == []  # the mapping JVM has exited too
 
 
 @pytest.mark.slow
@@ -227,3 +228,4 @@ def test_a_real_conf_dir_starts_the_jvm_as_before(tmp_path):
     assert got["java_options"] is None
     assert got["mapped"] is None
     assert not (tmp_path / "cache").exists()
+    assert _processes_naming(str(conf)) == []  # its JVM (conf dir on the classpath) has exited
