@@ -39,6 +39,17 @@ def shingles(tokens: Column | str, n: int = 3, sep: str = "|") -> Column:
     return out
 
 
+# The DuckDB twins of the two helpers above, interpolated by every
+# oracle that tokenizes or shingles, so the SQL side has one definition
+# too: the whitespace tokens of `text`, and the pipe-joined 3-gram
+# shingles of a token list named `ws` (a list shorter than 3 gives []).
+WHITESPACE_TOKENS_SQL = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')"
+SHINGLES_SQL = (
+    "list_transform(generate_series(1, len(ws) - 2), "
+    "i -> ws[i] || '|' || ws[i+1] || '|' || ws[i+2])"
+)
+
+
 # The heuristic English detector shared by the evaluation family
 # (q_calibration_ece, q_isotonic_calibration, q_cohens_kappa,
 # q_brier_decomposition, q_mcnemar_test, q_fairness_audit): score =

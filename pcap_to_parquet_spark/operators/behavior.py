@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pcap_to_parquet_spark.functions.text import whitespace_tokens
+from pcap_to_parquet_spark.functions.text import WHITESPACE_TOKENS_SQL, whitespace_tokens
 from pcap_to_parquet_spark.registry import query
 from pcap_to_parquet_spark.session import broadcast_threshold_bytes, observed_checkpoint
 from pcap_to_parquet_spark.sources import fan_out, load_table
@@ -194,11 +194,9 @@ def rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HH_K = 20
 _HH_CAPACITY = 4096
 
-_TOK_SQL = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')"
-
 HEAVY_HITTERS_ORACLE = rf"""
 WITH tok AS (
-    SELECT unnest({_TOK_SQL}) AS token FROM documents
+    SELECT unnest({WHITESPACE_TOKENS_SQL}) AS token FROM documents
 ),
 counts AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY token)
 SELECT token, n FROM counts

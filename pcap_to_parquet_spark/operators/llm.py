@@ -22,7 +22,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pcap_to_parquet_spark.functions.text import shingles, whitespace_tokens
+from pcap_to_parquet_spark.functions.text import (
+    SHINGLES_SQL,
+    WHITESPACE_TOKENS_SQL,
+    shingles,
+    whitespace_tokens,
+)
 from pcap_to_parquet_spark.functions.vectors import cosine_similarity
 from pcap_to_parquet_spark.registry import query
 from pcap_to_parquet_spark.session import observed_checkpoint
@@ -128,10 +133,42 @@ def minhash_signatures(d: DataFrame) -> DataFrame:
     return base.select("doc_id", sig_of("th").alias("sig"))
 
 
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b: the docs whose band key ``bh``
+    matches in at least one ``band``. The one key-equality self-join
+    of LSH banding, so candidates never come from a cartesian."""
+    x, y = bands.alias("x"), bands.alias("y")
+    return (
+        x.join(
+            y,
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.bh") == F.col("y.bh"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def _with_sigs(pairs: DataFrame, sig: DataFrame) -> DataFrame:
+    """``pairs`` with both docs' signatures from the (doc_id, sig)
+    frame ``sig``, as sig_a and sig_b."""
+    return pairs.join(sig.toDF("doc_a", "sig_a"), "doc_a").join(
+        sig.toDF("doc_b", "sig_b"), "doc_b"
+    )
+
+
+def _agree(a: str, b: str, p: int = MINHASH_PERMS) -> Column:
+    """How many of the first ``p`` positions of the signature arrays
+    ``a`` and ``b`` hold the same minimum."""
+    eq = F.zip_with(F.slice(a, 1, p), F.slice(b, 1, p), lambda x, y: x == y)
+    return F.size(F.filter(eq, lambda e: e))
+
+
 @query("q_dedup_minhash")  # rows-only
 def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup candidates: shingle → 128 minhashes → 16
-    bands of 8 → bucket-join on (band, band_hash) → estimate Jaccard as
+    bands of 8 → bucket-join on (band, bh) → estimate Jaccard as
     the fraction of agreeing minhashes; keep est ≥ 0.7.
 
     The only pairwise work happens inside LSH buckets (key-equality
@@ -156,39 +193,17 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.lit(b).alias("band"),
                         F.xxhash64(
                             *[F.element_at("sig", b * MINHASH_ROWS + r + 1) for r in range(MINHASH_ROWS)]
-                        ).alias("band_hash"),
+                        ).alias("bh"),
                     )
                     for b in range(MINHASH_BANDS)
                 ]
             )
-        ).alias("bh"),
-    ).select("doc_id", "bh.band", "bh.band_hash")
-    pairs = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.band_hash") == F.col("y.band_hash"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    est = (
-        pairs.join(sigs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sig", "sig_a"), "doc_a")
-        .join(sigs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sig", "sig_b"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(
-                    F.filter(
-                        F.zip_with("sig_a", "sig_b", lambda p, q: p == q), lambda eq: eq
-                    )
-                ).cast("double")
-                / MINHASH_PERMS
-            ).alias("est_jaccard"),
-        )
+        ).alias("bb"),
+    ).select("doc_id", "bb.band", "bb.bh")
+    est = _with_sigs(_band_pairs(bands), sigs).select(
+        "doc_a",
+        "doc_b",
+        (_agree("sig_a", "sig_b").cast("double") / MINHASH_PERMS).alias("est_jaccard"),
     )
     return est.filter(F.col("est_jaccard") >= 0.7).orderBy("doc_a", "doc_b")
 
@@ -502,39 +517,106 @@ def dedup_simhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # of the inverted-index self-join at any corpus size.
 SHINGLE_DF_CAP = 100
 
-NGRAM_JACCARD_ORACLE = rf"""
-WITH tok AS (
-    SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '') AS ws
-    FROM documents
+
+def _shingle_ctes(where: str = "", out: str = "sh") -> str:
+    """``tok`` and ``{out}``: the distinct (doc_id, sh) 3-gram shingles
+    of the documents meeting the SQL predicate ``where`` (all of them
+    when empty). The twin of ``_doc_shingles(d).distinct()``."""
+    where = f" WHERE {where}" if where else ""
+    return f"""tok AS (
+    SELECT doc_id, {WHITESPACE_TOKENS_SQL} AS ws
+    FROM documents{where}
 ),
-sh_all AS (
-    SELECT DISTINCT doc_id, unnest(
-        list_transform(generate_series(1, len(ws) - 2),
-                       i -> ws[i] || '|' || ws[i+1] || '|' || ws[i+2])) AS sh
-    FROM tok
-    WHERE len(ws) >= 3
-),
-hot AS (SELECT sh FROM sh_all GROUP BY sh HAVING COUNT(*) > {SHINGLE_DF_CAP}),
-sh AS (SELECT s.doc_id, s.sh FROM sh_all s ANTI JOIN hot h USING (sh)),
-n AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       ROUND(COUNT(*)::DOUBLE
-             / (ANY_VALUE(na.n) + ANY_VALUE(nb.n) - COUNT(*)), 6) AS jaccard
-FROM sh a
-JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-JOIN n na ON na.doc_id = a.doc_id
-JOIN n nb ON nb.doc_id = b.doc_id
-GROUP BY a.doc_id, b.doc_id
-HAVING ROUND(COUNT(*)::DOUBLE
-             / (ANY_VALUE(na.n) + ANY_VALUE(nb.n) - COUNT(*)), 6) >= 0.8
+{out} AS (
+    SELECT DISTINCT doc_id, unnest({SHINGLES_SQL}) AS sh
+    FROM tok WHERE len(ws) >= 3
+)"""
+
+
+# ``sh``: the shingles of ``sh_all`` found in at most SHINGLE_DF_CAP
+# docs (the twin of _drop_hot)
+_HOT_CAP_CTES = f"""hot AS (SELECT sh FROM sh_all GROUP BY sh HAVING COUNT(*) > {SHINGLE_DF_CAP}),
+sh AS (SELECT s.doc_id, s.sh FROM sh_all s ANTI JOIN hot h USING (sh))"""
+
+# ``n`` (shingles per doc of ``sh``) and ``jp``: every doc_a < doc_b
+# sharing a shingle, with n_inter, n_a, n_b and the 6dp Jaccard j
+# (the twin of _overlaps). Materialized: containment reads it twice.
+_JACCARD_CTES = """n AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+jp AS MATERIALIZED (
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter,
+           ANY_VALUE(na.n) AS n_a, ANY_VALUE(nb.n) AS n_b,
+           ROUND(COUNT(*)::DOUBLE
+                 / (ANY_VALUE(na.n) + ANY_VALUE(nb.n) - COUNT(*)), 6) AS j
+    FROM sh a
+    JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+    JOIN n na ON na.doc_id = a.doc_id
+    JOIN n nb ON nb.doc_id = b.doc_id
+    GROUP BY a.doc_id, b.doc_id
+)"""
+
+NGRAM_JACCARD_ORACLE = f"""
+WITH {_shingle_ctes(out="sh_all")},
+{_HOT_CAP_CTES},
+{_JACCARD_CTES}
+SELECT doc_a, doc_b, j AS jaccard FROM jp WHERE j >= 0.8
 """
+
+
+def _doc_shingles(d: DataFrame) -> DataFrame:
+    """(doc_id, sh): every 3-gram shingle of every document of ``d``,
+    repeats kept (callers that need a set add their own distinct).
+    Over fan_out(d), so a doc_id slice that prunes to one parquet
+    split still shingles on every core."""
+    return (
+        fan_out(d)
+        .select("doc_id", whitespace_tokens("text").alias("toks"))
+        .select("doc_id", F.explode(shingles("toks", 3)).alias("sh"))
+    )
+
+
+def _drop_hot(sh_all: DataFrame) -> DataFrame:
+    """``sh_all`` without the shingles found in more than
+    SHINGLE_DF_CAP docs. The hot set grows with the corpus, so the
+    anti-join is not force-broadcast: AQE picks broadcast while the
+    set fits, and at 100 TB it is a keyed shuffle."""
+    hot = (
+        sh_all.groupBy("sh")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > SHINGLE_DF_CAP)
+        .select("sh")
+    )
+    return sh_all.join(hot, "sh", "left_anti")
+
+
+def _overlaps(sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_a, n_b, j) for every doc_a < doc_b
+    sharing a shingle of the distinct (doc_id, sh) frame ``sh``: the
+    shared count, both shingle counts and the 6dp Jaccard. ONE shingle
+    self-join generates the candidates (inverted-index style: only
+    docs sharing a shingle ever pair). The per-doc counts grow with
+    the corpus, so their joins are unhinted too."""
+    n = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    inter = (
+        sh.alias("a")
+        .join(
+            sh.alias("b"),
+            (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+    union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
+    return (
+        inter.join(n.toDF("doc_a", "n_a"), "doc_a")
+        .join(n.toDF("doc_b", "n_b"), "doc_b")
+        .withColumn("j", F.round(F.col("n_inter").cast("double") / union, 6))
+    )
 
 
 @query("q_ngram_jaccard", NGRAM_JACCARD_ORACLE)
 def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-gram Jaccard ≥ 0.8 pairs. Candidates are generated by the
-    shingle-equality join itself (inverted-index style — only docs
-    sharing a shingle ever pair), then intersection/union counted.
+    """Exact 3-gram Jaccard ≥ 0.8 pairs: distinct shingles, the hot
+    cap (_drop_hot), then _overlaps' one self-join.
     Note: the word soup here shares shingles heavily; real corpora are
     far sparser. The MinHash variant is the scale path; this is the
     exact oracle-checked twin."""
@@ -544,44 +626,9 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once measured 1.55 s vs 2.76 s warm at sf0.1 — recompute with
     # exchange reuse loses here, while caching the post-anti-join set
     # (a fifth materialization point tried first) measured SLOWER.
-    sh_all = (
-        fan_out(d).select("doc_id", whitespace_tokens("text").alias("toks"))
-        .select("doc_id", F.explode(shingles("toks", 3)).alias("sh"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # hot-shingle guard: drop shingles in > SHINGLE_DF_CAP docs before
-    # the self-join. The hot set and the per-doc count table both GROW
-    # with the corpus (distinct-shingle- and document-sized), so
-    # neither is force-broadcast — AQE picks broadcast while they fit
-    # (the round-12 de-hint discipline; at 100 TB these joins are
-    # keyed shuffles and must be)
-    hot = (
-        sh_all.groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > SHINGLE_DF_CAP)
-        .select("sh")
-    )
-    sh = sh_all.join(hot, "sh", "left_anti")
-    n = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    jac = (
-        inter.join(n.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "n_a"), "doc_a")
-        .join(n.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "n_b"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                6,
-            ).alias("jaccard"),
-        )
+    sh_all = _doc_shingles(d).distinct().localCheckpoint(eager=True)
+    jac = _overlaps(_drop_hot(sh_all)).select(
+        "doc_a", "doc_b", F.col("j").alias("jaccard")
     )
     return jac.filter(F.col("jaccard") >= 0.8)
 
@@ -810,34 +857,15 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # dedup clustering: connected components over near-dup pairs
 
-# shared CTE chain (shingles → hot-shingle cap → ≥0.8-Jaccard pairs →
+# shared CTE chain (q_ngram_jaccard's CTEs → ≥0.8-Jaccard pairs →
 # symmetric edges → recursive reachability) — interpolated by BOTH
 # q_dedup_clusters and q_cluster_size_census so the component
 # definition can never diverge between the labels and their census.
-_DC_CTES = rf"""
-WITH RECURSIVE tok AS (
-    SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '') AS ws
-    FROM documents
-),
-sh_all AS (
-    SELECT DISTINCT doc_id, unnest(
-        list_transform(generate_series(1, len(ws) - 2),
-                       i -> ws[i] || '|' || ws[i+1] || '|' || ws[i+2])) AS sh
-    FROM tok
-    WHERE len(ws) >= 3
-),
-hot AS (SELECT sh FROM sh_all GROUP BY sh HAVING COUNT(*) > {SHINGLE_DF_CAP}),
-sh AS (SELECT s.doc_id, s.sh FROM sh_all s ANTI JOIN hot h USING (sh)),
-n AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-pairs AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM sh a
-    JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-    JOIN n na ON na.doc_id = a.doc_id
-    JOIN n nb ON nb.doc_id = b.doc_id
-    GROUP BY a.doc_id, b.doc_id, na.n, nb.n
-    HAVING COUNT(*)::DOUBLE / (na.n + nb.n - COUNT(*)) >= 0.8
-),
+_DC_CTES = f"""
+WITH RECURSIVE {_shingle_ctes(out="sh_all")},
+{_HOT_CAP_CTES},
+{_JACCARD_CTES},
+pairs AS (SELECT doc_a, doc_b FROM jp WHERE j >= 0.8),
 edges AS (
     SELECT doc_a AS a, doc_b AS b FROM pairs
     UNION SELECT doc_b, doc_a FROM pairs
@@ -2278,28 +2306,17 @@ def embed_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CONTAIN_THRESH = 0.6
 
-NGRAM_CONTAIN_ORACLE = rf"""
-WITH tok AS (
-    SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '') AS ws
-    FROM documents
-),
-sh_all AS (
-    SELECT DISTINCT doc_id, unnest(
-        list_transform(generate_series(1, len(ws) - 2),
-                       i -> ws[i] || '|' || ws[i+1] || '|' || ws[i+2])) AS sh
-    FROM tok
-    WHERE len(ws) >= 3
-),
-hot AS (SELECT sh FROM sh_all GROUP BY sh HAVING COUNT(*) > {SHINGLE_DF_CAP}),
-sh AS (SELECT s.doc_id, s.sh FROM sh_all s ANTI JOIN hot h USING (sh)),
-n AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)
-SELECT a.doc_id AS contained_doc, b.doc_id AS container_doc,
-       ROUND(COUNT(*)::DOUBLE / ANY_VALUE(na.n), 6) AS containment
-FROM sh a
-JOIN sh b ON a.sh = b.sh AND a.doc_id <> b.doc_id
-JOIN n na ON na.doc_id = a.doc_id
-GROUP BY a.doc_id, b.doc_id
-HAVING ROUND(COUNT(*)::DOUBLE / ANY_VALUE(na.n), 6) >= {_CONTAIN_THRESH}
+NGRAM_CONTAIN_ORACLE = f"""
+WITH {_shingle_ctes(out="sh_all")},
+{_HOT_CAP_CTES},
+{_JACCARD_CTES},
+c AS (
+    SELECT doc_a AS contained_doc, doc_b AS container_doc,
+           ROUND(n_inter::DOUBLE / n_a, 6) AS containment FROM jp
+    UNION ALL
+    SELECT doc_b, doc_a, ROUND(n_inter::DOUBLE / n_b, 6) FROM jp
+)
+SELECT * FROM c WHERE containment >= {_CONTAIN_THRESH}
 """
 
 
@@ -2312,54 +2329,27 @@ def ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation pipelines run containment alongside symmetric near-dup:
     symmetric misses subset plagiarism and template expansion.
 
-    Same scale discipline as q_ngram_jaccard: inverted-index self-join
-    on shingles generates only candidate pairs, a hot-shingle anti-join
-    caps document frequency first (unhinted — the hot set grows with
-    the corpus, AQE broadcasts while it fits), and the pair is DIRECTED
-    (both (a,b) and (b,a) emit when both clear the threshold — the
-    relation is not symmetric)."""
+    Same kernels as q_ngram_jaccard (_doc_shingles, _drop_hot,
+    _overlaps), and the pair is DIRECTED: each undirected overlap row
+    gives both (a in b) = n_inter/n_a and (b in a) = n_inter/n_b, and
+    each direction emits when it clears the threshold — the relation
+    is not symmetric."""
     d = load_table(spark, sf_dir, "documents")
-    sh_all = (
-        fan_out(d)
-        .select("doc_id", whitespace_tokens("text").alias("toks"))
-        .select("doc_id", F.explode(shingles("toks", 3)).alias("sh"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    hot = (
-        sh_all.groupBy("sh")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > SHINGLE_DF_CAP)
-        .select("sh")
-    )
-    # hot set and per-doc counts grow with the corpus — unhinted, like
-    # q_ngram_jaccard (the round-12 de-hint discipline)
-    sh = sh_all.join(hot, "sh", "left_anti")
-    n = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") != F.col("b.doc_id")),
+    sh_all = _doc_shingles(d).distinct().localCheckpoint(eager=True)
+
+    def contained(a: str, b: str, n: str) -> Column:
+        share = F.round(F.col("n_inter").cast("double") / F.col(n), 6)
+        return F.struct(
+            F.col(a).alias("contained_doc"),
+            F.col(b).alias("container_doc"),
+            share.alias("containment"),
         )
-        .groupBy(
-            F.col("a.doc_id").alias("contained_doc"),
-            F.col("b.doc_id").alias("container_doc"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+
+    both = F.array(contained("doc_a", "doc_b", "n_a"), contained("doc_b", "doc_a", "n_b"))
     return (
-        inter.join(
-            n.withColumnRenamed("doc_id", "contained_doc").withColumnRenamed("n", "n_a"),
-            "contained_doc",
-        )
-        .select(
-            "contained_doc",
-            "container_doc",
-            F.round(F.col("n_inter").cast("double") / F.col("n_a"), 6).alias(
-                "containment"
-            ),
-        )
+        _overlaps(_drop_hot(sh_all))
+        .select(F.explode(both).alias("c"))
+        .select("c.*")
         .filter(F.col("containment") >= _CONTAIN_THRESH)
     )
 
@@ -2471,105 +2461,85 @@ _MHX_BANDS = "\n    UNION ALL ".join(
     )
     for b in range(MINHASH_BANDS)
 )
-# a flat 128-term sum exceeds DuckDB's binder recursion limit; count
-# agreeing positions with one list_filter over the signature lists
 _MHX_SIG_LIST = "[" + ", ".join(f"m{i}" for i in range(MINHASH_PERMS)) + "]"
 
-# shared CTE block (shingles → md5 base hashes → signatures → bands →
-# candidate pairs → estimated Jaccard) — interpolated by BOTH
-# q_minhash_exact and q_dedup_bias so the two can never diverge on
-# what the production near-dup pipeline detects.
-_MHX_CTES = rf"""
-WITH tok AS (
-    SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '') AS ws
-    FROM documents
-),
-sh AS (
-    SELECT DISTINCT doc_id, unnest(
-        list_transform(generate_series(1, len(ws) - 2),
-                       i -> ws[i] || '|' || ws[i+1] || '|' || ws[i+2])) AS sh
-    FROM tok WHERE len(ws) >= 3
-),
-hh AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, 8))::BIGINT AS h FROM sh),
-mins AS (
+
+def _agree_sql(p: int = MINHASH_PERMS) -> str:
+    """The twin of _agree over the ``sig`` lists of ``sa`` and ``sb``
+    (a flat 128-term sum exceeds DuckDB's binder recursion limit)."""
+    return f"len(list_filter(generate_series(1, {p}), i -> sa.sig[i] = sb.sig[i]))"
+
+
+# ``hh``, ``mins``, ``sigl``, ``bands`` and ``cand`` over the shingles
+# ``sh``: the md5-derived signatures and their banded candidate pairs
+# (the twins of _md5_signatures, _md5_bands and _band_pairs). Every
+# band reads ``mins`` and most audits read ``cand`` more than once, so
+# both are materialized: DuckDB inlines a plain CTE at each reference.
+_MINHASH_CTES = f"""hh AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, 8))::BIGINT AS h FROM sh),
+mins AS MATERIALIZED (
     SELECT doc_id,
            {_MHX_MINS}
     FROM hh GROUP BY doc_id
 ),
+sigl AS (SELECT doc_id, {_MHX_SIG_LIST} AS sig FROM mins),
 bands AS (
     {_MHX_BANDS}
 ),
-pairs AS (
+cand AS MATERIALIZED (
     SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
     FROM bands a
     JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-),
-sigl AS (SELECT doc_id, {_MHX_SIG_LIST} AS sig FROM mins),
-est AS (
-    SELECT p.doc_a, p.doc_b,
-           ROUND(len(list_filter(generate_series(1, {MINHASH_PERMS}),
-                                 i -> sa.sig[i] = sb.sig[i]))
-                 / {MINHASH_PERMS}.0, 4) AS est_jaccard
-    FROM pairs p
-    JOIN sigl sa ON sa.doc_id = p.doc_a
-    JOIN sigl sb ON sb.doc_id = p.doc_b
 )"""
 
-MINHASH_EXACT_ORACLE = rf"""{_MHX_CTES}
-SELECT doc_a, doc_b, est_jaccard FROM est WHERE est_jaccard >= 0.7
+# shared CTE block (shingles → MinHash candidates → estimated Jaccard
+# → verified pairs ``vp``) — interpolated by q_minhash_exact and its
+# three censuses so they can never diverge on what the production
+# near-dup pipeline detects.
+_MHX_CTES = f"""
+WITH {_shingle_ctes()},
+{_MINHASH_CTES},
+est AS (
+    SELECT c.doc_a, c.doc_b,
+           ROUND({_agree_sql()} / {MINHASH_PERMS}.0, 4) AS est_jaccard
+    FROM cand c
+    JOIN sigl sa ON sa.doc_id = c.doc_a
+    JOIN sigl sb ON sb.doc_id = c.doc_b
+),
+vp AS MATERIALIZED (SELECT * FROM est WHERE est_jaccard >= 0.7)"""
+
+MINHASH_EXACT_ORACLE = f"""{_MHX_CTES}
+SELECT doc_a, doc_b, est_jaccard FROM vp
 """
 
 
-@query("q_minhash_exact", MINHASH_EXACT_ORACLE)
-def minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup detection, EXACT-ORACLE EDITION: identical
-    algorithm, band geometry (16 bands x 8 rows), permutation constants
-    and >= 0.7 threshold as q_dedup_minhash, but the shingle base hash
-    is the first 8 hex chars of md5 instead of the xxhash64 mix — pure
-    integer algebra DuckDB reproduces bit-for-bit, so the whole LSH
-    pipeline (signatures, band buckets, candidate pairs, estimated
-    Jaccard) is value-checked against SQL, not just row-counted.
-
-    Spark-side the signature stage is 100% JVM column algebra: explode
-    shingles (no dedup — MIN ignores multiplicity, so the distinct's
-    string shuffle is pure cost), one md5+conv per shingle, then
-    {perms} codegen'd MIN aggregates partially aggregated map-side so
-    the ONE shuffle carries only 128 longs per (doc, partition). (a*h + b) stays under 2^63 (31-bit a x 32-bit h), so the
-    arithmetic is overflow-free in both engines. q_dedup_minhash
-    remains the raw-throughput path (map-only numpy signatures, zero
-    shuffle); this twin is the correctness anchor — same plan shape
-    from the bands join onward."""
-    d = load_table(spark, sf_dir, "documents")
-    # NO distinct before the signature aggregate: MIN over a multiset
-    # equals MIN over its set, so duplicate shingles cannot change any
-    # signature — and the distinct's exchange shipped the full shingle
-    # STRING volume across the shuffle just to dedup rows the min
-    # ignores. Without it the 128 mins partial-aggregate map-side and
-    # the only shuffle carries 128 longs per (doc, partition). The
-    # oracle keeps its DISTINCT; values are identical by the argument
-    # above (driver-checked).
-    shingled = (
-        fan_out(d)
-        .select("doc_id", whitespace_tokens("text").alias("toks"))
-        .select("doc_id", F.explode(shingles("toks", 3)).alias("sh"))
-    )
+def _md5_signatures(shingled: DataFrame) -> DataFrame:
+    """(doc_id, sig): the MINHASH_PERMS md5-derived minhash minima of each
+    doc's (doc_id, sh) shingles, as an array. A repeated shingle cannot
+    move a MIN, so ``shingled`` need not be distinct."""
     h32 = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
-    hs = shingled.select("doc_id", h32.alias("h"))
-    mins = hs.groupBy("doc_id").agg(
-        *[
-            F.min(
-                ((F.col("h") % _MERSENNE) * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE)
-            ).alias(f"m{i}")
-            for i, (a, b) in enumerate(_MINHASH_AB)
-        ]
+    h = F.col("h") % _MERSENNE
+    mins = (
+        shingled.select("doc_id", h32.alias("h"))
+        .groupBy("doc_id")
+        .agg(
+            *[
+                F.min((h * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE)).alias(f"m{i}")
+                for i, (a, b) in enumerate(_MINHASH_AB)
+            ]
+        )
     )
-    # sig reused by the bands explode and both est joins —
-    # localCheckpoint, as in q_dedup_minhash (invocation-local reuse
-    # without registering the subplan in the session CacheManager)
-    sig = mins.select(
+    return mins.select(
         "doc_id", F.array(*[f"m{i}" for i in range(MINHASH_PERMS)]).alias("sig")
-    ).localCheckpoint(eager=True)
-    bands = sig.select(
+    )
+
+
+def _md5_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, bh): each signature cut into MINHASH_BANDS bands
+    of MINHASH_ROWS, keyed by the md5 of the band's comma-joined
+    values. ONE explode of an array of band structs, so the signature
+    frame is read once per side of the band join; a 16-way unionAll of
+    projections re-ran the signature aggregate once per band."""
+    return sig.select(
         "doc_id",
         F.explode(
             F.array(
@@ -2591,39 +2561,46 @@ def minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bh")
-    pairs = (
-        bands.alias("x")
-        .join(
-            bands.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    est = (
-        pairs.join(
-            sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")),
-            "doc_a",
-        )
-        .join(
-            sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")),
-            "doc_b",
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.size(
-                    F.filter(
-                        F.zip_with("sig_a", "sig_b", lambda p, q: p == q), lambda eq: eq
-                    )
-                )
-                / F.lit(float(MINHASH_PERMS)),
-                4,
-            ).alias("est_jaccard"),
-        )
+
+
+@query("q_minhash_exact", MINHASH_EXACT_ORACLE)
+def minhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash+LSH near-dup detection, EXACT-ORACLE EDITION: identical
+    algorithm, band geometry (16 bands x 8 rows), permutation constants
+    and >= 0.7 threshold as q_dedup_minhash, but the shingle base hash
+    is the first 8 hex chars of md5 instead of the xxhash64 mix — pure
+    integer algebra DuckDB reproduces bit-for-bit, so the whole LSH
+    pipeline (signatures, band buckets, candidate pairs, estimated
+    Jaccard) is value-checked against SQL, not just row-counted.
+
+    Spark-side the signature stage is 100% JVM column algebra: explode
+    shingles (no dedup — MIN ignores multiplicity, so the distinct's
+    string shuffle is pure cost), one md5+conv per shingle, then
+    {perms} codegen'd MIN aggregates partially aggregated map-side so
+    the ONE shuffle carries only 128 longs per (doc, partition). (a*h + b) stays under 2^63 (31-bit a x 32-bit h), so the
+    arithmetic is overflow-free in both engines. q_dedup_minhash
+    remains the raw-throughput path (map-only numpy signatures, zero
+    shuffle); this twin is the correctness anchor — same plan shape
+    from the bands join onward (_band_pairs, _with_sigs, _agree)."""
+    d = load_table(spark, sf_dir, "documents")
+    # NO distinct before the signature aggregate: MIN over a multiset
+    # equals MIN over its set, so duplicate shingles cannot change any
+    # signature — and the distinct's exchange shipped the full shingle
+    # STRING volume across the shuffle just to dedup rows the min
+    # ignores. Without it the 128 mins partial-aggregate map-side and
+    # the only shuffle carries 128 longs per (doc, partition). The
+    # oracle keeps its DISTINCT; values are identical by the argument
+    # above (driver-checked).
+    # sig is reused by the bands explode and both est joins —
+    # localCheckpoint, as in q_dedup_minhash (invocation-local reuse
+    # without registering the subplan in the session CacheManager)
+    sig = _md5_signatures(_doc_shingles(d)).localCheckpoint(eager=True)
+    est = _with_sigs(_band_pairs(_md5_bands(sig)), sig).select(
+        "doc_a",
+        "doc_b",
+        F.round(_agree("sig_a", "sig_b") / F.lit(float(MINHASH_PERMS)), 4).alias(
+            "est_jaccard"
+        ),
     )
     return est.filter(F.col("est_jaccard") >= 0.7)
 
@@ -2636,7 +2613,7 @@ minhash_exact.__doc__ = minhash_exact.__doc__.format(perms=MINHASH_PERMS)
 # language?
 
 DEDUP_BIAS_ORACLE = rf"""{_MHX_CTES},
-rem AS (SELECT DISTINCT doc_b AS doc_id FROM est WHERE est_jaccard >= 0.7),
+rem AS (SELECT DISTINCT doc_b AS doc_id FROM vp),
 lang_c AS (
     SELECT d.lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(CASE WHEN rem.doc_id IS NOT NULL THEN 1 ELSE 0 END)
@@ -2712,7 +2689,6 @@ def dedup_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
 # or re-posts WITHIN one?
 
 DEDUP_SOURCE_CENSUS_ORACLE = rf"""{_MHX_CTES},
-vp AS (SELECT doc_a, doc_b FROM est WHERE est_jaccard >= 0.7),
 ps AS (SELECT v.doc_a, v.doc_b, da.source AS sa, db.source AS sb
        FROM vp v JOIN documents da ON da.doc_id = v.doc_a
                  JOIN documents db ON db.doc_id = v.doc_b),
@@ -2817,7 +2793,6 @@ def dedup_source_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # save, and do the two filters remove the same documents?
 
 FILTER_DEDUP_OVERLAP_ORACLE = rf"""{_MHX_CTES},
-vp AS (SELECT doc_a, doc_b FROM est WHERE est_jaccard >= 0.7),
 remd AS (SELECT DISTINCT doc_b AS doc_id FROM vp),
 qf AS (
     SELECT doc_id, CAST(f_len + f_dens + f_punct + f_stop >= 1 AS INT) AS f_any
@@ -4728,18 +4703,15 @@ def shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # n-gram novelty: per-document share of corpus-first shingles
 
-NOVELTY_ORACLE = r"""
+NOVELTY_ORACLE = f"""
 WITH tok AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '') AS ws
+           {WHITESPACE_TOKENS_SQL} AS ws
     FROM documents
 ),
 sh AS (
     SELECT DISTINCT doc_id,
-        ('0x' || substr(md5(unnest(
-            list_transform(generate_series(1, len(ws) - 2),
-                           i -> ws[i] || '|' || ws[i+1] || '|' || ws[i+2]))),
-            1, 12))::BIGINT AS g
+        ('0x' || substr(md5(unnest({SHINGLES_SQL})), 1, 12))::BIGINT AS g
     FROM tok
     WHERE len(ws) >= 3
 ),
@@ -5778,9 +5750,10 @@ def winnowing_band_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # survivors x filter-attribution: how much of the fingerprint-dedup
 # removed mass the cheap quality gates already reject (closes the
-# curation loop: agreement -> axis -> survivors -> is the dedup needed?)
+# curation loop: agreement -> axis -> survivors -> is the dedup needed?);
+# wlab is read twice, so it is materialized, not inlined per reference
 BAND_FILTER_ATTRIBUTION_ORACLE = rf"""
-WITH wlab AS ({WINNOWING_BAND_CLUSTERS_ORACLE}),
+WITH wlab AS MATERIALIZED ({WINNOWING_BAND_CLUSTERS_ORACLE}),
 surv AS ({_survivors_oracle("SELECT * FROM wlab")}),
 removed AS (
     SELECT l.doc_id
@@ -5944,14 +5917,15 @@ _AXES = {
 def _agreement_ctes(axes: str) -> str:
     """The WITH list an agreement oracle starts from, over the axes
     named by letter in ``axes`` (j: Jaccard, w: winnowing, s: SimHash).
-    Per axis x: ``{x}lab`` its cluster oracle, ``{x}sz`` the cluster
-    sizes and ``p_{name}`` the one-row Σ C(sz,2) same-cluster pair
-    count ``n_pairs_{name}``. Per pair of axes xy: ``p_{xy}``, the
-    agreed-pair count ``n_pairs_{xy}`` (Σ C(sz,2) over the joint label
-    grouping: two docs pair under both axes iff they share both
-    labels). Then ``flags(doc_id, d{x}...)``: the doc sits in a cluster
-    of ≥2 under axis x. A census reads the CTEs it needs; DuckDB binds
-    no other."""
+    Per axis x: ``{x}lab`` its cluster oracle (materialized: it is read
+    2-3 times, and DuckDB inlines a plain CTE at each reference),
+    ``{x}sz`` the cluster sizes and ``p_{name}`` the one-row Σ C(sz,2)
+    same-cluster pair count ``n_pairs_{name}``. Per pair of axes xy:
+    ``p_{xy}``, the agreed-pair count ``n_pairs_{xy}`` (Σ C(sz,2) over
+    the joint label grouping: two docs pair under both axes iff they
+    share both labels). Then ``flags(doc_id, d{x}...)``: the doc sits
+    in a cluster of ≥2 under axis x. A census reads the CTEs it needs;
+    DuckDB binds no other."""
 
     def pairs(cte: str, name: str, sizes: str) -> str:
         return (
@@ -5959,7 +5933,7 @@ def _agreement_ctes(axes: str) -> str:
             f" AS n_pairs_{name} FROM {sizes})"
         )
 
-    ctes = [f"{x}lab AS ({_AXES[x][1]})" for x in axes]
+    ctes = [f"{x}lab AS MATERIALIZED ({_AXES[x][1]})" for x in axes]
     ctes += [
         f"{x}sz AS (SELECT cluster_id, COUNT(*) AS sz FROM {x}lab GROUP BY cluster_id)"
         for x in axes
@@ -6819,47 +6793,19 @@ def auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LSHR_SLICE = 100  # audit slice: doc_id < 100
 _LSHR_TAU = 0.7
 
-# Shared audit CTEs (truth pairs `tp` + banded candidates `cand` on the
-# fixed slice) — interpolated by BOTH q_lsh_recall and q_lsh_precision
-# so the two audits can never diverge on what a candidate or a true
-# pair is.
-_LSH_AUDIT_CTES = rf"""
-WITH tok AS (
-    SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '') AS ws
-    FROM documents WHERE doc_id < {_LSHR_SLICE}
-),
-sh AS (
-    SELECT DISTINCT doc_id, unnest(
-        list_transform(generate_series(1, len(ws) - 2),
-                       i -> ws[i] || '|' || ws[i+1] || '|' || ws[i+2])) AS sh
-    FROM tok WHERE len(ws) >= 3
-),
-n AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-jp AS (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           ROUND(COUNT(*)::DOUBLE
-                 / (ANY_VALUE(na.n) + ANY_VALUE(nb.n) - COUNT(*)), 6) AS j
-    FROM sh a
-    JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-    JOIN n na ON na.doc_id = a.doc_id
-    JOIN n nb ON nb.doc_id = b.doc_id
-    GROUP BY a.doc_id, b.doc_id
-),
-tp AS (SELECT doc_a, doc_b FROM jp WHERE j >= {_LSHR_TAU}),
-hh AS (SELECT doc_id, ('0x' || substr(md5(sh), 1, 8))::BIGINT AS h FROM sh),
-mins AS (
-    SELECT doc_id,
-           {_MHX_MINS}
-    FROM hh GROUP BY doc_id
-),
-bands AS (
-    {_MHX_BANDS}
-),
-cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a
-    JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
-)"""
+# The audit slice's shingles ``sh`` and exact pairs ``n``/``jp`` —
+# interpolated by every audit, so they can never diverge on what a
+# pair's similarity is.
+_AUDIT_PAIRS_CTES = f"""
+WITH {_shingle_ctes(f"doc_id < {_LSHR_SLICE}")},
+{_JACCARD_CTES}"""
+
+# ... plus the truth pairs ``tp`` and the banded candidates ``cand``
+# (q_lsh_recall, q_lsh_precision) and the signatures ``sigl``
+# (q_minhash_perm_sensitivity).
+_LSH_AUDIT_CTES = f"""{_AUDIT_PAIRS_CTES},
+tp AS MATERIALIZED (SELECT doc_a, doc_b FROM jp WHERE j >= {_LSHR_TAU}),
+{_MINHASH_CTES}"""
 
 LSH_RECALL_ORACLE = rf"""{_LSH_AUDIT_CTES}
 SELECT (SELECT COUNT(*) FROM tp) AS n_true_pairs,
@@ -6875,75 +6821,19 @@ def _audit_jaccard_pairs(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Audit-slice shingle frame + FULL exact-Jaccard pair table
-    (doc_a, doc_b, j) — the one definition of pairwise text similarity
-    shared by q_lsh_recall / q_lsh_precision (truth = j >= tau) and
-    q_dedup_threshold_curve (the whole curve over j). Both frames are
-    localCheckpointed: slice-bounded, and every consumer forks the plan
-    at least once."""
+    (doc_a, doc_b, j) from _overlaps, with no hot cap — the one
+    definition of pairwise text similarity shared by q_lsh_recall /
+    q_lsh_precision (truth = j >= tau), q_dedup_threshold_curve (the
+    whole curve over j), q_lsh_planner and
+    q_minhash_perm_sensitivity. Both frames are localCheckpointed:
+    slice-bounded, and every consumer forks the plan at least once."""
     d = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < _LSHR_SLICE
     )
-    shingled = (
-        # fan_out: the slice predicate pushes into ONE parquet split, so
-        # without it the tokenize/shingle/md5 map work runs on a single
-        # core until the distinct's exchange (no-op on a many-split scan)
-        fan_out(d)
-        .select("doc_id", whitespace_tokens("text").alias("toks"))
-        .where(F.size("toks") >= 3)
-        .select("doc_id", F.explode(shingles("toks", 3)).alias("sh"))
-        .distinct()
-        .localCheckpoint(eager=True)  # slice-bounded; feeds truth + signatures
-    )
-    n = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = shingled.alias("a"), shingled.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    na = n.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    nb = n.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    jp = (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("c").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("c")),
-                6,
-            ).alias("j"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    # slice-bounded; feeds truth + signatures
+    shingled = _doc_shingles(d).distinct().localCheckpoint(eager=True)
+    jp = _overlaps(shingled).select("doc_a", "doc_b", "j").localCheckpoint(eager=True)
     return shingled, jp
-
-
-def _audit_minhash_mins(shingled: DataFrame) -> DataFrame:
-    """128 md5-derived minhash minima per audit-slice doc (the exact
-    geometry of q_minhash_exact) — shared by the banding audits and
-    the permutation-budget sensitivity census."""
-    h32 = F.conv(F.substring(F.md5("sh"), 1, 8), 16, 10).cast("long")
-    return (
-        shingled.select("doc_id", h32.alias("h"))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min(
-                    ((F.col("h") % _MERSENNE) * F.lit(aa) + F.lit(bb))
-                    % F.lit(_MERSENNE)
-                ).alias(f"m{i}")
-                for i, (aa, bb) in enumerate(_MINHASH_AB)
-            ]
-        )
-    )
 
 
 def _lsh_audit_frames(
@@ -6953,53 +6843,12 @@ def _lsh_audit_frames(
     (true pairs at Jaccard >= tau, banded candidate pairs) — truth
     derives from _audit_jaccard_pairs' checkpointed pair table, so the
     recall, precision and threshold-curve audits can never disagree on
-    what a true pair is."""
+    what a true pair is; candidates are q_minhash_exact's kernels
+    (_md5_signatures, _md5_bands, _band_pairs) on the slice."""
     shingled, jp = _audit_jaccard_pairs(spark, sf_dir)
     tp = jp.where(F.col("j") >= _LSHR_TAU).select("doc_a", "doc_b")
-    mins = _audit_minhash_mins(shingled)
-    # ONE pass over the signature aggregate: explode an array of
-    # (band, bh) structs instead of a 16-way unionAll of projections —
-    # the union shape re-ran the 128-min final aggregation once per
-    # band (and twice per band across the self-join's two sides); the
-    # explode computes it once per side with the exchange reused
-    # (q_minhash_exact's proven banding shape, identical values).
-    bands = mins.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"m{bi * MINHASH_ROWS + r}").cast(
-                                        "string"
-                                    )
-                                    for r in range(MINHASH_ROWS)
-                                ],
-                            )
-                        ).alias("bh"),
-                    )
-                    for bi in range(MINHASH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bh")
-    ba, bb2 = bands.alias("ba"), bands.alias("bb")
-    cand = (
-        ba.join(
-            bb2,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.bh") == F.col("bb.bh"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("doc_a"), F.col("bb.doc_id").alias("doc_b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+    cand = _band_pairs(_md5_bands(_md5_signatures(shingled))).localCheckpoint(
+        eager=True
     )
     return tp, cand
 
@@ -7076,8 +6925,10 @@ def lsh_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     [engine — not in reference]
 
     Scale design: identical to q_lsh_recall — both audits share
-    _lsh_audit_frames / _LSH_AUDIT_CTES, one definition of truth and
-    candidates on the fixed sampled slice; this op adds only scalar
+    _lsh_audit_frames (truth from _overlaps, candidates from
+    _md5_signatures → _md5_bands → _band_pairs) and their SQL twins
+    in _LSH_AUDIT_CTES, one definition of truth and candidates on the
+    fixed sampled slice; this op adds only scalar
     aggregates over those frames, cross-joined into one row."""
     tp, cand = _lsh_audit_frames(spark, sf_dir)
     ver = cand.join(tp, ["doc_a", "doc_b"], "left_semi")
@@ -7108,7 +6959,7 @@ def lsh_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DEDUP_THRESHOLD_CURVE_ORACLE = rf"""{_LSH_AUDIT_CTES},
+DEDUP_THRESHOLD_CURVE_ORACLE = rf"""{_AUDIT_PAIRS_CTES},
 grid AS (SELECT i.i * 1.0 / 10 AS tau
          FROM unnest(generate_series(1, 9)) AS i(i)),
 nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_slice_docs FROM n)
@@ -7142,9 +6993,9 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast rows, so the curve is one broadcast range-join of the
     slice-bounded checkpointed pair table against 9 thresholds plus a
     9-group aggregate — flat at any corpus size by construction. Truth
-    shares _audit_jaccard_pairs / the jp CTE with the recall and
-    precision audits, so the three can never diverge on pair
-    similarity."""
+    is _overlaps' j on the slice (the jp CTE of _JACCARD_CTES in the
+    oracle), shared with the recall and precision audits, so the three
+    can never diverge on pair similarity."""
     shingled, jp = _audit_jaccard_pairs(spark, sf_dir)
     grid = spark.range(1, 10).select(
         (F.col("id") * 1.0 / 10).alias("tau")
@@ -7225,7 +7076,7 @@ def _plan_p_col(b: int, r: int):
     return F.lit(1.0) - y
 
 
-LSH_PLANNER_ORACLE = rf"""{_LSH_AUDIT_CTES},
+LSH_PLANNER_ORACLE = rf"""{_AUDIT_PAIRS_CTES},
 s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
              {", ".join(
                  f"ROUND(CAST(SUM(CAST(FLOOR({_plan_p_sql(b, r)} * 100000000.0) AS BIGINT)) AS BIGINT)"
@@ -7257,8 +7108,8 @@ def lsh_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity table so the choice is a lookup, not a redeploy loop.
     [engine — not in reference]
 
-    Scale design: the data-dependent half is one aggregate over
-    _audit_jaccard_pairs' slice-bounded checkpointed pair table (the
+    Scale design: the data-dependent half is one aggregate over the
+    slice-bounded checkpointed _overlaps pair table (the
     sampled-ground-truth pattern shared with the recall/precision/
     threshold-curve audits — one definition of pair similarity for the
     whole family); the five geometry sums ride a single pass, and the
@@ -7318,12 +7169,9 @@ def lsh_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PSENS_PERMS = [16, 32, 64, 128]
 
 MINHASH_PERM_SENS_ORACLE = rf"""{_LSH_AUDIT_CTES},
-sigl AS (SELECT doc_id, {_MHX_SIG_LIST} AS sig FROM mins),
 pe AS (
     SELECT jp.j,
-           {", ".join(
-               f"len(list_filter(generate_series(1, {p}), i -> sa.sig[i] = sb.sig[i])) / {p}.0 AS est{p}"
-               for p in _PSENS_PERMS)}
+           {", ".join(f"{_agree_sql(p)} / {p}.0 AS est{p}" for p in _PSENS_PERMS)}
     FROM jp JOIN sigl sa ON sa.doc_id = jp.doc_a
             JOIN sigl sb ON sb.doc_id = jp.doc_b
 ),
@@ -7357,43 +7205,18 @@ def minhash_perm_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: signatures are prefix-closed (perm i is perm i for
     every budget), so ALL four budgets are scored from ONE signature
     computation — the same md5-derived minima frame the banding audits
-    use (_audit_minhash_mins, q_minhash_exact's exact geometry), joined
+    use (_md5_signatures, q_minhash_exact's exact geometry), joined
     once against the slice-bounded checkpointed exact-pair table; the
     census is one aggregate unpivoted to 4 literal-struct rows.
     est = agreements/2^k is a dyadic rational, exact in both engines'
     doubles."""
     shingled, jp = _audit_jaccard_pairs(spark, sf_dir)
-    sig = _audit_minhash_mins(shingled).select(
-        "doc_id", F.array(*[f"m{i}" for i in range(MINHASH_PERMS)]).alias("sig")
-    )
-    pe = (
-        jp.join(
-            sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")),
-            "doc_a",
-        )
-        .join(
-            sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")),
-            "doc_b",
-        )
-        .select(
-            "j",
-            *[
-                (
-                    F.size(
-                        F.filter(
-                            F.zip_with(
-                                F.slice("sig_a", 1, p),
-                                F.slice("sig_b", 1, p),
-                                lambda x, y: x == y,
-                            ),
-                            lambda eq: eq,
-                        )
-                    )
-                    / F.lit(float(p))
-                ).alias(f"est{p}")
-                for p in _PSENS_PERMS
-            ],
-        )
+    pe = _with_sigs(jp, _md5_signatures(shingled)).select(
+        "j",
+        *[
+            (_agree("sig_a", "sig_b", p) / F.lit(float(p))).alias(f"est{p}")
+            for p in _PSENS_PERMS
+        ],
     )
     s = pe.agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pcap_to_parquet_spark.functions.text import WHITESPACE_TOKENS_SQL
 from pcap_to_parquet_spark.registry import query
 from pcap_to_parquet_spark.sources import load_table
 
@@ -111,10 +112,8 @@ def theta_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CM_D = 4  # hash rows
 _CM_W = 1024  # counters per row
 
-_CM_TOK_SQL = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')"
-
 COUNTMIN_ORACLE = f"""
-WITH tok AS (SELECT unnest({_CM_TOK_SQL}) AS t FROM documents),
+WITH tok AS (SELECT unnest({WHITESPACE_TOKENS_SQL}) AS t FROM documents),
 pos AS (
     -- ONE md5 per occurrence; row i's hash is hex slice [8i, 8i+8) of
     -- the 32-hex digest (independent-enough rows, 4x less hashing)

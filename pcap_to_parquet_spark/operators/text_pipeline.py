@@ -16,18 +16,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pcap_to_parquet_spark.functions.text import shingles, whitespace_tokens
+from pcap_to_parquet_spark.functions.text import (
+    SHINGLES_SQL,
+    WHITESPACE_TOKENS_SQL,
+    shingles,
+    whitespace_tokens,
+)
 from pcap_to_parquet_spark.functions.vectors import cosine_similarity
 from pcap_to_parquet_spark.registry import query
 from pcap_to_parquet_spark.sources import load_table, fan_out
 
-# shared SQL fragments (DuckDB): \s+ tokens and pipe-joined 3-gram
-# shingles — identical to functions/text.py's column algebra
-_TOK_SQL = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')"
-_SH_SQL = (
-    "list_transform(generate_series(1, len(ws) - 2), "
-    "i -> ws[i] || '|' || ws[i+1] || '|' || ws[i+2])"
-)
 # the md5 split gate, byte-identical to operators/llm.py train_test_split
 _GATE_SQL = "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT % 100"
 
@@ -41,9 +39,9 @@ WITH split AS (
            CASE WHEN {_GATE_SQL} < 80 THEN 'train' ELSE 'heldout' END AS split
     FROM documents
 ),
-tok AS (SELECT doc_id, split, {_TOK_SQL} AS ws FROM split),
+tok AS (SELECT doc_id, split, {WHITESPACE_TOKENS_SQL} AS ws FROM split),
 sh AS (
-    SELECT DISTINCT doc_id, split, unnest({_SH_SQL}) AS sh
+    SELECT DISTINCT doc_id, split, unnest({SHINGLES_SQL}) AS sh
     FROM tok WHERE len(ws) >= 3
 ),
 heldout_sh AS (SELECT DISTINCT sh FROM sh WHERE split = 'heldout')
@@ -94,7 +92,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TFIDF_ORACLE = rf"""
 WITH tok AS (
-    SELECT doc_id, lang, unnest({_TOK_SQL}) AS token
+    SELECT doc_id, lang, unnest({WHITESPACE_TOKENS_SQL}) AS token
     FROM (SELECT doc_id, lang, text FROM documents)
 ),
 tf AS (SELECT lang, token, COUNT(*) AS tf FROM tok GROUP BY lang, token),
@@ -171,8 +169,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # within-document repetition score
 
 REPETITION_ORACLE = rf"""
-WITH tok AS (SELECT doc_id, {_TOK_SQL} AS ws FROM documents),
-sh AS (SELECT doc_id, {_SH_SQL} AS shs FROM tok WHERE len(ws) >= 3)
+WITH tok AS (SELECT doc_id, {WHITESPACE_TOKENS_SQL} AS ws FROM documents),
+sh AS (SELECT doc_id, {SHINGLES_SQL} AS shs FROM tok WHERE len(ws) >= 3)
 SELECT doc_id,
        CAST(len(shs) AS BIGINT) AS n_shingles,
        CAST(len(list_distinct(shs)) AS BIGINT) AS n_distinct,
@@ -205,7 +203,7 @@ def repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 VOCAB_ORACLE = rf"""
 WITH tok AS (
-    SELECT unnest({_TOK_SQL}) AS token
+    SELECT unnest({WHITESPACE_TOKENS_SQL}) AS token
     FROM (SELECT text FROM documents)
 ),
 counts AS (SELECT token, COUNT(*) AS n FROM tok GROUP BY token HAVING COUNT(*) >= 5)
@@ -243,7 +241,7 @@ _TERMS_SQL = ", ".join(f"'{t}'" for t in _BM25_TERMS)
 
 BM25_ORACLE = rf"""
 WITH tok AS (
-    SELECT doc_id, unnest({_TOK_SQL}) AS token FROM documents
+    SELECT doc_id, unnest({WHITESPACE_TOKENS_SQL}) AS token FROM documents
 ),
 dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
 stats AS (SELECT AVG(dl) AS avgdl, COUNT(*) AS n FROM dl),
@@ -468,7 +466,7 @@ _HIST_BUCKET = 10
 
 LENGTH_HISTOGRAM_ORACLE = rf"""
 WITH n AS (
-    SELECT len({_TOK_SQL}) AS n_toks FROM documents
+    SELECT len({WHITESPACE_TOKENS_SQL}) AS n_toks FROM documents
 )
 SELECT CAST(n_toks // {_HIST_BUCKET} * {_HIST_BUCKET} AS BIGINT) AS bucket_lo,
        COUNT(*) AS n_docs
@@ -502,7 +500,7 @@ def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LM_ALPHA = 0.5
 
 NGRAM_LM_ORACLE = rf"""
-WITH toks AS (SELECT doc_id, {_TOK_SQL} AS ts FROM documents),
+WITH toks AS (SELECT doc_id, {WHITESPACE_TOKENS_SQL} AS ts FROM documents),
 uni AS (SELECT unnest(ts) AS w FROM toks),
 ucnt AS (SELECT w, COUNT(*) AS c FROM uni GROUP BY w),
 v AS (SELECT COUNT(*) AS nv FROM ucnt),
@@ -581,7 +579,7 @@ _PACK_BUDGET = 512
 SEQUENCE_PACK_ORACLE = rf"""
 WITH t AS (
     SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS k,
-           len({_TOK_SQL}) AS n_toks
+           len({WHITESPACE_TOKENS_SQL}) AS n_toks
     FROM documents
 ),
 c AS (
@@ -656,12 +654,12 @@ sequence_pack.__doc__ = sequence_pack.__doc__.format(budget=_PACK_BUDGET)
 
 PACK_PLANNER_ORACLE = rf"""
 WITH RECURSIVE h AS MATERIALIZED (
-    SELECT LEAST(len({_TOK_SQL}), {_PACK_BUDGET}) AS l,
+    SELECT LEAST(len({WHITESPACE_TOKENS_SQL}), {_PACK_BUDGET}) AS l,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(len({_TOK_SQL}) > {_PACK_BUDGET} AS INT)) AS BIGINT)
+           CAST(SUM(CAST(len({WHITESPACE_TOKENS_SQL}) > {_PACK_BUDGET} AS INT)) AS BIGINT)
                AS n_trunc
     FROM documents
-    WHERE len({_TOK_SQL}) >= 1
+    WHERE len({WHITESPACE_TOKENS_SQL}) >= 1
     GROUP BY 1
 ),
 ord AS MATERIALIZED (
@@ -1122,7 +1120,7 @@ def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DUPSPAN_N = 5  # span length in tokens
 
 DUP_SPAN_ORACLE = rf"""
-WITH tok AS (SELECT doc_id, {_TOK_SQL} AS ws FROM documents),
+WITH tok AS (SELECT doc_id, {WHITESPACE_TOKENS_SQL} AS ws FROM documents),
 g AS (
     SELECT doc_id,
            unnest(generate_series(1, greatest(len(ws) - 4, 0))) AS pos,
@@ -1230,7 +1228,7 @@ _PMI_MIN_COUNT = 5
 _PMI_TOP = 20
 
 PMI_ORACLE = rf"""
-WITH tok AS (SELECT doc_id, {_TOK_SQL} AS ws FROM documents),
+WITH tok AS (SELECT doc_id, {WHITESPACE_TOKENS_SQL} AS ws FROM documents),
 uni AS (SELECT unnest(ws) AS t FROM tok),
 ucnt AS (SELECT t, COUNT(*) AS n FROM uni GROUP BY t),
 bg AS (
@@ -1320,7 +1318,7 @@ pmi_bigrams.__doc__ = pmi_bigrams.__doc__.format(top=_PMI_TOP, mc=_PMI_MIN_COUNT
 # duplicated-span REMOVAL: the transform the coverage measure meters
 
 DUP_REMOVE_ORACLE = rf"""
-WITH tok AS (SELECT doc_id, {_TOK_SQL} AS ws FROM documents),
+WITH tok AS (SELECT doc_id, {WHITESPACE_TOKENS_SQL} AS ws FROM documents),
 g AS (
     SELECT doc_id,
            unnest(generate_series(1, greatest(len(ws) - 4, 0))) AS pos,
@@ -1862,7 +1860,7 @@ vocab_coverage.__doc__ = vocab_coverage.__doc__.format(
 _DSIR_B = 1024  # hash buckets; the paper's 10k scaled to the test corpus
 
 DSIR_ORACLE = rf"""
-WITH tok AS (SELECT doc_id, lang, {_TOK_SQL} AS ws FROM documents),
+WITH tok AS (SELECT doc_id, lang, {WHITESPACE_TOKENS_SQL} AS ws FROM documents),
 feats AS (
     SELECT doc_id, lang,
            unnest(list_concat(ws,
@@ -1964,7 +1962,7 @@ _RRF_K = 60
 
 RRF_ORACLE = rf"""
 WITH tok AS (
-    SELECT doc_id, unnest({_TOK_SQL}) AS token FROM documents
+    SELECT doc_id, unnest({WHITESPACE_TOKENS_SQL}) AS token FROM documents
 ),
 dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
 stats AS (SELECT AVG(dl) AS avgdl, COUNT(*) AS n FROM dl),
@@ -2735,7 +2733,7 @@ _JSD_B = "src1"
 
 JSD_ORACLE = rf"""
 WITH tok AS (
-    SELECT source, unnest({_TOK_SQL}) AS token
+    SELECT source, unnest({WHITESPACE_TOKENS_SQL}) AS token
     FROM documents WHERE source IN ('{_JSD_A}', '{_JSD_B}')
 ),
 cnt AS (

@@ -22,6 +22,7 @@ from pyspark.sql.types import (
 )
 
 from pcap_to_parquet_spark.operators.behavior import HOLT_ORACLE as _HOLT_ORACLE
+from pcap_to_parquet_spark.operators.text_pipeline import DECONTAMINATE_ORACLE
 from pcap_to_parquet_spark.operators.sessionize import GAP_SECONDS
 from pcap_to_parquet_spark.registry import query
 from pcap_to_parquet_spark.session import tune
@@ -1117,32 +1118,8 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.readStream.schema(schema).format("parquet").load(d)
 
 
-STREAM_DECON_ORACLE = """
-WITH split AS (
-    SELECT doc_id, text,
-           CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::INT % 100 < 80
-                THEN 'train' ELSE 'heldout' END AS split
-    FROM documents
-),
-tok AS (SELECT doc_id, split,
-               list_filter(regexp_split_to_array(text, '\\s+'), t -> t <> '') AS ws
-        FROM split),
-sh AS (
-    SELECT DISTINCT doc_id, split, unnest(
-        list_transform(generate_series(1, len(ws) - 2),
-                       i -> ws[i] || '|' || ws[i+1] || '|' || ws[i+2])) AS sh
-    FROM tok WHERE len(ws) >= 3
-),
-heldout_sh AS (SELECT DISTINCT sh FROM sh WHERE split = 'heldout')
-SELECT s.doc_id, COUNT(*) AS n_shared_shingles
-FROM sh s
-JOIN heldout_sh h ON s.sh = h.sh
-WHERE s.split = 'train'
-GROUP BY s.doc_id
-"""
-
-
-@query("q_stream_decontaminate", STREAM_DECON_ORACLE)
+# the batch q_decontaminate's oracle: both ops flag the same train docs
+@query("q_stream_decontaminate", DECONTAMINATE_ORACLE)
 def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination ON THE INGEST PATH: as training documents
     stream in, each is checked against a STATIC held-out benchmark

@@ -28,6 +28,25 @@ def count_jobs(spark, fn) -> int:
     return int(window_counters(job_times, stages, start, end, sc.defaultParallelism)["jobs"])
 
 
+def count_actions(spark, fn) -> int:
+    """SQL executions (actions: each localCheckpoint, count, collect or
+    write) that ``fn`` runs, from the SQL status store. Counts the
+    execution ids above the highest one recorded before ``fn``: the
+    store keeps only the newest ``spark.sql.ui.retainedExecutions``, so
+    in a long session its length stops growing."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def ids() -> list[int]:
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i).executionId() for i in range(execs.size())]
+
+    before = max(ids(), default=-1)
+    fn()
+    return sum(1 for i in ids() if i > before)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from pcap_to_parquet_spark.session import get_spark
