@@ -1,297 +1,58 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
+The correctness gate runs ``entry(spark)`` as a smoke check, runs the
+first 50 entries of ``queries()`` at sf=0.01 and compares each against
+the matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
-Implementation lives in the ``pcap_to_parquet_spark`` package; this
-module is a thin adapter over its registry.
+The order is computed from the committed CORRECTNESS_r{N}.json records
+next to this file: queries never checked or whose latest check failed
+come first, then the least recently passed, ties by name; queries
+without an oracle come last. Implementation lives in the
+``pcap_to_parquet_spark`` package; this module adapts its registry.
 """
 
 from __future__ import annotations
 
-import os
+import json
+import re
 import sys
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = Path(__file__).absolute().parent
+sys.path.insert(0, str(_HERE))
 
 import pcap_to_parquet_spark.operators  # noqa: F401  (registers all queries)
 from pcap_to_parquet_spark.operators.flagship import revenue_by_nation
 from pcap_to_parquet_spark.registry import ORACLES, QUERIES
 
 SF0001_DIR = "/root/testdata/sf0.001"
+_RECORD = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
-# The driver's correctness gate verifies the first 50 entries of
-# queries() in iteration order, so this list puts the entries to check
-# next at the front; the rest follow in registry order. Every name must
-# be registered (test_gate_front_names_exist).
-_GATE_FRONT = [
-    "q_pcap_stream_closed_flows",
-    "q_winnowing_band_members",
-    "q_winnowing_band_clusters",
-    "q_pcap_flow_timeout",
-    "q_pcap_stream_flow_records",
-    "q_dedup_method_agreement",
-    "q_winnowing_band_survivors",
-    "q_pcap_flow_timeout_reset",
-    "q_holt_forecast",
-    "q_multi_regression",
-    "q_stream_holt",
-    "q_dsir_weights",
-    "q_rrf_fusion",
-    "q_ndcg_eval",
-    "q_hard_negatives",
-    "q_adamic_adar",
-    "q_shard_assign",
-    "q_rake_keywords",
-    "q_ks_drift",
-    "q_zipf_fit",
-    "q_ngram_novelty",
-    "q_embed_outliers",
-    "q_kcore",
-    "q_unigram_lm",
-    "q_srp_lsh",
-    "q_changepoint",
-    "q_degree_powerlaw",
-    "q_mutual_nn",
-    "q_mutual_info",
-    "q_winnowing",
-    "q_srp_recall",
-    "q_coreset",
-    "q_span_mask",
-    "q_dp_counts",
-    "q_auc_eval",
-    "q_lsh_recall",
-    "q_psi_drift",
-    "q_similarity_ivf",
-    "q_pcapng_pipeline",
-    "q_pcap_datasource",
-    "q_pcap_trailers",
-    "q_audio_features",
-    "q_bloom_prefilter",
-    "q_dedup_simhash",
-    "q_stream_session",
-    "q_stream_stateful",
-    "q_rollup",
-    "q_cube",
-    "q_pack_planner",
-    "q_lsh_precision",
-    "q_pcap_stream_talkers",
-    "q_dedup_simhash_clusters",
-    "q_dedup_method_agreement3",
-    "q_band_filter_attribution",
-    "q_dedup_simhash_survivors",
-    "q_dedup_agreement_by_source",
-    "q_grouping_sets",
-    "q_inner_join",
-    "q_broadcast_join",
-    "q_outer_join",
-    "q_full_outer_join",
-    "q_semi_join",
-    "q_anti_join",
-    "q_range_join",
-    "q_asof_join",
-    "q_kmeans",
-    "q_pq_ann",
-    "q_ivf_pq",
-    "q_residual_quant",
-    "q_self_join",
-    "q_binned_range_join",
-    "q_dedup_exact",
-    "q_train_test_split",
-    "q_data_mixing",
-    "q_embed_neardup",
-    "q_similarity_topk",
-    "q_text_stats",
-    "q_quality_score",
-    "q_lang_id",
-    "q_fingerprint",
-    "q_filter_project",
-    "q_case_when",
-    "q_null_semantics",
-    "q_sort_limit",
-    "q_distinct",
-    "q_union",
-    "q_intersect",
-    "q_except",
-    "q_pivot",
-    "q_unpivot",
-    "q_subquery_scalar",
-    "q_sql_disjunctive",
-    "q_fuzzy_join",
-    "q_sql_lateral",
-    "q_sql_recursive",
-    "q_variant_shred",
-    "q_dynamic_overwrite",
-    "q_cow_delete",
-    "q_zorder_lake",
-    "q_heavy_hitters",
-    "q_sql_small_qty",
-    "q_sql_waiting_supplier",
-    "q_ngram_lm_score",
-    "q_cogroup_diff",
-    "q_token_fertility",
-    "q_dedup_threshold_curve",
-    "q_filter_attribution",
-    "q_vocab_coverage",
-    "q_split_balance",
-    "q_dedup_bias",
-    "q_lsh_planner",
-    "q_filter_dedup_overlap",
-    "q_context_fit",
-    "q_cluster_size_census",
-    "q_dedup_source_census",
-    "q_stream_filter_attribution",
-    "q_minhash_perm_sensitivity",
-    "q_ivf_probe_curve",
-    "q_quantile_bucketize",
-    "q_countmin_topk",
-    "q_scd2_lookup",
-    "q_permissive_ingest",
-    "q_embed_pool",
-    "q_table_checksum",
-    "q_session_window",
-    "q_skyline",
-    "q_observed_load",
-    "q_xml_ingest",
-    "q_cidr_enrich",
-    "q_chi2_test",
-    "q_calibration_ece",
-    "q_l_diversity",
-    "q_acf",
-    "q_seasonal_decompose",
-    "q_conformal_intervals",
-    "q_jackknife_ci",
-    "q_naive_bayes",
-    "q_anova_f",
-    "q_benford",
-    "q_ips_eval",
-    "q_bootstrap_ci",
-    "q_opq_train",
-    "q_image_neardup",
-    "q_audio_neardup",
-    "q_video_neardup",
-    "q_semdedup",
-    "q_image_dhash",
-    "q_sql_custdist",
-    "q_sql_big_orders",
-    "q_sql_idle_customers",
-    "q_sequence_pack",
-    "q_sql_late_orders",
-    "q_sql_nation_volume",
-    "q_sql_market_share",
-    "q_session_quality",
-    "q_pcap_flow_stats",
-    "q_session_transitions",
-    "q_stream_session_quality",
-    "q_fulfillment_latency",
-    "q_repeat_cadence",
-    "q_skew_planner",
-    "q_sql_promo_share",
-    "q_sql_product_profit",
-    "q_sql_parts_suppliers",
-    "q_doc_chunks",
-    "q_kmv_distinct",
-    "q_minhash_exact",
-    "q_pagerank",
-    "q_triangle_cap",
-    "q_stream_funnel",
-    "q_knn_join",
-    "q_stream_kmv",
-    "q_mmr_diversify",
-    "q_attribution",
-    "q_components_star",
-    "q_weighted_sample",
-    "q_stream_decontaminate",
-    "q_forecast_eval",
-    "q_pcap_pipeline",
-    "q_stream_topk",
-    "q_sql_min_cost_supplier",
-    "q_sql_excess_supplier",
-    "q_sql_forecast_revenue",
-    "q_sql_important_stock",
-    "q_sql_shipmode_priority",
-    "q_density_clusters",
-    "q_spearman_corr",
-    "q_kendall_tau",
-    "q_mann_whitney",
-    "q_t_closeness",
-    "q_isotonic_calibration",
-    "q_pacf",
-    "q_mrr_eval",
-    "q_map_eval",
-    "q_referential_integrity",
-    "q_levene_test",
-    "q_cohens_kappa",
-    "q_brier_decomposition",
-    "q_readability",
-    "q_matryoshka_recall",
-    "q_label_noise",
-    "q_kaplan_meier",
-    "q_js_divergence",
-    "q_mcnemar_test",
-    "q_pcap_v6_flows",
-    "q_pcap_biflow",
-    "q_supplier_fulfillment",
-    "q_pcap_talkers",
-    "q_winnowing_band",
-    "q_winnowing_band_curve",
-    "q_fulfillment_matrix",
-    "q_pcap_stream_biflow",
-    "q_burstiness",
-    "q_weighted_median",
-    "q_hill_tail",
-    "q_simpson_paradox",
-    "q_k_anonymity",
-    "q_text_source",
-    "q_kmv_window",
-    "q_lpa_communities",
-    "q_winsorized_mean",
-    "q_sentence_chunks",
-    "q_numeric_histogram",
-    "q_cusum_drift",
-    "q_rfm_segments",
-    "q_gini",
-    "q_char_entropy",
-    "q_rolling_corr",
-    "q_mad_outliers",
-    "q_top_paths",
-    "q_lorenz_deciles",
-    "q_new_vs_returning",
-    "q_pcap_flows",
-    "q_triangle_count",
-    "q_ngram_containment",
-    "q_dedup_survivors",
-    "q_pcap_roundtrip",
-    "q_bitmap_distinct",
-    "q_try_arithmetic",
-    "q_pcap_stream_flows",
-    "q_funnel_bounded",
-    "q_dup_span_coverage",
-    "q_pmi_bigrams",
-    "q_dup_span_removal",
-    "q_embed_decontaminate",
-    "q_fairness_audit",
-    "q_temperature_mix",
-    "q_quality_classifier",
-    "q_ewma",
-    "q_stream_ewma",
-    "q_dpp_join",
-    "q_pca_embed",
-    "q_bpe_merges",
-    "q_bpe_encode",
-]
+
+def _records() -> list[tuple[int, dict]]:
+    """``(N, record)`` for every CORRECTNESS_r<N>.json here, ascending N."""
+    found = sorted((int(m[1]), p) for p in _HERE.iterdir() if (m := _RECORD.fullmatch(p.name)))
+    return [(n, json.loads(p.read_text())) for n, p in found]
+
+
+def _gate_order(names: Iterable[str], records: list[tuple[int, dict]]) -> list[str]:
+    """``names`` ranked for the gate's window. ``records`` ascend in N,
+    so a name's latest record sets its rank: N if it passed, else 0."""
+    last_pass = {}
+    for n, record in records:
+        for name, r in record.items():
+            ok = r.get("rows_match") and r.get("schema_match") and r.get("hash_match")
+            last_pass[name] = n if ok else 0
+    return sorted(names, key=lambda q: (q not in ORACLES, last_pass.get(q, 0), q))
 
 
 def _gate_ordered(mapping: dict) -> dict:
-    """Reorder ``mapping`` so _GATE_FRONT entries come first."""
-    front = {n: mapping[n] for n in _GATE_FRONT if n in mapping}
-    rest = {n: v for n, v in mapping.items() if n not in front}
-    return {**front, **rest}
+    """``mapping`` reordered by ``_gate_order`` over the committed records."""
+    return {n: mapping[n] for n in _gate_order(mapping, _records())}
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -300,10 +61,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per registered query, in the gate order (module doc)."""
     return _gate_ordered(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for every oracle-checkable query."""
+    """DuckDB SQL for every oracle-checked query, in the same order."""
     return _gate_ordered(ORACLES)

@@ -247,7 +247,7 @@ def simhash(d: DataFrame) -> DataFrame:
 
 SIMHASH_ORACLE = rf"""
 WITH tok AS (
-    SELECT doc_id, unnest(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) AS tok
+    SELECT doc_id, unnest({WHITESPACE_TOKENS_SQL}) AS tok
     FROM documents
 ),
 th AS (
@@ -804,10 +804,10 @@ def data_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # composite curation pipeline: quality filter → exact dedup → split
 
-CURATION_ORACLE = r"""
+CURATION_ORACLE = rf"""
 WITH quality AS (
     SELECT doc_id, text,
-           len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) AS n_toks
+           len({WHITESPACE_TOKENS_SQL}) AS n_toks
     FROM documents
     WHERE n_chars BETWEEN 100 AND 5000
 ),
@@ -1705,11 +1705,11 @@ def kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_stats",
-    r"""
+    rf"""
     SELECT lang,
            COUNT(*) AS n_docs,
            ROUND(AVG(n_chars), 4) AS avg_chars,
-           ROUND(AVG(len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> ''))), 4)
+           ROUND(AVG(len({WHITESPACE_TOKENS_SQL})), 4)
                AS avg_tokens,
            MIN(n_chars) AS min_chars,
            MAX(n_chars) AS max_chars
@@ -1730,9 +1730,9 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_token_count",
-    r"""
+    rf"""
     SELECT doc_id,
-           len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) AS n_ws_tokens,
+           len({WHITESPACE_TOKENS_SQL}) AS n_ws_tokens,
            len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]')) AS n_bpe_tokens
     FROM documents
     """,
@@ -1751,15 +1751,15 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUALITY_ORACLE = r"""
+QUALITY_ORACLE = rf"""
 SELECT doc_id,
-       ROUND(len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> ''))::DOUBLE
+       ROUND(len({WHITESPACE_TOKENS_SQL})::DOUBLE
              / GREATEST(n_chars, 1), 6) AS token_density,
        ROUND(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]'))::DOUBLE
              / GREATEST(n_chars, 1), 6) AS punct_ratio,
-       ROUND(len(list_filter(regexp_split_to_array(text, '\s+'),
+       ROUND(len(list_filter({WHITESPACE_TOKENS_SQL},
                              t -> t IN ('the', 'a', 'of', 'and', 'to')))::DOUBLE
-             / GREATEST(len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')), 1), 6)
+             / GREATEST(len({WHITESPACE_TOKENS_SQL}), 1), 6)
            AS stopword_ratio,
        (n_chars BETWEEN 100 AND 5000) AS length_ok
 FROM documents
@@ -1798,16 +1798,13 @@ _FA_STOP = 0.01
 # of "fails the quality filter", shared by q_filter_attribution and
 # q_filter_dedup_overlap (mirrors _fa_flag_cols on the Spark side)
 _FA_FLAGS_SQL = rf"""CAST(NOT (n_chars BETWEEN 100 AND 5000) AS INT) AS f_len,
-           CAST(ROUND(len(list_filter(regexp_split_to_array(text, '\s+'),
-                                      t -> t <> ''))::DOUBLE
+           CAST(ROUND(len({WHITESPACE_TOKENS_SQL})::DOUBLE
                       / GREATEST(n_chars, 1), 6) < {_FA_DENS} AS INT) AS f_dens,
            CAST(ROUND(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]'))::DOUBLE
                       / GREATEST(n_chars, 1), 6) > {_FA_PUNCT} AS INT) AS f_punct,
-           CAST(ROUND(len(list_filter(regexp_split_to_array(text, '\s+'),
+           CAST(ROUND(len(list_filter({WHITESPACE_TOKENS_SQL},
                           t -> t IN ('the', 'a', 'of', 'and', 'to')))::DOUBLE
-                      / GREATEST(len(list_filter(
-                            regexp_split_to_array(text, '\s+'),
-                            t -> t <> '')), 1), 6) < {_FA_STOP} AS INT) AS f_stop"""
+                      / GREATEST(len({WHITESPACE_TOKENS_SQL}), 1), 6) < {_FA_STOP} AS INT) AS f_stop"""
 
 FILTER_ATTRIBUTION_ORACLE = rf"""
 WITH sig AS (
@@ -1980,12 +1977,12 @@ def _fa_unpivot(tot: DataFrame) -> DataFrame:
     )
 
 
-LANG_ID_ORACLE = r"""
+LANG_ID_ORACLE = rf"""
 WITH scored AS (
     SELECT doc_id, lang,
-           len(list_filter(regexp_split_to_array(text, '\s+'),
+           len(list_filter({WHITESPACE_TOKENS_SQL},
                            t -> t IN ('the', 'a', 'of', 'and', 'to', 'is'))) AS en_hits,
-           len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) AS n_tokens
+           len({WHITESPACE_TOKENS_SQL}) AS n_tokens
     FROM documents
 )
 SELECT doc_id, lang AS labeled_lang,
@@ -3815,9 +3812,9 @@ def _lr_sql() -> str:
     fs = ["x0", "x1", "x2", "x3", "x4"]
     dot = " + ".join(f"w.c{i} * f.{c}" for i, c in enumerate(fs))
     parts = [
-        r"""
+        rf"""
 WITH toks AS MATERIALIZED (
-    SELECT list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '') AS ws,
+    SELECT {WHITESPACE_TOKENS_SQL} AS ws,
            text, lang
     FROM documents
 ),
@@ -5152,7 +5149,7 @@ _WINNOW_W = 4  # selection window over consecutive shingle positions
 WINNOWING_ORACLE = rf"""
 WITH tok AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '') AS ws
+           {WHITESPACE_TOKENS_SQL} AS ws
     FROM documents
 ),
 sh AS (
@@ -5425,12 +5422,12 @@ _WINNOW_BANDS_B = 4
 _WINNOW_BAND_CTES = rf"""grp AS (
     SELECT md5(text) AS g, MIN(doc_id) AS rep
     FROM documents
-    WHERE len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) >= 3
+    WHERE len({WHITESPACE_TOKENS_SQL}) >= 3
     GROUP BY md5(text)
 ),
 rtok AS (
     SELECT grp.g,
-           list_filter(regexp_split_to_array(d.text, '\s+'), t -> t <> '') AS ws
+           {WHITESPACE_TOKENS_SQL} AS ws
     FROM grp JOIN documents d ON d.doc_id = grp.rep
 ),
 sh AS (
@@ -5592,7 +5589,7 @@ WINNOWING_BAND_MEMBERS_ORACLE = rf"""
 WITH {_WINNOW_BAND_CTES},
 mem AS (
     SELECT doc_id, md5(text) AS g FROM documents
-    WHERE len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) >= 3
+    WHERE len({WHITESPACE_TOKENS_SQL}) >= 3
 ),
 np AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_prints FROM prints GROUP BY g),
 within_pairs AS (
@@ -5674,7 +5671,7 @@ WINNOWING_BAND_CLUSTERS_ORACLE = rf"""
 WITH RECURSIVE {_WINNOW_BAND_CTES},
 mem AS (
     SELECT doc_id, md5(text) AS g FROM documents
-    WHERE len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) >= 3
+    WHERE len({WHITESPACE_TOKENS_SQL}) >= 3
 ),
 vpairs AS (SELECT ga, gb FROM ver WHERE ns >= {_WINNOW_CLUSTER_TAU}),
 gedges AS (SELECT ga AS a, gb AS b FROM vpairs UNION SELECT gb, ga FROM vpairs),
@@ -6257,12 +6254,12 @@ WITH grp AS (
     SELECT md5(text) AS g, MIN(doc_id) AS rep
     FROM documents
     WHERE doc_id < {_CURVE_SLICE}
-      AND len(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) >= 3
+      AND len({WHITESPACE_TOKENS_SQL}) >= 3
     GROUP BY md5(text)
 ),
 rtok AS (
     SELECT grp.g,
-           list_filter(regexp_split_to_array(d.text, '\s+'), t -> t <> '') AS ws
+           {WHITESPACE_TOKENS_SQL} AS ws
     FROM grp JOIN documents d ON d.doc_id = grp.rep
 ),
 sh AS (

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pcap_to_parquet_spark.functions.text import whitespace_tokens
+from pcap_to_parquet_spark.functions.text import WHITESPACE_TOKENS_SQL, whitespace_tokens
 from pcap_to_parquet_spark.registry import query
 from pcap_to_parquet_spark.sources import load_table
 
@@ -183,9 +183,9 @@ def array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_explode",
-    r"""
+    rf"""
     SELECT doc_id, t.token
-    FROM documents, UNNEST(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS t(token)
+    FROM documents, UNNEST({WHITESPACE_TOKENS_SQL}) AS t(token)
     WHERE doc_id < 50 AND t.token <> ''
     """,
 )

@@ -810,8 +810,7 @@ _CTX_GRID = [16, 32, 64, 128, 256]
 
 CONTEXT_FIT_ORACLE = rf"""
 WITH tc AS (
-    SELECT len(list_filter(regexp_split_to_array(text, '\s+'),
-                           t -> t <> '')) AS t
+    SELECT len({WHITESPACE_TOKENS_SQL}) AS t
     FROM documents
 ),
 s AS (
@@ -1497,9 +1496,7 @@ def _bpe_chain_sql(rounds: int, carry_word: bool) -> str:
     """
     word = "word, " if carry_word else ""
     parts = [
-        r"tok AS (SELECT doc_id, unnest(list_filter("
-        r"regexp_split_to_array(text, '\s+'), t -> t <> '')) AS word "
-        r"FROM documents)",
+        f"tok AS (SELECT doc_id, unnest({WHITESPACE_TOKENS_SQL}) AS word FROM documents)",
         "wc AS (SELECT word, count(*) AS cnt FROM tok GROUP BY word)",
         f"w0 AS (SELECT {word}repeat(chr(1),2) || "
         "array_to_string(string_split(word, ''), repeat(chr(1),2)) || "
@@ -1767,8 +1764,7 @@ _VC_GRID_SQL = ", ".join(str(k) for k in _VC_GRID)
 
 VOCAB_COVERAGE_ORACLE = rf"""
 WITH tok AS (
-    SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'),
-                              t -> t <> '')) AS word
+    SELECT unnest({WHITESPACE_TOKENS_SQL}) AS word
     FROM documents
 ),
 wc AS (SELECT word, COUNT(*) AS cnt FROM tok GROUP BY word),
@@ -2521,7 +2517,7 @@ _SPANMASK_MOD = 1_000_000_007
 SPAN_MASK_ORACLE = rf"""
 WITH tok AS (
     SELECT doc_id,
-           list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '') AS ws
+           {WHITESPACE_TOKENS_SQL} AS ws
     FROM documents
 ),
 pos AS (

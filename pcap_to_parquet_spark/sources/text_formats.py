@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from pcap_to_parquet_spark.functions.text import WHITESPACE_TOKENS_SQL
 from pcap_to_parquet_spark.registry import query
 from pcap_to_parquet_spark.schema import TESTDATA_SCHEMAS
 from pcap_to_parquet_spark.session import tune
@@ -60,9 +61,9 @@ def table_schema(name: str) -> StructType:
 # ---------------------------------------------------------------------------
 # line-oriented text source: the remaining built-in format
 
-TEXT_SOURCE_ORACLE = r"""
+TEXT_SOURCE_ORACLE = rf"""
 WITH tok AS (
-    SELECT unnest(list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')) AS w
+    SELECT unnest({WHITESPACE_TOKENS_SQL}) AS w
     FROM documents WHERE NOT contains(text, chr(10))
 )
 SELECT w AS word, COUNT(*) AS n

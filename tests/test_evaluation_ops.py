@@ -14,8 +14,7 @@ import math
 
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
-
-SF0001 = "/root/testdata/sf0.001"
+from tests.conftest import SF0001  # noqa: E402
 
 _T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 

@@ -19,6 +19,8 @@ from pcap_to_parquet_spark.operators.llm import (
 from pcap_to_parquet_spark.sources.tables import load_table
 import pytest
 
+from tests.conftest import SF001, SF0001
+
 
 def test_dedup_exact_planted(spark, tiny_docs_dir):
     rows = dedup_exact(spark, tiny_docs_dir).collect()
@@ -107,8 +109,6 @@ def test_whitespace_hostile_oracle_parity(spark, tmp_path):
 
 
 def test_similarity_topk_shape(spark):
-    from tests.conftest import SF0001
-
     from pcap_to_parquet_spark.operators.llm import similarity_topk
 
     rows = similarity_topk(spark, SF0001).collect()
@@ -120,8 +120,6 @@ def test_similarity_topk_shape(spark):
 
 
 def test_embeddings_dim(spark):
-    from tests.conftest import SF0001
-
     em = load_table(spark, SF0001, "embeddings")
     n_bad = em.filter(F.size("embedding") != 64).count()
     assert n_bad == 0
@@ -132,8 +130,6 @@ def test_ivf_recall_probe_tradeoff(spark):
     1.0 at full probe (all lists == exact search) — the defining IVF
     property; a broken list assignment would flatten the curve."""
     from pcap_to_parquet_spark.operators.llm import similarity_ivf, similarity_topk
-    from tests.conftest import SF0001
-
     brute = {r.vec_id for r in similarity_topk(spark, SF0001).collect()}
 
     def recall(p):
@@ -153,8 +149,6 @@ def test_kmeans_properties(spark):
     guaranteed mid-stream — but sizes must cover the corpus."""
     from pcap_to_parquet_spark.operators.llm import kmeans
     from pcap_to_parquet_spark.sources.tables import load_table
-    from tests.conftest import SF0001
-
     a = {r.cluster: (r.n_vecs, r.min_vec_id) for r in kmeans(spark, SF0001).collect()}
     b = {r.cluster: (r.n_vecs, r.min_vec_id) for r in kmeans(spark, SF0001).collect()}
     assert a == b  # deterministic init + fixed iteration count
@@ -174,7 +168,7 @@ def test_embed_quantize_invariants(spark):
     from pcap_to_parquet_spark.operators.llm import embed_quantize
     from pcap_to_parquet_spark.sources.tables import load_table
 
-    q = embed_quantize(spark, "/root/testdata/sf0.001").limit(50)
+    q = embed_quantize(spark, SF0001).limit(50)
     rows = q.collect()
     assert rows
     for r in rows:
@@ -182,7 +176,7 @@ def test_embed_quantize_invariants(spark):
     # dequantization error bound: |x - q*scale| <= scale/2 per element
     em = {
         r.vec_id: np.array(r.embedding, dtype=np.float64)
-        for r in load_table(spark, "/root/testdata/sf0.001", "embeddings")
+        for r in load_table(spark, SF0001, "embeddings")
         .filter(F.col("vec_id") < 20)
         .collect()
     }
@@ -206,13 +200,13 @@ def test_bloom_prefilter_contract(spark):
     from pcap_to_parquet_spark.operators.llm import bloom_prefilter
 
     # production-sized filter: bloom verdict must cover every exact dup
-    rows = bloom_prefilter(spark, "/root/testdata/sf0.01").collect()
+    rows = bloom_prefilter(spark, SF001).collect()
     assert rows
     assert all(r.bloom_maybe_dup == 1 for r in rows if r.exact_dup == 1)
 
     # undersized filter (m=2048): collisions now expected, but bounded
     m, k = 2048, 4
-    rows = bloom_prefilter(spark, "/root/testdata/sf0.01", m_bits=m, k=k).collect()
+    rows = bloom_prefilter(spark, SF001, m_bits=m, k=k).collect()
     assert all(r.bloom_maybe_dup == 1 for r in rows if r.exact_dup == 1)
     new_docs = [r for r in rows if r.exact_dup == 0]
     fps = sum(r.bloom_maybe_dup for r in new_docs)

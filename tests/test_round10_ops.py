@@ -17,8 +17,7 @@ from pcap_to_parquet_spark.operators.text_pipeline import (  # noqa: E402
 )
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
 import pytest
-
-SF0001 = "/root/testdata/sf0.001"
+from tests.conftest import SF0001  # noqa: E402
 
 _DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 

@@ -15,8 +15,7 @@ import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.operators.llm import _LSHR_TAU  # noqa: E402
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
 import pytest
-
-SF0001 = "/root/testdata/sf0.001"
+from tests.conftest import SF0001  # noqa: E402
 
 _DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 

@@ -15,8 +15,7 @@ from datetime import datetime, timedelta
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
 import pytest
-
-SF0001 = "/root/testdata/sf0.001"
+from tests.conftest import SF0001  # noqa: E402
 
 _EV_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "

@@ -32,8 +32,7 @@ from pcap_to_parquet_spark.sources.pcap_fixtures import (  # noqa: E402
     vlan_eth,
 )
 from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays  # noqa: E402
-
-SF0001 = "/root/testdata/sf0.001"
+from tests.conftest import SF0001  # noqa: E402
 
 _PROTO_V4 = {1: "ICMP", 2: "IGMP", 6: "TCP", 17: "UDP"}
 

@@ -23,8 +23,7 @@ from pcap_to_parquet_spark.sources.pcap_chunked import (  # noqa: E402
 from pcap_to_parquet_spark.sources.pcap_fixtures import (  # noqa: E402
     v6_golden_pcap_bytes,
 )
-
-SF0001 = "/root/testdata/sf0.001"
+from tests.conftest import SF0001  # noqa: E402
 
 
 def _chunked_rows_v6(path: str, chunk_bytes: int, ipv6: bool) -> list[dict]:

@@ -21,8 +21,7 @@ from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from pcap_to_parquet_spark.sources.pcap import read_pcap  # noqa: E402
-
-SF0001 = "/root/testdata/sf0.001"
+from tests.conftest import SF0001  # noqa: E402
 
 
 def _closed_flows_land(spark) -> str:

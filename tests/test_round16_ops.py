@@ -17,6 +17,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pcap_to_parquet_spark.session import broadcast_threshold_bytes, parse_byte_conf
+from tests.conftest import SF0001
 
 KEY = "spark.sql.autoBroadcastJoinThreshold"
 
@@ -73,7 +74,7 @@ def test_triangle_count_survives_suffixed_threshold(spark, tiny_docs_dir):
     old = spark.conf.get(KEY)
     try:
         spark.conf.set(KEY, "10MB")
-        df = QUERIES["q_triangle_count"](spark, "/root/testdata/sf0.001")
+        df = QUERIES["q_triangle_count"](spark, SF0001)
         row = df.collect()[0]
         assert row.n_edges >= 0 and row.n_triangles >= 0
     finally:

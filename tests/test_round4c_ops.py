@@ -9,7 +9,7 @@ import numpy as np
 import pcap_to_parquet_spark.operators  # noqa: F401  (registers queries)
 
 from pcap_to_parquet_spark.registry import ORACLES, QUERIES
-from tests.conftest import SF0001
+from tests.conftest import SF001, SF0001
 import pytest
 
 
@@ -88,7 +88,7 @@ def test_temperature_mix_invariants(spark):
     fall as language size grows; realized counts track the target rate
     (the md5 gate is a uniform coin)."""
     rows = sorted(
-        QUERIES["q_temperature_mix"](spark, "/root/testdata/sf0.01").collect(),
+        QUERIES["q_temperature_mix"](spark, SF001).collect(),
         key=lambda r: r.n_docs,
     )
     assert rows[0].target_rate == 1.0
@@ -255,12 +255,12 @@ def test_ivf_pq_stays_in_probed_lists_and_recovers_them(spark):
     quantization contract)."""
     from pcap_to_parquet_spark.sources import load_table
 
-    rows = QUERIES["q_ivf_pq"](spark, "/root/testdata/sf0.01").collect()
+    rows = QUERIES["q_ivf_pq"](spark, SF001).collect()
     assert len(rows) == 10
     dists = [r.l2_dist for r in rows]
     assert dists == sorted(dists)
 
-    em = load_table(spark, "/root/testdata/sf0.01", "embeddings").collect()
+    em = load_table(spark, SF001, "embeddings").collect()
     vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in em}
     labels = {r.vec_id: r.label for r in em}
     q = vecs[0]
@@ -413,7 +413,7 @@ def test_opq_error_monotonically_beats_plain_pq(spark):
     meaningfully below the plain-PQ baseline (measured: 0.561 → 0.481
     at sf0.01)."""
     rows = sorted(
-        QUERIES["q_opq_train"](spark, "/root/testdata/sf0.01").collect(),
+        QUERIES["q_opq_train"](spark, SF001).collect(),
         key=lambda r: r.iteration,
     )
     errs = [r.mean_sq_error for r in rows]
@@ -433,7 +433,7 @@ def test_residual_quant_beats_both_halves(spark):
     0.561 vs 0.892 at sf0.01) — the property that justifies storing
     residuals in an IVF-PQ index."""
     rows = {r.encoder: r.mean_sq_error for r in QUERIES["q_residual_quant"](
-        spark, "/root/testdata/sf0.01").collect()}
+        spark, SF001).collect()}
     assert set(rows) == {"pq_only", "coarse_only", "coarse_plus_residual_pq"}
     assert rows["coarse_plus_residual_pq"] < rows["pq_only"]
     assert rows["coarse_plus_residual_pq"] < rows["coarse_only"]

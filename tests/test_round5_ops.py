@@ -10,8 +10,7 @@ from __future__ import annotations
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
 import pytest
-
-SF0001 = "/root/testdata/sf0.001"
+from tests.conftest import SF0001  # noqa: E402
 
 
 def test_dsir_weights_prefer_target_like_docs(spark, tmp_path):

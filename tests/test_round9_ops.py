@@ -19,8 +19,7 @@ from pcap_to_parquet_spark.operators.llm import (  # noqa: E402
     _DECON_TOP,
 )
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
-
-SF0001 = "/root/testdata/sf0.001"
+from tests.conftest import SF0001  # noqa: E402
 
 _EMBED_SCHEMA = "vec_id long, embedding array<float>, label int"
 _DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"

@@ -12,8 +12,7 @@ import pytest
 
 from pcap_to_parquet_spark.registry import QUERIES
 from pcap_to_parquet_spark.sources.tables import load_table
-
-SF = "/root/testdata/sf0.01"
+from tests.conftest import SF001
 
 # the estimator contracts hold at EVERY scale the driver regenerates —
 # parameterized so a data regeneration can't silently degrade a sketch
@@ -24,7 +23,7 @@ SF = "/root/testdata/sf0.01"
 # rehearsal set hasn't been built on this host.
 _SF10 = "/tmp/sf10"
 SFS = [
-    "/root/testdata/sf0.01",
+    SF001,
     "/root/testdata/sf0.1",
     pytest.param(
         _SF10,
@@ -37,9 +36,8 @@ SFS = [
 
 @pytest.mark.parametrize("sf", SFS)
 def test_hll_rollup_accuracy(spark, sf):
-    SF = sf
-    rows = {r.key: r.est_distinct for r in QUERIES["q_hll_rollup"](spark, SF).collect()}
-    e = load_table(spark, SF, "events")
+    rows = {r.key: r.est_distinct for r in QUERIES["q_hll_rollup"](spark, sf).collect()}
+    e = load_table(spark, sf, "events")
     exact_total = e.select(F.countDistinct("user_id")).first()[0]
     # default lgK=12 → rse ~1.6%/sqrt; allow 5%
     assert abs(rows["total"] - exact_total) <= max(3, 0.05 * exact_total)
@@ -52,9 +50,8 @@ def test_hll_rollup_accuracy(spark, sf):
 @pytest.mark.parametrize("sf", SFS)
 @pytest.mark.slow  # >=5s
 def test_kll_quantiles_accuracy(spark, sf):
-    SF = sf
-    got = {r.key: r for r in QUERIES["q_kll_quantiles"](spark, SF).collect()}
-    li = load_table(spark, SF, "lineitem")
+    got = {r.key: r for r in QUERIES["q_kll_quantiles"](spark, sf).collect()}
+    li = load_table(spark, sf, "lineitem")
     exact = li.agg(
         F.expr("percentile(l_extendedprice, 0.5)").alias("p50"),
         F.expr("percentile(l_extendedprice, 0.9)").alias("p90"),
@@ -72,9 +69,8 @@ def test_kll_quantiles_accuracy(spark, sf):
 
 @pytest.mark.parametrize("sf", SFS)
 def test_theta_set_algebra_consistency(spark, sf):
-    SF = sf
-    r = QUERIES["q_theta_audience_overlap"](spark, SF).first()
-    e = load_table(spark, SF, "events")
+    r = QUERIES["q_theta_audience_overlap"](spark, sf).first()
+    e = load_table(spark, sf, "events")
     viewers = {x.user_id for x in e.filter(F.col("event_type") == "view").select("user_id").distinct().collect()}
     buyers = {x.user_id for x in e.filter(F.col("event_type") == "purchase").select("user_id").distinct().collect()}
     def close(est, exact):
@@ -95,8 +91,8 @@ def test_countmin_never_undercounts_and_finds_true_heavies(spark):
     gap between heavy and typical tokens)."""
     from collections import Counter
 
-    got = {r.token: r.est_n for r in QUERIES["q_countmin_topk"](spark, SF).collect()}
-    docs = load_table(spark, SF, "documents").select("text").collect()
+    got = {r.token: r.est_n for r in QUERIES["q_countmin_topk"](spark, SF001).collect()}
+    docs = load_table(spark, SF001, "documents").select("text").collect()
     exact = Counter(t for r in docs for t in r.text.split() if t)
     for tok, est in got.items():
         assert est >= exact[tok], (tok, est, exact[tok])
