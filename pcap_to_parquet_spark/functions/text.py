@@ -41,9 +41,17 @@ def shingles(tokens: Column | str, n: int = 3, sep: str = "|") -> Column:
 
 # The DuckDB twins of the two helpers above, interpolated by every
 # oracle that tokenizes or shingles, so the SQL side has one definition
-# too: the whitespace tokens of `text`, and the pipe-joined 3-gram
-# shingles of a token list named `ws` (a list shorter than 3 gives []).
-WHITESPACE_TOKENS_SQL = r"list_filter(regexp_split_to_array(text, '\s+'), t -> t <> '')"
+# too: the whitespace tokens of a string expression (`text` unless a
+# caller normalizes it first), and the pipe-joined 3-gram shingles of a
+# token list named `ws` (a list shorter than 3 gives []).
+
+
+def whitespace_tokens_sql(col: str = "text") -> str:
+    """DuckDB fragment equivalent to :func:`whitespace_tokens` of ``col``."""
+    return rf"list_filter(regexp_split_to_array({col}, '\s+'), t -> t <> '')"
+
+
+WHITESPACE_TOKENS_SQL = whitespace_tokens_sql()
 SHINGLES_SQL = (
     "list_transform(generate_series(1, len(ws) - 2), "
     "i -> ws[i] || '|' || ws[i+1] || '|' || ws[i+2])"

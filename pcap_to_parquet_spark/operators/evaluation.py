@@ -45,6 +45,7 @@ from pcap_to_parquet_spark.functions.text import (
     ENGLISH_SCORE_SQL,
     english_score,
     whitespace_tokens,
+    whitespace_tokens_sql,
 )
 from pcap_to_parquet_spark.registry import query
 from pcap_to_parquet_spark.sources import load_table
@@ -633,11 +634,10 @@ def jackknife_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # multinomial naive Bayes language classifier: train, score, confusion
 
-NAIVE_BAYES_ORACLE = r"""
+NAIVE_BAYES_ORACLE = f"""
 WITH tok AS (
     SELECT doc_id, lang,
-           unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                              t -> t <> '')) AS tok
+           unnest({whitespace_tokens_sql("lower(text)")}) AS tok
     FROM documents
 ),
 tf AS (

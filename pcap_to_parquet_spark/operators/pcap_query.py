@@ -2,12 +2,13 @@
 
 Rows-only check (DuckDB has no pcap reader, SURVEY §2 Part B): the
 golden fixture pcap → packets DataFrame. Value-level correctness is
-covered by the hand-computed golden rows in tests/test_pcap.py.
+covered by the hand-computed golden rows in tests/test_pcap_decode.py.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,26 +18,59 @@ from pcap_to_parquet_spark.registry import query
 from pcap_to_parquet_spark.sources.pcap import read_pcap
 from pcap_to_parquet_spark.sources.pcap_fixtures import (
     biflow_golden_pcap_bytes,
+    fixture_packets,
     golden_pcap_bytes,
+    pcapng_file,
     v6_golden_pcap_bytes,
 )
 
 
-def _cached_fixture_path(stem: str, data: bytes) -> str:
+def _cached_fixture_path(stem: str, data: bytes, ext: str = ".pcap") -> str:
     """Write ``data`` to a tempdir file whose name embeds a content
     hash. Keying the cache on md5(data)[:8] (not byte length) means a
     fixture edit that changes content but keeps the size can never
-    serve a stale pcap across sessions."""
+    serve a stale capture across sessions. The file is written under a
+    hidden name and renamed into place, so a concurrent reader never
+    opens a partial one."""
     import hashlib
 
     digest = hashlib.md5(data).hexdigest()[:8]
     path = os.path.join(
-        tempfile.gettempdir(), f"pcap_to_parquet_spark_{stem}_{digest}.pcap"
+        tempfile.gettempdir(), f"pcap_to_parquet_spark_{stem}_{digest}{ext}"
     )
     if not os.path.exists(path):
-        with open(path, "wb") as f:
+        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".")
+        with os.fdopen(fd, "wb") as f:
             f.write(data)
+        os.replace(tmp, path)
     return path
+
+
+def _stage_capture(src: str, land: str, name: str) -> str:
+    """Copy capture ``src`` into directory ``land`` as ``name`` unless
+    it is there already; return ``land``. The copy is written under a
+    hidden name and renamed into place: ``PcapStreamReader`` skips
+    ``_``/``.``-prefixed names as files still being written, so a
+    stream tailing ``land``, in this process or another, never lists a
+    partial capture."""
+    dest = os.path.join(land, name)
+    if not os.path.exists(dest):
+        os.makedirs(land, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(dir=land, prefix=f".{name}")
+        os.close(fd)
+        shutil.copyfile(src, tmp)
+        os.replace(tmp, dest)
+    return land
+
+
+def _landing_dir(prefix: str, src: str, name: str) -> str:
+    """The tempdir landing directory that holds capture ``src`` as
+    ``name``, keyed by the capture's mtime and size."""
+    land = os.path.join(
+        tempfile.gettempdir(),
+        f"{prefix}_{os.path.getmtime(src):.0f}_{os.path.getsize(src)}",
+    )
+    return _stage_capture(src, land, name)
 
 
 def _fixture_path() -> str:
@@ -90,39 +124,9 @@ def pcap_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pcapng_fixture_path() -> str:
     """Golden packets re-containered as pcapng (EPB per packet)."""
-    import struct
-
-    from pcap_to_parquet_spark.sources.pcap_fixtures import fixture_packets
-    from pcap_to_parquet_spark.sources.pcapng import PCAPNG_MAGIC  # noqa: F401
-
-    def block(btype: int, body: bytes) -> bytes:
-        total = 12 + len(body) + (-len(body) % 4)
-        return (
-            struct.pack("<II", btype, total)
-            + body
-            + b"\x00" * (-len(body) % 4)
-            + struct.pack("<I", total)
-        )
-
-    parts = [
-        block(0x0A0D0D0A, struct.pack("<IHHq", 0x1A2B3C4D, 1, 0, -1)),
-        block(0x00000001, struct.pack("<HHI", 1, 0, 65535)),
-    ]
-    for ts_sec, origlen, data in fixture_packets().values():
-        ts = ts_sec * 10**6
-        parts.append(
-            block(
-                0x00000006,
-                struct.pack("<IIIII", 0, ts >> 32, ts & 0xFFFFFFFF, len(data), origlen)
-                + data,
-            )
-        )
-    payload = b"".join(parts)
-    path = os.path.join(tempfile.gettempdir(), "pcap_to_parquet_spark_golden.pcapng")
-    if not (os.path.exists(path) and os.path.getsize(path) == len(payload)):
-        with open(path, "wb") as f:
-            f.write(payload)
-    return path
+    return _cached_fixture_path(
+        "golden", pcapng_file(list(fixture_packets().values())), ".pcapng"
+    )
 
 
 @query("q_pcapng_pipeline", GOLDEN_PACKETS_ORACLE)  # same frames, same goldens
@@ -547,22 +551,12 @@ def pcap_stream_biflow(spark: SparkSession, sf_dir: str) -> DataFrame:
     answered=false conversations while the capture is still arriving.
     Same hand-computed oracle as the batch op (availableNow over the
     complete fixture emits the identical flow frame)."""
-    import os
-    import shutil
-    import tempfile
-
     from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
     from pcap_to_parquet_spark.streaming.stream_queries import run_to_memory
 
     register_pcap_source(spark)
     src = _biflow_fixture_path()
-    land = os.path.join(
-        tempfile.gettempdir(),
-        f"pcap_biflow_land_{os.path.getmtime(src):.0f}_{os.path.getsize(src)}",
-    )
-    os.makedirs(land, exist_ok=True)
-    if not os.listdir(land):
-        shutil.copy(src, os.path.join(land, "biflow.pcap"))
+    land = _landing_dir("pcap_biflow_land", src, "biflow.pcap")
     flows = _flows_frame(
         spark.readStream.format("pcap").option("ipv6", "true").load(land)
     )
@@ -643,7 +637,7 @@ def pcap_stream_closed_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: one shuffle (packets → keyed session-window state),
     state size = active flows only (eviction pinned by
-    tests/test_round14_ops.py::test_closed_flows_state_eviction via
+    tests/test_pcap_query.py::test_closed_flows_state_eviction via
     numRowsRemoved > 0 and the batch-equality pin on closed flows).
     Driven by run_to_memory_flushed: Python data sources never get the
     availableNow no-data flush batch (measured), so a fast
@@ -653,22 +647,12 @@ def pcap_stream_closed_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     CLIPPED to flow_end <= max(evt) - delay — the exact emission
     contract, stated in SQL (the q_stream_session two-regime
     technique)."""
-    import os
-    import shutil
-    import tempfile
-
     from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
     from pcap_to_parquet_spark.streaming.stream_queries import run_to_memory_flushed
 
     register_pcap_source(spark)
     src = _biflow_fixture_path()
-    land = os.path.join(
-        tempfile.gettempdir(),
-        f"pcap_closedflow_land_{os.path.getmtime(src):.0f}_{os.path.getsize(src)}",
-    )
-    os.makedirs(land, exist_ok=True)
-    if not os.listdir(land):
-        shutil.copy(src, os.path.join(land, "biflow.pcap"))
+    land = _landing_dir("pcap_closedflow_land", src, "biflow.pcap")
     result, _progress = run_to_memory_flushed(closed_flows_plan(spark, land))
     return result
 
@@ -955,27 +939,17 @@ def pcap_stream_flow_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: one shuffle (packets → keyed session-window state);
     the epoch key adds no extra exchange (same hash partitioning);
-    eviction pinned by tests/test_round14_ops.py (numRowsRemoved ≥ 1,
+    eviction pinned by tests/test_pcap_query.py (numRowsRemoved ≥ 1,
     emitted records equal the batch algebra's closed set). Oracle:
     islands within (key, epoch) over the timed golden literal CLIPPED
     to record_close <= max(evt) - delay — the q_stream_session
     two-regime technique."""
-    import os
-    import shutil
-    import tempfile
-
     from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
     from pcap_to_parquet_spark.streaming.stream_queries import run_to_memory_flushed
 
     register_pcap_source(spark)
     src = _flow_timeline_path()
-    land = os.path.join(
-        tempfile.gettempdir(),
-        f"pcap_flowrec_land_{os.path.getmtime(src):.0f}_{os.path.getsize(src)}",
-    )
-    os.makedirs(land, exist_ok=True)
-    if not os.listdir(land):
-        shutil.copy(src, os.path.join(land, "timeline.pcap"))
+    land = _landing_dir("pcap_flowrec_land", src, "timeline.pcap")
     result, _progress = run_to_memory_flushed(stream_flow_records_plan(spark, land))
     return result
 
@@ -1220,25 +1194,15 @@ def pcap_stream_talkers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final aggregate keyed by endpoint. Oracle: the closed-flow
     oracle nested verbatim + the identical roles/census algebra, so
     the emission contract and the census can't drift apart.
-    Batch-equality pin: tests/test_round15_ops.py checks this result
+    Batch-equality pin: tests/test_pcap_query.py checks this result
     equals talkers_census_from_flows over the batch gaps-and-islands
     closed set."""
-    import os
-    import shutil
-    import tempfile
-
     from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
     from pcap_to_parquet_spark.streaming.stream_queries import run_to_memory_flushed
 
     register_pcap_source(spark)
     src = _biflow_fixture_path()
-    land = os.path.join(
-        tempfile.gettempdir(),
-        f"pcap_closedflow_land_{os.path.getmtime(src):.0f}_{os.path.getsize(src)}",
-    )
-    os.makedirs(land, exist_ok=True)
-    if not os.listdir(land):
-        shutil.copy(src, os.path.join(land, "biflow.pcap"))
+    land = _landing_dir("pcap_closedflow_land", src, "biflow.pcap")
     closed, _progress = run_to_memory_flushed(closed_flows_plan(spark, land))
     return talkers_census_from_flows(closed)
 
@@ -1281,22 +1245,12 @@ def pcap_stream_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     capture-directory → live flow table pipeline: at scale the
     aggregation state is one row per active flow, and the same plan
     keeps running as new captures arrive."""
-    import os
-    import shutil
-    import tempfile
-
     from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
     from pcap_to_parquet_spark.streaming.stream_queries import run_to_memory
 
     register_pcap_source(spark)
     src = _fixture_path()
-    land = os.path.join(
-        tempfile.gettempdir(),
-        f"pcap_land_{os.path.getmtime(src):.0f}_{os.path.getsize(src)}",
-    )
-    os.makedirs(land, exist_ok=True)
-    if not os.listdir(land):
-        shutil.copy(src, os.path.join(land, "golden.pcap"))
+    land = _landing_dir("pcap_land", src, "golden.pcap")
     flows = (
         spark.readStream.format("pcap")
         .load(land)

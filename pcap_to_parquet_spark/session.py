@@ -100,6 +100,10 @@ BUILD_CONF: dict[str, str] = {
     "spark.driver.memory": driver_memory(),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.ui.enabled": "false",
+    # The console progress bar writes "[Stage N:>  (k + m) / n]" with
+    # carriage returns into stderr; a driver whose stdout and stderr
+    # share one terminal or pipe then gets result lines glued to it.
+    "spark.ui.showConsoleProgress": "false",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Skips pyspark's per-task re-parse of pyspark.zip (worker_daemon.py).
     "spark.python.daemon.module": "pcap_to_parquet_spark.worker_daemon",

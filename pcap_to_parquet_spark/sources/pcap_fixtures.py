@@ -21,6 +21,38 @@ def pcap_file(records: list[tuple[int, int, bytes]]) -> bytes:
     return b"".join(parts)
 
 
+def pcapng_file(records: list[tuple[int, int, bytes]]) -> bytes:
+    """Build a little-endian pcapng holding the same records as
+    :func:`pcap_file`: one section header, one Ethernet interface at
+    the default microsecond resolution, one enhanced packet block per
+    record."""
+
+    def block(btype: int, body: bytes) -> bytes:
+        pad = -len(body) % 4
+        total = 12 + len(body) + pad
+        return (
+            struct.pack("<II", btype, total)
+            + body
+            + b"\x00" * pad
+            + struct.pack("<I", total)
+        )
+
+    parts = [
+        block(0x0A0D0D0A, struct.pack("<IHHq", 0x1A2B3C4D, 1, 0, -1)),
+        block(0x00000001, struct.pack("<HHI", 1, 0, 65535)),
+    ]
+    for ts_sec, origlen, data in records:
+        ts = ts_sec * 10**6
+        parts.append(
+            block(
+                0x00000006,
+                struct.pack("<IIIII", 0, ts >> 32, ts & 0xFFFFFFFF, len(data), origlen)
+                + data,
+            )
+        )
+    return b"".join(parts)
+
+
 def eth(payload: bytes, ethertype: int = 0x0800) -> bytes:
     return bytes(range(6)) + bytes(range(6, 12)) + struct.pack(">H", ethertype) + payload
 
@@ -103,6 +135,16 @@ def fixture_packets() -> dict[str, tuple[int, int, bytes]]:
 def golden_pcap_bytes() -> bytes:
     """All fixture packets in one deterministic legacy pcap file."""
     return pcap_file(list(fixture_packets().values()))
+
+
+def mixed_pcap_bytes(n: int) -> bytes:
+    """A legacy pcap of ``n`` packets cycling a plain UDP frame, a TCP
+    frame and a Metamako-stamped UDP frame."""
+    udp_f = eth(ipv4(17, "10.0.0.1", "10.0.0.2", udp(1234, 5678)))
+    tcp_f = eth(ipv4(6, "192.168.1.10", "192.168.1.20", tcp(80, 443)))
+    mm_f = udp_f + mm_trailer(BASE_TS - 2, 500_000_123, 7, 3)
+    mix = [udp_f, tcp_f, mm_f]
+    return pcap_file([(BASE_TS, len(mix[i % 3]), mix[i % 3]) for i in range(n)])
 
 
 # ---------------------------------------------------------------------------
@@ -236,7 +278,7 @@ def biflow_fixture_packets() -> dict[str, tuple[int, int, bytes]]:
     colon-hex ≠ dotted-quad). All three v6 packets carry Metamako
     stamps so the watermark-evicted streaming flow table has a timed
     population spanning t-10..t-1. Hand-traced expectations live in
-    the q_pcap_biflow oracle and tests/test_round13_ops.py."""
+    the q_pcap_biflow oracle and tests/test_pcap_query.py."""
     t = BASE_TS
     a2b = lambda pay: eth(ipv4(17, "10.0.0.1", "10.0.0.2", udp(1000, 2000, pay)))  # noqa: E731
     b2a = lambda pay: eth(ipv4(17, "10.0.0.2", "10.0.0.1", udp(2000, 1000, pay)))  # noqa: E731

@@ -42,6 +42,10 @@ _sink_seq = itertools.count()
 # the batch census from its streaming twin).
 SESSION_WATERMARK_SECONDS = 600
 
+# the longest any streaming run here may take: a query still running
+# at this bound is stopped and reported, never waited on forever
+STREAM_WAIT_S = 180
+
 
 def _events_stream_dir(sf_dir: str) -> str:
     """The streaming file source lists a *directory*; the testdata
@@ -78,6 +82,17 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_event_ts(raw)
 
 
+def await_stream(q) -> None:
+    """Wait for streaming query ``q`` to terminate, at most
+    ``STREAM_WAIT_S``, then stop it. Raises ``TimeoutError`` if ``q``
+    was still running at the bound."""
+    try:
+        if not q.awaitTermination(STREAM_WAIT_S):
+            raise TimeoutError(f"streaming query still running after {STREAM_WAIT_S} s")
+    finally:
+        q.stop()
+
+
 def run_to_memory(sdf: DataFrame, mode: str) -> DataFrame:
     """Drive a streaming plan to completion (availableNow) via a memory
     sink; returns the materialized result as a batch DataFrame.
@@ -94,12 +109,11 @@ def run_to_memory(sdf: DataFrame, mode: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    q.stop()
+    await_stream(q)
     return sdf.sparkSession.table(name)
 
 
-def run_to_memory_flushed(sdf: DataFrame, mode: str = "append", timeout_s: int = 180):
+def run_to_memory_flushed(sdf: DataFrame, mode: str = "append"):
     """run_to_memory for WATERMARK-EVICTING plans over Python data
     sources. availableNow never plans the no-data batch that advances
     the watermark and emits/evicts closed state for those sources
@@ -108,7 +122,7 @@ def run_to_memory_flushed(sdf: DataFrame, mode: str = "append", timeout_s: int =
     data batch, with or without a checkpoint restart). So drive a fast
     processing-time trigger instead and stop deterministically once
     one no-data batch has run the stateful operators — that batch IS
-    the flush. Raises on timeout rather than returning a
+    the flush. Raises after ``STREAM_WAIT_S`` rather than returning a
     silently-incomplete table. Returns (result_df, progress_list) so
     callers can pin state metrics (numRowsRemoved > 0 = eviction).
 
@@ -133,7 +147,7 @@ def run_to_memory_flushed(sdf: DataFrame, mode: str = "append", timeout_s: int =
         .start()
     )
     try:
-        deadline = time.time() + timeout_s
+        deadline = time.time() + STREAM_WAIT_S
         while True:
             progress = q.recentProgress
             saw_data = False
@@ -391,8 +405,7 @@ def stream_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    q.stop()
+    await_stream(q)
     # explicit schema: if the watermarked agg closed zero windows the
     # sink dir holds only _spark_metadata and schema inference would
     # raise — the empty case must return an empty frame, not an error
@@ -740,8 +753,7 @@ def stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-        q.stop()
+        await_stream(q)
     state = spark.read.schema(state_schema).parquet(state_dir)
     return state.select(
         "user_id", "n_events", F.round("total_value", 4).alias("total_value"), "last_seen"
@@ -1298,7 +1310,7 @@ def stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole model, so the forecast updates in-place as events arrive —
     the online form of q_holt_forecast, whose batch output it must
     equal exactly under availableNow ingestion (pinned in
-    tests/test_round4c_ops.py; same initialization l₁=y₁, b₁=y₂-y₁
+    tests/test_streaming.py; same initialization l₁=y₁, b₁=y₂-y₁
     applied across the batch boundary via the stored level). Shares
     the batch query's recursive-CTE oracle: the streaming state after
     full ingestion IS the batch recursion's final state."""

@@ -6,7 +6,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pcap_to_parquet_spark.sources.pcap import decode_pcap_bytes
+from pcap_to_parquet_spark.sources.pcap import decode_pcap_bytes, read_pcap
 from pcap_to_parquet_spark.sources.pcap_chunked import (
     chunk_specs,
     decode_chunk,
@@ -17,32 +17,25 @@ from pcap_to_parquet_spark.sources.pcap_fixtures import (
     eth,
     golden_pcap_bytes,
     ipv4,
-    mm_trailer,
+    mixed_pcap_bytes,
     pcap_file,
     tcp,
     udp,
+    v6_golden_pcap_bytes,
 )
 
 
-def chunked_rows(path: str, chunk_bytes: int) -> list[dict]:
+def chunked_rows(path: str, chunk_bytes: int, ipv6: bool = False) -> list[dict]:
     """Decode every chunk standalone and concatenate (no Spark)."""
     rows: list[dict] = []
     for p, s, e in chunk_specs(path, chunk_bytes):
-        rows.extend(decode_pcap_bytes(decode_chunk(p, s, e)))
+        rows.extend(decode_pcap_bytes(decode_chunk(p, s, e), ipv6))
     return rows
-
-
-def _mixed_pcap(n: int) -> bytes:
-    udp_f = eth(ipv4(17, "10.0.0.1", "10.0.0.2", udp(1234, 5678)))
-    tcp_f = eth(ipv4(6, "192.168.1.10", "192.168.1.20", tcp(80, 443)))
-    mm_f = udp_f + mm_trailer(BASE_TS - 2, 500_000_123, 7, 3)
-    mix = [udp_f, tcp_f, mm_f]
-    return pcap_file([(BASE_TS, len(mix[i % 3]), mix[i % 3]) for i in range(n)])
 
 
 @pytest.mark.parametrize("chunk_bytes", [256, 1000, 4096, 10**9])
 def test_chunked_equals_whole(tmp_path, chunk_bytes):
-    buf = _mixed_pcap(200)
+    buf = mixed_pcap_bytes(200)
     p = tmp_path / "mix.pcap"
     p.write_bytes(buf)
     assert chunked_rows(str(p), chunk_bytes) == decode_pcap_bytes(buf)
@@ -125,7 +118,7 @@ def test_convert_auto_chunk_policy(spark, tmp_path, monkeypatch):
 
     from pcap_to_parquet_spark.sources import pcap as pcap_mod
 
-    buf = _mixed_pcap(300)
+    buf = mixed_pcap_bytes(300)
     p = tmp_path / "cap.pcap"
     p.write_bytes(buf)
     assert pcap_mod._auto_chunk_bytes(spark, str(p)) is None  # small file
@@ -177,7 +170,7 @@ def test_convert_auto_falls_back_on_resync_error(spark, tmp_path, monkeypatch):
 
 
 def test_spark_chunked_reader(spark, tmp_path):
-    buf = _mixed_pcap(5000)
+    buf = mixed_pcap_bytes(5000)
     p = tmp_path / "big.pcap"
     p.write_bytes(buf)
     df = read_pcap_chunked(spark, str(p), chunk_bytes=50_000)
@@ -187,3 +180,44 @@ def test_spark_chunked_reader(spark, tmp_path):
     )
     assert len(rows) == 5000
     assert rows == want
+
+
+def test_chunked_v6_every_boundary(tmp_path):
+    """Every chunk size over the v6 golden file, both modes: resync is
+    L2-agnostic, so v6 frames must survive arbitrary boundaries just
+    like v4 ones — and default mode must stay reference parity."""
+    buf = v6_golden_pcap_bytes()
+    p = tmp_path / "v6.pcap"
+    p.write_bytes(buf)
+    for mode in (True, False):
+        want = decode_pcap_bytes(buf, mode)
+        for chunk_bytes in range(16, len(buf) + 16, 16):
+            got = chunked_rows(str(p), chunk_bytes, mode)
+            assert got == want, f"chunk={chunk_bytes} ipv6={mode}"
+
+
+def test_spark_chunked_v6_equals_per_file(spark, tmp_path):
+    """read_pcap_chunked(ipv6=True) row-set == read_pcap(ipv6=True) on
+    the v6 fixture (forced small chunks → real resync on executors)."""
+    buf = v6_golden_pcap_bytes()
+    p = tmp_path / "v6.pcap"
+    p.write_bytes(buf)
+    key = lambda r: (r["len"], r["src_ip"] or "", r["src_port"] or -1)  # noqa: E731
+    chunked = sorted(
+        (r.asDict() for r in read_pcap_chunked(
+            spark, str(p), chunk_bytes=128, ipv6=True).collect()),
+        key=key,
+    )
+    per_file = sorted(
+        (r.asDict() for r in read_pcap(spark, str(p), ipv6=True).collect()),
+        key=key,
+    )
+    assert chunked == per_file
+    assert any(r["src_ip"] and ":" in r["src_ip"] for r in chunked)
+    # default (no flag): chunked reader keeps byte-identical parity
+    parity_chunked = sorted(
+        (r.asDict() for r in read_pcap_chunked(spark, str(p), chunk_bytes=128).collect()),
+        key=lambda r: r["len"],
+    )
+    parity_ref = sorted(decode_pcap_bytes(buf), key=lambda r: r["len"])
+    assert parity_chunked == parity_ref

@@ -3,22 +3,12 @@ streaming directory tail."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from pcap_to_parquet_spark.sources.pcap import read_pcap
 from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
-from pcap_to_parquet_spark.sources.pcap_fixtures import (
-    BASE_TS,
-    eth,
-    golden_pcap_bytes,
-    ipv4,
-    mm_trailer,
-    pcap_file,
-    tcp,
-    udp,
-)
+from pcap_to_parquet_spark.sources.pcap_fixtures import golden_pcap_bytes, mixed_pcap_bytes
+from tests.conftest import V6_GOLDEN_ROWS
 
 
 def _key(r):
@@ -27,14 +17,6 @@ def _key(r):
 
 def _rows(df):
     return sorted((tuple(r) for r in df.collect()), key=_key)
-
-
-def _mixed_pcap(n: int) -> bytes:
-    udp_f = eth(ipv4(17, "10.0.0.1", "10.0.0.2", udp(1234, 5678)))
-    tcp_f = eth(ipv4(6, "192.168.1.10", "192.168.1.20", tcp(80, 443)))
-    mm_f = udp_f + mm_trailer(BASE_TS - 2, 500_000_123, 7, 3)
-    mix = [udp_f, tcp_f, mm_f]
-    return pcap_file([(BASE_TS, len(mix[i % 3]), mix[i % 3]) for i in range(n)])
 
 
 @pytest.mark.slow  # >=5s
@@ -54,7 +36,7 @@ def test_datasource_chunked_partitions_equal_whole(spark, tmp_path):
 
     register_pcap_source(spark)
     p = tmp_path / "mix.pcap"
-    p.write_bytes(_mixed_pcap(60_000))
+    p.write_bytes(mixed_pcap_bytes(60_000))
     assert p.stat().st_size > 3 << 20
     units = PcapBatchReader({"path": str(p), "chunk_mb": "1"}).partitions()
     assert len(units) >= 3
@@ -73,7 +55,7 @@ def test_reader_options_round_trip_exactly(tmp_path):
     from pcap_to_parquet_spark.sources.pcap_datasource import PcapBatchReader
 
     p = tmp_path / "mix.pcap"
-    p.write_bytes(_mixed_pcap(1000))
+    p.write_bytes(mixed_pcap_bytes(1000))
     assert p.stat().st_size > 50_000
 
     def plan(chunk_mb, tol_h):  # -> (widths of all units but the last, ts_tol)
@@ -153,7 +135,7 @@ def test_datasource_packs_units_like_read_pcap(spark, tmp_path):
     d = tmp_path / "caps"
     d.mkdir()
     for i in range(16):
-        (d / f"c{i:02d}.pcap").write_bytes(_mixed_pcap(40 + 29 * i))
+        (d / f"c{i:02d}.pcap").write_bytes(mixed_pcap_bytes(40 + 29 * i))
     par = spark.sparkContext.defaultParallelism
     parts = PcapBatchReader({"path": str(d)}, par).partitions()
     assert 0 < len(parts) <= par and all(p.units for p in parts)
@@ -203,10 +185,10 @@ def test_datasource_streaming_tails_directory(spark, tmp_path):
     (land / "a.pcap").write_bytes(golden_pcap_bytes())
     drain()
     assert len(out_rows) == 13
-    (land / "b.pcap").write_bytes(_mixed_pcap(30))
+    (land / "b.pcap").write_bytes(mixed_pcap_bytes(30))
     drain()
     assert len(out_rows) == 43  # only the NEW file decoded
-    (land / "_tmp.pcap").write_bytes(_mixed_pcap(30))  # still being written
+    (land / "_tmp.pcap").write_bytes(mixed_pcap_bytes(30))  # still being written
     drain()
     assert len(out_rows) == 43  # hidden names skipped, as in batch
 
@@ -423,3 +405,26 @@ def test_writer_render_roundtrips_arbitrary_rows():
         assert got == want, (got, want)
 
     check()
+
+
+def test_v6_through_datasource_with_pushdown(spark):
+    """spark.read.format('pcap').option('ipv6', 'true'): the connector
+    carries the v6 decode, and a pushed protocol filter compares in
+    NAME space (ICMPv6 exists only there — the v4 number space would
+    drop every v6 row)."""
+    from pcap_to_parquet_spark.operators.pcap_query import _v6_fixture_path
+    from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
+
+    register_pcap_source(spark)
+    df = spark.read.format("pcap").option("ipv6", "true").load(_v6_fixture_path())
+    rows = [r.asDict() for r in df.orderBy("len", "src_ip").collect()]
+    assert rows == sorted(V6_GOLDEN_ROWS, key=lambda r: (r["len"], r["src_ip"] or ""))
+    icmp6 = df.where("protocol = 'ICMPv6'").collect()
+    assert [r.src_ip for r in icmp6] == ["fe80::1"]
+    # both 2001:db8::1 UDP packets plus the dual-stack v4 one — the
+    # pushed name-space filter must keep BOTH stacks' UDP rows
+    udp1234 = df.where("protocol = 'UDP' AND src_port = 1234").count()
+    assert udp1234 == 3
+    # default (no option) stays reference parity through the connector
+    parity = spark.read.format("pcap").load(_v6_fixture_path())
+    assert parity.where("src_ip LIKE '%:%'").count() == 0
