@@ -2004,7 +2004,7 @@ def holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output per user: final level, trend, and 1-step-ahead forecast;
     reproduced exactly by a plain-Python reference in
-    tests/test_behavior.py."""
+    tests/test_round4c_ops.py."""
     import pandas as pd
 
     e = load_table(spark, sf_dir, "events")

@@ -3531,7 +3531,7 @@ def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist, and the rerank touches {short} rows. Compose with the
     IVF list pruning of q_similarity_ivf for IVF-PQ. Recall vs exact
     L2 (0.8@10 on the weakly-clustered synthetic embeddings, vs 0.2
-    for raw ADC) is pinned in tests/test_llm_ops.py."""
+    for raw ADC) is pinned in tests/test_round4c_ops.py."""
     em = _embeddings(spark, sf_dir)
     books = pq_train(em)
     out = pq_search(em, em, books)
@@ -3690,7 +3690,7 @@ def ivf_pq(spark: SparkSession, sf_dir: str, n_probes: int = 3) -> DataFrame:
     (standard: one quantizer, many lists), candidates are the probed
     lists only, and the ADC shortlist is exactly reranked. Recall
     relative to plain IVF at the same probe count is pinned in
-    tests/test_llm_ops.py — PQ's quantization loss must cost at
+    tests/test_round4c_ops.py — PQ's quantization loss must cost at
     most a small recall delta once the rerank runs."""
     em = _embeddings(spark, sf_dir)
     books = pq_train(em)
@@ -3727,7 +3727,7 @@ def pca_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     explained-variance ratio, and the DISTRIBUTED variance of the
     actual projections — which must reproduce the eigenvalue, the
     end-to-end proof that sketch, eig and projection agree (pinned in
-    tests/test_llm_ops.py)."""
+    tests/test_round4c_ops.py)."""
     em = _embeddings(spark, sf_dir)
     d_dim = 64
 
@@ -3920,7 +3920,7 @@ def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: one row per feature with the learned coefficient plus the
     training loss/accuracy trajectory endpoints; loss decrease and
     better-than-majority accuracy are pinned in
-    tests/test_llm_ops.py."""
+    tests/test_round4c_ops.py."""
     d = load_table(spark, sf_dir, "documents")
     toks = whitespace_tokens("text")
     n_toks = F.greatest(F.size(toks), F.lit(1))
@@ -4217,7 +4217,7 @@ def opq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     warm path), the cross-moment, and R itself, so the DuckDB replay
     is bit-identical. Output: per-iteration mean quantization error,
     iteration 0 being PLAIN PQ (R = I) — the monotone decrease that
-    is OPQ's whole point is pinned in tests/test_llm_ops.py."""
+    is OPQ's whole point is pinned in tests/test_round4c_ops.py."""
     em = _embeddings(spark, sf_dir)
     d_dim, d_sub = 64, 64 // PQ_M
     r_mat = np.eye(d_dim)
@@ -4394,7 +4394,7 @@ def residual_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing kernels' moment discipline. Output compares mean squared
     reconstruction error of plain PQ vs coarse-only vs
     coarse+residual-PQ — the two-level encoder must beat both of its
-    halves (pinned in tests/test_llm_ops.py)."""
+    halves (pinned in tests/test_round4c_ops.py)."""
     em = _embeddings(spark, sf_dir)
     d_dim, d_sub = 64, 64 // PQ_M
     cfinal = pq_train(em, m=1, k=RQ_COARSE_K)[0]  # (RQ_COARSE_K, 64)
@@ -5185,7 +5185,7 @@ LIMIT 20
 
 def _winnow_collapse(d: DataFrame):
     """Dedup-collapse + select-phase of q_winnowing, exposed so the
-    regression contract in tests/test_neardup_family.py can assert the
+    regression contract in tests/test_round5_ops.py can assert the
     O(reps) invariant directly: ``pr`` (the frame the shared-print
     self-join explodes) must carry ONE row per distinct text group,
     never one per document — a member-level frame here made the join

@@ -637,7 +637,7 @@ def pcap_stream_closed_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: one shuffle (packets → keyed session-window state),
     state size = active flows only (eviction pinned by
-    tests/test_pcap_query.py::test_closed_flows_state_eviction via
+    tests/test_round14_ops.py::test_closed_flows_state_eviction via
     numRowsRemoved > 0 and the batch-equality pin on closed flows).
     Driven by run_to_memory_flushed: Python data sources never get the
     availableNow no-data flush batch (measured), so a fast
@@ -939,7 +939,7 @@ def pcap_stream_flow_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: one shuffle (packets → keyed session-window state);
     the epoch key adds no extra exchange (same hash partitioning);
-    eviction pinned by tests/test_pcap_query.py (numRowsRemoved ≥ 1,
+    eviction pinned by tests/test_round14_ops.py (numRowsRemoved ≥ 1,
     emitted records equal the batch algebra's closed set). Oracle:
     islands within (key, epoch) over the timed golden literal CLIPPED
     to record_close <= max(evt) - delay — the q_stream_session
@@ -1194,7 +1194,7 @@ def pcap_stream_talkers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final aggregate keyed by endpoint. Oracle: the closed-flow
     oracle nested verbatim + the identical roles/census algebra, so
     the emission contract and the census can't drift apart.
-    Batch-equality pin: tests/test_pcap_query.py checks this result
+    Batch-equality pin: tests/test_round15_ops.py checks this result
     equals talkers_census_from_flows over the batch gaps-and-islands
     closed set."""
     from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source

@@ -1565,7 +1565,7 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay the same per-round cost. Outputs the learned merge table
     (round, left, right, merged, pair_count); greedy left-to-right
     semantics and max-count monotonicity are pinned in
-    tests/test_text_pipeline.py."""
+    tests/test_round4c_ops.py."""
     d = load_table(spark, sf_dir, "documents")
     words = (
         fan_out(d)
@@ -1637,7 +1637,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows with the corpus by Heaps' law, so AQE chooses broadcast
     only while the map actually fits (the q_ngram_lm_score
     discipline). Per-doc symbol counts are pinned against a
-    plain-Python encoder in tests/test_text_pipeline.py."""
+    plain-Python encoder in tests/test_round4c_ops.py."""
     merge_rows = bpe_merges(spark, sf_dir).collect()
     d = load_table(spark, sf_dir, "documents")
     tok = fan_out(d).select("doc_id", F.explode(whitespace_tokens("text")).alias("word"))

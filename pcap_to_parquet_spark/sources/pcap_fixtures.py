@@ -278,7 +278,7 @@ def biflow_fixture_packets() -> dict[str, tuple[int, int, bytes]]:
     colon-hex ≠ dotted-quad). All three v6 packets carry Metamako
     stamps so the watermark-evicted streaming flow table has a timed
     population spanning t-10..t-1. Hand-traced expectations live in
-    the q_pcap_biflow oracle and tests/test_pcap_query.py."""
+    the q_pcap_biflow oracle and tests/test_round13_ops.py."""
     t = BASE_TS
     a2b = lambda pay: eth(ipv4(17, "10.0.0.1", "10.0.0.2", udp(1000, 2000, pay)))  # noqa: E731
     b2a = lambda pay: eth(ipv4(17, "10.0.0.2", "10.0.0.1", udp(2000, 1000, pay)))  # noqa: E731

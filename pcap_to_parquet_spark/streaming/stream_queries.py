@@ -1310,7 +1310,7 @@ def stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole model, so the forecast updates in-place as events arrive —
     the online form of q_holt_forecast, whose batch output it must
     equal exactly under availableNow ingestion (pinned in
-    tests/test_streaming.py; same initialization l₁=y₁, b₁=y₂-y₁
+    tests/test_round4c_ops.py; same initialization l₁=y₁, b₁=y₂-y₁
     applied across the batch boundary via the stored level). Shares
     the batch query's recursive-CTE oracle: the streaming state after
     full ingestion IS the batch recursion's final state."""

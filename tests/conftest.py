@@ -68,6 +68,19 @@ def _events_lake(spark, path, rows, single_file=False):
     return str(path)
 
 
+def _closed_flows_land(spark, tmp_path) -> str:
+    """A landing dir under ``tmp_path`` holding the biflow capture, with
+    the pcap stream source registered."""
+    from pcap_to_parquet_spark.operators.pcap_query import (
+        _biflow_fixture_path,
+        _stage_capture,
+    )
+    from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
+
+    register_pcap_source(spark)
+    return _stage_capture(_biflow_fixture_path(), str(tmp_path), "biflow.pcap")
+
+
 def _null_row(length: int) -> dict:
     return {
         "src_ip": None,

@@ -5,15 +5,15 @@ exactness guarantees rest on."""
 
 from __future__ import annotations
 
-import datetime as dt
 from collections import defaultdict
 
-import pytest
+import pcap_to_parquet_spark.operators  # noqa: F401  (registers queries)
+
+from pcap_to_parquet_spark.registry import QUERIES
 from pyspark.sql.functions import col as F_col
 
-import pcap_to_parquet_spark.operators  # noqa: F401  (registers queries)
-from pcap_to_parquet_spark.registry import QUERIES
-from tests.conftest import SF0001, SF001, _EVENT_SCHEMA, _T0, _write
+from tests.conftest import SF0001
+import pytest
 
 
 @pytest.mark.slow  # >=5s
@@ -314,373 +314,3 @@ def test_cow_delete_rewrites_minority_of_files(spark):
         .count()
         == 0
     )
-
-
-def test_pagerank_mass_and_floor(spark):
-    """Integer PageRank: every rank ≥ the 0.15 base, and the top-20
-    ranks are in (weakly) descending order with suppliers/customers
-    both representable."""
-    rows = QUERIES["q_pagerank"](spark, SF0001).collect()
-    assert len(rows) == 20
-    prs = [r.pr_scaled for r in rows]
-    assert prs == sorted(prs, reverse=True)
-    assert all(p >= 150_000_000 for p in prs)
-    assert {r.node_type for r in rows} <= {"customer", "supplier"}
-
-
-def test_triangle_cap_is_conservative(spark):
-    """Capping can only remove edges and triangles, never add."""
-    full = QUERIES["q_triangle_count"](spark, SF0001).collect()[0]
-    capped = QUERIES["q_triangle_cap"](spark, SF0001).collect()[0]
-    assert capped.n_edges_total == full.n_edges
-    assert capped.n_edges_kept <= capped.n_edges_total
-    assert capped.n_triangles <= full.n_triangles
-    assert capped.n_capped_nodes >= 0
-
-
-def test_attribution_conserves_purchase_value(spark):
-    """Credit conservation: summed attributed value across channels
-    (including 'direct') equals total purchase value to rounding."""
-    from pyspark.sql import functions as F
-
-    from pcap_to_parquet_spark.sources import load_table
-
-    rows = QUERIES["q_attribution"](spark, SF001).collect()
-    total_attr = sum(r.attributed_value for r in rows)
-    total_purch = (
-        load_table(spark, SF001, "events")
-        .filter(F.col("event_type") == "purchase")
-        .agg(F.sum("value"))
-        .collect()[0][0]
-    )
-    assert abs(total_attr - total_purch) < 0.01 * max(len(rows), 1)
-    assert {r.channel for r in rows} <= {"view", "click", "direct"}
-
-
-@pytest.mark.slow  # >=5s
-def test_pagerank_kernel_fuzz_against_python(spark):
-    """Randomized directed graphs: the fixed-point kernel must equal a
-    pure-Python integer reference BIT-FOR-BIT (that's the whole point
-    of fixed-point arithmetic)."""
-    import random
-
-    from pcap_to_parquet_spark.operators.behavior import pagerank_iterations
-
-    rng = random.Random(77)
-    for trial in range(6):
-        n = rng.randint(2, 40)
-        edges = set()
-        for _ in range(rng.randint(1, 3 * n)):
-            a, b = rng.randrange(n), rng.randrange(n)
-            if a != b:
-                edges.add((a, b))
-        if not edges:
-            continue
-        deg = {}
-        for a, _ in edges:
-            deg[a] = deg.get(a, 0) + 1
-        pr = {a: 1_000_000_000 for a in deg}
-        for _ in range(3):
-            acc = {}
-            for a, b in edges:
-                if a in pr:
-                    acc[b] = acc.get(b, 0) + pr[a] // deg[a]
-            pr = {b: 150_000_000 + (85 * s) // 100 for b, s in acc.items()}
-        df = spark.createDataFrame(sorted(edges), "src long, dst long")
-        got = {r.node: r.pr for r in pagerank_iterations(df, 3).collect()}
-        assert got == pr, (trial, n, len(edges))
-
-
-def test_ewma_first_row_and_pull(spark):
-    """Each user's chronologically-first event has EWMA == its own
-    value (frame of one, normalizer 1); every EWMA lies within the
-    running min/max of its frame (a weighted mean cannot escape its
-    inputs)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from pcap_to_parquet_spark.sources import load_table
-
-    got = {(r.user_id, r.event_id): r.ewma for r in QUERIES["q_ewma"](spark, SF0001).collect()}
-    e = load_table(spark, SF0001, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wf = w.rowsBetween(-19, Window.currentRow)
-    rows = e.select(
-        "user_id",
-        "event_id",
-        F.round("value", 4).alias("v"),
-        F.row_number().over(w).alias("rn"),
-        F.min("value").over(wf).alias("lo"),
-        F.max("value").over(wf).alias("hi"),
-    ).collect()
-    assert len(rows) == len(got)
-    for r in rows:
-        ew = got[(r.user_id, r.event_id)]
-        if r.rn == 1:
-            assert abs(ew - r.v) < 1e-9, r
-        assert r.lo - 1e-4 <= ew <= r.hi + 1e-4, (r, ew)
-
-
-def test_holt_forecast_matches_reference(spark):
-    """Every user's (level, trend, forecast) must equal a plain-Python
-    Holt recursion over the same (ts, event_id)-ordered values."""
-    from pcap_to_parquet_spark.sources import load_table
-
-    got = {r.user_id: r for r in QUERIES["q_holt_forecast"](spark, SF0001).collect()}
-    events = sorted(
-        load_table(spark, SF0001, "events")
-        .select("user_id", "ts", "event_id", "value")
-        .collect(),
-        key=lambda r: (r.user_id, r.ts, r.event_id),
-    )
-    series = {}
-    for r in events:
-        series.setdefault(r.user_id, []).append(float(r.value))
-    assert set(got) == set(series)
-    for uid, y in series.items():
-        if len(y) == 1:
-            lvl, trd = y[0], 0.0
-        else:
-            lvl, trd = y[0], y[1] - y[0]
-            for v in y[1:]:
-                prev = lvl
-                lvl = 0.5 * v + 0.5 * (lvl + trd)
-                trd = 0.3 * (lvl - prev) + 0.7 * trd
-        r = got[uid]
-        assert r.n_events == len(y)
-        assert abs(r.level - round(lvl, 4)) < 1e-9, uid
-        assert abs(r.trend - round(trd, 4)) < 1e-9, uid
-        assert abs(r.forecast - round(lvl + trd, 4)) < 1e-9, uid
-
-
-def test_adamic_adar_planted_square(spark, tmp_path):
-    """Planted 4-cycle 1-2-3-4-1: the two diagonals (1,3) and (2,4)
-    are the only non-edges, each with two common neighbors of degree
-    2, so both score 2/ln(2) and nothing else appears."""
-    import math
-
-    rows = []
-    ok = 0
-    for a, b in [(1, 2), (2, 3), (3, 4), (1, 4)]:
-        rows.append((ok, a))
-        rows.append((ok, b))
-        ok += 1
-    li = spark.createDataFrame(
-        [(o, p) for o, p in rows], "l_orderkey long, l_partkey long"
-    )
-    d = tmp_path / "aa"
-    li.write.mode("overwrite").parquet(str(d / "lineitem.parquet"))
-    out = {(r.u, r.v): r for r in QUERIES["q_adamic_adar"](spark, str(d)).collect()}
-    assert set(out) == {(1, 3), (2, 4)}
-    want = round(2 / math.log(2), 4)
-    for r in out.values():
-        assert r.aa_score == want
-        assert r.n_common == 2
-
-
-def test_adamic_adar_excludes_existing_edges(spark):
-    """No candidate pair may already be a co-purchase edge."""
-    df = QUERIES["q_adamic_adar"](spark, SF0001)
-    import duckdb
-
-    cand = [(r.u, r.v) for r in df.collect()]
-    assert len(cand) > 0
-    edges = set(
-        duckdb.sql(
-            f"""SELECT DISTINCT a.l_partkey, b.l_partkey
-        FROM '{SF0001}/lineitem.parquet' a JOIN '{SF0001}/lineitem.parquet' b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey"""
-        ).fetchall()
-    )
-    assert not (set(cand) & edges)
-
-
-def test_ks_drift_identical_vs_shifted(spark, tmp_path):
-    """Identical distributions -> KS ~ 0, p ~ 2 (clamped tail form);
-    disjoint distributions -> KS = 1, p ~ 0."""
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def lake(vals_a, vals_b, d):
-        rows = []
-        eid = 0
-        for v in vals_a:
-            rows.append((eid, t0, eid, "view", float(v), "{}")); eid += 1
-        for v in vals_b:
-            rows.append((eid, t0, eid, "purchase", float(v), "{}")); eid += 1
-        spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        ).write.mode("overwrite").parquet(str(d / "events.parquet"))
-        return str(d)
-
-    same = lake(range(100), range(100), tmp_path / "same")
-    r = QUERIES["q_ks_drift"](spark, same).collect()[0]
-    assert r.n_view == 100 and r.n_purchase == 100
-    assert r.ks_stat == 0.0
-
-    disj = lake(range(100), range(1000, 1100), tmp_path / "disj")
-    r = QUERIES["q_ks_drift"](spark, disj).collect()[0]
-    assert r.ks_stat == 1.0
-    assert r.p_approx < 1e-4
-
-
-def test_kcore_peels_pendant_keeps_clique(spark, tmp_path):
-    """Planted graph: a 4-clique (every pair co-purchased in 2 orders)
-    plus a pendant node hanging off it. The 3-core is exactly the
-    clique; the pendant (degree 1) peels in round one."""
-    rows = []
-    ok = 0
-    clique = [1, 2, 3, 4]
-    pairs = [(a, b) for a in clique for b in clique if a < b] + [(1, 5)]
-    for a, b in pairs:
-        for _ in range(2):  # support >= 2 threshold
-            rows.append((ok, a))
-            rows.append((ok, b))
-            ok += 1
-    d = tmp_path / "kcore"
-    spark.createDataFrame(rows, "l_orderkey long, l_partkey long").write.mode(
-        "overwrite"
-    ).parquet(str(d / "lineitem.parquet"))
-    r = QUERIES["q_kcore"](spark, str(d)).collect()[0]
-    assert r.n_nodes == 5
-    assert r.n_core_nodes == 4
-    assert r.n_core_edges == 6
-    assert r.converged
-
-
-def test_changepoint_finds_planted_shift(spark, tmp_path):
-    """Series with a hard level shift: hours 0-9 at value 1, hours
-    10-19 at value 100 — the argmax split must be at hour 9 (last
-    left-segment hour) with means 1 and 100."""
-    import datetime as dt
-
-    rows = []
-    for h in range(20):
-        ts = dt.datetime(2024, 1, 1) + dt.timedelta(hours=h)
-        rows.append((h, ts, h, "view", 1.0 if h < 10 else 100.0, "{}"))
-    d = tmp_path / "cp"
-    spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).write.mode("overwrite").parquet(str(d / "events.parquet"))
-    r = QUERIES["q_changepoint"](spark, str(d)).collect()[0]
-    assert r.n_left == 10 and r.n_right == 10
-    assert r.mean_left == 1.0 and r.mean_right == 100.0
-    import datetime as dt2
-
-    assert r.split_us == int(dt.datetime(2024, 1, 1, 9).timestamp() * 1_000_000)
-
-
-def test_degree_powerlaw_star_graph(spark, tmp_path):
-    """A star K(1,6) built from 2-item orders: hub degree 6, six
-    leaves of degree 1 -> d_min 1, d_max 6, alpha from the closed
-    form 1 + n/sum(ln d)."""
-    import math
-
-    rows = []
-    for i, leaf in enumerate(range(2, 8)):
-        rows.append((i, 1))
-        rows.append((i, leaf))
-    d = tmp_path / "pl"
-    spark.createDataFrame(rows, "l_orderkey long, l_partkey long").write.mode(
-        "overwrite"
-    ).parquet(str(d / "lineitem.parquet"))
-    r = QUERIES["q_degree_powerlaw"](spark, str(d)).collect()[0]
-    assert r.n_nodes == 7 and r.d_min == 1 and r.d_max == 6
-    want = round(1.0 + 7 / math.log(6.0), 4)
-    assert r.alpha_mle == want
-
-
-def test_psi_drift_identical_vs_shifted(spark, tmp_path):
-    """Identical distributions -> PSI ~ 0 (exactly 0 with symmetric
-    smoothing); disjoint distributions -> PSI large (> 1)."""
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def lake(vals_a, vals_b, d):
-        rows = []
-        eid = 0
-        for v in vals_a:
-            rows.append((eid, t0, eid, "view", float(v), "{}")); eid += 1
-        for v in vals_b:
-            rows.append((eid, t0, eid, "purchase", float(v), "{}")); eid += 1
-        spark.createDataFrame(
-            rows,
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        ).write.mode("overwrite").parquet(str(d / "events.parquet"))
-        return str(d)
-
-    same = lake(range(100), range(100), tmp_path / "same")
-    r = QUERIES["q_psi_drift"](spark, same).collect()[0]
-    assert r.n_view == 100 and r.n_purchase == 100 and r.bins == 10
-    assert r.psi == 0.0
-
-    disj = lake(range(100), range(900, 1000), tmp_path / "disj")
-    r = QUERIES["q_psi_drift"](spark, disj).collect()[0]
-    assert r.psi > 1.0
-
-
-# ---------------------------------------------------------------------------
-# Kaplan-Meier
-
-
-def test_kaplan_meier_textbook_curve(spark, tmp_path):
-    """Planted lifetimes 1,1,2,3 (all churned) + one fresh anchor user
-    (censored at t=0): the product-limit steps are 1, 1/2, 1/4, 0 and
-    the censored user only inflates the risk sets."""
-    rows = []
-    # anchor: active at the corpus end (sets gmax, censored, t=0)
-    rows.append((0, _T0 + dt.timedelta(days=100), 99, "view", 1.0, "{}"))
-    # four churned users: first/last pairs giving durations 1,1,2,3
-    for uid, dur in [(1, 1), (2, 1), (3, 2), (4, 3)]:
-        rows.append((10 * uid, _T0, uid, "view", 1.0, "{}"))
-        rows.append((10 * uid + 1, _T0 + dt.timedelta(days=dur), uid, "view",
-                     1.0, "{}"))
-    _write(spark, tmp_path, rows, _EVENT_SCHEMA, "events")
-    curve = {r.duration_days: r for r in
-             QUERIES["q_kaplan_meier"](spark, str(tmp_path)).collect()}
-    assert curve[0].n_risk == 5 and curve[0].n_churned == 0
-    assert curve[0].survival == 1.0
-    assert curve[1].n_risk == 4 and curve[1].n_churned == 2
-    assert curve[1].survival == 0.5
-    assert curve[2].n_risk == 2 and curve[2].survival == 0.25
-    assert curve[3].n_risk == 1 and curve[3].survival == 0.0
-
-
-def test_kaplan_meier_monotone_on_testdata(spark):
-    rows = QUERIES["q_kaplan_meier"](spark, SF0001).collect()
-    surv = [r.survival for r in rows]  # ordered by duration
-    assert all(a >= b for a, b in zip(surv, surv[1:]))
-    assert all(0.0 <= s <= 1.0 for s in surv)
-    assert rows[0].n_risk == sum(r.n_churned + r.n_censored for r in rows)
-
-
-# ---------------------------------------------------------------------------
-# burstiness
-
-
-def test_burstiness_negative_for_clockwork_stream(spark, tmp_path):
-    """A perfectly periodic stream has sd = 0 -> B = (0-mu)/(0+mu) = -1;
-    a bursty stream (tiny gaps + one huge gap) pushes B toward +1."""
-    rows = []
-    for i in range(20):  # clockwork: every hour exactly
-        rows.append((i, _T0 + dt.timedelta(hours=i), 1, "view", 1.0, "{}"))
-    # bursty: 10 events 1s apart, then 10 days of silence, 10 more
-    for i in range(10):
-        rows.append((100 + i, _T0 + dt.timedelta(seconds=i), 2, "click",
-                     1.0, "{}"))
-        rows.append((200 + i, _T0 + dt.timedelta(days=10, seconds=i), 2,
-                     "click", 1.0, "{}"))
-    _write(spark, tmp_path, rows, _EVENT_SCHEMA, "events")
-    b = {r.event_type: r for r in
-         QUERIES["q_burstiness"](spark, str(tmp_path)).collect()}
-    assert b["view"].n_gaps == 19
-    assert b["view"].sd_gap_us == 0.0
-    assert b["view"].burstiness == -1.0
-    assert b["click"].burstiness > 0.5

@@ -1,10 +1,10 @@
-"""Statistical operators (``operators/evaluation.py``) on planted data.
+"""Round-7 statistical-qualification operator tests: planted-data
+semantics pins for operators/evaluation.py.
 
-DuckDB parity is ``tools/check_oracle.py``'s job; these tests pin what
-the statistics MEAN: that chi2 is zero exactly when the design is
-independent, that conformal coverage honors its quantile, that the NB
-classifier separates separable classes, that rank statistics saturate
-on monotone data, etc.
+Oracle parity is the driver's job (tools/check_oracle.py replays it);
+these tests pin what the statistics MEAN — that chi2 is zero exactly
+when the design is independent, that conformal coverage honors its
+quantile, that the NB classifier separates separable classes, etc.
 """
 
 from __future__ import annotations
@@ -304,371 +304,3 @@ def test_bootstrap_is_deterministic_and_ordered(spark):
     assert a.n_boot == 200
     assert a.ci_lo <= a.estimate <= a.ci_hi
     assert a.ci_lo < a.ci_hi
-
-
-def _orders_by_day(spark, path, day_specs):
-    """day_specs: list of (day_index, [prices]) -> one order per price."""
-    rows = []
-    k = 0
-    for day, prices in day_specs:
-        for p in prices:
-            rows.append(
-                (k, k, "O", float(p), _T0 + dt.timedelta(days=day), "1-URGENT")
-            )
-            k += 1
-    _write(spark, path, rows, _ORDER_SCHEMA, "orders")
-
-
-# ---------------------------------------------------------------------------
-# Spearman / Kendall
-
-
-def test_spearman_saturates_on_monotone_nonlinear(spark, tmp_path):
-    """rev = cnt^3 is perfectly monotone in cnt -> rho exactly 1 while
-    Pearson stays strictly below 1 (the relation is convex)."""
-    specs = [(d, [float(d**2)] * d) for d in range(1, 7)]  # rev = d^3, cnt = d
-    _orders_by_day(spark, tmp_path, specs)
-    r = QUERIES["q_spearman_corr"](spark, str(tmp_path)).collect()[0]
-    assert r.n_days == 6
-    assert r.rho_spearman == 1.0
-    assert 0.0 < r.r_pearson < 1.0
-
-
-def test_spearman_antimonotone_is_minus_one(spark, tmp_path):
-    # cnt = d rises while the DAILY TOTAL (one priced order + d-1 free
-    # ones) falls: rev = 100 - d^2
-    specs = [(d, [float(100 - d**2)] + [0.0] * (d - 1)) for d in range(1, 6)]
-    _orders_by_day(spark, tmp_path, specs)
-    r = QUERIES["q_spearman_corr"](spark, str(tmp_path)).collect()[0]
-    assert r.rho_spearman == -1.0
-
-
-def test_kendall_counts_all_pairs_concordant(spark, tmp_path):
-    """Strictly co-monotone series with no ties: every one of the
-    n(n-1)/2 day pairs is concordant -> tau_b = 1."""
-    specs = [(d, [float(10 * d)] * d) for d in range(1, 6)]  # n = 5 days
-    _orders_by_day(spark, tmp_path, specs)
-    r = QUERIES["q_kendall_tau"](spark, str(tmp_path)).collect()[0]
-    assert r.n_days == 5
-    assert r.n_concordant == 10
-    assert r.n_discordant == 0
-    assert r.tau_b == 1.0
-
-
-# ---------------------------------------------------------------------------
-# Mann-Whitney
-
-
-def test_mann_whitney_separated_groups(spark, tmp_path):
-    """Every 'click' value above every 'view' value -> U = na*nb (the
-    maximum) and z > 0; the rank machinery must not lose mass."""
-    rows = []
-    for i in range(5):
-        rows.append((i, _T0, i, "click", 10.0 + i, "{}"))
-        rows.append((100 + i, _T0, i, "view", 1.0 + i, "{}"))
-    _write(spark, tmp_path, rows, _EVENT_SCHEMA, "events")
-    r = QUERIES["q_mann_whitney"](spark, str(tmp_path)).collect()[0]
-    assert (r.n_a, r.n_b) == (5, 5)
-    assert r.u_stat == 25.0
-    assert r.z_score > 2.0
-
-
-def test_mann_whitney_identical_groups_z_zero(spark, tmp_path):
-    """Identical value multisets -> all ranks tie pairwise, U = na*nb/2
-    exactly, z = 0."""
-    rows = []
-    for i in range(6):
-        rows.append((i, _T0, i, "click", float(i % 3), "{}"))
-        rows.append((100 + i, _T0, i, "view", float(i % 3), "{}"))
-    _write(spark, tmp_path, rows, _EVENT_SCHEMA, "events")
-    r = QUERIES["q_mann_whitney"](spark, str(tmp_path)).collect()[0]
-    assert r.u_stat == 18.0  # 6*6/2
-    assert r.z_score == 0.0
-
-
-# ---------------------------------------------------------------------------
-# t-closeness
-
-
-def test_t_closeness_zero_when_groups_mirror_global(spark, tmp_path):
-    """Two groups with IDENTICAL sensitive distributions -> both match
-    the global distribution exactly -> max_t = 0, no violations."""
-    rows = []
-    for g, hour in enumerate([0, 1]):
-        for i in range(10):
-            rows.append(
-                (g * 100 + i, _T0 + dt.timedelta(hours=hour), i, "view",
-                 1.0, f'{{"k": {(i % 5) * 10}}}')
-            )
-    _write(spark, tmp_path, rows, _EVENT_SCHEMA, "events")
-    r = QUERIES["q_t_closeness"](spark, str(tmp_path)).collect()[0]
-    assert r.n_groups == 2
-    assert r.m_categories == 5
-    assert r.max_t == 0.0
-    assert r.violating_groups == 0
-
-
-def test_t_closeness_flags_skewed_group(spark, tmp_path):
-    """One group concentrated on a single sensitive decile against a
-    spread global distribution -> its EMD exceeds t -> flagged."""
-    rows = []
-    # group 0: all in decile 0
-    for i in range(10):
-        rows.append((i, _T0, i, "view", 1.0, '{"k": 0}'))
-    # group 1: uniform over deciles 0..4
-    for i in range(10):
-        rows.append(
-            (100 + i, _T0 + dt.timedelta(hours=1), i, "view", 1.0,
-             f'{{"k": {(i % 5) * 10}}}')
-        )
-    _write(spark, tmp_path, rows, _EVENT_SCHEMA, "events")
-    r = QUERIES["q_t_closeness"](spark, str(tmp_path)).collect()[0]
-    assert r.n_groups == 2
-    assert r.violating_groups >= 1
-    assert r.max_t > 0.2
-
-
-# ---------------------------------------------------------------------------
-# isotonic calibration (PAV)
-
-
-def test_isotonic_fit_is_monotone_and_mass_preserving(spark):
-    """PAV invariants on real data: fitted rates are non-decreasing in
-    score bin, lie in [0,1], and pooling preserves total label mass
-    (sum w*iso == sum w*raw)."""
-    rows = QUERIES["q_isotonic_calibration"](spark, SF0001).collect()
-    assert len(rows) >= 2
-    iso = [r.iso_rate for r in rows]
-    assert iso == sorted(iso)
-    for r in rows:
-        assert 0.0 <= r.iso_rate <= 1.0
-    mass_raw = sum(r.n_bin * r.raw_rate for r in rows)
-    mass_iso = sum(r.n_bin * r.iso_rate for r in rows)
-    assert abs(mass_raw - mass_iso) < 1e-3 * max(mass_raw, 1.0)
-
-
-# ---------------------------------------------------------------------------
-# PACF
-
-
-def test_pacf_lag1_equals_acf_lag1(spark):
-    """Durbin-Levinson level 1 is the ACF itself: pacf(1) == acf(1)
-    to the shared 6dp grid (both consume the same rounded rho_1)."""
-    acf = {r.lag: r.acf for r in QUERIES["q_acf"](spark, SF0001).collect()}
-    pacf = {r.lag: r.pacf for r in QUERIES["q_pacf"](spark, SF0001).collect()}
-    assert set(pacf) == {1, 2, 3, 4}
-    assert pacf[1] == acf[1]
-    for v in pacf.values():
-        assert -1.0 <= v <= 1.0
-
-
-# ---------------------------------------------------------------------------
-# Brown-Forsythe / Levene
-
-
-def test_levene_zero_when_spreads_match(spark, tmp_path):
-    """Two groups that are shifted copies of each other have identical
-    deviation distributions -> SSB = 0 -> W = 0 exactly."""
-    rows = []
-    for i in range(8):
-        rows.append((i, _T0, i, "click", float(i % 4), "{}"))
-        rows.append((100 + i, _T0, i, "view", 50.0 + (i % 4), "{}"))
-    _write(spark, tmp_path, rows, _EVENT_SCHEMA, "events")
-    r = QUERIES["q_levene_test"](spark, str(tmp_path)).collect()[0]
-    assert r.df_between == 1
-    assert r.df_within == 14
-    assert r.w_stat == 0.0
-
-
-def test_levene_flags_unequal_spread(spark, tmp_path):
-    """Same shape, wildly different spreads -> large W (spreads sit
-    far above the 4dp boundary rounding of the deviation sums)."""
-    rows = []
-    for i in range(12):
-        rows.append((i, _T0, i, "click", 10.0 + (i % 3), "{}"))
-        rows.append((100 + i, _T0, i, "view", 10.0 + (i % 3) * 20.0, "{}"))
-    _write(spark, tmp_path, rows, _EVENT_SCHEMA, "events")
-    r = QUERIES["q_levene_test"](spark, str(tmp_path)).collect()[0]
-    assert r.w_stat > 10.0
-
-
-# ---------------------------------------------------------------------------
-# Cohen's kappa
-
-
-def test_kappa_bounds_and_identity_on_testdata(spark):
-    """kappa = (po - pe)/(1 - pe) must hold on the emitted row, and
-    all three probabilities live in their textbook ranges."""
-    r = QUERIES["q_cohens_kappa"](spark, SF0001).collect()[0]
-    assert r.n_docs > 0
-    assert 0.0 <= r.p_observed <= 1.0
-    assert 0.0 <= r.p_expected <= 1.0
-    expect = (r.p_observed - r.p_expected) / (1 - r.p_expected)
-    assert abs(r.kappa - round(expect, 6)) < 2e-6
-    assert -1.0 <= r.kappa <= 1.0
-
-
-# ---------------------------------------------------------------------------
-# Brier decomposition
-
-
-def test_brier_murphy_identity(spark):
-    """Partitioning on the exact score grid makes Murphy's identity
-    exact: brier = reliability - resolution + uncertainty."""
-    r = QUERIES["q_brier_decomposition"](spark, SF0001).collect()[0]
-    assert r.n_docs > 0
-    assert 0.0 <= r.brier <= 1.0
-    assert abs(r.brier - (r.reliability - r.resolution + r.uncertainty)) < 5e-6
-    assert r.uncertainty <= 0.25 + 1e-9  # p(1-p) maximum
-
-
-# ---------------------------------------------------------------------------
-# McNemar
-
-
-def test_mcnemar_counts_discordant_pairs(spark, tmp_path):
-    """Construct docs where detector A (vowel ratio) is right and the
-    stopword detector B is wrong, and vice versa; chi2 = (b-c)^2/(b+c)
-    on those discordant counts only."""
-    r = QUERIES["q_mcnemar_test"](spark, SF0001).collect()[0]
-    assert r.n_docs > 0
-    assert r.n_a_only >= 0 and r.n_b_only >= 0
-    if r.n_a_only + r.n_b_only > 0:
-        expect = (r.n_a_only - r.n_b_only) ** 2 / (r.n_a_only + r.n_b_only)
-        assert abs(r.mcnemar_chi2 - round(expect, 6)) < 2e-6
-
-
-# ---------------------------------------------------------------------------
-# Hill tail index
-
-
-def test_hill_alpha_recovers_pareto_exponent(spark, tmp_path):
-    """Exact Pareto(alpha=2) order statistics: x_(i) = (n/i)^(1/2).
-    The Hill estimator over the top 100 must land near 2."""
-    n = 2000
-    rows = [(i, i, "O", float((n / i) ** 0.5), _T0, "1") for i in range(1, n + 1)]
-    _write(spark, tmp_path, rows, _ORDER_SCHEMA, "orders")
-    r = QUERIES["q_hill_tail"](spark, str(tmp_path)).collect()[0]
-    assert r.k_order_stats == 100
-    assert 1.7 < r.hill_alpha < 2.3
-    assert abs(r.mean_log_excess - 1.0 / r.hill_alpha) < 1e-4
-
-
-def test_hill_on_testdata_positive(spark):
-    r = QUERIES["q_hill_tail"](spark, SF0001).collect()[0]
-    assert r.k_order_stats == 100
-    assert r.hill_alpha > 0
-
-
-# ---------------------------------------------------------------------------
-# Simpson's paradox
-
-
-def test_simpson_flags_planted_reversal(spark, tmp_path):
-    """Two strata with NEGATIVE within-group slopes whose group means
-    are arranged so the pooled slope is positive -> reversal flag."""
-    rows = []
-    k = 0
-    # stratum A: x in [0,4], y = 10 - x (slope -1, low x, low y)
-    for i in range(5):
-        rows.append((k, 1, 1, 1, float(i), 10.0 - i, 0.0, 0.0, "A")); k += 1
-    # stratum R: x in [20,24], y = 100 - (x-20) (slope -1, high x, high y)
-    for i in range(5):
-        rows.append((k, 1, 1, 1, 20.0 + i, 100.0 - i, 0.0, 0.0, "R")); k += 1
-    _write(spark, tmp_path, rows,
-           "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-           "l_quantity double, l_extendedprice double, l_discount double, "
-           "l_tax double, l_returnflag string",
-           "lineitem")
-    r = QUERIES["q_simpson_paradox"](spark, str(tmp_path)).collect()[0]
-    assert r.n_groups == 2
-    assert r.max_group_slope == -1.0 and r.min_group_slope == -1.0
-    assert r.overall_slope > 0
-    assert r.sign_reversal == 1
-
-
-def test_simpson_no_flag_when_consistent(spark, tmp_path):
-    rows = []
-    k = 0
-    for g in ["A", "R"]:
-        for i in range(5):
-            rows.append((k, 1, 1, 1, float(i), 2.0 * i + (5.0 if g == "R" else 0.0),
-                         0.0, 0.0, g)); k += 1
-    _write(spark, tmp_path, rows,
-           "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-           "l_quantity double, l_extendedprice double, l_discount double, "
-           "l_tax double, l_returnflag string",
-           "lineitem")
-    r = QUERIES["q_simpson_paradox"](spark, str(tmp_path)).collect()[0]
-    assert r.sign_reversal == 0
-
-
-# ---------------------------------------------------------------------------
-# q_fairness_audit
-
-
-def _doc(i, text, lang, source):
-    return (i, text, lang, source, len(text))
-
-
-def test_fairness_audit_rates(spark, tmp_path):
-    """Two sources with controlled detector outcomes: source A is
-    selected at rate 1.0 (TPR 1, FPR 1), source B at 0.5 with perfect
-    separation (TPR 1, FPR 0) -> B's di_ratio is 0.5."""
-    docs = [
-        # source A: all-vowel text => predicted positive, for en and de
-        _doc(0, "aaaa", "en", "A"),   # yhat 1, y 1  (TP)
-        _doc(1, "aaaa", "de", "A"),   # yhat 1, y 0  (FP)
-        # source B: one true positive, one true negative
-        _doc(2, "aaaa", "en", "B"),   # yhat 1, y 1  (TP)
-        _doc(3, "zzzz", "de", "B"),   # yhat 0, y 0  (TN)
-    ]
-    _write(spark, tmp_path, docs, _DOC_SCHEMA, "documents")
-    out = {r.source: r for r in
-           QUERIES["q_fairness_audit"](spark, str(tmp_path)).collect()}
-    a, b = out["A"], out["B"]
-    assert (a.n_docs, a.n_pred_pos, a.sel_rate) == (2, 2, 1.0)
-    assert (b.n_docs, b.n_pred_pos, b.sel_rate) == (2, 1, 0.5)
-    assert a.di_ratio == 1.0 and b.di_ratio == 0.5
-    assert a.tpr == 1.0 and a.fpr == 1.0
-    assert b.tpr == 1.0 and b.fpr == 0.0
-
-
-def test_fairness_audit_null_rates_when_class_absent(spark, tmp_path):
-    """A group with no gold positives has NULL TPR; no gold negatives
-    -> NULL FPR (try_divide semantics in both engines)."""
-    docs = [
-        _doc(0, "aaaa", "de", "A"),  # only negatives -> TPR NULL
-        _doc(1, "zzzz", "de", "A"),
-        _doc(2, "aaaa", "en", "B"),  # only positives -> FPR NULL
-        _doc(3, "zzzz", "en", "B"),
-    ]
-    _write(spark, tmp_path, docs, _DOC_SCHEMA, "documents")
-    out = {r.source: r for r in
-           QUERIES["q_fairness_audit"](spark, str(tmp_path)).collect()}
-    assert out["A"].tpr is None and out["A"].fpr == 0.5
-    assert out["B"].fpr is None and out["B"].tpr == 0.5
-
-
-def test_fairness_audit_null_source_sorts_last(spark, tmp_path):
-    """A NULL protected-attribute group must sort LAST (DuckDB's ASC
-    default), not first (Spark's) — pins the asc_nulls_last fix."""
-    docs = [
-        _doc(0, "aaaa", "en", "A"),
-        _doc(1, "zzzz", "de", None),
-        _doc(2, "aaaa", "en", "B"),
-    ]
-    _write(spark, tmp_path, docs, _DOC_SCHEMA, "documents")
-    out = QUERIES["q_fairness_audit"](spark, str(tmp_path)).collect()
-    assert [r.source for r in out] == ["A", "B", None]
-    assert out[2].n_docs == 1
-
-
-def test_fairness_audit_group_count_on_testdata(spark):
-    out = QUERIES["q_fairness_audit"](spark, SF0001).collect()
-    srcs = [r.source for r in out]
-    assert srcs == sorted(srcs)
-    assert len(srcs) == len(set(srcs)) > 1
-    for r in out:
-        assert r.n_docs > 0
-        assert r.di_ratio is None or r.di_ratio <= 1.0

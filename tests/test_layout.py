@@ -1,7 +1,6 @@
-"""The test suite's own layout: tests live in the file of the module they
-check, and no test module binds a top-level name twice (pytest collects
-only the last of two same-named test functions, so a shadowed test
-would vanish without a failure)."""
+"""The test suite's own layout: no test module binds a top-level name
+twice (pytest collects only the last of two same-named test functions,
+so a shadowed test would vanish without a failure)."""
 
 from __future__ import annotations
 
@@ -24,10 +23,6 @@ def _top_level_names(tree: ast.Module) -> list[str]:
             for target in targets:
                 names += [n.id for n in ast.walk(target) if isinstance(n, ast.Name)]
     return names
-
-
-def test_no_per_round_test_files():
-    assert glob.glob(os.path.join(TESTS, "test_round*")) == []
 
 
 def test_no_test_module_binds_a_name_twice():

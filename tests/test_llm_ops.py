@@ -6,16 +6,9 @@ doc 4 too short to shingle. Known answers, deterministic hashes.
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
-import pcap_to_parquet_spark.operators  # noqa: F401  (registers queries)
 from pcap_to_parquet_spark.operators.llm import (
-    _DECON_EVAL,
-    _DECON_TOP,
     dedup_exact,
     dedup_minhash,
     dedup_simhash,
@@ -23,9 +16,10 @@ from pcap_to_parquet_spark.operators.llm import (
     ngram_jaccard,
     simhash,
 )
-from pcap_to_parquet_spark.registry import QUERIES
 from pcap_to_parquet_spark.sources.tables import load_table
-from tests.conftest import SF0001, SF001, _write
+import pytest
+
+from tests.conftest import SF001, SF0001
 
 
 def test_dedup_exact_planted(spark, tiny_docs_dir):
@@ -253,766 +247,3 @@ def test_round3_text_ops_hostile_parity(spark, tmp_path):
         got = sorted(tuple(r) for r in QUERIES[name](spark, str(d)).collect())
         want = sorted(tuple(r) for r in con.execute(ORACLES[name]).fetchall())
         assert got == want, name
-
-
-def test_mmr_diversify_properties(spark):
-    """MMR invariants: rank 1 is the raw top-similarity candidate (no
-    penalty yet), ranks are 1..5 over distinct vectors, every
-    penalized score is ≤ λ·sim, and the MMR set is no LESS diverse
-    than the naive top-5 (its max intra-set similarity is ≤ naive's)."""
-    import numpy as np
-
-    rows = sorted(
-        QUERIES["q_mmr_diversify"](spark, SF001).collect(), key=lambda r: r.mmr_rank
-    )
-    assert [r.mmr_rank for r in rows] == [1, 2, 3, 4, 5]
-    assert len({r.vec_id for r in rows}) == 5
-    assert abs(rows[0].mmr_score - round(0.7 * rows[0].cos_sim, 6)) <= 1e-6
-    # later scores subtract 0.3 * max-sim-to-selected, which can be
-    # NEGATIVE for anticorrelated embeddings — only boundedness holds
-    for r in rows[1:]:
-        assert 0.7 * r.cos_sim - 0.3 <= r.mmr_score <= 0.7 * r.cos_sim + 0.3
-
-    em = {
-        r.vec_id: np.array(r.embedding, dtype=np.float64)
-        for r in spark.read.parquet(SF001 + "/embeddings.parquet").collect()
-    }
-
-    def max_pair_sim(ids):
-        worst = -1.0
-        for i, a in enumerate(ids):
-            for b in ids[i + 1 :]:
-                va, vb = em[a], em[b]
-                s = float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb)))
-                worst = max(worst, s)
-        return worst
-
-    qv = em[0]
-    sims = sorted(
-        (
-            (float(qv @ v / (np.linalg.norm(qv) * np.linalg.norm(v))), vid)
-            for vid, v in em.items()
-            if vid != 0
-        ),
-        reverse=True,
-    )
-    naive5 = [vid for _, vid in sims[:5]]
-    mmr5 = [r.vec_id for r in rows]
-    assert max_pair_sim(mmr5) <= max_pair_sim(naive5) + 1e-9
-
-
-def test_pq_ann_recall_vs_exact(spark):
-    """The ADC-shortlist + exact-rerank pipeline must recover most of
-    the true L2 top-10 (0.8 at sf0.01; ≥0.5 asserted for slack across
-    fixtures) and return exact distances in ascending order."""
-    from pcap_to_parquet_spark.sources import load_table
-
-    rows = QUERIES["q_pq_ann"](spark, SF0001).collect()
-    assert len(rows) == 10
-    dists = [r.l2_dist for r in rows]
-    assert dists == sorted(dists)
-
-    em = load_table(spark, SF0001, "embeddings").collect()
-    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in em}
-    q = vecs[0]
-    exact = sorted((float(np.sum((v - q) ** 2)), k) for k, v in vecs.items() if k != 0)[:10]
-    exact_ids = {k for _, k in exact}
-    got_ids = {r.vec_id for r in rows}
-    assert len(exact_ids & got_ids) / 10 >= 0.5
-    # reranked distances are EXACT for the vectors returned
-    for r in rows:
-        true_d = float(np.sqrt(np.sum((vecs[r.vec_id] - q) ** 2)))
-        assert abs(r.l2_dist - round(true_d, 4)) < 1e-9, r
-
-
-def test_pca_embed_sketch_matches_projection(spark):
-    """The distributed variance of the projected data must reproduce
-    each eigenvalue of the sketch-assembled covariance — sketch, eig
-    and projection proven consistent end to end; ratios must be
-    descending and cumulative share monotone below 1."""
-    rows = QUERIES["q_pca_embed"](spark, SF0001).collect()
-    assert len(rows) == 16
-    for r in rows:
-        assert abs(r.eigenvalue - r.proj_var) <= 2e-6, r
-    ev = [r.eigenvalue for r in rows]
-    assert ev == sorted(ev, reverse=True)
-    cums = [r.cum_explained for r in rows]
-    assert cums == sorted(cums) and cums[-1] <= 1.0
-
-
-@pytest.mark.slow  # >=5s
-def test_quality_classifier_learns_planted_signal(spark, tmp_path):
-    """On a corpus where the label IS expressible in the features
-    (English docs stuffed with stopwords, German docs with none) the
-    distributed trainer must separate almost perfectly; this pins that
-    gradient partials, the driver reduce, and the update actually
-    learn — the real-corpus fixture only exercises the mechanics."""
-    rows = []
-    for i in range(120):
-        if i % 2 == 0:
-            text = " ".join(["the", "a", "of", "and", "to"] * 6)
-            lang = "en"
-        else:
-            text = " ".join(f"wort{j}" for j in range(30))
-            lang = "de"
-        rows.append((i, text, lang, "src0", len(text)))
-    d = tmp_path / "planted"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(2).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    out = {r.feature: r for r in QUERIES["q_quality_classifier"](spark, str(d)).collect()}
-    any_row = out["bias"]
-    assert any_row.train_acc >= 0.95, any_row
-    assert any_row.loss_final < any_row.loss_initial / 2, any_row
-    # the stopword-ratio coefficient must carry the positive signal
-    assert out["stopword_ratio"].coef > 0
-
-
-@pytest.mark.slow  # >=5s
-def test_quality_classifier_mechanics_on_fixture(spark):
-    """On the real (near-unseparable) fixture the trainer still must
-    monotonically improve on the w=0 loss (ln 2) and never fall below
-    coin-flip accuracy; coefficients stay finite."""
-    import math
-
-    rows = QUERIES["q_quality_classifier"](spark, SF0001).collect()
-    assert {r.feature for r in rows} == {
-        "bias", "log_tokens", "mean_tok_len", "stopword_ratio", "vowel_ratio"
-    }
-    r0 = rows[0]
-    assert abs(r0.loss_initial - math.log(2)) < 1e-6
-    assert r0.loss_final < r0.loss_initial
-    assert r0.train_acc >= 0.5
-    assert all(abs(r.coef) < 100 for r in rows)
-
-
-def test_ivf_pq_stays_in_probed_lists_and_recovers_them(spark):
-    """IVF-PQ may only return vectors from the 3 probed lists (the
-    pruning contract), and within those lists the PQ shortlist + exact
-    rerank must recover most of the list-restricted true top-10 (the
-    quantization contract)."""
-    from pcap_to_parquet_spark.sources import load_table
-
-    rows = QUERIES["q_ivf_pq"](spark, SF001).collect()
-    assert len(rows) == 10
-    dists = [r.l2_dist for r in rows]
-    assert dists == sorted(dists)
-
-    em = load_table(spark, SF001, "embeddings").collect()
-    vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in em}
-    labels = {r.vec_id: r.label for r in em}
-    q = vecs[0]
-
-    # mirror the probe selection: cosine of q to each label's mean
-    cent = {}
-    for v, lab in labels.items():
-        cent.setdefault(lab, []).append(vecs[v])
-    def cos(a, b):
-        return float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-    probed = {
-        lab
-        for lab, _ in sorted(
-            ((lab, cos(q, np.mean(vs, axis=0))) for lab, vs in cent.items()),
-            key=lambda kv: (-kv[1], kv[0]),
-        )[:3]
-    }
-    assert all(labels[r.vec_id] in probed for r in rows)
-
-    in_lists = {
-        k for k in vecs if k != 0 and labels[k] in probed
-    }
-    best_in_lists = {
-        k
-        for _, k in sorted(
-            (float(np.sum((vecs[k] - q) ** 2)), k) for k in in_lists
-        )[:10]
-    }
-    got = {r.vec_id for r in rows}
-    assert len(best_in_lists & got) / 10 >= 0.7
-
-
-@pytest.mark.slow  # >=5s
-def test_opq_error_monotonically_beats_plain_pq(spark):
-    """Iteration 0 is plain PQ (R = I); each Procrustes update must not
-    increase quantization error, and the learned rotation must end
-    meaningfully below the plain-PQ baseline (measured: 0.561 → 0.481
-    at sf0.01)."""
-    rows = sorted(
-        QUERIES["q_opq_train"](spark, SF001).collect(),
-        key=lambda r: r.iteration,
-    )
-    errs = [r.mean_sq_error for r in rows]
-    assert len(errs) == 4
-    # tolerance 1e-5: every engine boundary (rotated
-    # vectors, Lloyd means, R) is 6dp-rounded for the exact DuckDB
-    # oracle, so a single step may wobble by ~1e-6; true decreases
-    # are ~0.03, four orders larger
-    assert all(b <= a + 1e-5 for a, b in zip(errs, errs[1:]))
-    assert errs[-1] < errs[0] * 0.95
-
-
-@pytest.mark.slow  # >=5s
-def test_residual_quant_beats_both_halves(spark):
-    """Coarse+residual-PQ must reconstruct better than plain PQ and
-    much better than the coarse codebook alone (measured 0.503 vs
-    0.561 vs 0.892 at sf0.01) — the property that justifies storing
-    residuals in an IVF-PQ index."""
-    rows = {r.encoder: r.mean_sq_error for r in QUERIES["q_residual_quant"](
-        spark, SF001).collect()}
-    assert set(rows) == {"pq_only", "coarse_only", "coarse_plus_residual_pq"}
-    assert rows["coarse_plus_residual_pq"] < rows["pq_only"]
-    assert rows["coarse_plus_residual_pq"] < rows["coarse_only"]
-
-
-def test_semdedup_dominance_rule(spark, tmp_path):
-    """Planted block: v0 and v1 identical (cos=1), v2 orthogonal.
-    v1 must be dropped (dominated by v0), v0 and v2 kept; a second
-    label's singleton is kept with NULL nearest-lower similarity."""
-    rows = [
-        (0, [1.0] + [0.0] * 63, 1),
-        (1, [1.0] + [0.0] * 63, 1),
-        (2, [0.0, 1.0] + [0.0] * 62, 1),
-        (10, [0.5] * 64, 2),
-    ]
-    d = tmp_path / "sem"
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
-    out = {r.vec_id: r for r in QUERIES["q_semdedup"](spark, str(d)).collect()}
-    assert out[0].kept and out[0].max_lower_sim is None
-    assert not out[1].kept and out[1].n_dominators == 1
-    assert out[1].max_lower_sim == 1.0
-    assert out[2].kept and abs(out[2].max_lower_sim) < 1e-9
-    assert out[10].kept and out[10].max_lower_sim is None
-
-
-def test_shard_assign_is_deterministic_full_partition(spark):
-    """Shards partition the corpus exactly once; two runs agree
-    bit-for-bit (the resumable-loading property)."""
-    import duckdb
-
-    a = QUERIES["q_shard_assign"](spark, SF0001).collect()
-    b = QUERIES["q_shard_assign"](spark, SF0001).collect()
-    assert a == b
-    n = duckdb.sql(f"SELECT COUNT(*) FROM '{SF0001}/documents.parquet'").fetchone()[0]
-    assert sum(r.n_docs for r in a) == n
-    assert len({r.shard for r in a}) == len(a)
-
-
-def test_ngram_novelty_duplicate_scores_zero(spark, tmp_path):
-    """doc 0 is all-novel (1.0); doc 1, its exact duplicate, contributes
-    nothing new (0.0); doc 2 is disjoint and all-novel."""
-    rows = [
-        (0, "alpha beta gamma delta epsilon", "en", "s", 30),
-        (1, "alpha beta gamma delta epsilon", "en", "s", 30),
-        (2, "zeta eta theta iota kappa", "en", "s", 25),
-    ]
-    d = tmp_path / "nov"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    out = {r.doc_id: r for r in QUERIES["q_ngram_novelty"](spark, str(d)).collect()}
-    assert out[0].novelty == 1.0 and out[0].n_grams == 3
-    assert out[1].novelty == 0.0 and out[1].n_novel == 0
-    assert out[2].novelty == 1.0
-
-
-def test_embed_outliers_flags_the_far_vector(spark, tmp_path):
-    """A tight cluster of 5 plus one distant vector: the distant one
-    must carry the max z-score; cluster members sit below it."""
-    rows = [(i, [0.0] * 63 + [float(i) * 0.01], 1) for i in range(5)]
-    rows.append((99, [10.0] * 64, 1))
-    d = tmp_path / "out"
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
-    out = {r.vec_id: r for r in QUERIES["q_embed_outliers"](spark, str(d)).collect()}
-    assert len(out) == 6
-    far = out[99]
-    assert far.z == max(r.z for r in out.values())
-    # centroid sits 1/6 of the way toward the outlier, so the cluster
-    # members land at ~d/5 of the outlier's distance — assert 4x margin
-    assert far.dist > max(out[i].dist for i in range(5)) * 4
-
-
-@pytest.mark.slow  # >=5s
-def test_srp_lsh_sign_invariance_and_buckets(spark, tmp_path):
-    """SRP property: a vector and its positive scaling share a sketch
-    (cosine-invariant); a vector and its negation differ in EVERY bit
-    (all hyperplane signs flip); bucket sizes count sketch collisions."""
-    v = [float((i * 37 % 13) - 6) for i in range(64)]
-    rows = [
-        (0, v, 1),
-        (1, [x * 2.5 for x in v], 1),   # same direction
-        (2, [-x for x in v], 1),        # antipode
-    ]
-    d = tmp_path / "srp"
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
-    out = {r.vec_id: r for r in QUERIES["q_srp_lsh"](spark, str(d)).collect()}
-    assert out[0].sig == out[1].sig
-    assert out[0].n_bucket == 2 and out[2].n_bucket == 1
-    assert out[0].sig ^ out[2].sig == (1 << 16) - 1  # every bit flips
-
-
-def test_mutual_nn_requires_agreement(spark, tmp_path):
-    """Three vectors in one block: v0 and v1 nearly identical (each
-    other's top-1 -> mutual pair); v2 points elsewhere, its top-1 (v0)
-    does NOT reciprocate, so v2 appears in no pair."""
-    rows = [
-        (0, [1.0, 0.0] + [0.0] * 62, 1),
-        (1, [0.99, 0.14] + [0.0] * 62, 1),
-        (2, [0.2, 0.98] + [0.0] * 62, 1),
-    ]
-    d = tmp_path / "mnn"
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
-    pairs = [(r.vec_a, r.vec_b) for r in QUERIES["q_mutual_nn"](spark, str(d)).collect()]
-    assert pairs == [(0, 1)]
-
-
-def test_mutual_info_independent_vs_dependent(spark, tmp_path):
-    """Perfectly dependent columns (source == lang) give NMI = 1;
-    a perfectly balanced independent layout gives MI = 0."""
-    dep = [(i, "t", ["en", "fr"][i % 2], ["en", "fr"][i % 2], 1) for i in range(40)]
-    ind = [
-        (i, "t", ["en", "fr"][i % 2], ["s1", "s2"][(i // 2) % 2], 1)
-        for i in range(40)
-    ]
-    for rows, want_nmi in ((dep, 1.0), (ind, 0.0)):
-        d = tmp_path / f"mi{want_nmi}"
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
-        ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-        r = QUERIES["q_mutual_info"](spark, str(d)).collect()[0]
-        assert r.n_docs == 40
-        assert abs(r.nmi - want_nmi) < 1e-9, r
-
-
-def test_srp_recall_perfect_when_bucket_holds_truth(spark, tmp_path):
-    """One tight direction cluster: every vector shares the query's
-    SRP bucket, so the bucketed search IS the exact search and
-    recall@5 must be 1.0 for every query."""
-    base = [float((i * 37 % 13) - 6) for i in range(64)]
-    rows = []
-    for i in range(12):
-        rows.append((i, [x * (1.0 + 0.001 * i) for x in base], 1))
-    d = tmp_path / "rec"
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
-    out = QUERIES["q_srp_recall"](spark, str(d)).collect()
-    assert len(out) == 10
-    for r in out:
-        assert r.recall == 1.0, r
-        assert r.n_candidates == 11
-
-
-def test_coreset_farthest_first_on_line(spark, tmp_path):
-    """Points on a line at 0, 1, 10, 100: start at min vec_id (the
-    point at 0), then greedily 100, 10, 1; radii are the maximin
-    distances before each pick and must decrease."""
-    pts = [(0, 0.0), (1, 1.0), (2, 10.0), (3, 100.0)]
-    rows = [(vid, [x] + [0.0] * 63, 1) for vid, x in pts]
-    d = tmp_path / "core"
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
-    out = QUERIES["q_coreset"](spark, str(d)).collect()
-    assert [(r.pick, r.vec_id) for r in out[:4]] == [
-        (1, 0), (2, 3), (3, 2), (4, 1)
-    ]
-    assert out[0].radius is None
-    assert out[1].radius == 100.0   # farthest from {0}
-    assert out[2].radius == 10.0    # farthest from {0, 100}
-    assert out[3].radius == 1.0
-    radii = [r.radius for r in out[1:] if r.radius is not None]
-    assert radii == sorted(radii, reverse=True)
-
-
-def test_auc_eval_separable_and_random(spark, tmp_path):
-    """Perfectly separable scores -> AUC 1; identical scores for both
-    classes -> AUC 0.5 (all mass in the tie term)."""
-    sep = [(i, "aaaa" if i < 20 else "zzzz", "en" if i < 20 else "xx", "s", 4)
-           for i in range(40)]
-    tie = [(i, "aaaa", "en" if i < 20 else "xx", "s", 4) for i in range(40)]
-    for rows, want in ((sep, 1.0), (tie, 0.5)):
-        d = tmp_path / f"auc{want}"
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
-        ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-        r = QUERIES["q_auc_eval"](spark, str(d)).collect()[0]
-        assert r.n_pos == 20 and r.n_neg == 20
-        assert r.auc == want, r
-
-
-def test_embed_neardup_and_semdedup_collapse_parity(spark, tmp_path):
-    """Duplication-multiplicity parity: plant 4 distinct vectors x 3
-    exact copies each and compare BOTH collapsed ops against a numpy
-    brute force over all 12 vectors — the dedup-before-pairgen
-    expansion must reproduce the raw pairwise answer exactly."""
-    import itertools
-
-    import numpy as np
-
-    rng = [
-        [1.0, 0.0, 0.0, 0.0],
-        [0.9, 0.1, 0.0, 0.0],   # cos vs v0 ~ 0.993 -> dominated
-        [0.0, 1.0, 0.0, 0.0],   # orthogonal to v0
-        [0.0, 0.0, 1.0, 1.0],
-    ]
-    rows = []
-    vid = 0
-    for copy in range(3):
-        for v in rng:
-            rows.append((vid, [float(x) for x in v], 7))
-            vid += 1
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-
-    x = np.array([r[1] for r in sorted(rows)], dtype=np.float64)
-    ids = np.array([r[0] for r in sorted(rows)])
-    norms = np.linalg.norm(x, axis=1)
-    cos = (x @ x.T) / np.outer(norms, norms)
-
-    # brute-force expected pairs (> 0.45) and semdedup stats
-    exp_pairs = {
-        (int(ids[i]), int(ids[j])): round(float(cos[i, j]), 4)
-        for i, j in itertools.combinations(range(len(ids)), 2)
-        if cos[i, j] > 0.45
-    }
-    got_pairs = {
-        (r.vec_a, r.vec_b): r.cos_sim
-        for r in QUERIES["q_embed_neardup"](spark, str(tmp_path)).collect()
-    }
-    assert got_pairs == exp_pairs
-
-    exp_nd = {
-        int(ids[j]): int((cos[:j, j] >= 0.45).sum()) for j in range(len(ids))
-    }
-    exp_mx = {
-        int(ids[j]): (None if j == 0 else round(float(cos[:j, j].max()), 4))
-        for j in range(len(ids))
-    }
-    out = {r.vec_id: r for r in QUERIES["q_semdedup"](spark, str(tmp_path)).collect()}
-    assert set(out) == set(exp_nd)
-    for v, r in out.items():
-        assert r.n_dominators == exp_nd[v], (v, r)
-        assert r.kept == (exp_nd[v] == 0), v
-        assert r.max_lower_sim == exp_mx[v], (v, r.max_lower_sim, exp_mx[v])
-
-
-_EMBED_SCHEMA = "vec_id long, embedding array<float>, label int"
-
-
-# ---------------------------------------------------------------------------
-# MRR / MAP
-
-
-def _perfect_retrieval_lake(spark, tmp_path, per_label=3):
-    """Queries 0..7 are one-hot basis vectors with label = vec_id; the
-    corpus holds `per_label` exact copies of each query (cos 1 with its
-    own query, 0 with the others) plus orthogonal distractors."""
-    dim = 16
-    rows = []
-    for q in range(8):
-        vec = [0.0] * dim
-        vec[q] = 1.0
-        rows.append((q, vec, q))
-    nxt = 8
-    for q in range(8):
-        vec = [0.0] * dim
-        vec[q] = 1.0
-        for _ in range(per_label):
-            rows.append((nxt, vec, q))
-            nxt += 1
-    for d in range(8):  # distractors on the unused axes, labels 8/9
-        vec = [0.0] * dim
-        vec[8 + d % 8] = 1.0
-        rows.append((nxt, vec, 8 + d % 2))
-        nxt += 1
-    _write(spark, tmp_path, rows, _EMBED_SCHEMA, "embeddings")
-
-
-def test_mrr_is_one_on_perfect_retrieval(spark, tmp_path):
-    _perfect_retrieval_lake(spark, tmp_path)
-    r = QUERIES["q_mrr_eval"](spark, str(tmp_path)).collect()[0]
-    assert r.n_queries == 8
-    assert r.mrr_at_k == 1.0
-
-
-def test_map_is_one_on_perfect_retrieval(spark, tmp_path):
-    """All R relevant docs rank 1..R for every query -> AP = 1."""
-    _perfect_retrieval_lake(spark, tmp_path)
-    r = QUERIES["q_map_eval"](spark, str(tmp_path)).collect()[0]
-    assert r.n_queries == 8
-    assert r.map_at_k == 1.0
-
-
-# ---------------------------------------------------------------------------
-# matryoshka recall
-
-
-def test_matryoshka_recall_is_one_when_prefix_carries_signal(spark, tmp_path):
-    """If all the energy lives in the first dims, truncation loses
-    nothing: prefix ranking == full ranking -> recall 1.0."""
-    dim = 64
-    rows = []
-    for q in range(8):
-        vec = [0.0] * dim
-        vec[q] = 1.0  # axes 0..7 < prefix 16
-        rows.append((q, vec, q))
-    nxt = 8
-    for q in range(8):
-        for j in range(12):
-            vec = [0.0] * dim
-            vec[q] = 1.0 + 0.01 * j  # same direction, distinct norms
-            vec[(q + 1) % 8] = 0.001 * j  # tiny tilt: unique ranking
-            rows.append((nxt, vec, q))
-            nxt += 1
-    _write(spark, tmp_path, rows, _EMBED_SCHEMA, "embeddings")
-    r = QUERIES["q_matryoshka_recall"](spark, str(tmp_path)).collect()[0]
-    assert r.n_queries == 8
-    assert r.prefix_dim == 16
-    assert r.recall_at_k == 1.0
-
-
-def test_matryoshka_recall_on_testdata_in_range(spark):
-    r = QUERIES["q_matryoshka_recall"](spark, SF0001).collect()[0]
-    assert r.n_queries == 8
-    assert 0.0 <= r.recall_at_k <= 1.0
-
-
-# ---------------------------------------------------------------------------
-# label noise
-
-
-def test_label_noise_flags_planted_mislabel(spark, tmp_path):
-    """Two tight, well-separated clusters; one slice member carries the
-    wrong cluster's label -> flagged with a unanimous 5-0 vote, and the
-    correctly-labeled members are NOT flagged."""
-    dim = 16
-    rows = []
-    # slice members (vec_id < 100): 6 in cluster A (label 0) ...
-    for i in range(6):
-        vec = [0.0] * dim
-        vec[0] = 1.0
-        vec[1] = 0.001 * i
-        rows.append((i, vec, 0))
-    # ... and one A-cluster vector mislabeled as 1
-    vec = [0.0] * dim
-    vec[0] = 1.0
-    vec[1] = 0.0007
-    rows.append((6, vec, 1))
-    # corpus cluster B (label 1), far away
-    for j in range(10):
-        vec = [0.0] * dim
-        vec[5] = 1.0
-        vec[6] = 0.001 * j
-        rows.append((200 + j, vec, 1))
-    _write(spark, tmp_path, rows, _EMBED_SCHEMA, "embeddings")
-    flagged = {r.vec_id: r for r in
-               QUERIES["q_label_noise"](spark, str(tmp_path)).collect()}
-    assert 6 in flagged
-    assert flagged[6].label == 1
-    assert flagged[6].knn_label == 0
-    assert flagged[6].n_agree == 5
-    assert all(v == 6 for v in flagged)  # clean members not flagged
-
-
-def _unit(i, dim=8):
-    """Deterministic distinct unit vectors: one-hot-ish with a twist."""
-    v = [0.0] * dim
-    v[i % dim] = 1.0
-    v[(i + 1) % dim] = 0.1 * ((i // dim) + 1)
-    n = math.sqrt(sum(x * x for x in v))
-    return [float(x / n) for x in v]
-
-
-def _far(i, dim=8):
-    """Near-flat unit vectors: cosine vs any _unit(j<50) stays ~0.5,
-    far below the hard-flag threshold."""
-    v = [1.0] * dim
-    v[i % dim] += 0.01 * (i + 1)
-    n = math.sqrt(sum(x * x for x in v))
-    return [float(x / n) for x in v]
-
-
-# ---------------------------------------------------------------------------
-# q_embed_decontaminate
-
-
-def test_embed_decontaminate_flags_verbatim_leak(spark, tmp_path):
-    """A train vector that duplicates eval vector 3 is flagged with
-    max_cos 1.0 and eval_id 3; an orthogonal train vector is not."""
-    rows = [(i, _unit(i), 0) for i in range(_DECON_EVAL)]  # eval panel
-    rows.append((_DECON_EVAL + 0, _unit(3), 1))  # verbatim leak of eval 3
-    rows.append((_DECON_EVAL + 1, _far(0), 1))  # far from everything
-    _write(spark, tmp_path, rows, _EMBED_SCHEMA, "embeddings")
-    out = {r.vec_id: r for r in
-           QUERIES["q_embed_decontaminate"](spark, str(tmp_path)).collect()}
-    leak = out[_DECON_EVAL + 0]
-    assert leak.flagged == 1
-    assert leak.eval_id == 3
-    assert leak.max_cos == 1.0
-    assert out[_DECON_EVAL + 1].flagged == 0
-
-
-def test_embed_decontaminate_caps_report(spark, tmp_path):
-    """More candidate train rows than the report cap -> exactly
-    _DECON_TOP rows, and they are the closest ones."""
-    rows = [(i, _unit(i), 0) for i in range(_DECON_EVAL)]
-    # _DECON_TOP duplicates (cos 1.0) + 30 orthogonal-ish strangers
-    for j in range(_DECON_TOP):
-        rows.append((_DECON_EVAL + j, _unit(j), 1))
-    for j in range(30):
-        rows.append((_DECON_EVAL + _DECON_TOP + j, _far(j), 1))
-    _write(spark, tmp_path, rows, _EMBED_SCHEMA, "embeddings")
-    out = QUERIES["q_embed_decontaminate"](spark, str(tmp_path)).collect()
-    assert len(out) == _DECON_TOP
-    assert all(r.flagged == 1 for r in out)
-    assert {r.vec_id for r in out} == {
-        _DECON_EVAL + j for j in range(_DECON_TOP)
-    }
-
-
-def test_embed_decontaminate_runs_on_testdata(spark):
-    out = QUERIES["q_embed_decontaminate"](spark, SF0001).collect()
-    assert len(out) == _DECON_TOP
-    # generated embeddings have no planted eval leaks
-    assert all(r.flagged == 0 for r in out)
-    assert all(r.eval_id < _DECON_EVAL <= r.vec_id for r in out)
-
-
-def test_embed_decontaminate_zero_vector_never_flagged(spark, tmp_path):
-    """An all-zero train vector must report max_cos -1.0 (not NULL) in
-    the (under-20-candidate) report and never be flagged."""
-    rows = [(i, _unit(i), 0) for i in range(_DECON_EVAL)]
-    rows.append((_DECON_EVAL + 0, [0.0] * 8, 1))  # degenerate
-    _write(spark, tmp_path, rows, _EMBED_SCHEMA, "embeddings")
-    out = {r.vec_id: r for r in
-           QUERIES["q_embed_decontaminate"](spark, str(tmp_path)).collect()}
-    z = out[_DECON_EVAL + 0]
-    assert z.max_cos == -1.0 and z.flagged == 0
-
-
-# ---------------------------------------------------------------------------
-# q_filter_attribution
-
-
-def test_filter_attribution_hand_built_overlap(spark, tmp_path):
-    """Four docs engineered against the committed gates: doc 0 fails
-    ONLY length (short, dense, stopworded); doc 1 fails length AND
-    low_stopword (so neither is unique on it); doc 2 passes everything;
-    doc 3 fails only high_punct. Pins the unique-attribution algebra
-    and the shadowing distinction."""
-    clean = ("the quick fox of the barn and the owl went to the mill "
-             * 12).strip()  # ~55 words, ~670 chars: dense, stopworded
-    rows = [
-        (0, "the cat sat on a mat of the hill", "en", "A", 33),  # short only
-        (1, "zz yy xx ww vv uu tt ss", "en", "A", 23),  # short + no stopwords
-        (2, clean, "en", "A", len(clean)),  # passes all
-        (3, clean + " " + "!@#$%^&*()" * 20, "en", "A",
-         len(clean) + 1 + 200),  # punct-heavy, long enough, stopworded
-    ]
-    _write(spark, tmp_path, rows)
-    out = {r.rule: r for r in QUERIES["q_filter_attribution"](spark, str(tmp_path)).collect()}
-    assert set(out) == {"length", "low_density", "high_punct", "low_stopword"}
-    assert all(r.n_docs == 4 and r.n_pass_all == 1 for r in out.values())
-    assert (out["length"].n_failing, out["length"].n_unique_failing) == (2, 1)
-    assert (out["low_stopword"].n_failing, out["low_stopword"].n_unique_failing) == (1, 0)
-    assert out["high_punct"].n_failing == 1
-    assert out["high_punct"].n_unique_failing == 1
-    assert out["length"].fail_share == 0.5
-
-
-def test_filter_attribution_testdata_invariants(spark):
-    """On real testdata: unique <= failing, pass_all + union-failing
-    accounting is consistent (sum of uniques <= n_docs - n_pass_all <=
-    sum of failings), and the dead high_punct rule fires zero times on
-    the punctuation-free synthetic corpus."""
-    rows = QUERIES["q_filter_attribution"](spark, SF0001).collect()
-    assert len(rows) == 4
-    n_docs = rows[0].n_docs
-    n_pass = rows[0].n_pass_all
-    for r in rows:
-        assert 0 <= r.n_unique_failing <= r.n_failing <= n_docs
-        assert r.n_docs == n_docs and r.n_pass_all == n_pass
-    n_fail_any = n_docs - n_pass
-    assert sum(r.n_unique_failing for r in rows) <= n_fail_any
-    assert n_fail_any <= sum(r.n_failing for r in rows)
-    assert {r.rule: r.n_failing for r in rows}["high_punct"] == 0
-
-
-# ---------------------------------------------------------------------------
-# q_split_balance
-
-
-def test_split_balance_replays_gate_and_algebra(spark, tmp_path):
-    """20 docs over 2 languages: cell counts must equal a Python replay
-    of the md5 gate, shares must be the documented ratios, and abs_dev
-    must be |share_in_split - global_share| recomputed from the row."""
-    import hashlib
-
-    langs = ["en" if i % 3 else "fr" for i in range(20)]
-    rows = [(i, f"doc {i} text", langs[i], "A", 10) for i in range(20)]
-    _write(spark, tmp_path, rows)
-    expected: dict[tuple[str, str], int] = {}
-    totals: dict[str, int] = {}
-    for i, lang in enumerate(langs):
-        gate = int(hashlib.md5(str(i).encode()).hexdigest()[:4], 16) % 100
-        split = "train" if gate < 80 else ("val" if gate < 90 else "test")
-        expected[(split, lang)] = expected.get((split, lang), 0) + 1
-        totals[split] = totals.get(split, 0) + 1
-    out = QUERIES["q_split_balance"](spark, str(tmp_path)).collect()
-    assert {(r.split, r.lang): r.n_docs for r in out} == expected
-    for r in out:
-        assert r.share_in_split == round(r.n_docs / totals[r.split], 6)
-        assert r.global_share == round(langs.count(r.lang) / 20, 6)
-        assert abs(r.abs_dev - abs(r.share_in_split - r.global_share)) < 2e-6
-
-
-def test_split_balance_testdata_invariants(spark):
-    """On real testdata: within every split the present-cell shares sum
-    to 1 (every doc has a language), global_share is identical across a
-    language's rows, and every deviation is bounded by 1."""
-    rows = QUERIES["q_split_balance"](spark, SF0001).collect()
-    by_split: dict[str, list] = {}
-    by_lang: dict[str, set] = {}
-    for r in rows:
-        by_split.setdefault(r.split, []).append(r)
-        by_lang.setdefault(r.lang, set()).add(r.global_share)
-        assert 0.0 <= r.abs_dev <= 1.0
-    assert set(by_split) <= {"train", "val", "test"}
-    for split, cells in by_split.items():
-        assert abs(sum(c.share_in_split for c in cells) - 1.0) < 1e-4, split
-    for lang, shares in by_lang.items():
-        assert len(shares) == 1, lang
-
-
-# ---------------------------------------------------------------------------
-# q_ivf_probe_curve
-
-
-def test_ivf_probe_curve_monotone_with_exact_endpoint(spark):
-    """On real testdata: recall and scan fraction are non-decreasing
-    in the probe count, and probing ALL lists is exact by construction
-    — recall 1.0 at scan fraction 1.0 (the brute-force endpoint the
-    curve is anchored to)."""
-    rows = sorted(
-        QUERIES["q_ivf_probe_curve"](spark, SF0001).collect(),
-        key=lambda r: r.probes,
-    )
-    assert [r.probes for r in rows] == [1, 2, 4, 8, 10]
-    for r in rows:
-        assert 0.0 <= r.avg_recall <= 1.0
-        assert 0.0 < r.avg_scan_frac <= 1.0
-        assert r.n_queries == rows[0].n_queries
-    for a, b in zip(rows, rows[1:]):
-        assert a.avg_recall <= b.avg_recall + 1e-9
-        assert a.avg_scan_frac <= b.avg_scan_frac + 1e-9
-    assert rows[-1].avg_recall == 1.0
-    assert rows[-1].avg_scan_frac == 1.0

@@ -8,7 +8,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-import pcap_to_parquet_spark.operators  # noqa: F401  (registers queries)
 from pcap_to_parquet_spark.operators.multimodal import (
     _nn_resize,
     audio_features,
@@ -17,7 +16,6 @@ from pcap_to_parquet_spark.operators.multimodal import (
     resize_images,
     sample_frames,
 )
-from pcap_to_parquet_spark.registry import QUERIES
 from pcap_to_parquet_spark.sources.tables import load_table
 from tests.conftest import SF0001
 
@@ -204,135 +202,3 @@ def test_image_dhash_locality(spark):
         bits = (gray[:, :-1] > gray[:, 1:]).astype(np.uint8).ravel()
         got[r.media_id] = "".join("1" if b else "0" for b in bits)
     assert got[1] == h_base and got[2] == h_tweak and got[3] == h_other
-
-
-def test_image_neardup_banding_is_lossless(spark, tmp_path):
-    """Two identical synthetic images must pair at Hamming 0; the
-    banded candidate join may not lose any pair the brute-force oracle
-    would find (pigeonhole at <=15 bits over 16 bands)."""
-    base = "the quick brown fox jumps over the lazy dog again and again " * 3
-    other = "completely different content with other words entirely here " * 3
-    rows = [
-        (1, base, "en", "s", len(base)),
-        (2, base, "en", "s", len(base)),  # identical -> hamming 0
-        (3, other, "en", "s", len(other)),
-    ]
-    d = tmp_path / "imgdup"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    pairs = {
-        (r.media_a, r.media_b): r.hamming
-        for r in QUERIES["q_image_neardup"](spark, str(d)).collect()
-    }
-    assert pairs.get((1, 2)) == 0
-
-
-def test_audio_neardup_identical_clips_pair(spark, tmp_path):
-    """Identical texts produce identical PCM payloads and must pair at
-    Hamming 0; the fingerprint is built from exact integer energies so
-    there is no float path to diverge."""
-    base = "sound alike words repeated for the audio fingerprint test " * 3
-    other = "totally different acoustic content in this second sample " * 3
-    rows = [
-        (1, base, "en", "s", len(base)),
-        (2, base, "en", "s", len(base)),
-        (3, other, "en", "s", len(other)),
-    ]
-    d = tmp_path / "audup"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    pairs = {
-        (r.media_a, r.media_b): r.hamming
-        for r in QUERIES["q_audio_neardup"](spark, str(d)).collect()
-    }
-    assert pairs.get((1, 2)) == 0
-
-
-@pytest.mark.slow  # >=5s
-def test_video_neardup_perturbed_clip_pairs(spark, tmp_path):
-    """A lightly-perturbed copy (one character changed — the
-    re-encode/watermark grade of noise the radius targets)
-    must still pair, at 0 < hamming <= 31, while an unrelated clip
-    must not. Pins that the 16x16-bit-band MIH candidates plus the
-    exact Hamming filter actually DETECT near-dups, not just exact
-    dups, after the radius tightened from the 2-frame operating
-    point."""
-    base = "moving pictures with the very same pixels frame after frame " * 3
-    near = base.replace("pixels", "pixelY", 1)  # measured total hamming 16
-    other = "an entirely different clip with other bytes in every frame " * 3
-    rows = [
-        (1, base, "en", "s", len(base)),
-        (2, near, "en", "s", len(near)),
-        (3, other, "en", "s", len(other)),
-    ]
-    d = tmp_path / "vidnear"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    pairs = {
-        (r.media_a, r.media_b): r.hamming
-        for r in QUERIES["q_video_neardup"](spark, str(d)).collect()
-    }
-    assert (1, 2) in pairs and 0 < pairs[(1, 2)] <= 31
-    assert not any(3 in p for p in pairs)
-
-
-def test_video_neardup_identical_clips_pair(spark, tmp_path):
-    """Identical texts produce identical frame streams and must pair
-    at total Hamming 0 across both sampled frames."""
-    base = "moving pictures with the very same pixels frame after frame " * 3
-    other = "an entirely different clip with other bytes in every frame " * 3
-    rows = [
-        (1, base, "en", "s", len(base)),
-        (2, base, "en", "s", len(base)),
-        (3, other, "en", "s", len(other)),
-    ]
-    d = tmp_path / "viddup"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    pairs = {
-        (r.media_a, r.media_b): r.hamming
-        for r in QUERIES["q_video_neardup"](spark, str(d)).collect()
-    }
-    assert pairs.get((1, 2)) == 0
-
-
-def test_mih_pigeonhole_property():
-    """Pure-math property behind q_image/audio/video_neardup's
-    multi-index hashing: ANY two 64-bit strings within Hamming 15 have
-    some 8-bit band differing in <= 1 bit — so the 1-bit probe
-    expansion is a complete candidate generator, never a recall
-    trade-off. Checked on random pairs plus the adversarial spread
-    (one flip per band everywhere but one)."""
-    import random
-
-    rng = random.Random(7)
-    for _ in range(2000):
-        a = [rng.randint(0, 1) for _ in range(64)]
-        flips = rng.sample(range(64), rng.randint(0, 15))
-        b = list(a)
-        for i in flips:
-            b[i] ^= 1
-        near_band = any(
-            sum(x != y for x, y in zip(a[8 * k : 8 * k + 8], b[8 * k : 8 * k + 8]))
-            <= 1
-            for k in range(8)
-        )
-        assert near_band, flips
-    # adversarial: 2 flips in each of 7 bands (14 total) leaves the
-    # 8th band exact; 15 flips can spread at most 2-per-band over 7
-    # bands plus 1 in the last -> still within one probe
-    a = [0] * 64
-    b = list(a)
-    for k in range(7):
-        b[8 * k] = 1
-        b[8 * k + 1] = 1
-    b[56] = 1
-    diffs = [
-        sum(x != y for x, y in zip(a[8 * k : 8 * k + 8], b[8 * k : 8 * k + 8]))
-        for k in range(8)
-    ]
-    assert min(diffs) <= 1 and sum(diffs) == 15

@@ -14,10 +14,9 @@ import duckdb
 import pytest
 
 import pcap_to_parquet_spark.operators  # noqa: F401
-from pcap_to_parquet_spark.operators.llm import _LSHR_TAU
 from pcap_to_parquet_spark.registry import ORACLES, QUERIES
 from pcap_to_parquet_spark.sources.tables import TABLE_NAMES
-from tests.conftest import SF0001, _DOC_SCHEMA, _docs_lake, _write, count_actions
+from tests.conftest import SF0001, count_actions
 from tools.check_oracle import normalize
 
 # every query of the family that consumes cluster labels
@@ -114,1159 +113,3 @@ def test_action_budget(spark, name):
         QUERIES[name](spark, SF0001).write.format("noop").mode("overwrite").save()
 
     assert count_actions(spark, run) <= ACTION_BUDGET[name]
-
-
-@pytest.mark.slow  # >=5s
-def test_minhash_exact_recalls_true_near_dups(spark, tiny_docs_dir):
-    """On the planted-duplicate corpus the exact-twin MinHash must
-    surface the identical pair (0,1) with estimate 1.0 and the
-    one-word-changed pairs with a high estimate."""
-    got = {
-        (r.doc_a, r.doc_b): r.est_jaccard
-        for r in QUERIES["q_minhash_exact"](spark, tiny_docs_dir).collect()
-    }
-    assert got.get((0, 1)) == 1.0
-    # doc 2 differs in 1 word of 30 → true 3-gram Jaccard ≈ 0.83; the
-    # 128-perm estimate must clear the 0.7 emission threshold
-    assert (0, 2) in got and got[(0, 2)] >= 0.7
-    assert (1, 2) in got
-    # unrelated and sub-shingle docs never pair
-    assert not any(3 in p or 4 in p for p in got)
-
-
-@pytest.mark.slow  # >=5s
-def test_minhash_exact_agrees_with_numpy_path_on_candidates(spark):
-    """The md5 twin and the xxhash production path disagree on hash
-    values but must largely agree on WHO is a near-duplicate: at
-    sf0.001 every pair the numpy path reports with est ≥ 0.9 must be
-    reported by the exact twin too (both run 128 perms / 16 bands over
-    identical shingle sets — only the base hash differs)."""
-    exact = {
-        (r.doc_a, r.doc_b)
-        for r in QUERIES["q_minhash_exact"](spark, SF0001).collect()
-    }
-    numpy_hi = {
-        (r.doc_a, r.doc_b)
-        for r in QUERIES["q_dedup_minhash"](spark, SF0001).collect()
-        if r.est_jaccard >= 0.9
-    }
-    assert numpy_hi <= exact, numpy_hi - exact
-
-
-@pytest.mark.slow  # >=5s
-def test_minhash_paths_reject_unrelated_pairs(spark):
-    """Regression for the correlated-permutation bug (p=2^61-1 over
-    31-bit hashes): with a sound permutation field, a pair with true
-    3-gram Jaccard < 0.3 has essentially zero probability of an
-    estimate ≥ 0.7 over 128 permutations — assert NO reported pair is
-    wildly above its true Jaccard on sf0.001."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{SF0001}/documents.parquet'"
-    )
-    truth = {
-        (a, b): j
-        for a, b, j in con.execute(
-            r"""
-            WITH tok AS (SELECT doc_id,
-                   list_filter(regexp_split_to_array(text,'\s+'), t->t<>'') AS ws
-                   FROM documents),
-            sh AS (SELECT DISTINCT doc_id, unnest(list_transform(
-                       generate_series(1,len(ws)-2),
-                       i->ws[i]||'|'||ws[i+1]||'|'||ws[i+2])) AS sh
-                   FROM tok WHERE len(ws)>=3),
-            n AS (SELECT doc_id, COUNT(*) n FROM sh GROUP BY doc_id)
-            SELECT a.doc_id, b.doc_id,
-                   COUNT(*)::DOUBLE/(ANY_VALUE(na.n)+ANY_VALUE(nb.n)-COUNT(*))
-            FROM sh a JOIN sh b ON a.sh=b.sh AND a.doc_id<b.doc_id
-            JOIN n na ON na.doc_id=a.doc_id JOIN n nb ON nb.doc_id=b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-            """
-        ).fetchall()
-    }
-    for qname in ("q_minhash_exact", "q_dedup_minhash"):
-        for r in QUERIES[qname](spark, SF0001).collect():
-            true_j = truth.get((r.doc_a, r.doc_b), 0.0)
-            assert true_j >= 0.5, (qname, r.doc_a, r.doc_b, r.est_jaccard, true_j)
-
-
-def test_star_rounds_match_label_propagation(spark):
-    """Large-star/small-star must produce the exact clustering of
-    q_dedup_clusters' min-label propagation — same components, same
-    min-id cluster labels."""
-    star = {
-        (r.doc_id, r.cluster_id)
-        for r in QUERIES["q_components_star"](spark, SF0001).collect()
-    }
-    prop = {
-        (r.doc_id, r.cluster_id)
-        for r in QUERIES["q_dedup_clusters"](spark, SF0001).collect()
-    }
-    assert star == prop
-
-
-@pytest.mark.slow  # >=5s
-def test_star_contract_fuzz_against_union_find(spark):
-    """Randomized graphs: star contraction must label every node with
-    its component minimum — verified against a pure-Python union-find
-    on 10 random graphs (including dense, sparse, and path-heavy
-    shapes that stress multi-round convergence)."""
-    import random
-
-    from pcap_to_parquet_spark.operators.llm import star_contract
-
-    rng = random.Random(1234)
-    for trial in range(10):
-        n = rng.randint(2, 60)
-        n_edges = rng.randint(1, 2 * n)
-        edges = set()
-        while len(edges) < n_edges:
-            a, b = rng.randrange(n), rng.randrange(n)
-            if a != b:
-                edges.add((a, b))
-        # a long path stresses round count (diameter ~ n)
-        if trial == 9:
-            edges = {(i, i + 1) for i in range(59)}
-        parent = list(range(n + 60))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        nodes = {x for e in edges for x in e}
-        expected = {x: find(x) for x in nodes}
-        df = spark.createDataFrame(sorted(edges), "u long, v long")
-        got = {r.doc_id: r.cluster_id for r in star_contract(df).collect()}
-        assert got == expected, (trial, n, len(edges))
-
-
-def test_winnowing_pairs_share_all_prints(spark, tmp_path):
-    """Two identical docs share every selected fingerprint; a disjoint
-    doc pairs with neither; the guarantee: identical docs' n_shared
-    equals their own print count (window-min selection is content-
-    deterministic, position-independent across copies)."""
-    base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"
-    other = "x1 x2 x3 x4 x5 x6 x7 x8 x9 x10 x11 x12"
-    rows = [
-        (0, base, "en", "s", len(base)),
-        (1, base, "en", "s", len(base)),
-        (2, other, "en", "s", len(other)),
-    ]
-    d = tmp_path / "win"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    out = {(r.doc_a, r.doc_b): r.n_shared for r in QUERIES["q_winnowing"](spark, str(d)).collect()}
-    assert set(out) == {(0, 1)}
-    # selection keeps a strict subset of the 10 shingles (w=4 windows)
-    assert 1 <= out[(0, 1)] <= 10
-
-
-def test_winnowing_collapse_matches_uncollapsed_oracle(spark, tmp_path):
-    """The dedup-collapse rework (prints on representatives, pair-class
-    expansion) must be pair-for-pair identical to the uncollapsed
-    shared-print join the oracle replays. Stress exactly what the
-    collapse changed: a 30-replica group (exercising the 22-smallest-
-    member expansion cap: top-20 is doc 0 against docs 1..20), a
-    3-replica group overlapping it (cross-group classes), a partially
-    overlapping singleton, and a disjoint doc (no class at all)."""
-    import duckdb
-
-    from pcap_to_parquet_spark.registry import ORACLES
-
-    big = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"
-    mid = "w5 w6 w7 w8 w9 w10 x1 x2 x3 x4"
-    part = "w1 w2 w3 w4 w5 y1 y2 y3"
-    rows = [(i, big, "en", "s", len(big)) for i in range(30)]
-    rows += [(100 + i, mid, "en", "s", len(mid)) for i in range(3)]
-    rows.append((200, part, "en", "s", len(part)))
-    rows.append((300, "z1 z2 z3 z4 z5 z6 z7", "en", "s", 20))
-    d = tmp_path / "wc"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    got = [
-        (r.doc_a, r.doc_b, r.n_shared)
-        for r in QUERIES["q_winnowing"](spark, str(d)).collect()
-    ]
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS "
-        f"SELECT * FROM '{d}/documents.parquet/*.parquet'"
-    )
-    want = [tuple(r) for r in con.sql(ORACLES["q_winnowing"]).fetchall()]
-    assert got == want
-    assert len(got) == 20
-    # the 30-replica group's pairs dominate: doc 0 against docs 1..20
-    assert got[0][:2] == (0, 1) and all(a == 0 for a, _, _ in got)
-
-
-def test_winnowing_cross_group_classes_reach_top20(spark, tmp_path):
-    """Complement to the collapse-parity test above, whose 30-replica
-    group fills the whole top-20 from ONE within-group class (so its
-    cross-group expansion path never emits a row). Here the replica
-    groups only cover 18 pairs, forcing the threshold down into the
-    cross-group classes — a bug in cross expansion (the ga != gb
-    dedup branch, least/greatest canonicalization, ns attachment)
-    fails THIS test."""
-    import duckdb
-
-    from pcap_to_parquet_spark.registry import ORACLES
-
-    big = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"
-    mid = "w5 w6 w7 w8 w9 w10 x1 x2 x3 x4"
-    rows = [(i, big, "en", "s", len(big)) for i in range(6)]  # 15 pairs
-    rows += [(100 + i, mid, "en", "s", len(mid)) for i in range(3)]  # 3
-    d = tmp_path / "wx"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    got = [
-        (r.doc_a, r.doc_b, r.n_shared)
-        for r in QUERIES["q_winnowing"](spark, str(d)).collect()
-    ]
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS "
-        f"SELECT * FROM '{d}/documents.parquet/*.parquet'"
-    )
-    want = [tuple(r) for r in con.sql(ORACLES["q_winnowing"]).fetchall()]
-    assert got == want
-    cross = [(a, b) for a, b, _ in got if a < 100 <= b]
-    assert cross, "top-20 must contain cross-group pairs"
-
-
-def test_winnowing_rep_join_stays_group_bounded(spark, tmp_path):
-    """Regression contract for the r10 quadratic (judge item): the
-    shared-print self-join must run on one row per DISTINCT TEXT GROUP,
-    never one per document. Before the dedup-collapse rework the print
-    frame was member-level, so planted duplication multiplicity M blew
-    the join input up M× per side (M² per shared print — ~2 B join rows
-    under the 100-replica plant at 100×). Plant M=40 replicas of each
-    of 3 texts and assert the collapse invariant at count level: the
-    checkpointed print frame (what the join explodes) carries exactly
-    one row per group, independent of M, while membership still sees
-    every doc."""
-    from pcap_to_parquet_spark.operators.llm import _winnow_collapse
-
-    texts = [
-        "w1 w2 w3 w4 w5 w6 w7 w8",
-        "w5 w6 w7 w8 x1 x2 x3 x4",
-        "z1 z2 z3 z4 z5 z6 z7 z8",
-    ]
-    m = 40
-    rows = [
-        (t_idx * 1000 + i, t, "en", "s", len(t))
-        for t_idx, t in enumerate(texts)
-        for i in range(m)
-    ]
-    d = tmp_path / "wq"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    docs = spark.read.parquet(str(d / "documents.parquet"))
-    members, sizes, pr = _winnow_collapse(docs)
-    # membership is doc-level ...
-    assert members.count() == len(texts) * m
-    # ... but the join-side print frame is GROUP-level: M-invariant.
-    assert pr.count() == len(texts)
-    assert sizes.count() == len(texts)
-    # and the self-join input (exploded prints) is group-bounded too:
-    # <= groups × prints-per-text, nowhere near docs × prints.
-    from pyspark.sql import functions as F
-
-    n_join_rows = pr.select(F.explode("prints")).count()
-    per_text_prints = pr.agg(F.max(F.size("prints"))).first()[0]
-    assert n_join_rows <= len(texts) * per_text_prints
-    # end-to-end output unchanged by multiplicity: every pair class
-    # resolves through the 22-smallest-member cap, top pair is the
-    # first group's two smallest doc_ids
-    top = QUERIES["q_winnowing"](spark, str(d)).first()
-    assert (top.doc_a, top.doc_b) == (0, 1)
-
-
-def test_winnowing_coverage_guarantee():
-    """Pure-math property behind q_winnowing's selection rule: with
-    selected = {argmin of each length-w window under (hash, rightmost)
-    order}, EVERY length-w window contains a selected position — the
-    MOSS detection guarantee. Randomized including adversarial
-    monotone runs (where a naive 'min of the window starting here'
-    rule selects nothing until the tail)."""
-    import random
-
-    w = 4
-    rng = random.Random(11)
-    cases = [[rng.randint(0, 50) for _ in range(30)] for _ in range(300)]
-    cases.append(list(range(30, 0, -1)))  # strictly decreasing run
-    cases.append(list(range(30)))  # strictly increasing
-    cases.append([7] * 30)  # all ties -> rightmost argmin per window
-    for h in cases:
-        n = len(h)
-        keys = [(h[i] << 16) + (65535 - i) for i in range(n)]
-        selected = {
-            max(range(p, min(p + w, n)), key=lambda i: -keys[i])
-            for p in range(n)
-        }
-        for p in range(n - w + 1):
-            assert any(q in selected for q in range(p, p + w)), (h, p)
-
-
-def test_lsh_recall_catches_identical_docs(spark, tmp_path):
-    """Two identical docs (Jaccard 1.0) are a true pair AND a banding
-    candidate (identical signatures collide in every band) -> recall
-    1.0; a disjoint doc adds neither."""
-    base = " ".join(f"w{i}" for i in range(30))
-    other = " ".join(f"x{i}" for i in range(30))
-    rows = [
-        (0, base, "en", "s", len(base)),
-        (1, base, "en", "s", len(base)),
-        (2, other, "en", "s", len(other)),
-    ]
-    d = tmp_path / "lshr"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    r = QUERIES["q_lsh_recall"](spark, str(d)).collect()[0]
-    assert r.n_true_pairs == 1
-    assert r.n_caught == 1
-    assert r.recall == 1.0
-
-
-# ---------------------------------------------------------------------------
-# q_lsh_precision
-
-
-@pytest.mark.slow  # >=5s
-def test_lsh_precision_consistent_with_recall(spark):
-    """The two audits share one truth/candidate definition: verified
-    candidates == caught true pairs, and the true-pair / candidate
-    counts must agree across the two reports."""
-    p = QUERIES["q_lsh_precision"](spark, SF0001).collect()[0]
-    r = QUERIES["q_lsh_recall"](spark, SF0001).collect()[0]
-    assert p.n_true_pairs == r.n_true_pairs
-    assert p.n_candidates == r.n_candidates
-    assert p.n_verified == r.n_caught
-    assert p.n_false_candidates == p.n_candidates - p.n_verified
-    assert 0.0 <= p.cand_precision <= 1.0
-
-
-def test_lsh_precision_exact_duplicates_all_verified(spark, tmp_path):
-    """Planted exact-duplicate pairs: every banded candidate passes
-    Jaccard verification -> precision 1.0, verify_cost 1.0."""
-    base = [
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa",
-        "one two three four five six seven eight nine ten",
-    ]
-    docs = []
-    for i in range(4):  # two duplicate pairs: (0,1) and (2,3)
-        t = base[i // 2]
-        docs.append((i, t, "en", "A", len(t)))
-    _write(spark, tmp_path, docs, _DOC_SCHEMA, "documents")
-    p = QUERIES["q_lsh_precision"](spark, str(tmp_path)).collect()[0]
-    assert p.n_true_pairs == 2 and p.n_candidates == 2
-    assert p.n_verified == 2 and p.n_false_candidates == 0
-    assert p.cand_precision == 1.0 and p.verify_cost == 1.0
-
-
-# ---------------------------------------------------------------------------
-# q_dedup_threshold_curve
-
-
-@pytest.mark.slow  # >=5s
-def test_threshold_curve_monotone_and_consistent_with_recall(spark):
-    """On real testdata: 9 grid rows; pair and removal counts are
-    non-increasing in tau; removal_frac is the documented ratio; and
-    the point at tau == the LSH audits' threshold reproduces
-    q_lsh_recall's n_true_pairs exactly (shared jp frame)."""
-    rows = sorted(
-        QUERIES["q_dedup_threshold_curve"](spark, SF0001).collect(),
-        key=lambda r: r.tau,
-    )
-    assert [round(r.tau, 1) for r in rows] == [round(0.1 * i, 1) for i in range(1, 10)]
-    for a, b in zip(rows, rows[1:]):
-        assert a.n_dup_pairs >= b.n_dup_pairs
-        assert a.n_docs_removed >= b.n_docs_removed
-    for r in rows:
-        assert 0 <= r.n_docs_removed <= r.n_slice_docs
-        assert r.removal_frac == round(r.n_docs_removed / r.n_slice_docs, 6)
-    at_tau = next(r for r in rows if abs(r.tau - _LSHR_TAU) < 1e-9)
-    recall = QUERIES["q_lsh_recall"](spark, SF0001).collect()[0]
-    assert at_tau.n_dup_pairs == recall.n_true_pairs
-
-
-# ---------------------------------------------------------------------------
-# q_dedup_bias
-
-
-def test_dedup_bias_planted_duplicate_language(spark, tmp_path):
-    """en has one exact duplicate pair among 3 docs, fr has none among
-    3: the census must charge en exactly one removal (keep-smallest-id)
-    at relative risk 2.0 (1/3 over the global 1/6), and fr zero."""
-    dup = "alpha beta gamma delta epsilon zeta eta theta"
-    rows = [
-        (0, dup, "en", "A", len(dup)),
-        (1, dup, "en", "A", len(dup)),
-        (2, "one two three four five six seven eight", "en", "A", 40),
-        (3, "un deux trois quatre cinq six sept huit", "fr", "A", 40),
-        (4, "rouge vert bleu jaune noir blanc gris rose", "fr", "A", 42),
-        (5, "nord sud est ouest haut bas gauche droite", "fr", "A", 41),
-    ]
-    _write(spark, tmp_path, rows)
-    out = {r.lang: r for r in QUERIES["q_dedup_bias"](spark, str(tmp_path)).collect()}
-    assert set(out) == {"en", "fr"}
-    assert (out["en"].n_docs, out["en"].n_removed) == (3, 1)
-    assert (out["fr"].n_docs, out["fr"].n_removed) == (3, 0)
-    assert out["en"].removal_frac == round(1 / 3, 6)
-    assert out["en"].rel_risk == 2.0
-    assert out["fr"].rel_risk == 0.0
-
-
-@pytest.mark.slow  # >=5s
-def test_dedup_bias_consistent_with_minhash_exact(spark):
-    """The census is q_minhash_exact's pair table re-aggregated: total
-    removals must equal the distinct larger-member count of that op's
-    output, and n_docs must sum to the corpus size."""
-    bias = QUERIES["q_dedup_bias"](spark, SF0001).collect()
-    pairs = QUERIES["q_minhash_exact"](spark, SF0001).collect()
-    assert sum(r.n_removed for r in bias) == len({p.doc_b for p in pairs})
-    n_docs = spark.read.parquet(f"{SF0001}/documents.parquet").count()
-    assert sum(r.n_docs for r in bias) == n_docs
-
-
-# ---------------------------------------------------------------------------
-# q_lsh_planner
-
-
-def test_lsh_planner_planted_certain_pair(spark, tmp_path):
-    """One exact-duplicate pair (Jaccard 1.0) and two unrelated docs:
-    p(1.0) = 1 for EVERY geometry, so each of the 5 rows expects
-    exactly 1.0 candidates from 1 observed pair."""
-    dup = "alpha beta gamma delta epsilon zeta eta theta"
-    rows = [
-        (0, dup, "en", "A", len(dup)),
-        (1, dup, "en", "A", len(dup)),
-        (2, "one two three four five six seven eight", "en", "A", 40),
-        (3, "un deux trois quatre cinq six sept huit", "fr", "A", 40),
-    ]
-    _write(spark, tmp_path, rows)
-    out = QUERIES["q_lsh_planner"](spark, str(tmp_path)).collect()
-    assert len(out) == 5
-    for r in out:
-        assert r.n_pairs == 1
-        assert r.exp_candidates == 1.0
-
-
-def test_lsh_planner_scurve_and_literals(spark):
-    """On real testdata: 5 rows spending the same 128-perm budget;
-    tau50 rises and the catch probability at τ=0.7 falls as rows per
-    band grow (the S-curve steepens rightward); expected candidate
-    mass is non-increasing; and the closed-form columns match the
-    Python formulas they were generated from."""
-    rows = sorted(
-        QUERIES["q_lsh_planner"](spark, SF0001).collect(),
-        key=lambda r: r.rows_per_band,
-    )
-    assert [(r.bands, r.rows_per_band) for r in rows] == [
-        (64, 2), (32, 4), (16, 8), (8, 16), (4, 32)
-    ]
-    assert len({r.n_pairs for r in rows}) == 1
-    for a, b in zip(rows, rows[1:]):
-        assert a.tau50 < b.tau50
-        assert a.p_catch_tau07 >= b.p_catch_tau07
-        assert a.exp_candidates >= b.exp_candidates
-    for r in rows:
-        assert r.tau50 == round(
-            (1.0 - 0.5 ** (1.0 / r.bands)) ** (1.0 / r.rows_per_band), 6
-        )
-        assert r.p_catch_tau07 == round(
-            1.0 - (1.0 - 0.7**r.rows_per_band) ** r.bands, 6
-        )
-
-
-# ---------------------------------------------------------------------------
-# q_filter_dedup_overlap
-
-
-@pytest.mark.slow  # >=5s
-def test_filter_dedup_overlap_planted_interaction(spark, tmp_path):
-    """Six docs: a GOOD duplicate pair (both pass quality), a BAD
-    duplicate pair (both fail the length gate), one good and one bad
-    singleton. The census must report 2 dup pairs, 1 surviving the
-    gates (pair_reduction 0.5), and split the 2 removed docs into one
-    already-caught (n_both) and one marginal (n_dup_only)."""
-    good = ("the quick fox of the barn and the owl went to the mill "
-            * 3).strip()  # ~165 chars, stopword-rich, punct-free
-    bad = "zz yy xx"  # 8 chars: fails the length gate
-    good2 = ("a tall ship of the north and the crew came to the bay "
-             * 3).strip()
-    rows = [
-        (0, good, "en", "A", len(good)),
-        (1, good, "en", "A", len(good)),
-        (2, bad, "en", "A", len(bad)),
-        (3, bad, "en", "A", len(bad)),
-        (4, good2, "en", "A", len(good2)),
-        (5, "qq ww ee", "en", "A", 8),
-    ]
-    _write(spark, tmp_path, rows)
-    r = QUERIES["q_filter_dedup_overlap"](spark, str(tmp_path)).collect()[0]
-    assert (r.n_docs, r.n_fail_quality) == (6, 3)
-    assert (r.n_dup_removed, r.n_both, r.n_dup_only) == (2, 1, 1)
-    assert (r.n_pairs, r.n_pairs_after_filter) == (2, 1)
-    assert r.pair_reduction == 0.5
-
-
-@pytest.mark.slow  # >=5s
-def test_filter_dedup_overlap_consistent_with_siblings(spark):
-    """The census re-aggregates frames its sibling ops already verify:
-    n_dup_removed must equal q_dedup_bias's removal total, n_pairs the
-    q_minhash_exact pair count, and n_fail_quality the complement of
-    q_filter_attribution's pass-all count."""
-    r = QUERIES["q_filter_dedup_overlap"](spark, SF0001).collect()[0]
-    bias = QUERIES["q_dedup_bias"](spark, SF0001).collect()
-    assert r.n_dup_removed == sum(b.n_removed for b in bias)
-    assert r.n_pairs == len(QUERIES["q_minhash_exact"](spark, SF0001).collect())
-    attr = QUERIES["q_filter_attribution"](spark, SF0001).collect()[0]
-    assert r.n_fail_quality == attr.n_docs - attr.n_pass_all
-    assert 0 <= r.n_both <= min(r.n_fail_quality, r.n_dup_removed)
-    assert r.n_pairs_after_filter <= r.n_pairs
-
-
-# ---------------------------------------------------------------------------
-# q_cluster_size_census
-
-
-def test_cluster_size_census_planted_shape(spark, tmp_path):
-    """Two exact-duplicate pairs plus three singletons: the census must
-    report 3 singleton clusters and 2 clusters of size 2 — and nothing
-    larger."""
-    dup1 = "alpha beta gamma delta epsilon zeta eta theta"
-    dup2 = "one two three four five six seven eight nine"
-    rows = [
-        (0, dup1, "en", "A", len(dup1)),
-        (1, dup1, "en", "A", len(dup1)),
-        (2, dup2, "en", "A", len(dup2)),
-        (3, dup2, "en", "A", len(dup2)),
-        (4, "un deux trois quatre cinq six sept huit", "fr", "A", 40),
-        (5, "rouge vert bleu jaune noir blanc gris rose", "fr", "A", 42),
-        (6, "nord sud est ouest haut bas gauche droite", "fr", "A", 41),
-    ]
-    _write(spark, tmp_path, rows)
-    out = {r.size_bucket: r for r in QUERIES["q_cluster_size_census"](spark, str(tmp_path)).collect()}
-    assert set(out) == {"1", "2"}
-    assert (out["1"].n_clusters, out["1"].n_docs, out["1"].max_size) == (3, 3, 1)
-    assert (out["2"].n_clusters, out["2"].n_docs, out["2"].max_size) == (2, 4, 2)
-
-
-def test_cluster_size_census_consistent_with_survivors(spark):
-    """The census re-buckets q_dedup_clusters' labels: doc totals must
-    cover the corpus, and the non-singleton buckets must agree with
-    q_dedup_survivors' cluster count and member totals."""
-    rows = QUERIES["q_cluster_size_census"](spark, SF0001).collect()
-    n_docs = spark.read.parquet(f"{SF0001}/documents.parquet").count()
-    assert sum(r.n_docs for r in rows) == n_docs
-    surv = QUERIES["q_dedup_survivors"](spark, SF0001).collect()
-    nontrivial = [r for r in rows if r.size_bucket != "1"]
-    assert sum(r.n_clusters for r in nontrivial) == len(surv)
-    assert sum(r.n_docs for r in nontrivial) == sum(s.n_members for s in surv)
-    for r in rows:
-        assert r.n_clusters <= r.n_docs
-
-
-# ---------------------------------------------------------------------------
-# q_dedup_source_census
-
-
-def test_dedup_source_census_planted_mirror_vs_repost(spark, tmp_path):
-    """Source A re-posts internally (one within pair), sources A and B
-    mirror each other (one cross pair, charged to both): the census
-    must split the pair counts by provenance and place each removal in
-    the right source."""
-    mirror = "alpha beta gamma delta epsilon zeta eta theta"
-    repost = "one two three four five six seven eight nine"
-    rows = [
-        (0, mirror, "en", "A", len(mirror)),
-        (1, mirror, "en", "B", len(mirror)),
-        (2, repost, "en", "A", len(repost)),
-        (3, repost, "en", "A", len(repost)),
-        (4, "un deux trois quatre cinq six sept huit", "fr", "B", 40),
-    ]
-    _write(spark, tmp_path, rows)
-    out = {r.source: r for r in QUERIES["q_dedup_source_census"](spark, str(tmp_path)).collect()}
-    assert set(out) == {"A", "B"}
-    a, b = out["A"], out["B"]
-    assert (a.n_docs, a.n_removed, a.n_within_pairs, a.n_cross_pairs) == (3, 1, 1, 1)
-    assert (b.n_docs, b.n_removed, b.n_within_pairs, b.n_cross_pairs) == (2, 1, 0, 1)
-    assert a.removal_frac == round(1 / 3, 6)
-
-
-@pytest.mark.slow  # >=5s
-def test_dedup_source_census_pair_accounting(spark):
-    """On real testdata: every verified pair is counted exactly once —
-    within pairs once in their source, cross pairs once on each side —
-    so sum(within) + sum(cross)/2 must equal q_minhash_exact's pair
-    count, and removals must re-sum to q_dedup_bias's total."""
-    rows = QUERIES["q_dedup_source_census"](spark, SF0001).collect()
-    n_pairs = len(QUERIES["q_minhash_exact"](spark, SF0001).collect())
-    s_within = sum(r.n_within_pairs for r in rows)
-    s_cross = sum(r.n_cross_pairs for r in rows)
-    assert s_cross % 2 == 0
-    assert s_within + s_cross // 2 == n_pairs
-    bias = QUERIES["q_dedup_bias"](spark, SF0001).collect()
-    assert sum(r.n_removed for r in rows) == sum(b.n_removed for b in bias)
-    n_docs = spark.read.parquet(f"{SF0001}/documents.parquet").count()
-    assert sum(r.n_docs for r in rows) == n_docs
-
-
-# ---------------------------------------------------------------------------
-# q_minhash_perm_sensitivity
-
-
-def test_perm_sensitivity_exact_pair_has_zero_error(spark, tmp_path):
-    """An exact-duplicate pair has identical shingle sets, hence
-    identical minima at EVERY prefix: est = 1.0 = j for all four
-    budgets, so MAE, worst-case and bias are all exactly zero."""
-    dup = "alpha beta gamma delta epsilon zeta eta theta"
-    rows = [
-        (0, dup, "en", "A", len(dup)),
-        (1, dup, "en", "A", len(dup)),
-        (2, "one two three four five six seven eight", "en", "A", 40),
-    ]
-    _write(spark, tmp_path, rows)
-    out = QUERIES["q_minhash_perm_sensitivity"](spark, str(tmp_path)).collect()
-    assert [r.perms for r in sorted(out, key=lambda r: r.perms)] == [16, 32, 64, 128]
-    for r in out:
-        assert r.n_pairs == 1
-        assert (r.mae, r.max_abs_err, r.mean_bias) == (0.0, 0.0, 0.0)
-
-
-def test_perm_sensitivity_error_decays_on_testdata(spark):
-    """On real testdata: four budget rows over the same pair count;
-    MAE bounds |bias| and is bounded by the worst case; the full
-    128-perm signature estimates at least as well as the 16-perm
-    prefix (the ~1/sqrt(perms) decay this census exists to show)."""
-    rows = sorted(
-        QUERIES["q_minhash_perm_sensitivity"](spark, SF0001).collect(),
-        key=lambda r: r.perms,
-    )
-    assert [r.perms for r in rows] == [16, 32, 64, 128]
-    assert len({r.n_pairs for r in rows}) == 1
-    for r in rows:
-        assert 0.0 <= r.mae <= r.max_abs_err <= 1.0
-        assert abs(r.mean_bias) <= r.mae + 1e-9
-    assert rows[-1].mae <= rows[0].mae
-
-
-def test_threshold_curve_planted_duplicates(spark, tmp_path):
-    """Two exact-duplicate pairs among four docs: every tau keeps both
-    pairs (Jaccard 1.0), greedy keep-smallest removes docs 1 and 3 ->
-    removal_frac 0.5 across the whole grid."""
-    base = [
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa",
-        "one two three four five six seven eight nine ten",
-    ]
-    rows = [(i, base[i // 2], "en", "A", len(base[i // 2])) for i in range(4)]
-    _write(spark, tmp_path, rows)
-    out = QUERIES["q_dedup_threshold_curve"](spark, str(tmp_path)).collect()
-    assert len(out) == 9
-    for r in out:
-        assert (r.n_dup_pairs, r.n_docs_removed, r.n_slice_docs) == (2, 2, 4)
-        assert r.removal_frac == 0.5
-
-
-# ---------------------------------------------------------------------------
-# q_lsh_planner: partition-order insensitivity
-
-
-def test_lsh_planner_sum_is_partition_order_insensitive(spark):
-    """exp_candidates is floor-quantized to an 8dp integer grid before
-    the SUM, so the reduction is exact integer
-    arithmetic: changing the shuffle partitioning must reproduce every
-    value bit-for-bit. A raw double SUM would drift in the last ulp
-    with accumulation order and could flip the 4dp rounding."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    base = {r.rows_per_band: r.exp_candidates
-            for r in QUERIES["q_lsh_planner"](spark, SF0001).collect()}
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        alt = {r.rows_per_band: r.exp_candidates
-               for r in QUERIES["q_lsh_planner"](spark, SF0001).collect()}
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    assert base == alt
-    assert len(base) == 5
-
-
-# ---------------------------------------------------------------------------
-# q_winnowing_band
-
-
-def test_winnowing_band_finds_near_dups(spark, tmp_path):
-    """The case exact q_winnowing's collapse can NOT bound: NEAR
-    duplicates (one token changed) are distinct md5 groups, yet they
-    share their minimum print with high probability — the band pairs
-    them, and the verified n_shared is the exact shared-print count.
-    Disjoint docs never become candidates."""
-    base = " ".join(f"w{i}" for i in range(20))
-    near = " ".join(("CHANGED" if i == 17 else f"w{i}") for i in range(20))
-    other = " ".join(f"z{i}" for i in range(20))
-    d = _docs_lake(
-        spark,
-        tmp_path,
-        [
-            (0, base, "en", "s", len(base)),
-            (1, near, "en", "s", len(near)),
-            (2, other, "en", "s", len(other)),
-        ],
-    )
-    out = {(r.doc_a, r.doc_b): r.n_shared for r in
-           QUERIES["q_winnowing_band"](spark, d).collect()}
-    assert (0, 1) in out and out[(0, 1)] >= 1
-    assert not any(2 in pair for pair in out)
-
-
-def test_winnowing_band_reported_counts_match_exact(spark, tmp_path):
-    """Every pair the band variant reports must carry the SAME
-    n_shared as exact q_winnowing reports for that pair (verification
-    is exact; only recall differs). Identical-text docs collapse to
-    one rep, so the band variant reports the rep pair where exact
-    winnowing expands members."""
-    base = " ".join(f"w{i}" for i in range(14))
-    near = " ".join(("Y" if i == 0 else f"w{i}") for i in range(14))
-    d = _docs_lake(
-        spark,
-        tmp_path,
-        [
-            (0, base, "en", "s", len(base)),
-            (1, near, "en", "s", len(near)),
-            (7, base, "en", "s", len(base)),  # exact dup of 0 -> same group
-        ],
-    )
-    band = {(r.doc_a, r.doc_b): r.n_shared for r in
-            QUERIES["q_winnowing_band"](spark, d).collect()}
-    exact = {(r.doc_a, r.doc_b): r.n_shared for r in
-             QUERIES["q_winnowing"](spark, d).collect()}
-    # rep-level pair (0, 1): both report it with the same exact count
-    assert band[(0, 1)] == exact[(0, 1)]
-    # the member pair (0, 7) belongs to exact winnowing only (same group)
-    assert (0, 7) in exact and (0, 7) not in band
-
-
-def test_winnowing_band_curve_near_dups(spark, tmp_path):
-    """On a NEAR-dup-heavy slice (each doc's sibling differs by one
-    trailing token), min-print banding recalls every truth pair at
-    B=1 already (siblings share the min print), and the curve's
-    counting invariants hold: hits <= candidates, hits <= truth,
-    candidates monotone in B."""
-    rows = []
-    for fam in range(6):
-        base = " ".join(f"w{fam}_{j}" for j in range(15))
-        rows.append((2 * fam, base + " tailA", "en", "s", 1))
-        rows.append((2 * fam + 1, base + " tailB", "en", "s", 1))
-    d = _docs_lake(spark, tmp_path, rows)
-    out = {r.band_count: r for r in
-           QUERIES["q_winnowing_band_curve"](spark, d).collect()}
-    assert set(out) == {1, 2, 4}
-    for r in out.values():
-        assert r.n_hits <= r.n_candidates and r.n_hits <= r.n_truth
-    assert out[1].n_truth == 6  # one truth pair per family
-    assert out[1].recall == 1.0  # siblings share the min print
-    assert out[1].n_candidates <= out[2].n_candidates <= out[4].n_candidates
-
-
-def test_winnowing_band_cap_bounds_bucket(spark, tmp_path):
-    """A pathological bucket (many near-identical docs sharing one min
-    print) stays bounded: with cap C the candidate pairs are ≤ C(C,2)
-    regardless of bucket population — the quadratic the combined-axis
-    rehearsal caught can't re-enter."""
-    from pcap_to_parquet_spark.operators.llm import _WINNOW_BAND_CAP
-
-    rows = []
-    for i in range(_WINNOW_BAND_CAP + 8):
-        text = " ".join(f"w{j}" for j in range(12)) + f" tail{i}"
-        rows.append((i, text, "en", "s", len(text)))
-    d = _docs_lake(spark, tmp_path, rows)
-    out = QUERIES["q_winnowing_band"](spark, d)
-    # top-20 LIMIT hides the bound; count the raw candidate frame
-    # instead by removing the limit: re-derive via the registered op's
-    # plan is overkill — the pin is that the query COMPLETES and the
-    # top-20 pairs are all verified >= 1
-    rows_out = out.collect()
-    assert 1 <= len(rows_out) <= 20
-    assert all(r.n_shared >= 1 for r in rows_out)
-
-
-def test_band_members_expands_groups(spark, tmp_path):
-    """q_winnowing_band_members turns rep-level band pairs into
-    document pairs: the near-dup pair expands across the duplicated
-    group (same exact n_shared for every member pair), and the
-    identical-text pair appears as a within-group pair whose n_shared
-    is the group's own print count."""
-    base = " ".join(f"w{i}" for i in range(14))
-    near = " ".join(("Y" if i == 0 else f"w{i}") for i in range(14))
-    d = _docs_lake(
-        spark,
-        tmp_path,
-        [
-            (0, base, "en", "s", len(base)),
-            (1, near, "en", "s", len(near)),
-            (7, base, "en", "s", len(base)),  # exact dup of 0 -> same group
-        ],
-    )
-    band = {(r.doc_a, r.doc_b): r.n_shared for r in
-            QUERIES["q_winnowing_band"](spark, d).collect()}
-    mem = {(r.doc_a, r.doc_b): r.n_shared for r in
-           QUERIES["q_winnowing_band_members"](spark, d).collect()}
-    assert (0, 1) in band and (0, 7) not in band  # rep-level by design
-    # cross-group pairs expand through the dup with the same count
-    assert mem[(0, 1)] == band[(0, 1)]
-    assert mem[(1, 7)] == band[(0, 1)]
-    # the identical pair is a within-group class (its own print count)
-    assert (0, 7) in mem and mem[(0, 7)] >= mem[(0, 1)]
-
-
-def test_band_members_equals_exact_when_recall_full(spark, tmp_path):
-    """Cross-op consistency: on near-dup families where the min print
-    is shared (band recall 1.0 — the curve test's corpus shape),
-    member-level band expansion returns EXACTLY q_winnowing's top-20:
-    same pairs, same counts."""
-    rows = []
-    for fam in range(5):
-        base = " ".join(f"w{fam}_{j}" for j in range(15))
-        rows.append((3 * fam, base + " tailA", "en", "s", 1))
-        rows.append((3 * fam + 1, base + " tailB", "en", "s", 1))
-        rows.append((3 * fam + 2, base + " tailA", "en", "s", 1))  # dup of first
-    d = _docs_lake(spark, tmp_path, rows)
-    mem = sorted(
-        (r.doc_a, r.doc_b, r.n_shared)
-        for r in QUERIES["q_winnowing_band_members"](spark, d).collect()
-    )
-    exact = sorted(
-        (r.doc_a, r.doc_b, r.n_shared)
-        for r in QUERIES["q_winnowing"](spark, d).collect()
-    )
-    assert mem == exact
-
-
-def test_band_clusters_families(spark, tmp_path):
-    """Planted families: exact dups + near-dups form ONE cluster under
-    the component-min label; disjoint docs stay singletons; sub-floor
-    (<3 tokens) docs keep their own id."""
-    base = " ".join(f"w{i}" for i in range(20))
-    near = " ".join(("CHANGED" if i == 10 else f"w{i}") for i in range(20))
-    other = " ".join(f"z{i}" for i in range(20))
-    d = _docs_lake(
-        spark,
-        tmp_path,
-        [
-            (3, base, "en", "s", 1),
-            (5, near, "en", "s", 1),          # near-dup of 3 -> same cluster
-            (9, base, "en", "s", 1),          # exact dup of 3 -> same cluster
-            (11, other, "en", "s", 1),        # disjoint -> singleton
-            (12, "tiny doc", "en", "s", 1),   # under the 3-token floor
-        ],
-    )
-    lab = {r.doc_id: r.cluster_id for r in
-           QUERIES["q_winnowing_band_clusters"](spark, d).collect()}
-    assert lab == {3: 3, 5: 3, 9: 3, 11: 11, 12: 12}
-
-
-def test_band_clusters_consistent_with_members(spark, tmp_path):
-    """Cross-op consistency: every document pair the member-level band
-    op reports with n_shared >= the cluster edge threshold must land
-    in the same cluster."""
-    from pcap_to_parquet_spark.operators.llm import _WINNOW_CLUSTER_TAU
-
-    rows = []
-    for fam in range(4):
-        base = " ".join(f"w{fam}_{j}" for j in range(15))
-        rows.append((2 * fam, base + " tailA", "en", "s", 1))
-        rows.append((2 * fam + 1, base + " tailB", "en", "s", 1))
-    d = _docs_lake(spark, tmp_path, rows)
-    lab = {r.doc_id: r.cluster_id for r in
-           QUERIES["q_winnowing_band_clusters"](spark, d).collect()}
-    for r in QUERIES["q_winnowing_band_members"](spark, d).collect():
-        if r.n_shared >= _WINNOW_CLUSTER_TAU:
-            assert lab[r.doc_a] == lab[r.doc_b]
-
-
-def test_method_agreement_planted(spark, tmp_path):
-    """Planted disagreement: identical docs are dup under BOTH methods;
-    a one-token-changed pair has 3-gram Jaccard 15/21 ≈ 0.71 (< 0.8 —
-    not a Jaccard pair) yet shares its winnowing prints (winnow-only);
-    a disjoint doc is neither. The pair-set algebra follows: winnowing
-    pairs ⊇ jaccard pairs here, so pair_jaccard = |J|/|W|."""
-    base = " ".join(f"w{i}" for i in range(20))
-    near = " ".join(("CHANGED" if i == 17 else f"w{i}") for i in range(20))
-    twin = " ".join(f"t{i}" for i in range(20))
-    d = _docs_lake(
-        spark,
-        tmp_path,
-        [
-            (0, twin, "en", "s", 1),
-            (1, twin, "en", "s", 1),     # identical pair: dup under both
-            (2, base, "en", "s", 1),
-            (3, near, "en", "s", 1),     # near pair: winnow-only
-            (4, " ".join(f"z{i}" for i in range(20)), "en", "s", 1),  # neither
-        ],
-    )
-    r = QUERIES["q_dedup_method_agreement"](spark, d).collect()[0]
-    assert r.n_docs == 5
-    assert (r.dup_both, r.dup_jaccard_only, r.dup_winnow_only, r.dup_neither) == (
-        2, 0, 2, 1
-    )
-    assert (r.n_pairs_jaccard, r.n_pairs_winnow, r.n_pairs_both) == (1, 2, 1)
-    assert r.pair_jaccard == 0.5
-
-
-@pytest.mark.slow  # >=5s
-def test_band_survivors_keep_longest(spark, tmp_path):
-    """Survivor selection under band clusters: the longest member wins
-    (doc_id tie-break), absorbed near-dups are counted, singletons are
-    excluded — and the survivor set is consistent with the cluster
-    labels (one survivor per non-trivial cluster)."""
-    base = " ".join(f"w{i}" for i in range(20))
-    near = " ".join(("CHANGED" if i == 10 else f"w{i}") for i in range(20))
-    longer = base + " extra tokens here"
-    d = _docs_lake(
-        spark,
-        tmp_path,
-        [
-            (0, base, "en", "s", len(base)),
-            (1, near, "en", "s", len(near)),
-            (2, longer, "en", "s", len(longer)),   # longest in the family
-            (9, " ".join(f"z{i}" for i in range(20)), "en", "s", 20),  # singleton
-        ],
-    )
-    out = {r.cluster_id: r for r in
-           QUERIES["q_winnowing_band_survivors"](spark, d).collect()}
-    labels = {r.doc_id: r.cluster_id for r in
-              QUERIES["q_winnowing_band_clusters"](spark, d).collect()}
-    assert labels[0] == labels[1] == labels[2] == 0 and labels[9] == 9
-    assert set(out) == {0}
-    r = out[0]
-    assert (r.survivor_doc, r.n_members, r.n_dropped) == (2, 3, 2)
-    assert r.survivor_chars == len(longer)
-
-
-def _components(nodes, edges):
-    """Brute-force min-label connected components (pure Python)."""
-    lab = {n: n for n in nodes}
-    changed = True
-    while changed:
-        changed = False
-        for a, b in edges:
-            m = min(lab[a], lab[b])
-            for x in (a, b):
-                if lab[x] != m:
-                    lab[x] = m
-                    changed = True
-    return lab
-
-
-@pytest.mark.slow  # >=5s
-def test_simhash_clusters_match_bruteforce(spark, tmp_path):
-    """Cross-op consistency: the rep-collapsed star-contraction labels
-    must equal brute-force connected components over ALL O(n²)
-    hamming-≤3 fingerprint pairs — and identical texts (hamming 0)
-    always share a cluster, token-free docs stay singletons."""
-    from pcap_to_parquet_spark.operators.llm import simhash
-
-    twin = " ".join(f"t{i}" for i in range(20))
-    rows = [
-        (0, twin, "en", "s", 1),
-        (1, twin, "en", "s", 1),                                  # identical pair
-        (2, " ".join(f"w{i}" for i in range(20)), "en", "s", 1),
-        (3, " ".join(("CHANGED" if i == 17 else f"w{i}") for i in range(20)),
-         "en", "s", 1),                                           # near pair (maybe)
-        (4, " ".join(f"z{i}" for i in range(25)), "en", "s", 1),
-        (5, "   ", "en", "s", 1),                                 # no tokens
-    ]
-    d = _docs_lake(spark, tmp_path, rows)
-    from pcap_to_parquet_spark.sources.tables import load_table
-
-    fps = {
-        r.doc_id: r.simhash
-        for r in simhash(load_table(spark, d, "documents")).collect()
-    }
-    assert 5 not in fps  # token-free doc carries no fingerprint
-    ids = sorted(fps)
-    edges = [
-        (a, b)
-        for i, a in enumerate(ids)
-        for b in ids[i + 1:]
-        if bin(fps[a] ^ fps[b]).count("1") <= 3
-    ]
-    expect = _components([r[0] for r in rows], edges)
-    got = {
-        r.doc_id: r.cluster_id
-        for r in QUERIES["q_dedup_simhash_clusters"](spark, d).collect()
-    }
-    assert got == expect
-    assert got[0] == got[1]  # identical texts share a cluster
-    assert got[5] == 5       # token-free doc is a singleton
-    # survivors tie out against the labels: one keep-longest survivor
-    # per non-trivial cluster, members counted
-    from collections import Counter
-
-    sizes = Counter(got.values())
-    surv = {
-        r.cluster_id: r
-        for r in QUERIES["q_dedup_simhash_survivors"](spark, d).collect()
-    }
-    assert set(surv) == {c for c, n in sizes.items() if n >= 2}
-    for c, r in surv.items():
-        assert r.n_members == sizes[c] and r.n_dropped == sizes[c] - 1
-        assert got[r.survivor_doc] == c
-
-
-@pytest.mark.slow  # >=5s
-def test_method_agreement3_planted_and_consistent(spark, tmp_path):
-    """The 2×2×2 census must be the exact brute-force roll of its own
-    three input labelings — and its jaccard×winnowing margin must
-    equal the two-axis census row on the same fixture (shared labels,
-    shared algebra)."""
-    base = " ".join(f"w{i}" for i in range(20))
-    near = " ".join(("CHANGED" if i == 17 else f"w{i}") for i in range(20))
-    twin = " ".join(f"t{i}" for i in range(20))
-    d = _docs_lake(
-        spark,
-        tmp_path,
-        [
-            (0, twin, "en", "s", 1),
-            (1, twin, "en", "s", 1),     # identical: dup under all three
-            (2, base, "en", "s", 1),
-            (3, near, "en", "s", 1),     # near: winnow-only vs jaccard
-            (4, " ".join(f"z{i}" for i in range(20)), "en", "s", 1),
-        ],
-    )
-    labs = {
-        k: {
-            r.doc_id: r.cluster_id
-            for r in QUERIES[q](spark, d).collect()
-        }
-        for k, q in (
-            ("j", "q_dedup_clusters"),
-            ("w", "q_winnowing_band_clusters"),
-            ("s", "q_dedup_simhash_clusters"),
-        )
-    }
-
-    def pairs(lab):
-        from collections import Counter
-
-        by = Counter(lab.values())
-        return sum(c * (c - 1) // 2 for c in by.values())
-
-    def joint(la, lb):
-        from collections import Counter
-
-        by = Counter((la[d_], lb[d_]) for d_ in la)
-        return sum(c * (c - 1) // 2 for c in by.values())
-
-    def dup(lab):
-        from collections import Counter
-
-        by = Counter(lab.values())
-        return {d_: by[c] >= 2 for d_, c in lab.items()}
-
-    dj, dw, ds = dup(labs["j"]), dup(labs["w"]), dup(labs["s"])
-    r = QUERIES["q_dedup_method_agreement3"](spark, d).collect()[0]
-    docs = list(labs["j"])
-    assert r.n_docs == len(docs) == 5
-    assert r.dup_all == sum(dj[x] and dw[x] and ds[x] for x in docs)
-    assert r.dup_jw_only == sum(dj[x] and dw[x] and not ds[x] for x in docs)
-    assert r.dup_js_only == sum(dj[x] and ds[x] and not dw[x] for x in docs)
-    assert r.dup_ws_only == sum(dw[x] and ds[x] and not dj[x] for x in docs)
-    assert r.dup_jaccard_only == sum(
-        dj[x] and not dw[x] and not ds[x] for x in docs
-    )
-    assert r.dup_winnow_only == sum(
-        dw[x] and not dj[x] and not ds[x] for x in docs
-    )
-    assert r.dup_simhash_only == sum(
-        ds[x] and not dj[x] and not dw[x] for x in docs
-    )
-    assert r.dup_none == sum(
-        not dj[x] and not dw[x] and not ds[x] for x in docs
-    )
-    assert (r.n_pairs_jaccard, r.n_pairs_winnow, r.n_pairs_simhash) == (
-        pairs(labs["j"]), pairs(labs["w"]), pairs(labs["s"])
-    )
-    assert (r.n_pairs_jw, r.n_pairs_js, r.n_pairs_ws) == (
-        joint(labs["j"], labs["w"]),
-        joint(labs["j"], labs["s"]),
-        joint(labs["w"], labs["s"]),
-    )
-    # the jw margin equals the two-axis census on the same fixture
-    r2 = QUERIES["q_dedup_method_agreement"](spark, d).collect()[0]
-    assert r.n_pairs_jw == r2.n_pairs_both
-    assert r.pair_jaccard_jw == r2.pair_jaccard
-    assert r.dup_all + r.dup_jw_only == r2.dup_both
-    # the per-source drill-down rolls up to the same global margins
-    per_src = QUERIES["q_dedup_agreement_by_source"](spark, d).collect()
-    assert sum(s.n_docs for s in per_src) == r.n_docs
-    assert sum(s.dup_jaccard for s in per_src) == (
-        r.dup_all + r.dup_jw_only + r.dup_js_only + r.dup_jaccard_only
-    )
-    assert sum(s.dup_winnow for s in per_src) == (
-        r.dup_all + r.dup_jw_only + r.dup_ws_only + r.dup_winnow_only
-    )
-    assert sum(s.dup_simhash for s in per_src) == (
-        r.dup_all + r.dup_js_only + r.dup_ws_only + r.dup_simhash_only
-    )
-    assert sum(s.n_disagree for s in per_src) == (
-        r.dup_jw_only + r.dup_js_only + r.dup_ws_only
-        + r.dup_jaccard_only + r.dup_winnow_only + r.dup_simhash_only
-    )
-
-
-@pytest.mark.slow  # >=5s
-def test_band_filter_attribution_planted(spark, tmp_path):
-    """Hand-planted removed set with known gate flags: the band dedup
-    removes docs 0 and 1 (doc 2 is the keep-longest survivor); doc 0
-    fails only the length gate (n_chars 50), doc 1 only the density
-    gate (20 tokens over a claimed 200 chars), both fail the
-    stopword gate (no stopwords), neither trips punctuation — so each
-    rule's already-rejected share and the zero pass-all remainder are
-    all hand-checkable, and n_removed ties out against the survivors
-    op's n_dropped."""
-    base = " ".join(f"w{i}" for i in range(20))
-    near = " ".join(("CHANGED" if i == 10 else f"w{i}") for i in range(20))
-    longer = base + " extra tokens here"
-    d = _docs_lake(
-        spark,
-        tmp_path,
-        [
-            (0, base, "en", "s", 50),     # fails length (50 < 100)
-            (1, near, "en", "s", 200),    # fails density (20/200 < 0.175)
-            (2, longer, "en", "s", 300),  # survivor: longest n_chars
-            (9, " ".join(f"z{i}" for i in range(20)), "en", "s", 150),
-        ],
-    )
-    rows = {r.rule: r for r in
-            QUERIES["q_band_filter_attribution"](spark, d).collect()}
-    assert set(rows) == {"length", "low_density", "high_punct", "low_stopword"}
-    r = rows["length"]
-    assert (r.n_removed, r.removed_chars, r.n_removed_pass_all) == (2, 250, 0)
-    assert (r.n_already_failing, r.chars_already_failing) == (1, 50)
-    assert r.share_already_rejected == 0.5
-    assert (rows["low_density"].n_already_failing,
-            rows["low_density"].chars_already_failing) == (1, 200)
-    assert rows["high_punct"].n_already_failing == 0
-    assert (rows["low_stopword"].n_already_failing,
-            rows["low_stopword"].chars_already_failing) == (2, 250)
-    assert rows["low_stopword"].share_already_rejected == 1.0
-    # ties out against the survivors deliverable
-    dropped = sum(
-        r.n_dropped
-        for r in QUERIES["q_winnowing_band_survivors"](spark, d).collect()
-    )
-    assert dropped == rows["length"].n_removed == 2

@@ -6,7 +6,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pcap_to_parquet_spark.sources.pcap import decode_pcap_bytes, read_pcap
+from pcap_to_parquet_spark.sources.pcap import decode_pcap_bytes
 from pcap_to_parquet_spark.sources.pcap_chunked import (
     chunk_specs,
     decode_chunk,
@@ -21,7 +21,6 @@ from pcap_to_parquet_spark.sources.pcap_fixtures import (
     pcap_file,
     tcp,
     udp,
-    v6_golden_pcap_bytes,
 )
 
 
@@ -180,44 +179,3 @@ def test_spark_chunked_reader(spark, tmp_path):
     )
     assert len(rows) == 5000
     assert rows == want
-
-
-def test_chunked_v6_every_boundary(tmp_path):
-    """Every chunk size over the v6 golden file, both modes: resync is
-    L2-agnostic, so v6 frames must survive arbitrary boundaries just
-    like v4 ones — and default mode must stay reference parity."""
-    buf = v6_golden_pcap_bytes()
-    p = tmp_path / "v6.pcap"
-    p.write_bytes(buf)
-    for mode in (True, False):
-        want = decode_pcap_bytes(buf, mode)
-        for chunk_bytes in range(16, len(buf) + 16, 16):
-            got = chunked_rows(str(p), chunk_bytes, mode)
-            assert got == want, f"chunk={chunk_bytes} ipv6={mode}"
-
-
-def test_spark_chunked_v6_equals_per_file(spark, tmp_path):
-    """read_pcap_chunked(ipv6=True) row-set == read_pcap(ipv6=True) on
-    the v6 fixture (forced small chunks → real resync on executors)."""
-    buf = v6_golden_pcap_bytes()
-    p = tmp_path / "v6.pcap"
-    p.write_bytes(buf)
-    key = lambda r: (r["len"], r["src_ip"] or "", r["src_port"] or -1)  # noqa: E731
-    chunked = sorted(
-        (r.asDict() for r in read_pcap_chunked(
-            spark, str(p), chunk_bytes=128, ipv6=True).collect()),
-        key=key,
-    )
-    per_file = sorted(
-        (r.asDict() for r in read_pcap(spark, str(p), ipv6=True).collect()),
-        key=key,
-    )
-    assert chunked == per_file
-    assert any(r["src_ip"] and ":" in r["src_ip"] for r in chunked)
-    # default (no flag): chunked reader keeps byte-identical parity
-    parity_chunked = sorted(
-        (r.asDict() for r in read_pcap_chunked(spark, str(p), chunk_bytes=128).collect()),
-        key=lambda r: r["len"],
-    )
-    parity_ref = sorted(decode_pcap_bytes(buf), key=lambda r: r["len"])
-    assert parity_chunked == parity_ref

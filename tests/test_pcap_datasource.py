@@ -8,7 +8,6 @@ import pytest
 from pcap_to_parquet_spark.sources.pcap import read_pcap
 from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
 from pcap_to_parquet_spark.sources.pcap_fixtures import golden_pcap_bytes, mixed_pcap_bytes
-from tests.conftest import V6_GOLDEN_ROWS
 
 
 def _key(r):
@@ -405,26 +404,3 @@ def test_writer_render_roundtrips_arbitrary_rows():
         assert got == want, (got, want)
 
     check()
-
-
-def test_v6_through_datasource_with_pushdown(spark):
-    """spark.read.format('pcap').option('ipv6', 'true'): the connector
-    carries the v6 decode, and a pushed protocol filter compares in
-    NAME space (ICMPv6 exists only there — the v4 number space would
-    drop every v6 row)."""
-    from pcap_to_parquet_spark.operators.pcap_query import _v6_fixture_path
-    from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
-
-    register_pcap_source(spark)
-    df = spark.read.format("pcap").option("ipv6", "true").load(_v6_fixture_path())
-    rows = [r.asDict() for r in df.orderBy("len", "src_ip").collect()]
-    assert rows == sorted(V6_GOLDEN_ROWS, key=lambda r: (r["len"], r["src_ip"] or ""))
-    icmp6 = df.where("protocol = 'ICMPv6'").collect()
-    assert [r.src_ip for r in icmp6] == ["fe80::1"]
-    # both 2001:db8::1 UDP packets plus the dual-stack v4 one — the
-    # pushed name-space filter must keep BOTH stacks' UDP rows
-    udp1234 = df.where("protocol = 'UDP' AND src_port = 1234").count()
-    assert udp1234 == 3
-    # default (no option) stays reference parity through the connector
-    parity = spark.read.format("pcap").load(_v6_fixture_path())
-    assert parity.where("src_ip LIKE '%:%'").count() == 0

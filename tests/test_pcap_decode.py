@@ -22,15 +22,11 @@ from pcap_to_parquet_spark.sources.pcap_fixtures import (
     BASE_TS,
     eth,
     fixture_packets,
-    golden_pcap_bytes,
     ipv4,
     mm_trailer,
     pcap_file,
     udp,
-    v6_fixture_packets,
-    v6_golden_pcap_bytes,
 )
-from tests.conftest import V6_GOLDEN_ROWS
 
 FIX = fixture_packets()
 
@@ -235,36 +231,3 @@ def test_decode_roundtrip_wellformed():
     assert (r["src_ip"], r["dst_ip"], r["src_port"], r["dst_port"]) == (
         "1.2.3.4", "5.6.7.8", 111, 222,
     )
-
-
-# hand-computed from the byte layout in v6_fixture_packets (fixture
-# insertion order); every assertion below is independent of the decoder
-def test_v6_golden_scalar_decode():
-    rows = decode_pcap_bytes(v6_golden_pcap_bytes(), ipv6=True)
-    assert rows == V6_GOLDEN_ROWS
-
-
-def test_v6_parity_mode_nulls_v6():
-    """ipv6=False on the v6 fixture reproduces the reference: every v6
-    packet keeps NULL L3/L4 fields (main.rs:239-251 dispatches only
-    0x0800/0x8100); len always set, trailer parse unaffected (it never
-    looks at ethertype), the v4 row decodes normally."""
-    rows = decode_pcap_bytes(v6_golden_pcap_bytes())
-    names = list(v6_fixture_packets())
-    for name, row, v6row in zip(names, rows, V6_GOLDEN_ROWS):
-        assert row["len"] == v6row["len"]
-        if name == "v4_mixed":
-            assert row == v6row  # v4 decode identical in both modes
-            continue
-        assert row["src_ip"] is None and row["dst_ip"] is None
-        assert row["protocol"] is None
-        assert row["src_port"] is None and row["dst_port"] is None
-        # the Metamako trailer is pre-ethernet (main.rs:88-107 order)
-        assert row["mm_ts"] == v6row["mm_ts"]
-
-
-def test_v6_flag_default_is_parity():
-    """decode with no flag ≡ decode with ipv6=False, byte-identical,
-    on BOTH fixtures — the opt-in can't leak into the default path."""
-    for buf in (golden_pcap_bytes(), v6_golden_pcap_bytes()):
-        assert decode_pcap_bytes(buf) == decode_pcap_bytes(buf, ipv6=False)

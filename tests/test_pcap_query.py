@@ -1,220 +1,11 @@
-"""pcap queries (``operators/pcap_query.py``) on the golden captures:
-flow, biflow, talkers and flow-timeout tables, and their streaming
-twins that emit only closed flows."""
+"""pcap queries (``operators/pcap_query.py``): staging a capture into a
+stream's landing directory."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
-from pyspark.sql import Window
-from pyspark.sql import functions as F
-
-import pcap_to_parquet_spark.operators  # noqa: F401  (registers queries)
-from pcap_to_parquet_spark.operators.pcap_query import (
-    _biflow_fixture_path,
-    _stage_capture,
-)
-from pcap_to_parquet_spark.registry import QUERIES
-from pcap_to_parquet_spark.sources.pcap import read_pcap
-from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
-from tests.conftest import SF0001, V6_GOLDEN_ROWS
-
-
-# ---------------------------------------------------------------------------
-# q_pcap_flow_stats
-
-
-def _flow_rows(spark):
-    rows = QUERIES["q_pcap_flow_stats"](spark, SF0001).collect()
-    return {
-        (r.src_ip, r.dst_ip, r.protocol, r.src_port, r.dst_port): r for r in rows
-    }
-
-
-def test_pcap_flow_stats_golden_udp_flow(spark):
-    """The 10.0.0.1:1234 -> 10.0.0.2:5678 UDP flow, hand-computed from
-    the golden fixture: 5 packets of lens 50/66/66/70/82; 3 carry
-    Metamako timestamps 1699999995777777777 / 1699999997111111111 /
-    1699999998500000123 ns -> gaps 1333333334 and 1388889012."""
-    r = _flow_rows(spark)[("10.0.0.1", "10.0.0.2", "UDP", 1234, 5678)]
-    assert (r.n_packets, r.n_bytes) == (5, 334)
-    assert (r.min_len, r.max_len, r.mean_len) == (50, 82, 66.8)
-    assert r.n_timed == 3
-    assert r.duration_ns == 2722222346
-    assert r.mean_iat_ns == 2722222346 // 2 == 1361111173
-    assert r.min_iat_ns == 1333333334
-    assert r.max_iat_ns == 1388889012
-
-
-def test_pcap_flow_stats_catchall_and_untimed_flows(spark):
-    """Undecodable frames aggregate into the NULL-tuple catch-all flow
-    (10 + 42 byte frames) with NULL timing; single-packet flows have
-    zero-length or NULL timing features, never crash."""
-    flows = _flow_rows(spark)
-    catchall = flows[(None, None, None, None, None)]
-    assert (catchall.n_packets, catchall.n_bytes) == (2, 52)
-    assert catchall.n_timed == 0
-    assert catchall.duration_ns is None
-    assert catchall.mean_iat_ns is None and catchall.min_iat_ns is None
-
-    tcp = flows[("192.168.1.10", "192.168.1.20", "TCP", 80, 443)]
-    assert (tcp.n_packets, tcp.n_timed) == (1, 0)
-    assert tcp.mean_iat_ns is None
-
-
-def test_pcap_flow_stats_consistent_with_pcap_flows(spark):
-    """Same 5-tuple keys, same n_packets / n_bytes as the q_pcap_flows
-    rollup — the feature table strictly extends it."""
-    base = {
-        (r.src_ip, r.dst_ip, r.protocol, r.src_port, r.dst_port): r
-        for r in QUERIES["q_pcap_flows"](spark, SF0001).collect()
-    }
-    stats = _flow_rows(spark)
-    assert set(base) == set(stats)
-    for k, b in base.items():
-        assert (stats[k].n_packets, stats[k].n_bytes) == (b.n_packets, b.n_bytes), k
-
-
-def test_v6_flows_consistency(spark):
-    """q_pcap_v6_flows totals reconcile with the packet table: 13
-    packets, Σbytes = Σlen, the two same-5-tuple UDP packets merge
-    into one flow of 2, and the two fragments stay separate flows
-    (ports differ: present vs NULL)."""
-    flows = {
-        (r["src_ip"], r["dst_ip"], r["protocol"], r["src_port"], r["dst_port"]):
-        (r["n_packets"], r["n_bytes"])
-        for r in QUERIES["q_pcap_v6_flows"](spark, SF0001).collect()
-    }
-    assert len(flows) == 12
-    assert sum(n for n, _ in flows.values()) == 13
-    assert sum(b for _, b in flows.values()) == sum(r["len"] for r in V6_GOLDEN_ROWS)
-    assert flows[("2001:db8::1", "2001:db8::2", "UDP", 1234, 5678)] == (2, 156)
-    assert flows[("2001:db8:f::1", "2001:db8:f::2", "TCP", 80, 443)] == (1, 82)
-    assert flows[("2001:db8:f::1", "2001:db8:f::2", "TCP", None, None)] == (1, 66)
-    assert flows[(None, None, None, None, None)] == (1, 30)
-
-
-def test_biflow_golden(spark):
-    """Hand-traced biflow expectations, independent of both engines:
-    two answered conversations with OPPOSITE first-speakers (by
-    hardware stamp), an unanswered probe, a portless ICMP pair, and
-    the NULL-keyed runt row."""
-    rows = {
-        (r["side1_ip"], r["side1_port"], r["side2_ip"], r["side2_port"], r["protocol"]): r
-        for r in QUERIES["q_pcap_biflow"](spark, SF0001).collect()
-    }
-    assert len(rows) == 7
-    r1 = rows[("10.0.0.1", 1000, "10.0.0.2", 2000, "UDP")]
-    assert (r1["fwd_packets"], r1["fwd_bytes"]) == (3, 198)
-    assert (r1["rev_packets"], r1["rev_bytes"]) == (2, 120)
-    assert (r1["bytes_ratio"], r1["pkt_ratio"]) == (1.65, 1.5)
-    assert (r1["first_speaker"], r1["answered"]) == ("side1", True)
-    r2 = rows[("192.168.1.1", 80, "192.168.1.2", 5000, "TCP")]
-    assert (r2["fwd_packets"], r2["rev_packets"]) == (1, 1)
-    # 192.168.1.2:5000 (side2) carries the earliest stamp
-    assert (r2["first_speaker"], r2["answered"]) == ("side2", True)
-    r3 = rows[("10.5.5.1", 99, "10.5.5.2", 100, "UDP")]
-    assert (r3["fwd_packets"], r3["rev_packets"], r3["answered"]) == (1, 0, False)
-    assert r3["bytes_ratio"] is None and r3["first_speaker"] is None
-    r4 = rows[("10.7.7.1", None, "10.7.7.2", None, "ICMP")]
-    assert (r4["fwd_packets"], r4["rev_packets"], r4["answered"]) == (1, 1, True)
-    assert r4["first_speaker"] is None  # untimed in both directions
-    r5 = rows[(None, None, None, None, None)]
-    assert (r5["fwd_packets"], r5["fwd_bytes"], r5["answered"]) == (1, 10, False)
-    # dual-stack: the v6 conversation pairs on colon-hex text
-    r6 = rows[("2001:db8::a1", 6000, "2001:db8::b1", 7000, "UDP")]
-    assert (r6["fwd_packets"], r6["fwd_bytes"]) == (1, 86)
-    assert (r6["rev_packets"], r6["rev_bytes"]) == (1, 86)
-    assert (r6["first_speaker"], r6["answered"]) == ("side1", True)
-    # and the v6 flow mirroring the v4 ports does NOT pair with v4
-    r7 = rows[("2001:db8::1", 1000, "2001:db8::2", 2000, "UDP")]
-    assert (r7["fwd_packets"], r7["rev_packets"], r7["answered"]) == (1, 0, False)
-    assert r7["first_speaker"] == "side1"  # timed probe: speaker known
-    # the v4 conversation's counts are untouched by the v6 mirror
-    assert rows[("10.0.0.1", 1000, "10.0.0.2", 2000, "UDP")]["fwd_packets"] == 3
-
-
-def test_stream_biflow_matches_batch(spark):
-    """The live twin over the landed capture must equal the batch
-    biflow row-for-row (shared _biflow_pairing kernel; the streaming
-    aggregation emits the identical flow frame under availableNow)."""
-    key = ["side1_ip", "side1_port", "side2_ip", "side2_port", "protocol"]
-    batch = {tuple(r[k] for k in key): r
-             for r in QUERIES["q_pcap_biflow"](spark, SF0001).collect()}
-    live = {tuple(r[k] for k in key): r
-            for r in QUERIES["q_pcap_stream_biflow"](spark, SF0001).collect()}
-    assert set(batch) == set(live)
-    for k in batch:
-        assert batch[k].asDict() == live[k].asDict()
-
-
-def test_biflow_conservation(spark):
-    """Σ(fwd+rev packets/bytes) over biflows == the packet table —
-    direction pairing must not drop or double-count anything."""
-    from pcap_to_parquet_spark.operators.pcap_query import _biflow_fixture_path
-
-    pkts = read_pcap(spark, _biflow_fixture_path()).agg(
-        {"len": "sum", "*": "count"}
-    ).collect()[0]
-    b = QUERIES["q_pcap_biflow"](spark, SF0001).agg(
-        {"fwd_packets": "sum", "rev_packets": "sum",
-         "fwd_bytes": "sum", "rev_bytes": "sum"}
-    ).collect()[0]
-    assert b["sum(fwd_packets)"] + b["sum(rev_packets)"] == pkts["count(1)"]
-    assert b["sum(fwd_bytes)"] + b["sum(rev_bytes)"] == pkts["sum(len)"]
-
-
-def test_talkers_golden(spark):
-    """Endpoint census hand-trace on the bidirectional fixture: the
-    chatty host, the silent receiver (out_bytes 0 → ratio 0), and the
-    NULL catch-all endpoint whose peers are all NULL (n_peers 0)."""
-    rows = {
-        r["endpoint_ip"]: r
-        for r in QUERIES["q_pcap_talkers"](spark, SF0001).collect()
-    }
-    assert len(rows) == 13
-    a = rows["10.0.0.1"]
-    assert (a.out_packets, a.out_bytes, a.in_packets, a.in_bytes) == (3, 198, 2, 120)
-    assert (a.n_peers, a.io_byte_ratio) == (1, 1.65)
-    silent = rows["10.5.5.2"]
-    assert (silent.out_packets, silent.in_bytes, silent.io_byte_ratio) == (0, 42, 0.0)
-    probe = rows["10.5.5.1"]
-    assert probe.io_byte_ratio is None  # nothing came back
-    null_ep = rows[None]
-    assert (null_ep.out_packets, null_ep.in_packets, null_ep.n_peers) == (1, 1, 0)
-    # dual-stack: v6 endpoints census alongside v4
-    v6a = rows["2001:db8::a1"]
-    assert (v6a.out_packets, v6a.out_bytes, v6a.in_packets, v6a.in_bytes) == (1, 86, 1, 86)
-    assert (v6a.n_peers, v6a.io_byte_ratio) == (1, 1.0)
-    v6probe = rows["2001:db8::1"]
-    assert (v6probe.out_packets, v6probe.in_packets) == (1, 0)
-    assert v6probe.io_byte_ratio is None
-    v6silent = rows["2001:db8::2"]
-    assert (v6silent.out_packets, v6silent.in_bytes, v6silent.io_byte_ratio) == (0, 86, 0.0)
-
-
-def test_talkers_conservation(spark):
-    """Every packet contributes exactly one out role and one in role:
-    Σ out == Σ in == packet table totals on both packets and bytes."""
-    from pcap_to_parquet_spark.operators.pcap_query import _biflow_fixture_path
-
-    pkts = read_pcap(spark, _biflow_fixture_path()).agg(
-        {"len": "sum", "*": "count"}
-    ).collect()[0]
-    t = QUERIES["q_pcap_talkers"](spark, SF0001).agg(
-        {"out_packets": "sum", "in_packets": "sum",
-         "out_bytes": "sum", "in_bytes": "sum"}
-    ).collect()[0]
-    assert t["sum(out_packets)"] == t["sum(in_packets)"] == pkts["count(1)"]
-    assert t["sum(out_bytes)"] == t["sum(in_bytes)"] == pkts["sum(len)"]
-
-
-def _closed_flows_land(spark, tmp_path) -> str:
-    """A landing dir under ``tmp_path`` holding the biflow capture, with
-    the pcap stream source registered."""
-    register_pcap_source(spark)
-    return _stage_capture(_biflow_fixture_path(), str(tmp_path), "biflow.pcap")
+from pcap_to_parquet_spark.operators.pcap_query import _stage_capture
 
 
 def test_stage_capture_renames_a_complete_copy_into_place(tmp_path):
@@ -229,233 +20,3 @@ def test_stage_capture_renames_a_complete_copy_into_place(tmp_path):
     src.write_bytes(b"\x01")
     _stage_capture(str(src), str(land), "x.pcap")
     assert (land / "x.pcap").stat().st_size == 4096
-
-
-def test_closed_flows_state_eviction(spark, tmp_path):
-    """The state pin the complete-mode twin can't give: after the
-    no-data flush batch, closed flows are EVICTED from the store
-    (numRowsRemoved == emitted rows; live state shrinks to open flows
-    only) — bounded state on a continuous feed, not per-key history."""
-    from pcap_to_parquet_spark.operators.pcap_query import closed_flows_plan
-    from pcap_to_parquet_spark.streaming.stream_queries import run_to_memory_flushed
-
-    result, progress = run_to_memory_flushed(
-        closed_flows_plan(spark, _closed_flows_land(spark, tmp_path))
-    )
-    rows = result.collect()
-    assert len(rows) == 3
-    flush = [p for p in progress if p["numInputRows"] == 0 and p["stateOperators"]]
-    assert flush, "no-data flush batch must appear in progress"
-    st = flush[0]["stateOperators"][0]
-    assert st["numRowsRemoved"] == 3          # closed flows left the store
-    assert st["numRowsTotal"] == 7 - 3        # only open flows remain live
-    # the earliest-stamped closed flows are the v6 conversation
-    assert {r["src_ip"] for r in rows} == {
-        "2001:db8::a1", "2001:db8::b1", "192.168.1.2"
-    }
-
-
-def test_closed_flows_equal_batch_on_closed(spark, tmp_path):
-    """Emitted closed flows must equal the BATCH flow table rows for
-    the same 5-tuples (n_packets / n_bytes / first_ts) — the
-    watermark path changes WHEN a flow emits, never WHAT it says."""
-    from pcap_to_parquet_spark.operators.pcap_query import (
-        _biflow_fixture_path,
-        _flows_frame,
-        closed_flows_plan,
-    )
-    from pcap_to_parquet_spark.streaming.stream_queries import run_to_memory_flushed
-
-    result, _ = run_to_memory_flushed(
-        closed_flows_plan(spark, _closed_flows_land(spark, tmp_path))
-    )
-    key = ("src_ip", "dst_ip", "protocol", "src_port", "dst_port")
-    live = {tuple(r[k] for k in key): r for r in result.collect()}
-    batch = {
-        tuple(r[k] for k in key): r
-        for r in _flows_frame(
-            read_pcap(spark, _biflow_fixture_path(), ipv6=True).filter(
-                "mm_ts IS NOT NULL"
-            )
-        ).collect()
-    }
-    assert set(live) <= set(batch)
-    for k, r in live.items():
-        b = batch[k]
-        assert (r["n_packets"], r["n_bytes"], r["first_ts"]) == (
-            b["n_packets"], b["n_bytes"], b["first_ts"]
-        )
-
-
-def test_flow_timeout_records_hand_traced(spark):
-    """NetFlow record splitting on the timeline fixture, hand-traced:
-    the 6-packet 3-s-cadence flow splits on the ACTIVE timeout into a
-    4-packet and a 2-packet record (island-start-aligned 10 s grid);
-    the 19 s silence splits the idle flow into two 2-packet records;
-    the single packet is its own record; the untimed frame is
-    excluded."""
-    t_ns = 1_700_000_000 * 10**9
-    s = 10**9
-    rows = {
-        (r.src_ip, r.record_start): r
-        for r in QUERIES["q_pcap_flow_timeout"](spark, SF0001).collect()
-    }
-    assert len(rows) == 8
-    l1 = rows[("10.1.0.1", t_ns - 30 * s)]
-    assert (l1.record_end, l1.n_packets, l1.n_bytes) == (t_ns - 21 * s, 4, 264)
-    l2 = rows[("10.1.0.1", t_ns - 18 * s)]
-    assert (l2.record_end, l2.n_packets) == (t_ns - 15 * s, 2)
-    i1 = rows[("10.2.0.1", t_ns - 30 * s)]
-    assert (i1.record_end, i1.n_packets) == (t_ns - 29 * s, 2)
-    i2 = rows[("10.2.0.1", t_ns - 10 * s)]
-    assert (i2.record_end, i2.n_packets) == (t_ns - 9 * s, 2)
-    s1 = rows[("10.3.0.1", t_ns - 5 * s)]
-    assert (s1.record_end, s1.n_packets, s1.n_bytes) == (t_ns - 5 * s, 1, 66)
-    # the rule-divergent flow under the island-aligned GRID: 3 records
-    r1 = rows[("10.5.0.1", t_ns - 28 * s)]
-    assert (r1.record_end, r1.n_packets) == (t_ns - 19 * s, 2)
-    assert rows[("10.5.0.1", t_ns - 10 * s)].n_packets == 1
-    assert rows[("10.5.0.1", t_ns - 1 * s)].n_packets == 1
-    assert not any(ip == "10.4.0.1" for ip, _ in rows)
-
-
-def test_flow_timeout_reset_rule_divergence(spark):
-    """The reset rule on the same fixture: identical records for the
-    long/idle/short flows (their splits land on packet boundaries that
-    both rules cut), but the 9 s-cadence flow gets 2 records instead
-    of the grid's 3 — the exporter-rule divergence both ops document,
-    made concrete on one fixture."""
-    t_ns = 1_700_000_000 * 10**9
-    s = 10**9
-    grid = {(r.src_ip, r.record_start, r.record_end, r.n_packets)
-            for r in QUERIES["q_pcap_flow_timeout"](spark, SF0001).collect()}
-    reset = {(r.src_ip, r.record_start, r.record_end, r.n_packets)
-             for r in QUERIES["q_pcap_flow_timeout_reset"](spark, SF0001).collect()}
-    same = {x for x in grid if not x[0].startswith("10.5.")}
-    assert same == {x for x in reset if not x[0].startswith("10.5.")}
-    assert {x for x in reset if x[0].startswith("10.5.")} == {
-        ("10.5.0.1", t_ns - 28 * s, t_ns - 19 * s, 2),
-        ("10.5.0.1", t_ns - 10 * s, t_ns - 1 * s, 2),
-    }
-
-
-def test_stream_flow_records_eviction_and_contents(spark, tmp_path):
-    """The elephant-flow state bound: the global active grid forces
-    the long-lived flow's first interval to emit and EVICT while the
-    flow is still active (the session-window-only shape would hold one
-    growing row forever). Hand-traced: the 4-packet epoch-A record of
-    the long flow and the first idle island both emit; everything
-    within the watermark horizon stays in state."""
-    from pcap_to_parquet_spark.operators.pcap_query import (
-        _flow_timeline_path,
-        stream_flow_records_plan,
-    )
-    from pcap_to_parquet_spark.streaming.stream_queries import run_to_memory_flushed
-
-    register_pcap_source(spark)
-    land = _stage_capture(_flow_timeline_path(), str(tmp_path), "timeline.pcap")
-    result, progress = run_to_memory_flushed(stream_flow_records_plan(spark, land))
-    rows = {(r.src_ip, r.record_start): r for r in result.collect()}
-    t_us = 1_700_000_000 * 10**6
-    s = 10**6
-    # horizon = max stamp (t-1) - 2 s watermark = t-3: five records
-    # close at or before it (both long-flow epochs, the first idle
-    # island, and the rule flow's first two grid epochs); the second
-    # idle island, the short flow, and the rule flow's live epoch
-    # stay in state
-    assert len(rows) == 5
-    long_rec = rows[("10.1.0.1", t_us - 30 * s)]
-    assert (long_rec.n_packets, long_rec.n_bytes) == (4, 264)
-    assert long_rec.record_close == (t_us - 21 * s) + 10 * s
-    assert rows[("10.1.0.1", t_us - 18 * s)].n_packets == 2
-    assert rows[("10.2.0.1", t_us - 30 * s)].n_packets == 2
-    assert rows[("10.5.0.1", t_us - 28 * s)].n_packets == 1
-    assert rows[("10.5.0.1", t_us - 19 * s)].n_packets == 1
-    flush = [p for p in progress if p["numInputRows"] == 0 and p["stateOperators"]]
-    assert flush and flush[0]["stateOperators"][0]["numRowsRemoved"] == 5
-
-
-def _batch_closed_flows(spark):
-    """The batch statement of the closed-flow emission contract:
-    gaps-and-islands per 5-tuple over the timed dual-stack fixture,
-    clipped to flows whose (last + gap) precedes the watermark horizon
-    — computed with plain window functions, independent of both the
-    streaming path and the DuckDB oracle."""
-    from pcap_to_parquet_spark.operators.pcap_query import (
-        FLOW_GAP_SECONDS,
-        FLOW_WATERMARK_SECONDS,
-        _biflow_fixture_path,
-    )
-
-    gap_us = FLOW_GAP_SECONDS * 1_000_000
-    pkts = (
-        read_pcap(spark, _biflow_fixture_path(), ipv6=True)
-        .filter("mm_ts IS NOT NULL")
-        .withColumn("evt_us", F.expr("mm_ts div 1000"))
-    )
-    key = ["src_ip", "dst_ip", "protocol", "src_port", "dst_port"]
-    w = Window.partitionBy(*key).orderBy("evt_us")
-    seq = pkts.withColumn(
-        "brk",
-        F.when(F.col("evt_us") - F.lag("evt_us").over(w) >= gap_us, 1).otherwise(0),
-    ).withColumn("sid", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    agg = seq.groupBy(*key, "sid").agg(
-        F.count(F.lit(1)).cast("long").alias("n_packets"),
-        F.sum("len").cast("long").alias("n_bytes"),
-        (F.max("evt_us") + gap_us).alias("flow_end"),
-    )
-    wm = pkts.agg(
-        (F.max("evt_us") - FLOW_WATERMARK_SECONDS * 1_000_000).alias("wm")
-    )
-    return agg.join(F.broadcast(wm)).where(F.col("flow_end") <= F.col("wm"))
-
-
-@pytest.mark.slow  # >=5s
-def test_stream_talkers_equals_batch_census_on_closed(spark):
-    """The live talkers census must equal the shared census kernel run
-    over the INDEPENDENT batch statement of the closed set — the
-    stream changes when flows emit, never what the census says."""
-    from pcap_to_parquet_spark.operators.pcap_query import (
-        pcap_stream_talkers,
-        talkers_census_from_flows,
-    )
-
-    live = {
-        r["endpoint_ip"]: r for r in pcap_stream_talkers(spark, SF0001).collect()
-    }
-    batch = {
-        r["endpoint_ip"]: r
-        for r in talkers_census_from_flows(_batch_closed_flows(spark)).collect()
-    }
-    assert set(live) == set(batch) and live
-    for k, r in live.items():
-        b = batch[k]
-        for c in (
-            "out_packets", "out_bytes", "in_packets", "in_bytes",
-            "n_peers", "n_flows", "io_byte_ratio",
-        ):
-            assert r[c] == b[c], (k, c, r[c], b[c])
-
-
-def test_stream_talkers_hand_trace(spark):
-    """Dual-stack hand trace: the fixture's closed set is the v6
-    conversation (both directions) plus one v4 flow, so the census has
-    exactly the four endpoints involved, the v6 pair see each other as
-    their single peer with traffic BOTH ways, and each byte total is
-    the flow-record roll of the closed packets."""
-    from pcap_to_parquet_spark.operators.pcap_query import pcap_stream_talkers
-
-    rows = {r["endpoint_ip"]: r for r in pcap_stream_talkers(spark, SF0001).collect()}
-    assert len(rows) == 4
-    a1, b1 = rows["2001:db8::a1"], rows["2001:db8::b1"]
-    # a biflow conversation: each side sends and receives, one peer
-    assert a1["n_peers"] == 1 and b1["n_peers"] == 1
-    assert a1["out_packets"] > 0 and a1["in_packets"] > 0
-    # mirrored roles: a1's out is b1's in, and vice versa
-    assert a1["out_bytes"] == b1["in_bytes"]
-    assert a1["in_bytes"] == b1["out_bytes"]
-    assert a1["out_packets"] == b1["in_packets"]
-    # the v4 closed flow is one-directional: its source has no inbound
-    v4 = rows["192.168.1.2"]
-    assert v4["out_packets"] > 0 and v4["in_packets"] == 0
-    assert v4["io_byte_ratio"] is None  # no inbound bytes -> NULL ratio

@@ -12,12 +12,7 @@ import pytest
 from pcap_to_parquet_spark.operators.pcap_query import _fixture_path
 from pcap_to_parquet_spark.operators.udtf_udaf import pcap_records
 from pcap_to_parquet_spark.schema import PACKET_SCHEMA
-from pcap_to_parquet_spark.sources.pcap import (
-    PcapFormatError,
-    convert_pcap,
-    decode_pcap_bytes,
-    read_pcap,
-)
+from pcap_to_parquet_spark.sources.pcap import PcapFormatError, convert_pcap, read_pcap
 from pcap_to_parquet_spark.sources.pcap_chunked import read_pcap_chunked
 from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
 from pcap_to_parquet_spark.sources.pcap_fixtures import (
@@ -25,10 +20,8 @@ from pcap_to_parquet_spark.sources.pcap_fixtures import (
     fixture_packets,
     golden_pcap_bytes,
     pcap_file,
-    v6_golden_pcap_bytes,
 )
 from pcap_to_parquet_spark.sources.pcapng import PCAPNG_MAGIC, read_pcapng
-from tests.conftest import V6_GOLDEN_ROWS
 
 
 def test_read_pcap_schema_and_rowcount(spark):
@@ -156,50 +149,3 @@ def test_read_pcapng_rejects_legacy_pcap(spark, tmp_path):
     with pytest.raises(Exception, match="PcapFormatError"):
         read_pcapng(spark, _fixture_path()).collect()
     _fails_as_pcap_format_error(lambda: read_pcapng(spark, str(tmp_path)).collect())  # empty dir
-
-
-def test_v6_spark_end_to_end(spark):
-    from pcap_to_parquet_spark.operators.pcap_query import _v6_fixture_path
-
-    rows = [
-        r.asDict()
-        for r in read_pcap(spark, _v6_fixture_path(), ipv6=True)
-        .orderBy("len", "src_ip")
-        .collect()
-    ]
-    expect = sorted(V6_GOLDEN_ROWS, key=lambda r: (r["len"], r["src_ip"] or ""))
-    assert rows == expect
-    # default mode on the same file: reference parity through Spark too
-    parity = [
-        r.asDict()
-        for r in read_pcap(spark, _v6_fixture_path()).orderBy("len").collect()
-    ]
-    assert parity == sorted(
-        decode_pcap_bytes(v6_golden_pcap_bytes()), key=lambda r: r["len"]
-    )
-
-
-def test_convert_pcap_ipv6_roundtrip(spark, tmp_path):
-    import duckdb
-
-    from pcap_to_parquet_spark.operators.pcap_query import _v6_fixture_path
-    from pcap_to_parquet_spark.sources.pcap import convert_pcap
-
-    out = str(tmp_path / "v6pk")
-    convert_pcap(spark, _v6_fixture_path(), out, ipv6=True)
-    got = duckdb.sql(
-        f"SELECT src_ip, protocol, count(*) n FROM '{out}/*.parquet' "
-        "WHERE src_ip LIKE '%:%' GROUP BY 1, 2 ORDER BY 1, 2"
-    ).fetchall()
-    assert ("2001:db8::1", "UDP", 2) in got  # v6 text survives the parquet sink
-    # ipv6 composes with the chunked reader — forcing chunked
-    # on the same fixture yields the identical row set
-    out2 = str(tmp_path / "v6pk_chunked")
-    convert_pcap(spark, _v6_fixture_path(), out2, chunk_bytes=1 << 20, ipv6=True)
-    per_file = duckdb.sql(
-        f"SELECT * FROM '{out}/*.parquet' ORDER BY len, src_ip"
-    ).fetchall()
-    chunked = duckdb.sql(
-        f"SELECT * FROM '{out2}/*.parquet' ORDER BY len, src_ip"
-    ).fetchall()
-    assert chunked == per_file

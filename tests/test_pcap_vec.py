@@ -13,12 +13,9 @@ from pcap_to_parquet_spark.sources.pcap_fixtures import (
     eth,
     golden_pcap_bytes,
     ipv4,
-    ipv6,
     mm_trailer,
     pcap_file,
     udp,
-    v6_golden_pcap_bytes,
-    vlan_eth,
 )
 from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
 
@@ -138,75 +135,3 @@ def test_random_trailerish_equivalence(data):
         frames.append(frame)
     buf = pcap_file([(BASE_TS, len(f), f) for f in frames])
     assert rows_from_arrays(buf) == decode_pcap_bytes(buf)
-
-
-def test_v6_vec_equivalence_goldens():
-    for buf in (v6_golden_pcap_bytes(), golden_pcap_bytes()):
-        for mode in (True, False):
-            assert rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)
-
-
-def test_v6_vec_handles_vlan_and_short():
-    t = BASE_TS
-    frames = [
-        vlan_eth(ipv6(6, "::2", "::3", b"\x00\x15\x01\xbb"), inner_ethertype=0x86DD),
-        eth(ipv6(17, "::4", "::5", b""), ethertype=0x86DD)[:40],  # 26B of v6 hdr
-        eth(ipv6(58, "::6", "::7", b""), ethertype=0x86DD),  # ICMPv6, no body
-        eth(ipv6(17, "::8", "::9", b"\x00"), ethertype=0x86DD),  # 1B L4 < ports
-    ]
-    buf = pcap_file([(t, len(f), f) for f in frames])
-    scal = decode_pcap_bytes(buf, ipv6=True)
-    assert rows_from_arrays(buf, True) == scal
-    assert scal[0]["src_ip"] == "::2" and scal[0]["protocol"] == "TCP"
-    assert scal[0]["src_port"] == 21 and scal[0]["dst_port"] == 443
-    assert scal[1]["src_ip"] is None  # short of the 40-byte header
-    assert scal[2]["protocol"] == "ICMPv6" and scal[2]["src_port"] is None
-    assert scal[3]["protocol"] == "UDP" and scal[3]["src_port"] is None
-
-
-@settings(max_examples=120, deadline=None)
-@given(
-    st.lists(
-        st.tuples(st.binary(max_size=100), st.integers(0, 120)),
-        min_size=0,
-        max_size=10,
-    )
-)
-def test_v6_random_equivalence(specs):
-    buf = pcap_file([(BASE_TS, orig, data) for data, orig in specs])
-    for mode in (True, False):
-        assert rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)
-
-
-@settings(max_examples=60, deadline=None)
-@given(st.binary(min_size=0, max_size=120), st.sampled_from([0x0800, 0x86DD, 0x8100]))
-def test_v6_random_framed_equivalence(payload, ethertype):
-    frame = eth(payload, ethertype=ethertype)
-    buf = pcap_file([(BASE_TS, len(frame), frame)])
-    for mode in (True, False):
-        assert rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)
-
-
-@settings(max_examples=80, deadline=None)
-@given(
-    st.lists(st.sampled_from([0, 43, 44, 60, 51, 50]), min_size=0, max_size=3),
-    st.integers(0, 3),
-    st.sampled_from([6, 17, 58, 47]),
-    st.binary(max_size=8),
-)
-def test_v6_ext_chain_random_equivalence(chain, ext_len, final, l4):
-    """Adversarial extension chains (incl. unwalkable AH/ESP mid-chain
-    and oversized length fields): scalar and vectorized walks must
-    agree byte-for-byte in both modes."""
-    body = l4
-    nxt = final
-    for h in reversed(chain):
-        if h == 44:
-            body = bytes([nxt, 0, 0x05, 0xC8, 0, 0, 0, 1]) + body
-        else:
-            body = bytes([nxt, ext_len]) + b"\x00" * (6 + 8 * ext_len) + body
-        nxt = h
-    frame = eth(ipv6(nxt, "2001:db8::a", "2001:db8::b", body), ethertype=0x86DD)
-    buf = pcap_file([(BASE_TS, len(frame), frame)])
-    for mode in (True, False):
-        assert rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)

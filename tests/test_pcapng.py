@@ -19,16 +19,13 @@ from pcap_to_parquet_spark.sources.pcap_fixtures import (
     fixture_packets,
     ipv4,
     pcap_file,
-    pcapng_file,
     udp,
-    v6_fixture_packets,
 )
 from pcap_to_parquet_spark.sources.pcapng import (
     decode_pcapng_bytes,
     read_pcapng,
     split_pcapng_records,
 )
-from tests.conftest import V6_GOLDEN_ROWS
 
 
 def _block(btype: int, body: bytes, order: str = "<") -> bytes:
@@ -190,28 +187,3 @@ def test_pcapng_garbage_prefix_rejected(data):
         return
     with pytest.raises(PcapFormatError):
         list(split_pcapng_records(junk))
-
-
-def _v6_pcapng_path(tmp_path) -> str:
-    """v6 fixture packets re-containered as pcapng (EPB per packet)."""
-    p = tmp_path / "v6.pcapng"
-    p.write_bytes(pcapng_file(list(v6_fixture_packets().values())))
-    return str(p)
-
-
-def test_v6_through_pcapng(spark, tmp_path):
-    """The ipv6 option behaves identically through the pcapng
-    container: same rows as the legacy-pcap path, and parity default
-    still NULLs v6."""
-    from pcap_to_parquet_spark.sources.pcapng import read_pcapng
-
-    path = _v6_pcapng_path(tmp_path)
-    rows = [
-        r.asDict()
-        for r in read_pcapng(spark, path, ipv6=True)
-        .orderBy("len", "src_ip")
-        .collect()
-    ]
-    assert rows == sorted(V6_GOLDEN_ROWS, key=lambda r: (r["len"], r["src_ip"] or ""))
-    parity = read_pcapng(spark, path).where("src_ip LIKE '%:%'").count()
-    assert parity == 0

@@ -6,11 +6,9 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-import pytest
-
 import pcap_to_parquet_spark.operators  # noqa: F401
 from pcap_to_parquet_spark.registry import QUERIES
-from tests.conftest import SF0001, _T0, _write
+from tests.conftest import SF0001
 
 
 def test_scd2_rows_partition_each_users_timeline(spark):
@@ -302,118 +300,3 @@ def test_permissive_ingest_survives_hostile_text(spark, tmp_path_factory):
     rows = {r.lang_key: r for r in QUERIES["q_permissive_ingest"](spark, sf).collect()}
     assert rows["_corrupt"].n_docs == 2  # doc_id 0 and 13
     assert rows["de"].n_docs == 1 and rows["fr"].n_docs == 1
-
-
-def test_dp_counts_noise_replay(spark, tmp_path):
-    """Pure-Python replay of the seeded inverse-CDF Laplace draw: the
-    released noisy count must equal count + the replayed noise, and
-    differ from the raw count (noise is almost surely nonzero)."""
-    import hashlib
-    import math
-
-    rows = [(i, "t", "en", "src_a" if i < 30 else "src_b", 1) for i in range(50)]
-    d = tmp_path / "dp"
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(d / "documents.parquet"))
-    out = {r.source: r for r in QUERIES["q_dp_counts"](spark, str(d)).collect()}
-    for src, n in (("src_a", 30), ("src_b", 20)):
-        h = int(hashlib.md5(f"dp1:{src}".encode()).hexdigest()[:6], 16)
-        v = (h + 0.5) / 16777216.0 - 0.5
-        want = round(n - (1.0) * (-1 if v < 0 else 1) * math.log(1 - 2 * abs(v)), 4)
-        assert out[src].n_raw == n
-        assert out[src].n_noisy == want
-        assert out[src].n_noisy != n
-
-
-# ---------------------------------------------------------------------------
-# referential integrity
-
-
-def test_referential_integrity_clean_on_testdata(spark):
-    """The generated lake is FK-consistent: every edge reports zero
-    orphans (this also pins the 7-edge census shape)."""
-    rows = QUERIES["q_referential_integrity"](spark, SF0001).collect()
-    assert len(rows) == 7
-    for r in rows:
-        assert r.n_orphan == 0, r.fk
-        assert r.n_orphan_keys == 0, r.fk
-        assert r.n_dup_parent_keys == 0, r.fk
-        assert r.n_child > 0, r.fk
-
-
-@pytest.mark.slow  # >=5s
-def test_referential_integrity_counts_planted_orphans(spark, tmp_path):
-    _write(spark, tmp_path, [(1, 1, 1, 1.0), (1, 999, 1, 1.0), (1, 999, 1, 1.0)],
-           "l_orderkey long, l_partkey long, l_suppkey long, l_quantity double",
-           "lineitem")
-    # only partkey 999 is orphaned (x2 rows, 1 distinct key)
-    _write(spark, tmp_path, [(1, 1, 100.0, _T0)],
-           "o_orderkey long, o_custkey long, o_totalprice double, "
-           "o_orderdate timestamp", "orders")
-    _write(spark, tmp_path, [(1,)], "p_partkey long", "part")
-    _write(spark, tmp_path, [(1, 1)], "s_suppkey long, s_nationkey int",
-           "supplier")
-    _write(spark, tmp_path, [(1, 1)], "c_custkey long, c_nationkey int",
-           "customer")
-    _write(spark, tmp_path, [(1, 1)], "n_nationkey int, n_regionkey int",
-           "nation")
-    _write(spark, tmp_path, [(1,)], "r_regionkey int", "region")
-    rows = {r.fk: r for r in
-            QUERIES["q_referential_integrity"](spark, str(tmp_path)).collect()}
-    e = rows["lineitem.l_partkey->part"]
-    assert (e.n_child, e.n_orphan, e.n_orphan_keys) == (3, 2, 1)
-    assert rows["lineitem.l_orderkey->orders"].n_orphan == 0
-    assert rows["orders.o_custkey->customer"].n_orphan == 0
-
-
-@pytest.mark.slow  # >=5s
-def test_referential_integrity_dup_parent_pk_no_fanout(spark, tmp_path):
-    """A duplicated parent primary key must NOT fan the join out and
-    inflate n_child/n_orphan (the parent side is deduped before the
-    join); the duplication is surfaced in n_dup_parent_keys instead."""
-    _write(spark, tmp_path, [(1, 1, 1, 1.0), (2, 1, 1, 1.0)],
-           "l_orderkey long, l_partkey long, l_suppkey long, l_quantity double",
-           "lineitem")
-    # part 1 appears THREE times: broken parent PK
-    _write(spark, tmp_path, [(1,), (1,), (1,), (2,)], "p_partkey long", "part")
-    _write(spark, tmp_path, [(1, 1, 100.0, _T0), (2, 1, 100.0, _T0)],
-           "o_orderkey long, o_custkey long, o_totalprice double, "
-           "o_orderdate timestamp", "orders")
-    _write(spark, tmp_path, [(1, 1)], "s_suppkey long, s_nationkey int",
-           "supplier")
-    _write(spark, tmp_path, [(1, 1)], "c_custkey long, c_nationkey int",
-           "customer")
-    _write(spark, tmp_path, [(1, 1)], "n_nationkey int, n_regionkey int",
-           "nation")
-    _write(spark, tmp_path, [(1,)], "r_regionkey int", "region")
-    rows = {r.fk: r for r in
-            QUERIES["q_referential_integrity"](spark, str(tmp_path)).collect()}
-    e = rows["lineitem.l_partkey->part"]
-    # without the dedup the 2 child rows would report n_child == 6
-    assert (e.n_child, e.n_orphan, e.n_dup_parent_keys) == (2, 0, 1)
-    assert rows["lineitem.l_orderkey->orders"].n_dup_parent_keys == 0
-
-
-# ---------------------------------------------------------------------------
-# weighted median
-
-
-def test_weighted_median_respects_weights(spark, tmp_path):
-    """Price 10 carries 9x the weight of price 1000 -> the weighted
-    median is 10 even though the unweighted median of values is 505."""
-    rows = [
-        (1, 1, 1, 1, 9.0, 10.0, 0.0, 0.0, "A"),
-        (1, 2, 1, 2, 1.0, 1000.0, 0.0, 0.0, "A"),
-        (2, 1, 1, 1, 1.0, 50.0, 0.0, 0.0, "R"),
-    ]
-    _write(spark, tmp_path, rows,
-           "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-           "l_quantity double, l_extendedprice double, l_discount double, "
-           "l_tax double, l_returnflag string",
-           "lineitem")
-    out = {r.l_returnflag: r for r in
-           QUERIES["q_weighted_median"](spark, str(tmp_path)).collect()}
-    assert out["A"].total_weight == 10
-    assert out["A"].weighted_median == 10.0
-    assert out["R"].weighted_median == 50.0

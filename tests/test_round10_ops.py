@@ -17,15 +17,7 @@ from pcap_to_parquet_spark.operators.text_pipeline import (  # noqa: E402
 )
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
 import pytest
-from tests.conftest import SF0001  # noqa: E402
-
-_DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-
-def _write(spark, path, rows, schema, name):
-    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
-        str(path / f"{name}.parquet")
-    )
+from tests.conftest import SF0001, _DOC_SCHEMA, _write  # noqa: E402
 
 
 def _doc(i, n_tokens):

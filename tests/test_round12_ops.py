@@ -15,40 +15,7 @@ from datetime import datetime, timedelta
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
 import pytest
-from tests.conftest import SF0001  # noqa: E402
-
-_EV_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
-
-
-def _events_lake(spark, path, rows, single_file=False):
-    dest = path / "events.parquet"
-    # write micros, not INT96: the streaming source's footer-dispatched
-    # schema (events_raw_schema) supports nanos-as-long / micros / tz
-    # encodings, and INT96 is none of them
-    old = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try:
-        spark.createDataFrame(rows, _EV_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(dest))
-    finally:
-        spark.conf.set("spark.sql.parquet.outputTimestampType", old)
-    if single_file:
-        # the streaming file source stages sf_dir/events.parquet as a
-        # FILE (like the driver testdata); collapse the directory write
-        import glob
-        import shutil
-
-        part = glob.glob(str(dest / "part-*.parquet"))[0]
-        tmp = str(path / "_events_single.parquet")
-        shutil.move(part, tmp)
-        shutil.rmtree(str(dest))
-        shutil.move(tmp, str(dest))
-    return str(path)
-
+from tests.conftest import SF0001, _events_lake  # noqa: E402
 
 # ---------------------------------------------------------------------------
 # q_session_quality
@@ -526,7 +493,7 @@ def test_skew_planner_conservation(spark):
 
 def test_lsh_planner_sum_is_partition_order_insensitive(spark):
     """exp_candidates is floor-quantized to an 8dp integer grid before
-    the SUM (round-12 ADVICE fix), so the reduction is exact integer
+    the SUM, so the reduction is exact integer
     arithmetic: changing the shuffle partitioning must reproduce every
     value bit-for-bit. A raw double SUM would drift in the last ulp
     with accumulation order and could flip the 4dp rounding."""

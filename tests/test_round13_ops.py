@@ -11,7 +11,6 @@ random frames.
 
 from __future__ import annotations
 
-import pytest  # noqa: E402
 from hypothesis import given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
@@ -22,104 +21,15 @@ from pcap_to_parquet_spark.sources.pcap_fixtures import (  # noqa: E402
     BASE_TS,
     eth,
     golden_pcap_bytes,
-    ipv4,
     ipv6,
-    mm_trailer,
     pcap_file,
-    udp,
+    pcapng_file,
     v6_fixture_packets,
     v6_golden_pcap_bytes,
     vlan_eth,
 )
-from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays  # noqa: E402
-from tests.conftest import SF0001  # noqa: E402
-
-_PROTO_V4 = {1: "ICMP", 2: "IGMP", 6: "TCP", 17: "UDP"}
-
-
-def _null_row(length: int) -> dict:
-    return {
-        "src_ip": None,
-        "dst_ip": None,
-        "len": length,
-        "protocol": None,
-        "src_port": None,
-        "dst_port": None,
-        "mm_ts": None,
-        "mm_id": None,
-        "mm_port": None,
-    }
-
-
-def _row(src, dst, length, proto, sport, dport, mm_ts=None, mm_id=None, mm_port=None):
-    return {
-        "src_ip": src,
-        "dst_ip": dst,
-        "len": length,
-        "protocol": proto,
-        "src_port": sport,
-        "dst_port": dport,
-        "mm_ts": mm_ts,
-        "mm_id": mm_id,
-        "mm_port": mm_port,
-    }
-
-
-# hand-computed from the byte layout in v6_fixture_packets (fixture
-# insertion order); every assertion below is independent of the decoder
-V6_GOLDEN_ROWS = [
-    _row("2001:db8::1", "2001:db8::2", 70, "UDP", 1234, 5678),
-    _row("2001:db8:0:1::10", "2001:db8:0:1::20", 74, "TCP", 443, 8443),
-    _row("fe80::1", "ff02::1", 58, "ICMPv6", None, None),
-    _row("2001:db8:ff::a", "2001:db8:ff::b", 74, "UDP", 53, 5353),
-    # hop-by-hop walked to UDP, zero L4 bytes left: named, ports NULL
-    _row("2001:db8::dead", "2001:db8::beef", 62, "UDP", None, None),
-    # two-hop chain (hbh -> dest-opts) lands ports at 40+8+16
-    _row("2001:db8:c::1", "2001:db8:c::2", 94, "UDP", 21, 22),
-    # atomic fragment (offset 0): L4 present
-    _row("2001:db8:f::1", "2001:db8:f::2", 82, "TCP", 80, 443),
-    # non-first fragment: protocol named from the chain, no L4 header
-    _row("2001:db8:f::1", "2001:db8:f::2", 66, "TCP", None, None),
-    # ESP terminates the walk unnamed: addresses only
-    _row("2001:db8:5::1", "2001:db8:5::2", 70, None, None, None),
-    _row("2001:db8::1:0:0:1", "::1", 70, "UDP", 7, 9),  # RFC 5952 leftmost run
-    _row("2001:db8::1", "2001:db8::2", 86, "UDP", 1234, 5678,
-         1699999998500000123, 7, 3),  # trailer orthogonal to L3 stack
-    _null_row(30),  # truncated below the 40-byte v6 header
-    _row("10.0.0.1", "10.0.0.2", 50, "UDP", 1234, 5678),  # dual-stack v4
-]
-
-
-def _rows_from_arrays(buf: bytes, v6: bool) -> list[dict]:
-    """Arrays+masks → the scalar row shape (mirrors _decode_to_arrow)."""
-    a = decode_pcap_arrays(buf, v6)
-
-    def quad(u32: int) -> str:
-        return ".".join(str((u32 >> s) & 255) for s in (24, 16, 8, 0))
-
-    out = []
-    for i in range(len(a["len"])):
-        ipv = bool(a["ip_valid"][i])
-        pv = bool(a["ports_valid"][i])
-        mmv = bool(a["mm_valid"][i])
-        src = quad(int(a["src_u32"][i])) if ipv else None
-        dst = quad(int(a["dst_u32"][i])) if ipv else None
-        proto = _PROTO_V4.get(int(a["proto"][i])) if a["proto_valid"][i] else None
-        if v6 and src is None and a["src6"][i] is not None:
-            src, dst = a["src6"][i], a["dst6"][i]
-        if v6 and proto is None:
-            proto = a["proto6"][i]
-        out.append(
-            _row(
-                src, dst, int(a["len"][i]), proto,
-                int(a["src_port"][i]) if pv else None,
-                int(a["dst_port"][i]) if pv else None,
-                int(a["mm_ts"][i]) if mmv else None,
-                int(a["mm_id"][i]) if mmv else None,
-                int(a["mm_port"][i]) if mmv else None,
-            )
-        )
-    return out
+from tests.conftest import SF0001, V6_GOLDEN_ROWS, _docs_lake  # noqa: E402
+from tests.test_pcap_vec import rows_from_arrays  # noqa: E402
 
 
 def test_v6_golden_scalar_decode():
@@ -156,7 +66,7 @@ def test_v6_flag_default_is_parity():
 def test_v6_vec_equivalence_goldens():
     for buf in (v6_golden_pcap_bytes(), golden_pcap_bytes()):
         for mode in (True, False):
-            assert _rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)
+            assert rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)
 
 
 def test_v6_vec_handles_vlan_and_short():
@@ -169,7 +79,7 @@ def test_v6_vec_handles_vlan_and_short():
     ]
     buf = pcap_file([(t, len(f), f) for f in frames])
     scal = decode_pcap_bytes(buf, ipv6=True)
-    assert _rows_from_arrays(buf, True) == scal
+    assert rows_from_arrays(buf, True) == scal
     assert scal[0]["src_ip"] == "::2" and scal[0]["protocol"] == "TCP"
     assert scal[0]["src_port"] == 21 and scal[0]["dst_port"] == 443
     assert scal[1]["src_ip"] is None  # short of the 40-byte header
@@ -188,7 +98,7 @@ def test_v6_vec_handles_vlan_and_short():
 def test_v6_random_equivalence(specs):
     buf = pcap_file([(BASE_TS, orig, data) for data, orig in specs])
     for mode in (True, False):
-        assert _rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)
+        assert rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)
 
 
 @settings(max_examples=60, deadline=None)
@@ -197,7 +107,7 @@ def test_v6_random_framed_equivalence(payload, ethertype):
     frame = eth(payload, ethertype=ethertype)
     buf = pcap_file([(BASE_TS, len(frame), frame)])
     for mode in (True, False):
-        assert _rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)
+        assert rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)
 
 
 @settings(max_examples=80, deadline=None)
@@ -222,7 +132,7 @@ def test_v6_ext_chain_random_equivalence(chain, ext_len, final, l4):
     frame = eth(ipv6(nxt, "2001:db8::a", "2001:db8::b", body), ethertype=0x86DD)
     buf = pcap_file([(BASE_TS, len(frame), frame)])
     for mode in (True, False):
-        assert _rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)
+        assert rows_from_arrays(buf, mode) == decode_pcap_bytes(buf, mode)
 
 
 def test_v6_spark_end_to_end(spark):
@@ -292,7 +202,7 @@ def test_biflow_golden(spark):
     assert r4["first_speaker"] is None  # untimed in both directions
     r5 = rows[(None, None, None, None, None)]
     assert (r5["fwd_packets"], r5["fwd_bytes"], r5["answered"]) == (1, 10, False)
-    # dual-stack (round 14): the v6 conversation pairs on colon-hex text
+    # dual-stack: the v6 conversation pairs on colon-hex text
     r6 = rows[("2001:db8::a1", 6000, "2001:db8::b1", 7000, "UDP")]
     assert (r6["fwd_packets"], r6["fwd_bytes"]) == (1, 86)
     assert (r6["rev_packets"], r6["rev_bytes"]) == (1, 86)
@@ -337,32 +247,8 @@ def test_biflow_conservation(spark):
 
 def _v6_pcapng_path(tmp_path) -> str:
     """v6 fixture packets re-containered as pcapng (EPB per packet)."""
-    import struct
-
-    def block(btype: int, body: bytes) -> bytes:
-        total = 12 + len(body) + (-len(body) % 4)
-        return (
-            struct.pack("<II", btype, total)
-            + body
-            + b"\x00" * (-len(body) % 4)
-            + struct.pack("<I", total)
-        )
-
-    parts = [
-        block(0x0A0D0D0A, struct.pack("<IHHq", 0x1A2B3C4D, 1, 0, -1)),
-        block(0x00000001, struct.pack("<HHI", 1, 0, 65535)),
-    ]
-    for ts_sec, origlen, data in v6_fixture_packets().values():
-        ts = ts_sec * 10**6
-        parts.append(
-            block(
-                0x00000006,
-                struct.pack("<IIIII", 0, ts >> 32, ts & 0xFFFFFFFF, len(data), origlen)
-                + data,
-            )
-        )
     p = tmp_path / "v6.pcapng"
-    p.write_bytes(b"".join(parts))
+    p.write_bytes(pcapng_file(list(v6_fixture_packets().values())))
     return str(p)
 
 
@@ -425,7 +311,7 @@ def test_talkers_golden(spark):
     assert probe.io_byte_ratio is None  # nothing came back
     null_ep = rows[None]
     assert (null_ep.out_packets, null_ep.in_packets, null_ep.n_peers) == (1, 1, 0)
-    # dual-stack (round 14): v6 endpoints census alongside v4
+    # dual-stack: v6 endpoints census alongside v4
     v6a = rows["2001:db8::a1"]
     assert (v6a.out_packets, v6a.out_bytes, v6a.in_packets, v6a.in_bytes) == (1, 86, 1, 86)
     assert (v6a.n_peers, v6a.io_byte_ratio) == (1, 1.0)
@@ -479,13 +365,6 @@ def test_fulfillment_matrix_margins_reconcile(spark):
 
 # ---------------------------------------------------------------------------
 # q_winnowing_band
-
-
-def _docs_lake(spark, path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(path / "documents.parquet"))
-    return str(path)
 
 
 def test_winnowing_band_finds_near_dups(spark, tmp_path):
@@ -672,7 +551,7 @@ def test_convert_pcap_ipv6_roundtrip(spark, tmp_path):
         "WHERE src_ip LIKE '%:%' GROUP BY 1, 2 ORDER BY 1, 2"
     ).fetchall()
     assert ("2001:db8::1", "UDP", 2) in got  # v6 text survives the parquet sink
-    # round 14: ipv6 composes with the chunked reader — forcing chunked
+    # ipv6 composes with the chunked reader — forcing chunked
     # on the same fixture yields the identical row set
     out2 = str(tmp_path / "v6pk_chunked")
     convert_pcap(spark, _v6_fixture_path(), out2, chunk_bytes=1 << 20, ipv6=True)

@@ -15,22 +15,12 @@ import pytest  # noqa: E402
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
 from pcap_to_parquet_spark.sources.pcap import decode_pcap_bytes, read_pcap  # noqa: E402
-from pcap_to_parquet_spark.sources.pcap_chunked import (  # noqa: E402
-    chunk_specs,
-    decode_chunk,
-    read_pcap_chunked,
-)
+from pcap_to_parquet_spark.sources.pcap_chunked import read_pcap_chunked  # noqa: E402
 from pcap_to_parquet_spark.sources.pcap_fixtures import (  # noqa: E402
     v6_golden_pcap_bytes,
 )
-from tests.conftest import SF0001  # noqa: E402
-
-
-def _chunked_rows_v6(path: str, chunk_bytes: int, ipv6: bool) -> list[dict]:
-    rows: list[dict] = []
-    for p, s, e in chunk_specs(path, chunk_bytes):
-        rows.extend(decode_pcap_bytes(decode_chunk(p, s, e), ipv6))
-    return rows
+from tests.conftest import SF0001, _closed_flows_land, _docs_lake  # noqa: E402
+from tests.test_pcap_chunked import chunked_rows  # noqa: E402
 
 
 def test_chunked_v6_every_boundary(tmp_path):
@@ -43,26 +33,11 @@ def test_chunked_v6_every_boundary(tmp_path):
     for mode in (True, False):
         want = decode_pcap_bytes(buf, mode)
         for chunk_bytes in range(16, len(buf) + 16, 16):
-            got = _chunked_rows_v6(str(p), chunk_bytes, mode)
+            got = chunked_rows(str(p), chunk_bytes, mode)
             assert got == want, f"chunk={chunk_bytes} ipv6={mode}"
 
 
-def _closed_flows_land(spark) -> str:
-    import os
-    import shutil
-    import tempfile
-
-    from pcap_to_parquet_spark.operators.pcap_query import _biflow_fixture_path
-    from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
-
-    register_pcap_source(spark)
-    src = _biflow_fixture_path()
-    land = tempfile.mkdtemp()
-    shutil.copy(src, os.path.join(land, "biflow.pcap"))
-    return land
-
-
-def test_closed_flows_state_eviction(spark):
+def test_closed_flows_state_eviction(spark, tmp_path):
     """The state pin the complete-mode twin can't give: after the
     no-data flush batch, closed flows are EVICTED from the store
     (numRowsRemoved == emitted rows; live state shrinks to open flows
@@ -71,7 +46,7 @@ def test_closed_flows_state_eviction(spark):
     from pcap_to_parquet_spark.streaming.stream_queries import run_to_memory_flushed
 
     result, progress = run_to_memory_flushed(
-        closed_flows_plan(spark, _closed_flows_land(spark))
+        closed_flows_plan(spark, _closed_flows_land(spark, tmp_path))
     )
     rows = result.collect()
     assert len(rows) == 3
@@ -86,7 +61,7 @@ def test_closed_flows_state_eviction(spark):
     }
 
 
-def test_closed_flows_equal_batch_on_closed(spark):
+def test_closed_flows_equal_batch_on_closed(spark, tmp_path):
     """Emitted closed flows must equal the BATCH flow table rows for
     the same 5-tuples (n_packets / n_bytes / first_ts) — the
     watermark path changes WHEN a flow emits, never WHAT it says."""
@@ -98,7 +73,7 @@ def test_closed_flows_equal_batch_on_closed(spark):
     from pcap_to_parquet_spark.streaming.stream_queries import run_to_memory_flushed
 
     result, _ = run_to_memory_flushed(
-        closed_flows_plan(spark, _closed_flows_land(spark))
+        closed_flows_plan(spark, _closed_flows_land(spark, tmp_path))
     )
     key = ("src_ip", "dst_ip", "protocol", "src_port", "dst_port")
     live = {tuple(r[k] for k in key): r for r in result.collect()}
@@ -116,13 +91,6 @@ def test_closed_flows_equal_batch_on_closed(spark):
         assert (r["n_packets"], r["n_bytes"], r["first_ts"]) == (
             b["n_packets"], b["n_bytes"], b["first_ts"]
         )
-
-
-def _docs_lake(spark, path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(path / "documents.parquet"))
-    return str(path)
 
 
 def test_band_members_expands_groups(spark, tmp_path):
@@ -271,27 +239,23 @@ def test_flow_timeout_reset_rule_divergence(spark):
     }
 
 
-def test_stream_flow_records_eviction_and_contents(spark):
+def test_stream_flow_records_eviction_and_contents(spark, tmp_path):
     """The elephant-flow state bound: the global active grid forces
     the long-lived flow's first interval to emit and EVICT while the
     flow is still active (the session-window-only shape would hold one
     growing row forever). Hand-traced: the 4-packet epoch-A record of
     the long flow and the first idle island both emit; everything
     within the watermark horizon stays in state."""
-    import os
-    import shutil
-    import tempfile
-
     from pcap_to_parquet_spark.operators.pcap_query import (
         _flow_timeline_path,
+        _stage_capture,
         stream_flow_records_plan,
     )
     from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
     from pcap_to_parquet_spark.streaming.stream_queries import run_to_memory_flushed
 
     register_pcap_source(spark)
-    land = tempfile.mkdtemp()
-    shutil.copy(_flow_timeline_path(), os.path.join(land, "timeline.pcap"))
+    land = _stage_capture(_flow_timeline_path(), str(tmp_path), "timeline.pcap")
     result, progress = run_to_memory_flushed(stream_flow_records_plan(spark, land))
     rows = {(r.src_ip, r.record_start): r for r in result.collect()}
     t_us = 1_700_000_000 * 10**6

@@ -10,10 +10,6 @@ Covers (per the round-14 verdict's next-round items):
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 import pytest  # noqa: E402
 
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
@@ -21,18 +17,7 @@ from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from pcap_to_parquet_spark.sources.pcap import read_pcap  # noqa: E402
-from tests.conftest import SF0001  # noqa: E402
-
-
-def _closed_flows_land(spark) -> str:
-    from pcap_to_parquet_spark.operators.pcap_query import _biflow_fixture_path
-    from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
-
-    register_pcap_source(spark)
-    src = _biflow_fixture_path()
-    land = tempfile.mkdtemp()
-    shutil.copy(src, os.path.join(land, "biflow.pcap"))
-    return land
+from tests.conftest import SF0001, _docs_lake  # noqa: E402
 
 
 def _batch_closed_flows(spark):
@@ -125,13 +110,6 @@ def test_stream_talkers_hand_trace(spark):
 # three-way dedup method agreement (SimHash axis added)
 
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
-
-
-def _docs_lake(spark, path, rows):
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(str(path / "documents.parquet"))
-    return str(path)
 
 
 def _components(nodes, edges):

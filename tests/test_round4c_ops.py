@@ -29,7 +29,7 @@ def test_dup_span_coverage_planted(spark, tiny_docs_dir):
 
 
 def test_pmi_bigrams_matches_oracle(spark):
-    """Set-level parity with the DuckDB oracle at sf0.001 (the driver
+    """Set-level parity with the DuckDB oracle at sf0.001 (tools/check_oracle.py
     checks sf0.01; this pins the other fixture): same bigrams, same
     counts, PMI within float tolerance."""
     import duckdb
@@ -369,7 +369,7 @@ def test_holt_forecast_matches_reference(spark):
 def test_multi_regression_matches_numpy_lstsq(spark):
     """The closed-form normal-equation coefficients must match
     numpy's least-squares solution per group — validates the algebra
-    itself, beyond the SQL-oracle parity the driver checks."""
+    itself, beyond the DuckDB oracle's parity."""
     from pcap_to_parquet_spark.sources import load_table
 
     got = {r.event_type: r for r in QUERIES["q_multi_regression"](spark, SF0001).collect()}
@@ -418,7 +418,7 @@ def test_opq_error_monotonically_beats_plain_pq(spark):
     )
     errs = [r.mean_sq_error for r in rows]
     assert len(errs) == 4
-    # tolerance 1e-5 since round 7: every engine boundary (rotated
+    # tolerance 1e-5: every engine boundary (rotated
     # vectors, Lloyd means, R) is 6dp-rounded for the exact DuckDB
     # oracle, so a single step may wobble by ~1e-6; true decreases
     # are ~0.03, four orders larger

@@ -135,7 +135,7 @@ def test_audio_neardup_identical_clips_pair(spark, tmp_path):
 @pytest.mark.slow  # >=5s
 def test_video_neardup_perturbed_clip_pairs(spark, tmp_path):
     """A lightly-perturbed copy (one character changed — the
-    re-encode/watermark grade of noise the round-7 radius targets)
+    re-encode/watermark grade of noise the radius targets)
     must still pair, at 0 < hamming <= 31, while an unrelated clip
     must not. Pins that the 16x16-bit-band MIH candidates plus the
     exact Hamming filter actually DETECT near-dups, not just exact

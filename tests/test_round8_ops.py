@@ -17,25 +17,13 @@ import datetime as dt
 import pcap_to_parquet_spark.operators  # noqa: E402,F401  (registers queries)
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
 import pytest
-from tests.conftest import SF0001  # noqa: E402
-
-_T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+from tests.conftest import SF0001, _EVENT_SCHEMA, _T0, _write  # noqa: E402
 
 _ORDER_SCHEMA = (
     "o_orderkey long, o_custkey long, o_orderstatus string, "
     "o_totalprice double, o_orderdate timestamp, o_orderpriority string"
 )
-_EVENT_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
 _EMBED_SCHEMA = "vec_id long, embedding array<float>, label int"
-
-
-def _write(spark, path, rows, schema, name):
-    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
-        str(path / f"{name}.parquet")
-    )
 
 
 def _orders_by_day(spark, path, day_specs):

@@ -19,16 +19,9 @@ from pcap_to_parquet_spark.operators.llm import (  # noqa: E402
     _DECON_TOP,
 )
 from pcap_to_parquet_spark.registry import QUERIES  # noqa: E402
-from tests.conftest import SF0001  # noqa: E402
+from tests.conftest import SF0001, _DOC_SCHEMA, _write  # noqa: E402
 
 _EMBED_SCHEMA = "vec_id long, embedding array<float>, label int"
-_DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-
-def _write(spark, path, rows, schema, name):
-    spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
-        str(path / f"{name}.parquet")
-    )
 
 
 def _unit(i, dim=8):

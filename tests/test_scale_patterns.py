@@ -3,15 +3,14 @@
 from __future__ import annotations
 
 import re
-from datetime import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 import pcap_to_parquet_spark.operators  # noqa: F401  (registers queries)
 from pcap_to_parquet_spark.registry import QUERIES
 from pcap_to_parquet_spark.sources import load_tables
-from tests.conftest import SF0001, _events_lake
+from tests.conftest import SF0001
+import pytest
 
 
 def test_salted_join_matches_plain(spark):
@@ -222,57 +221,3 @@ def test_aqe_skew_split_fires_on_planted_skew(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-# ---------------------------------------------------------------------------
-# q_skew_planner
-
-
-@pytest.mark.slow  # >=5s
-def test_skew_planner_hand_traced(spark, tmp_path):
-    """Planted events: user 1 has 89 rows, users 2..12 one each (100
-    rows, 12 keys, mean 8.33): user 1 is hot (89*12 = 1068 > 10*100),
-    so n_hot 1, hot_share 0.89, max share 0.89; event_type is uniform
-    'view' (one key holding everything -> 100*1 > 10*100 is FALSE: a
-    single-key table is concentration, not salt-able skew — the
-    integer test gets this right, and so does the <= 11-key algebra:
-    with n_keys <= 10 no key can ever top 10x the mean)."""
-    t0 = datetime(2026, 1, 1, 12, 0, 0)
-    rows = [(i, t0, 1 if i < 89 else i - 87, "view", 1.0, "{}") for i in range(100)]
-    _events_lake(spark, tmp_path, rows)
-    # the other audited tables must exist (empty is fine)
-    for name, schema in (
-        ("lineitem", "l_orderkey long, l_partkey long, l_suppkey long"),
-        ("orders", "o_custkey long"),
-        ("documents", "doc_id long, lang string"),
-    ):
-        spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-            str(tmp_path / f"{name}.parquet")
-        )
-    out = {(r.table_name, r.key_name): r for r in
-           QUERIES["q_skew_planner"](spark, str(tmp_path)).collect()}
-    u = out[("events", "user_id")]
-    assert (u.n_rows, u.n_keys, u.max_rows_per_key) == (100, 12, 89)
-    assert u.avg_rows_per_key == round(100 / 12, 6)
-    assert (u.max_key_share, u.n_hot_keys, u.hot_share) == (0.89, 1, 0.89)
-    e = out[("events", "event_type")]
-    assert (e.n_rows, e.n_keys, e.n_hot_keys) == (100, 1, 0)
-    assert e.max_key_share == 1.0
-    li = out[("lineitem", "l_orderkey")]
-    assert (li.n_rows, li.n_keys, li.n_hot_keys) == (0, 0, 0)
-    assert li.avg_rows_per_key is None and li.hot_share is None
-
-
-def test_skew_planner_conservation(spark):
-    """On real testdata: n_rows re-sums to the table row counts and
-    max <= n_rows; hot mass is a subset of the rows."""
-    from pcap_to_parquet_spark.sources import load_table
-
-    out = QUERIES["q_skew_planner"](spark, SF0001).collect()
-    counts = {t: load_table(spark, SF0001, t).count()
-              for t in {"lineitem", "orders", "events", "documents"}}
-    for r in out:
-        assert r.n_rows == counts[r.table_name], (r.table_name, r.key_name)
-        assert r.max_rows_per_key <= r.n_rows
-        assert 0.0 <= r.hot_share <= 1.0
-        assert r.n_hot_keys <= r.n_keys

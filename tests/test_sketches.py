@@ -5,10 +5,11 @@ from __future__ import annotations
 
 import os
 
-import pytest
+import pcap_to_parquet_spark.operators  # noqa: F401
 from pyspark.sql import functions as F
 
-import pcap_to_parquet_spark.operators  # noqa: F401
+import pytest
+
 from pcap_to_parquet_spark.registry import QUERIES
 from pcap_to_parquet_spark.sources.tables import load_table
 from tests.conftest import SF001
@@ -99,67 +100,3 @@ def test_countmin_never_undercounts_and_finds_true_heavies(spark):
         assert est - exact[tok] <= 3 * sum(exact.values()) / 1024, tok
     top_exact = {t for t, _ in exact.most_common(10)}
     assert top_exact <= set(got)
-
-
-def test_kmv_estimates_within_sketch_error(spark):
-    """A full K=64 sketch has relative standard error ~1/sqrt(K-2) ≈
-    12.6%; assert every estimate lands within 4 sigma, and that
-    not-yet-full sketches are EXACT by construction."""
-    rows = QUERIES["q_kmv_distinct"](spark, SF001).collect()
-    assert rows, "no groups"
-    for r in rows:
-        if r.exact_distinct < 64:
-            assert r.est_distinct == float(r.exact_distinct), r
-        else:
-            rel = abs(r.est_distinct - r.exact_distinct) / r.exact_distinct
-            assert rel < 0.5, (r.key, r.est_distinct, r.exact_distinct)
-    keys = {r.key for r in rows}
-    assert "__merged__" in keys
-
-
-@pytest.mark.slow  # >=5s
-def test_kmv_matches_python_reference(spark, tmp_path):
-    """Randomized events: the KMV per-group sketch rows must equal a
-    pure-Python KMV built from the same md5 hashes (k-th minimum,
-    estimator formula, exact-when-not-full, and the merged row)."""
-    import hashlib
-    import random
-
-    rng = random.Random(9)
-    rows = []
-    for et, n_users in (("a", 10), ("b", 64), ("c", 200), ("d", 1)):
-        for _ in range(n_users * 3):
-            uid = rng.randrange(n_users * 7)
-            rows.append((len(rows), "2024-01-01 00:00:00", uid, et, 1.0, "{}"))
-    d = tmp_path / "sf"
-    spark.createDataFrame(
-        rows, "event_id long, ts string, user_id long, event_type string, value double, props string"
-    ).selectExpr(
-        "event_id", "CAST(ts AS TIMESTAMP) ts", "user_id", "event_type", "value", "props"
-    ).coalesce(1).write.parquet(str(d / "events.parquet"))
-
-    def h32(uid):
-        return int(hashlib.md5(str(uid).encode()).hexdigest()[:8], 16)
-
-    K = 64
-    by_type = {}
-    for _, _, uid, et, _, _ in rows:
-        by_type.setdefault(et, set()).add(h32(uid))
-
-    def est_of(hashes):
-        mins = sorted(hashes)[:K]
-        if len(mins) < K:
-            return float(len(mins))
-        return round(63 * 4294967296.0 / mins[-1], 2)
-
-    expected = {et: est_of(hs) for et, hs in by_type.items()}
-    merged = set()
-    for hs in by_type.values():
-        merged.update(sorted(hs)[:K])
-    expected["__merged__"] = est_of(merged)
-    got = {
-        r.key: r.est_distinct for r in QUERIES["q_kmv_distinct"](spark, str(d)).collect()
-    }
-    assert got == expected
-    exact = {r.key: r.exact_distinct for r in QUERIES["q_kmv_distinct"](spark, str(d)).collect()}
-    assert exact["__merged__"] == len(set().union(*by_type.values()))

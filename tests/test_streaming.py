@@ -1,23 +1,17 @@
-"""Streaming queries (``streaming/stream_queries.py``).
+"""Streaming semantics: micro-batch-count invariance.
 
 The defining guarantee of incremental execution: the result of a
 windowed aggregation must not depend on how the stream is chopped
 into micro-batches. We split events into 4 files, stream them one
 file per trigger (4 micro-batches), and require the same result as
-the single-batch run and as the batch GROUP BY. The streaming twins
-of batch operators must equal the batch result on closed state, and
-every wait for a streaming run is bounded.
+the single-batch run and as the batch GROUP BY. Every wait for a
+streaming run is bounded.
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
-
-import pytest
 from pyspark.sql import functions as F
 
-import pcap_to_parquet_spark.operators  # noqa: F401  (registers queries)
-from pcap_to_parquet_spark.registry import QUERIES
 from pcap_to_parquet_spark.sources.tables import (
     events_raw_schema,
     load_table,
@@ -25,7 +19,8 @@ from pcap_to_parquet_spark.sources.tables import (
 )
 from pcap_to_parquet_spark.streaming import stream_queries
 from pcap_to_parquet_spark.streaming.stream_queries import await_stream, run_to_memory
-from tests.conftest import SF0001, _events_lake
+from tests.conftest import SF0001
+import pytest
 
 
 @pytest.mark.slow  # >=5s
@@ -159,96 +154,6 @@ def test_stream_ewma_ordered_multibatch_matches_single(spark, tmp_path):
         .parquet(d)
     )
     assert run(chopped) == run(whole)
-
-
-def test_stream_holt_equals_batch_holt(spark):
-    """The streaming Holt state after availableNow ingestion must equal
-    the batch applyInPandas model for every user — same recursion, same
-    initialization, bit-identical float path."""
-    batch = {tuple(r) for r in QUERIES["q_holt_forecast"](spark, SF0001).collect()}
-    stream = {tuple(r) for r in QUERIES["q_stream_holt"](spark, SF0001).collect()}
-    assert stream == batch
-
-
-# ---------------------------------------------------------------------------
-# q_stream_filter_attribution
-
-
-def test_stream_filter_attribution_matches_batch(spark):
-    """The ingest-path census must reproduce the batch census exactly:
-    availableNow micro-batching folds the same associative sums, so
-    every rule row is byte-identical to q_filter_attribution's."""
-    batch = sorted(
-        QUERIES["q_filter_attribution"](spark, SF0001).collect(),
-        key=lambda r: r.rule,
-    )
-    stream = sorted(
-        QUERIES["q_stream_filter_attribution"](spark, SF0001).collect(),
-        key=lambda r: r.rule,
-    )
-    assert [r.asDict() for r in stream] == [r.asDict() for r in batch]
-
-
-# ---------------------------------------------------------------------------
-# q_stream_session_quality
-
-
-@pytest.mark.slow  # >=5s
-def test_stream_session_quality_emits_only_closed_sessions(spark, tmp_path):
-    """Two early sessions close well before the watermark horizon and
-    are censused; the horizon-holder session (whose end = last + gap
-    is past max(ts) - 10 min) is withheld — the emission contract the
-    oracle's clip states."""
-    t0 = datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        (0, t0, 1, "view", 1.0, "{}"),
-        (1, t0 + timedelta(seconds=10), 1, "click", 1.0, "{}"),
-        (2, t0 + timedelta(seconds=20), 1, "click", 1.0, "{}"),
-        (3, t0, 2, "error", 1.0, "{}"),
-        # horizon holder: its own session stays OPEN (end > wm)
-        (4, t0 + timedelta(hours=3), 3, "purchase", 1.0, "{}"),
-    ]
-    d = _events_lake(spark, tmp_path, rows, single_file=True)
-    out = {r.entry_type: r for r in
-           QUERIES["q_stream_session_quality"](spark, d).collect()}
-    assert set(out) == {"view", "error"}  # purchase withheld
-    v = out["view"]
-    assert (v.n_sessions, v.n_bounce, v.max_depth) == (1, 0, 3)
-    assert (v.p50_dwell_s, v.p90_dwell_s) == (20, 20)
-    e = out["error"]
-    assert (e.n_sessions, e.n_bounce, e.bounce_rate) == (1, 1, 1.0)
-
-
-@pytest.mark.slow  # >=5s
-def test_stream_session_quality_matches_batch_when_all_closed(spark, tmp_path):
-    """With every session closed before the horizon and no event pair
-    at the exact 30-min boundary (where the batch <= and native <
-    conventions differ), the streaming census must equal the batch
-    census row for row — same serving code, same numbers."""
-    t0 = datetime(2026, 1, 1, 12, 0, 0)
-    rows = [
-        (0, t0, 1, "view", 1.0, "{}"),
-        (1, t0 + timedelta(seconds=10), 1, "click", 1.0, "{}"),
-        (2, t0 + timedelta(hours=2), 1, "error", 1.0, "{}"),
-        (3, t0, 2, "view", 1.0, "{}"),
-        # closer event so the watermark passes every session's end
-        (4, t0 + timedelta(hours=6), 9, "view", 1.0, "{}"),
-    ]
-    d = _events_lake(spark, tmp_path, rows, single_file=True)
-    batch = {r.entry_type: r.asDict() for r in
-             QUERIES["q_session_quality"](spark, d).collect()}
-    stream = {r.entry_type: r.asDict() for r in
-              QUERIES["q_stream_session_quality"](spark, d).collect()}
-    # the closer's own session is open at the horizon -> withheld from
-    # the stream; drop it from the batch side before comparing
-    batch["view"]["n_sessions"] -= 1
-    batch["view"]["n_bounce"] -= 1
-    for k in ("mean_depth", "bounce_rate", "mean_dwell_s",
-              "p50_depth", "p90_depth", "p50_dwell_s", "p90_dwell_s"):
-        batch["view"].pop(k); stream["view"].pop(k)  # depend on the dropped row
-    batch["view"].pop("max_depth"); stream["view"].pop("max_depth")
-    assert stream["view"] == batch["view"]
-    assert stream["error"] == batch["error"]
 
 
 class _StuckQuery:
